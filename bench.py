@@ -117,185 +117,52 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entrymod
+from youtubeanalyzerproject_big_data__spark.contract import declared, queries
 from youtubeanalyzerproject_big_data__spark.plans.inspect import stage_metrics
 from youtubeanalyzerproject_big_data__spark.session import get_spark
 
-# Headline set: the heavy/representative queries (joins, multi-agg, window,
-# graph/PageRank, dedup families, ANN, ALS) — not the trivial filters.
-BENCH_QUERIES = [
-    "tpch_q1_pricing_summary",
-    "q3_revenue_by_customer",
-    "q5_revenue_by_nation",
-    "a5_order_size_distribution",
-    "a7_order_parts_csv",
-    "w1_top3_orders_per_priority",
-    "w2_user_running_value",
-    "e1_events_hourly",
-    "e2_sessionize",
-    "e3_asof_attribution",
-    "g2_part_indegree_top20",
-    "d2_ngram_jaccard_pairs",
-    "d3_minhash_lsh_pairs",
-    "d5_embedding_near_dups",
-    "d7_dup_clusters",
-    "e5_interval_join_reactions",
-    "c1_corpus_curation",
-    "km1_kmeans_centroids",
-    "s1_ann_bruteforce_top5",
-    "s4_ann_pq_top5",
-    "s5_ann_ivfpq_top5",
-    "g4_pagerank_top100",
-    "m1_als_recommendations",
-    "t8_unigram_logprob",
-    "c3_decontamination",
-    "c4_doc_chunks",
-    "c5_sequence_packing",
-    "w4_rolling_user_value",
-    "g6_triangle_census",
-    "u1_cdc_merge",
-    "f11_funnel_counts",
-    "a14_heavy_hitters_gate",
-    "g7_personalized_pagerank",
-    "s6_ann_refined_top5",
-    # round 4 additions
-    "d6_duplicated_span_removal",
-    "c7_training_shuffle",
-    # round 5 additions
-    "d10_semantic_dedup",
-    "d11_segment_dedup",
-    "ds1_dsir_importance_select",
-    "t15_pmi_collocations",
-    "g8_khop_reachability",
-    "u3_scd2_history",
-    "lp1_label_propagation",
-    "mm5_phash_near_dups",
-    "g9_adamic_adar",
-    "e12_rfm_segments",
-    "c10_rule_filter",
-    "g10_clustering_coefficient",
-    "tpch_q18_big_orders",
-    # round 6 additions
-    "tpch_q4_late_orders",
-    "tpch_q13_custdist",
-    "tpch_q7_nation_volume",
-    "tpch_q10_returned_items",
-    "t21_repetition_score",
-    "t22_bigram_novelty",
-    "e14_out_of_order_audit",
-    "mm7_avi_frame_samples",
-    "g5_pagerank_cyclic_top100",  # shares the prepared-edge handle with g7
-    "g12_copurchase_capped",
-    "em6_scalar_quantization",
-    "dq4_profile_drift",
-    "l5_zonemap_skip_report",
-    "i3_incremental_kmv",
-    "w7_value_windows",
-    "m5_decision_stump",
-    "u6_partition_refresh",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_bracket_revenue",
-    "mm8_bmp_box_downsample",
-    "a23_count_min_gate",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_parts",
-    "tpch_q12_latency_priority",
-    "tpch_q16_supplier_count",
-    "tpch_q20_excess_suppliers",
-    "tpch_q21_waiting_suppliers",
-    "u7_pit_lookup",
-    "e15_gap_fill",
-    "g13_kcore",
-    "mm9_frame_dedup",
-    "g14_weighted_paths",
-    "a25_kmv_set_ops",
-    "d14_sorted_neighborhood",
-    "l6_bucketed_join",
-    "l7_partition_pruning",
-    "v3_schema_evolution",
-    "u8_forget_cascade",
-    "a26_quantile_merge_gate",
-    "s8_hybrid_rrf",
-    "d15_dedup_keep_best",
-    "e16_cumulative_uniques",
-    "dq5_quarantine",
-    "em7_truncated_dim_recall",
-    "g15_hits_top20",
-    "t23_dup_ngram_fraction",
-    "m6_auc_gate",
-    "m7_pr_curve",
-    "e17_seasonal_backtest",
-    "v4_csv_roundtrip",
-    "v5_export_manifest",
-    # round 6, final batch
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "e18_acf_gate",
-    "v6_orc_roundtrip",
-    "m8_naive_bayes_confusion",
-    "c15_pipeline_e2e",
-]
+# Headline set (``bench`` tag): the heavy/representative queries (joins,
+# multi-agg, window, graph/PageRank, dedup families, ANN, ALS) -- not the
+# trivial filters.  Printed subset (``stdout`` tag): the 47 queries the r10
+# record printed (BENCH_r10.json parsed.queries), so PERF round-over-round
+# diffs see a stable set -- no phantom dropped_from_bench/new_in_bench
+# entries from boot-noise reordering (VERDICT r10 item 6).  These are the
+# heavy queries (everything >= ~1.5 s at sf0.1); tagging another query
+# ``stdout`` is a REAL membership change and should be called out in the
+# round notes.
+BENCH_QUERIES = [name for name, q in declared().items() if q.bench]
+STDOUT_QUERIES = [name for name, q in declared().items() if q.stdout]
 
 
-# Deterministic stdout subset: exactly the 47 queries the r10 record
-# printed (BENCH_r10.json parsed.queries), so PERF round-over-round diffs
-# see a stable set -- no phantom dropped_from_bench/new_in_bench entries
-# from boot-noise reordering (VERDICT r10 item 6).  These are the heavy
-# queries (everything >= ~1.5 s at sf0.1); adding a query here is a REAL
-# membership change and should be called out in the round notes.
-STDOUT_QUERIES = [
-    "c1_corpus_curation",
-    "g15_hits_top20",
-    "g7_personalized_pagerank",
-    "g10_clustering_coefficient",
-    "g13_kcore",
-    "g12_copurchase_capped",
-    "g5_pagerank_cyclic_top100",
-    "lp1_label_propagation",
-    "d15_dedup_keep_best",
-    "g6_triangle_census",
-    "d7_dup_clusters",
-    "tpch_q1_pricing_summary",
-    "m1_als_recommendations",
-    "g8_khop_reachability",
-    "g4_pagerank_top100",
-    "d2_ngram_jaccard_pairs",
-    "g9_adamic_adar",
-    "d3_minhash_lsh_pairs",
-    "g14_weighted_paths",
-    "d6_duplicated_span_removal",
-    "d10_semantic_dedup",
-    "q5_revenue_by_nation",
-    "a26_quantile_merge_gate",
-    "ds1_dsir_importance_select",
-    "l6_bucketed_join",
-    "q3_revenue_by_customer",
-    "s6_ann_refined_top5",
-    "tpch_q21_waiting_suppliers",
-    "mm8_bmp_box_downsample",
-    "a7_order_parts_csv",
-    "d14_sorted_neighborhood",
-    "d11_segment_dedup",
-    "c3_decontamination",
-    "l7_partition_pruning",
-    "tpch_q14_promo_effect",
-    "mm7_avi_frame_samples",
-    "w7_value_windows",
-    "u3_scd2_history",
-    "u7_pit_lookup",
-    "u1_cdc_merge",
-    "u8_forget_cascade",
-    "mm5_phash_near_dups",
-    "t8_unigram_logprob",
-    "s8_hybrid_rrf",
-    "tpch_q8_market_share",
-    "m6_auc_gate",
-    "v3_schema_evolution",
-]
+def _stdout_line(headline: dict, timings: dict[str, float], budget: int = 1500) -> str:
+    """The one JSON line bench prints, at most ``budget`` bytes.
+
+    The driver's round record keeps only the trailing 2000 BYTES of
+    combined output (measured: BENCH_r06.json tail len == 2000, r6's
+    110-query line ~3.4 KB -> truncated head, "parsed": null), so the line
+    must fit with slack for any log line that races in after it.  Over
+    budget, only the fixed STDOUT_QUERIES subset is printed and its
+    DECIMALS degrade (3 -> 2 -> 1), never its membership; the 1-decimal
+    line is printed even if still over budget, because the full map is
+    what tail truncation destroys.  The full map with 3 decimals is always
+    in BENCH_DETAIL.json."""
+    line = json.dumps(headline, separators=(",", ":"))
+    if len(line) <= budget:
+        return line
+    kept = {k: timings[k] for k in STDOUT_QUERIES if k in timings}
+    for ndigits in (3, 2, 1):
+        line = json.dumps(
+            dict(
+                headline,
+                queries={k: round(v, ndigits) for k, v in kept.items()},
+                queries_elided=len(timings) - len(kept),
+                detail="BENCH_DETAIL.json",
+            ),
+            separators=(",", ":"),
+        )
+        if len(line) <= budget:
+            break
+    return line
 
 
 def main() -> None:
@@ -303,7 +170,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    qs = queries()
 
     # Warmup: a trivial count absorbs session/JVM startup, and one tiny
     # Arrow UDF over every core pre-spawns the Python workers -- otherwise
@@ -338,7 +205,7 @@ def main() -> None:
             # returning (pin-result-then-unpersist pattern), so runs are
             # isolated by construction.  One deliberate exception: g4/g5/g7
             # share a session-scoped prepared weighted-edge handle
-            # (entrymod._prepared_pagerank_edges) -- reusing that build IS
+            # (contract/graph._prepared_pagerank_edges) -- reusing that build IS
             # the measured design, not cross-run leakage.
             t0 = time.time()
             rows = qs[name](spark, sf_dir).collect()
@@ -396,33 +263,7 @@ def main() -> None:
             indent=1,
             sort_keys=True,
         )
-    # The driver's round record keeps only the trailing 2000 BYTES of
-    # combined output (measured: BENCH_r06.json tail len == 2000, r6's
-    # 110-query line ~3.4 KB -> truncated head, "parsed": null).  The
-    # stdout line must therefore fit the buffer WITH slack for any log
-    # line that races in after it: cap it at 1500 bytes.  Membership of
-    # the printed subset is FIXED (STDOUT_QUERIES below) -- the r10
-    # cost-ordered eliding made the printed SET depend on boot noise, so
-    # every PERF round reported phantom dropped_from_bench/new_in_bench
-    # churn (VERDICT r10 item 6).  If the fixed subset ever overflows the
-    # budget (timings growing a digit), DECIMALS degrade (3 -> 2 -> 1),
-    # never membership.  The full 110-query map with 3-decimals precision
-    # is always in BENCH_DETAIL.json.
-    budget = 1500
-    line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > budget:
-        kept = {k: timings[k] for k in STDOUT_QUERIES if k in timings}
-        for ndigits in (3, 2, 1):
-            trial = dict(
-                headline,
-                queries={k: round(v, ndigits) for k, v in kept.items()},
-                queries_elided=len(timings) - len(kept),
-                detail="BENCH_DETAIL.json",
-            )
-            s = json.dumps(trial, separators=(",", ":"))
-            if len(s) <= budget:
-                line = s
-                break
+    line = _stdout_line(headline, timings)
     sys.stdout.flush()
     print(line)
     sys.stdout.flush()

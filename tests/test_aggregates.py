@@ -204,7 +204,7 @@ def test_dec_avg_exact_half_case_matches_oracle(spark):
     plain non-half value."""
     import duckdb
 
-    import __spark_entry__ as entrymod
+    from youtubeanalyzerproject_big_data__spark import contract
     from youtubeanalyzerproject_big_data__spark.functions.precision import dec_avg
 
     cases = [
@@ -220,7 +220,7 @@ def test_dec_avg_exact_half_case_matches_oracle(spark):
     oracle = {
         g: v
         for g, v in con.execute(
-            f"SELECT g, {entrymod._davg('value')} AS a FROM t GROUP BY g"
+            f"SELECT g, {contract._sql._davg('value')} AS a FROM t GROUP BY g"
         ).fetchall()
     }
     for name, _, expected in cases:

@@ -488,71 +488,6 @@ def _capped(docs, max_df):
     return rows
 
 
-def _rand_corpus(seed: int, n_docs: int, vocab: int = 8, max_len: int = 12):
-    """Adversarial fuzz corpus for the prefix-filter equivalence test:
-    exact clones (self-pair branch + multiplicity-weighted df) and
-    single-token perturbations (near-dups straddling the threshold).
-    ``vocab`` is per-config: a tiny vocabulary maximizes shingle document
-    frequencies (stressing the uncapped df window), while tight max_df
-    configs need a wider one or the cap drops EVERY shingle and the
-    corpus degenerates to zero pairs (vacuous equality)."""
-    import random
-
-    rng = random.Random(seed)
-    texts: list[str] = []
-    for _ in range(n_docs):
-        r = rng.random()
-        if texts and r < 0.3:
-            texts.append(rng.choice(texts))  # exact clone
-        elif texts and r < 0.55:
-            base = rng.choice(texts).split()
-            base[rng.randrange(len(base))] = f"w{rng.randrange(vocab)}"
-            texts.append(" ".join(base))
-        else:
-            texts.append(" ".join(f"w{rng.randrange(vocab)}" for _ in range(rng.randrange(4, max_len))))
-    return [(f"d{i:03d}", t) for i, t in enumerate(texts)]
-
-
-@pytest.mark.parametrize(
-    "seed,threshold,max_df,vocab",
-    [
-        (1, 0.8, None, 8),
-        (1, 0.8, 3, 40),
-        (2, 0.5, 2, 60),
-        (3, 0.3, None, 8),
-        (4, 1.0, 30, 20),
-        (5, 0.95, 10, 30),
-    ],
-)
-def test_prefix_filter_matches_full_index(spark, seed, threshold, max_df, vocab):
-    """PPJoin-style prefix candidate generation (r11) must be
-    RESULT-IDENTICAL to the full inverted index across thresholds and
-    max_df caps: the prefix bound interacts with full-size denominators
-    and the doc-count df window, so this fuzz IS the exactness gate
-    (VERDICT r10 item 4).  Non-degeneracy asserted: every config must
-    produce pairs, or the equality is vacuous."""
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import ngram_jaccard_pairs
-
-    df = spark.createDataFrame(_rand_corpus(seed, 60, vocab=vocab), "doc_id string, text string")
-    kw = dict(n=2, threshold=threshold, max_df=max_df)
-    full = sorted(map(tuple, ngram_jaccard_pairs(df, "doc_id", "text", prefix_filter=False, **kw).collect()))
-    pref = sorted(map(tuple, ngram_jaccard_pairs(df, "doc_id", "text", prefix_filter=True, **kw).collect()))
-    assert pref == full
-    assert len(full) > 0
-
-
-def test_prefix_alpha_coeff_exact():
-    """The alpha coefficient must translate the double threshold compare
-    exactly: T is the smallest micros passing >= threshold."""
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import _prefix_alpha_coeff
-
-    assert _prefix_alpha_coeff(0.8) == 2 * 800000 - 1
-    assert _prefix_alpha_coeff(1.0) == 2 * 1000000 - 1
-    assert _prefix_alpha_coeff(0.0) == 2 * 0 - 1  # degenerate, clamped by alpha>=1
-    # a threshold that is NOT 6-decimal representable: T = ceil side
-    assert _prefix_alpha_coeff(0.1234565) in (2 * 123456 - 1, 2 * 123457 - 1)
-
-
 def test_capped_intersections_clone_group_emits_all_self_pairs(spark):
     """Exact-duplicate collapse, self-pair branch: a 3-clone content group
     must emit all C(3,2) doc pairs with n_common == n1 == n2 (jaccard 1.0),

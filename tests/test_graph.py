@@ -78,33 +78,17 @@ def test_densify_min_related_filter(videos):
 
 
 def test_connected_components_chain_and_clusters(spark):
-    """Min-label propagation: chains converge to the smallest member."""
+    """Distributed star rounds: chains converge to the smallest member."""
     edges = spark.createDataFrame(
         # component {1,2,3,4} as a chain; component {10,11}; {20,21,22} star
         [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 20)],
         "src long, dst long",
     )
-    out = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
+    out = {
+        r["id"]: r["component"]
+        for r in graph.connected_components_star(edges, small_graph_threshold=0).collect()
+    }
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
-def test_connected_components_rejects_zero_iterations(spark):
-    """max_iter < 1 must raise up front: a zero-round loop would silently
-    return every-vertex-labels-itself, bypassing the convergence guard."""
-    import pytest
-
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="max_iter"):
-        graph.connected_components(edges, max_iter=0)
-
-
-def test_connected_components_self_loop_vertex_kept(spark):
-    """A vertex whose only edge is a self-loop must still appear, labeled
-    itself -- guards the r11 canonicalize-first symmetrization (a self-loop
-    must enter the symmetric table exactly once, not twice or zero times)."""
-    edges = spark.createDataFrame([(5, 5), (1, 2)], "src long, dst long")
-    out = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
-    assert out == {5: 5, 1: 1, 2: 1}
 
 
 def test_label_propagation_zero_iterations_identity(spark):
@@ -116,16 +100,16 @@ def test_label_propagation_zero_iterations_identity(spark):
 
 
 def test_star_components_match_min_label(spark):
-    """large-star/small-star and min-label propagation agree on mixed
-    component shapes (chain, pair, star).  Self-loops are excluded: the
-    star variant drops them (callers pre-filter; edges_from_pairs does)."""
+    """large-star/small-star labels every vertex with its component's
+    minimum on mixed component shapes (chain, pair, star).  Self-loops are
+    excluded: the star variant drops them (callers pre-filter;
+    edges_from_pairs does)."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 20)],
         "src long, dst long",
     )
     star = {r["id"]: r["component"] for r in graph.connected_components_star(edges).collect()}
-    prop = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
-    assert star == prop == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    assert star == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
 def test_star_components_chain_rounds_logarithmic(spark):
@@ -354,14 +338,14 @@ def test_prepared_weighted_edges_shared_across_rank_variants(spark):
     per variant (VERDICT r5 item 6): the memo returns the identical cached
     DataFrame object, pagerank never unpersists a caller-owned handle, and
     results match the self-built path exactly."""
-    import __spark_entry__ as entrymod
+    from youtubeanalyzerproject_big_data__spark import contract
     from youtubeanalyzerproject_big_data__spark.operators.graph import pagerank, prepare_weighted_edges
 
     sf = "/root/testdata/sf0.001"
-    h1 = entrymod._prepared_pagerank_edges(spark, sf, "cyclic")
-    h2 = entrymod._prepared_pagerank_edges(spark, sf, "cyclic")
+    h1 = contract.graph._prepared_pagerank_edges(spark, sf, "cyclic")
+    h2 = contract.graph._prepared_pagerank_edges(spark, sf, "cyclic")
     assert h1 is h2  # memo hit: one edge build per handle
-    expected = sorted(tuple(r) for r in entrymod.q_pagerank_cyclic(spark, sf).collect())
+    expected = sorted(tuple(r) for r in contract.graph.q_pagerank_cyclic(spark, sf).collect())
     assert h1.is_cached  # the rank call must NOT release the shared handle
     # caller-owned handle path == self-built path, row for row
     own = pagerank(h1.select("src", "dst"), reset_prob=0.15, max_iter=10)
@@ -376,32 +360,32 @@ def test_prepared_edges_memo_bounded_across_sf_switches(spark):
     switching sf dirs evicts AND unpersists the previous graph's handles,
     so a sf0.01+sf0.1+sf1 run never holds three graphs of cached edges.
     Within one sf, both kinds (fwd + cyclic) may be live: that cap is 2."""
-    import __spark_entry__ as entrymod
+    from youtubeanalyzerproject_big_data__spark import contract
 
     sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
     # clean slate for this session (other tests may have populated the memo)
-    for k in list(entrymod._PAGERANK_EDGE_HANDLES):
-        entrymod._PAGERANK_EDGE_HANDLES.pop(k).unpersist()
+    for k in list(contract.graph._PAGERANK_EDGE_HANDLES):
+        contract.graph._PAGERANK_EDGE_HANDLES.pop(k).unpersist()
 
-    ha_f = entrymod._prepared_pagerank_edges(spark, sf_a, "fwd")
-    ha_c = entrymod._prepared_pagerank_edges(spark, sf_a, "cyclic")
-    assert len(entrymod._PAGERANK_EDGE_HANDLES) == 2
+    ha_f = contract.graph._prepared_pagerank_edges(spark, sf_a, "fwd")
+    ha_c = contract.graph._prepared_pagerank_edges(spark, sf_a, "cyclic")
+    assert len(contract.graph._PAGERANK_EDGE_HANDLES) == 2
     lvl = ha_f.storageLevel
     assert lvl.useMemory or lvl.useDisk
 
-    hb_c = entrymod._prepared_pagerank_edges(spark, sf_b, "cyclic")
+    hb_c = contract.graph._prepared_pagerank_edges(spark, sf_b, "cyclic")
     # the sf switch evicted BOTH sf_a handles and released their cache
-    assert len(entrymod._PAGERANK_EDGE_HANDLES) == 1
+    assert len(contract.graph._PAGERANK_EDGE_HANDLES) == 1
     for stale in (ha_f, ha_c):
         lvl = stale.storageLevel
         assert not (lvl.useMemory or lvl.useDisk), "stale sf handle still cached"
     lvl = hb_c.storageLevel
     assert lvl.useMemory or lvl.useDisk
     # keys carry the applicationId, so a different session could never hit
-    (app, sf, kind), = entrymod._PAGERANK_EDGE_HANDLES
+    (app, sf, kind), = contract.graph._PAGERANK_EDGE_HANDLES
     assert app == spark.sparkContext.applicationId and sf == sf_b and kind == "cyclic"
     # leave the memo empty for whoever runs next
-    entrymod._PAGERANK_EDGE_HANDLES.pop((app, sf, kind)).unpersist()
+    contract.graph._PAGERANK_EDGE_HANDLES.pop((app, sf, kind)).unpersist()
 
 
 def test_copurchase_cap_drops_degenerate_group(spark):

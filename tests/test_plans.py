@@ -3,42 +3,42 @@ actually appear in the executed plan (SURVEY.md par.4)."""
 
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
+from youtubeanalyzerproject_big_data__spark import contract
 from youtubeanalyzerproject_big_data__spark.plans.inspect import executed_plan as _plan
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_filter_pushed_to_parquet_scan(spark):
-    plan = _plan(entrymod.q_f5(spark, SF))
+    plan = _plan(contract.relational.q_f5(spark, SF))
     assert "PushedFilters: [" in plan
     assert "GreaterThanOrEqual(o_totalprice" in plan and "LessThanOrEqual(o_totalprice" in plan
 
 
 def test_column_pruning_in_scan(spark):
-    plan = _plan(entrymod.q_a6(spark, SF))
+    plan = _plan(contract.relational.q_a6(spark, SF))
     # only the 3 projected columns reach the scan schema
     assert "ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint,o_totalprice:double>" in plan
 
 
 def test_dimension_joins_broadcast(spark):
-    plan = _plan(entrymod.q_q5(spark, SF))
+    plan = _plan(contract.tpch.q_q5(spark, SF))
     assert plan.count("BroadcastHashJoin") >= 3  # customer, nation, region
     assert "SortMergeJoin" not in plan or plan.count("SortMergeJoin") <= 1  # only the fact-fact join may merge
 
 
 def test_topk_compiles_to_take_ordered(spark):
-    plan = _plan(entrymod.q_a6(spark, SF))
+    plan = _plan(contract.relational.q_a6(spark, SF))
     assert "TakeOrderedAndProject" in plan  # O1: no full sort (PageRank_Spark_v5.py:105-115)
 
 
 def test_map_only_text_query_has_no_shuffle(spark):
-    plan = _plan(entrymod.q_t2(spark, SF))
+    plan = _plan(contract.text.q_t2(spark, SF))
     assert "Exchange" not in plan  # per-document scoring must stay shuffle-free
 
 
 def test_partial_aggregation_present(spark):
-    plan = _plan(entrymod.q_a1(spark, SF))
+    plan = _plan(contract.relational.q_a1(spark, SF))
     # partial+final hash aggregate (map-side combine) around a single hash
     # shuffle (the second Exchange is rangepartitioning for the output sort)
     assert plan.count("HashAggregate") >= 2
@@ -48,7 +48,7 @@ def test_partial_aggregation_present(spark):
 def test_asof_join_has_no_join_operator(spark):
     """e3: the merge-union as-of formulation must not plan a join at all --
     no SortMergeJoin, no range/cartesian explosion; one window pass."""
-    plan = _plan(entrymod.q_e3(spark, SF))
+    plan = _plan(contract.events.q_e3(spark, SF))
     for bad in ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"):
         assert bad not in plan
     assert plan.count("Window") >= 1
@@ -56,7 +56,7 @@ def test_asof_join_has_no_join_operator(spark):
 
 def test_rollup_plans_single_expand_aggregate(spark):
     """a10: ROLLUP compiles to Expand + hash aggregate, not N passes."""
-    plan = _plan(entrymod.q_a10(spark, SF))
+    plan = _plan(contract.relational.q_a10(spark, SF))
     assert "Expand" in plan
 
 
@@ -64,7 +64,7 @@ def test_c1_single_documents_scan(spark):
     """c1: quality, language-ID, and the shingle index must all feed off ONE
     cached documents scan -- the old form re-scanned/re-tokenized the corpus
     three times (r4 advice item 3)."""
-    result, base = entrymod._c1_plan(spark, SF)
+    result, base = contract.dedup._c1_plan(spark, SF)
     try:
         plan = _plan(result)
         scan_lines = [ln for ln in plan.splitlines() if "Scan parquet" in ln or "FileScan parquet" in ln]
@@ -82,7 +82,7 @@ def test_ann_rerank_is_two_stage_topk(spark):
     ObjectHashAggregate keyed by spark_partition_id() ahead of the
     row_number window, so no single reducer receives the whole scored
     candidate set (VERDICT r2 finding #1)."""
-    plan = _plan(entrymod.q_s1(spark, SF))
+    plan = _plan(contract.vectors.q_s1(spark, SF))
     assert "SPARK_PARTITION_ID" in plan.upper()
     assert "ObjectHashAggregate" in plan, "partial top-k aggregate missing"
     # the window still exists, but only over the bounded survivors
@@ -142,7 +142,7 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path_factory):
 def test_decontaminate_broadcasts_eval_grams(spark):
     """c3: the eval-set gram join must be a BroadcastHashJoin -- the corpus
     side is scored map-side, never shuffled on grams."""
-    plan = _plan(entrymod.q_c3(spark, SF))
+    plan = _plan(contract.dedup.q_c3(spark, SF))
     assert "BroadcastHashJoin" in plan
 
 
@@ -150,7 +150,7 @@ def test_pack_sequences_has_no_global_data_window(spark):
     """c5: the only unpartitioned Window must run over the model-sized
     bucket-total aggregate, never the document rows -- the doc-level window
     is partitioned by bucket (parallel local cumsums)."""
-    plan = _plan(entrymod.q_c5(spark, SF))
+    plan = _plan(contract.dedup.q_c5(spark, SF))
     # the doc-level cumsum window is keyed by the bucket column
     assert "_bucket" in plan and "Window" in plan
     # offsets come back via broadcast, not a doc-level shuffle join
@@ -162,7 +162,7 @@ def test_chunking_is_shuffle_free(spark):
     with no Exchange at all."""
     from youtubeanalyzerproject_big_data__spark.plans.inspect import operator_counts
 
-    df = entrymod.q_c4(spark, SF)
+    df = contract.dedup.q_c4(spark, SF)
     df.collect()
     assert operator_counts(df).get("Exchange", 0) == 0
 
@@ -172,7 +172,7 @@ def test_zorder_keys_are_map_side(spark):
     pure scan+project -- zero Exchange in the returned plan."""
     from youtubeanalyzerproject_big_data__spark.plans.inspect import operator_counts
 
-    df = entrymod.q_l1(spark, SF)
+    df = contract.lake.q_l1(spark, SF)
     df.collect()
     assert operator_counts(df).get("Exchange", 0) == 0
 
@@ -181,7 +181,7 @@ def test_training_shuffle_has_no_global_data_window(spark):
     """c7: the doc-level rank window must be partitioned by the md5-prefix
     bucket (parallel local ranks); the only unpartitioned window runs over
     the model-sized bucket counts, and offsets return via broadcast."""
-    plan = _plan(entrymod.q_c7(spark, SF))
+    plan = _plan(contract.dedup.q_c7(spark, SF))
     assert "_bucket" in plan and "Window" in plan
     assert "BroadcastHashJoin" in plan
 
@@ -190,7 +190,7 @@ def test_span_removal_windows_are_doc_partitioned(spark):
     """d6: both analytic windows (islands break + running island id) must
     be partitioned by doc_id -- per-reducer data is bounded by one doc's
     length, never the corpus."""
-    plan = _plan(entrymod.q_d6(spark, SF))
+    plan = _plan(contract.dedup.q_d6(spark, SF))
     import re
 
     # every Window operator's partition spec mentions doc_id
@@ -203,7 +203,7 @@ def test_span_removal_windows_are_doc_partitioned(spark):
 def test_bloom_probe_joins_broadcast_bit_positions(spark):
     # The filter's set-bit position table must broadcast to the probe side
     # (the probe never shuffles wide); the final gate is one aggregate.
-    plan = _plan(entrymod.q_bf1(spark, SF))
+    plan = _plan(contract.relational.q_bf1(spark, SF))
     assert "BroadcastHashJoin" in plan
 
 
@@ -228,7 +228,7 @@ def test_dsir_bucket_model_joins_broadcast(spark):
 def test_segment_dedup_never_shuffles_text(spark):
     # Pass A shuffles only (doc_id, idx, 32-hex digest): no Exchange in the
     # plan may carry the raw text column.
-    df = entrymod.q_d11(spark, SF)
+    df = contract.dedup.q_d11(spark, SF)
     plan = _plan(df)
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
@@ -240,27 +240,27 @@ def test_scd2_windows_are_key_partitioned(spark):
     # state is one key's history, never the table (d6's discipline).
     import re
 
-    plan = _plan(entrymod.q_u3(spark, SF))
+    plan = _plan(contract.lake.q_u3(spark, SF))
     specs = [s for s in re.findall(r"Window \[[^\]]*\], \[([^\]]*)\]", plan) if s]
     assert specs and all("user_id" in s for s in specs), specs
 
 
 def test_conversion_latency_filters_reach_scan(spark):
     # e10: the per-step event_type filters must push into the parquet scan.
-    plan = _plan(entrymod.q_e10(spark, SF))
+    plan = _plan(contract.events.q_e10(spark, SF))
     assert "PushedFilters: [" in plan
     assert "event_type" in plan
 
 
 def test_rule_filter_is_single_scan_single_shuffle(spark):
-    plan = _plan(entrymod.q_c10(spark, SF))
+    plan = _plan(contract.dedup.q_c10(spark, SF))
     # one documents scan; the round-robin repartition + one agg shuffle
     assert plan.count("Scan parquet") == 1
     assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_hourly_anomaly_moment_table_broadcasts(spark):
-    plan = _plan(entrymod.q_e11(spark, SF))
+    plan = _plan(contract.events.q_e11(spark, SF))
     assert "BroadcastHashJoin" in plan  # type-sized moments join the grid broadcast
     assert "TakeOrderedAndProject" in plan  # top-|z| cut, no full sort
 
@@ -335,7 +335,7 @@ def test_rake_windows_are_doc_partitioned(spark):
     no global ordered window anywhere in the plan."""
     import re
 
-    plan = _plan(entrymod.q_t19(spark, SF))
+    plan = _plan(contract.text.q_t19(spark, SF))
     specs = [s for s in re.findall(r"Window \[[^\]]*\], \[([^\]]*)\]", plan) if s]
     assert specs, f"no Window partition specs found:\n{plan[:500]}"
     assert all("_doc" in s for s in specs), specs
@@ -344,7 +344,7 @@ def test_rake_windows_are_doc_partitioned(spark):
 def test_hilbert_keys_are_map_side(spark):
     """l3: after the 4-scalar min/max aggregate, key computation must be a
     pure projection -- no join, no shuffle in the output plan."""
-    plan = _plan(entrymod.q_l3(spark, SF))
+    plan = _plan(contract.lake.q_l3(spark, SF))
     assert "Join" not in plan
     assert "Exchange" not in plan
 
@@ -409,10 +409,8 @@ def test_pagerank_loop_shape(spark):
     and the per-iteration aggregate shuffles on dst only."""
     import re
 
-    import __spark_entry__ as entrymod
-
     with _graph_full_lineage() as graphmod:
-        handle = entrymod._prepared_pagerank_edges(spark, SF, "fwd")
+        handle = contract.graph._prepared_pagerank_edges(spark, SF, "fwd")
         handle.count()  # materialize so references plan as cache reads
         ranks = graphmod.pagerank(None, max_iter=3, weighted=handle)
         plan = _plan(ranks)
@@ -426,10 +424,8 @@ def test_pagerank_loop_shape(spark):
 def test_ppr_seeds_compile_to_inlist(spark):
     """g7: the seed set must reach the plan as IN-list literals, never a
     join; loop shape mirrors g4 (hash joins only, cache reads)."""
-    import __spark_entry__ as entrymod
-
     with _graph_full_lineage() as graphmod:
-        handle = entrymod._prepared_pagerank_edges(spark, SF, "cyclic")
+        handle = contract.graph._prepared_pagerank_edges(spark, SF, "cyclic")
         handle.count()
         # seeds in the r11 integer encoding (parts P1, P2 -> 2k+1)
         ranks = graphmod.personalized_pagerank(None, [3, 5], max_iter=3, weighted=handle)
@@ -553,7 +549,7 @@ def test_semantic_dedup_pairs_are_cell_bounded(spark):
     """d10: pair generation must be a single equi-join keyed on the
     k-means cell (narrow int key) -- no cartesian, at most one sort-merge
     join; the centroid table broadcasts back for assignment."""
-    plan = _plan(entrymod.q_d10(spark, SF))
+    plan = _plan(contract.dedup.q_d10(spark, SF))
     assert plan.count("CartesianProduct") == 0
     assert plan.count("BroadcastNestedLoopJoin") == 0
     assert plan.count("BroadcastHashJoin") >= 3
@@ -595,7 +591,7 @@ def test_zonemap_report_has_no_global_data_window(spark):
 def test_sq8_calibration_broadcasts(spark):
     """em6: the dim-sized calibration table must broadcast back to the
     posexploded elements -- the element stream is never shuffled twice."""
-    plan = _plan(entrymod.q_em6(spark, SF))
+    plan = _plan(contract.vectors.q_em6(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -603,7 +599,7 @@ def test_sq8_calibration_broadcasts(spark):
 def test_q7_dimension_chains_broadcast(spark):
     """tpch_q7: supplier/customer/nation chains broadcast; at most the
     fact-fact lineitem-orders join may sort-merge."""
-    plan = _plan(entrymod.q_q7(spark, SF))
+    plan = _plan(contract.tpch.q_q7(spark, SF))
     assert plan.count("BroadcastHashJoin") >= 4
     assert plan.count("SortMergeJoin") <= 1
 
@@ -611,7 +607,7 @@ def test_q7_dimension_chains_broadcast(spark):
 def test_q10_aggregates_before_broadcast_enrich(spark):
     """tpch_q10: customer enrichment joins the AGGREGATE (broadcast), and
     the top-20 compiles to TakeOrderedAndProject, not a full sort."""
-    plan = _plan(entrymod.q_q10(spark, SF))
+    plan = _plan(contract.tpch.q_q10(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
 
@@ -620,7 +616,7 @@ def test_q2_decorrelation_is_all_broadcast(spark):
     """tpch_q2: the min-cost join-back runs entirely on broadcast joins --
     the supply relation is the only fact-sized input; part/supplier prunes
     and the part-dim-sized per-part min must never sort-merge."""
-    plan = _plan(entrymod.q_q2(spark, SF))
+    plan = _plan(contract.tpch.q_q2(spark, SF))
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 4, plan.count("BroadcastHashJoin")
 
@@ -629,7 +625,7 @@ def test_q21_is_one_grouped_pass_not_triple_selfjoin(spark):
     """tpch_q21: the exists/not-exists correlation must collapse into ONE
     grouped pass -- the classic l1/l2/l3 formulation scans lineitem three
     times; this plan may scan it once."""
-    plan = _plan(entrymod.q_q21(spark, SF))
+    plan = _plan(contract.tpch.q_q21(spark, SF))
     li_scans = [
         ln for ln in plan.splitlines() if ("FileScan parquet" in ln or "Scan parquet" in ln) and "lineitem" in ln
     ]
@@ -639,7 +635,7 @@ def test_q21_is_one_grouped_pass_not_triple_selfjoin(spark):
 def test_q16_not_in_is_broadcast_anti_join(spark):
     """tpch_q16: the negative-balance supplier exclusion must plan as a
     broadcast LEFT ANTI join (keys-only), never a shuffled NOT IN."""
-    plan = _plan(entrymod.q_q16(spark, SF))
+    plan = _plan(contract.tpch.q_q16(spark, SF))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
@@ -649,7 +645,7 @@ def test_g12_pair_stream_crosses_one_exchange(spark):
     distribution, so dropDuplicates and the output sort run partition-local
     after the range exchange.  A reappearing hashpartitioning(src, dst)
     exchange means the old distinct+orderBy double shuffle regressed."""
-    plan = _plan(entrymod.q_g12(spark, SF))
+    plan = _plan(contract.graph.q_g12(spark, SF))
     ex_lines = [ln for ln in plan.splitlines() if "Exchange" in ln and "partitioning" in ln]
     assert any("rangepartitioning(src" in ln for ln in ex_lines), ex_lines
     assert not any("hashpartitioning(src" in ln for ln in ex_lines), ex_lines
@@ -696,7 +692,7 @@ def test_gap_fill_windows_and_spine_are_key_partitioned(spark):
     window."""
     import re
 
-    plan = _plan(entrymod.q_e15(spark, SF))
+    plan = _plan(contract.events.q_e15(spark, SF))
     specs = [s for s in re.findall(r"Window \[[^\]]*\], \[([^\]]*)\]", plan) if s]
     assert specs and all("user_id" in s for s in specs), specs
     assert "Generate explode" in plan  # the per-key spine
@@ -708,7 +704,7 @@ def test_pit_lookup_is_single_interval_join(spark):
     residual); the SCD2 build contributes windows, all key-partitioned."""
     import re
 
-    plan = _plan(entrymod.q_u7(spark, SF))
+    plan = _plan(contract.lake.q_u7(spark, SF))
     n_joins = sum(plan.count(op) for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
     assert n_joins == 1, n_joins
     specs = [s for s in re.findall(r"Window \[[^\]]*\], \[([^\]]*)\]", plan) if s]
@@ -799,7 +795,7 @@ def test_d14_rank_windows_are_bucket_partitioned(spark):
 def test_a26_summary_joins_broadcast(spark):
     """a26: per-shard sizes, targets, and the 3-row estimates all return
     by broadcast; the corpus is shuffled ONLY once, to shards."""
-    plan = _plan(entrymod.q_a26(spark, SF))
+    plan = _plan(contract.relational.q_a26(spark, SF))
     assert plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin") >= 3
     assert "SortMergeJoin" not in plan
 
@@ -816,7 +812,7 @@ def test_u8_cascade_join_strategies(spark):
     try:
         for c in thresholds:
             spark.conf.set(c, "-1")
-        plan = _plan(entrymod.q_u8(spark, SF))
+        plan = _plan(contract.lake.q_u8(spark, SF))
         assert "BroadcastHashJoin" in plan  # the hinted queue joins
         assert any(
             ("SortMergeJoin" in ln or "ShuffledHashJoin" in ln) and "LeftAnti" in ln
@@ -831,7 +827,7 @@ def test_s8_fusion_is_candidate_sized(spark):
     """s8: both legs cut to top-20 BEFORE fusion -- the fused plan carries
     TakeOrdered/Limit on each leg, and the full-outer fusion join runs on
     candidate lists, not the corpus."""
-    plan = _plan(entrymod.q_s8(spark, SF))
+    plan = _plan(contract.vectors.q_s8(spark, SF))
     assert "TakeOrderedAndProject" in plan or "GlobalLimit" in plan
     assert "FullOuter" in plan
 
@@ -840,7 +836,7 @@ def test_dup_ngram_single_scan_hash_only_shuffle(spark):
     """t23: one documents scan; the corpus-sized shuffles key on
     (grp, md5-hash) / (grp) only -- gram TEXT must never reach an
     Exchange (the narrow-shuffle-key invariant)."""
-    plan = _plan(entrymod.q_t23(spark, SF))
+    plan = _plan(contract.text.q_t23(spark, SF))
     scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln or "Scan parquet" in ln]
     assert len(scans) == 1, scans
     assert plan.count("HashAggregate") >= 4  # partial+final for both aggregates
@@ -859,9 +855,11 @@ def test_hits_loop_shape(spark):
     import youtubeanalyzerproject_big_data__spark.operators.graph as graphmod
     from pyspark.sql import functions as F
 
+    from youtubeanalyzerproject_big_data__spark.io import load_table
+
     graphmod._DISABLE_CHECKPOINTS = True
     try:
-        li = entrymod.load_table(spark, SF, "lineitem")
+        li = load_table(spark, SF, "lineitem")
         edges = li.select(
             F.concat(F.lit("O"), F.col("l_orderkey")).alias("src"),
             F.concat(F.lit("P"), F.col("l_partkey")).alias("dst"),
@@ -879,7 +877,7 @@ def test_q3_segment_filter_broadcasts_and_top10_is_takeordered(spark):
     """tpch_q3: the BUILDING-segment customer keys broadcast into the
     fact join; at most the lineitem-orders join sort-merges; the top-10
     compiles to TakeOrderedAndProject, never a global sort."""
-    plan = _plan(entrymod.q_tpch_q3(spark, SF))
+    plan = _plan(contract.tpch.q_tpch_q3(spark, SF))
     assert plan.count("BroadcastHashJoin") >= 1
     assert plan.count("SortMergeJoin") <= 1
     assert "TakeOrderedAndProject" in plan
@@ -888,7 +886,7 @@ def test_q3_segment_filter_broadcasts_and_top10_is_takeordered(spark):
 def test_q5_single_fact_fact_shuffle(spark):
     """tpch_q5: supplier/customer/nation/region chains broadcast; the
     only join allowed to sort-merge is lineitem-orders."""
-    plan = _plan(entrymod.q_tpch_q5(spark, SF))
+    plan = _plan(contract.tpch.q_tpch_q5(spark, SF))
     assert plan.count("BroadcastHashJoin") >= 4
     assert plan.count("SortMergeJoin") <= 1
 
@@ -922,7 +920,7 @@ def test_m8_model_joins_broadcast_no_doc_sized_join(spark):
 def test_f13_exact_k_is_takeordered_not_global_sort(spark):
     """f13: ORDER BY hash LIMIT k must compile to TakeOrderedAndProject
     (per-partition k-heaps); a global Sort would shuffle the corpus."""
-    plan = _plan(entrymod.q_f13(spark, SF))
+    plan = _plan(contract.relational.q_f13(spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "+- Sort " not in plan
 
@@ -932,7 +930,7 @@ def test_c15_pipeline_single_scan_single_corpus_shuffle(spark):
     corpus rows only at the digest groupBy (the second exchange carries
     the map-side-combined split x tier partials, a handful of rows per
     partition); no join anywhere."""
-    plan = _plan(entrymod.q_c15(spark, SF))
+    plan = _plan(contract.dedup.q_c15(spark, SF))
     scans = [ln for ln in plan.splitlines() if "Scan parquet" in ln or "FileScan parquet" in ln]
     assert len(scans) == 1, scans
     assert plan.count("Exchange hashpartitioning") <= 2

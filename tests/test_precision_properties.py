@@ -374,7 +374,7 @@ def test_model_ratio_is_exact_rational_half_up():
 def test_dratio_duckdb_matches_model(num, den):
     from hypothesis import assume
 
-    from __spark_entry__ import _dratio
+    from youtubeanalyzerproject_big_data__spark.contract._sql import _dratio
 
     # contract bound: the QUOTIENT micros must fit int64 (numerators are
     # unbounded via HUGEINT/decimal38 intermediates, quotients are not)
@@ -392,7 +392,7 @@ def test_ratio_round_spark_matches_model_and_duckdb(spark):
     negatives, the int64-boundary magnitude, and seeded randoms.  Spark's
     ratio_round must equal the integer model AND DuckDB's _dratio on every
     one."""
-    from __spark_entry__ import _dratio
+    from youtubeanalyzerproject_big_data__spark.contract._sql import _dratio
     from youtubeanalyzerproject_big_data__spark.functions.precision import ratio_round
 
     rnd = random.Random(7)
@@ -433,7 +433,7 @@ def test_micro_round_spark_matches_duckdb(spark):
     negatives, ties, and seeded randoms."""
     import math
 
-    from __spark_entry__ import _dmicro
+    from youtubeanalyzerproject_big_data__spark.contract._sql import _dmicro
     from youtubeanalyzerproject_big_data__spark.functions.precision import micro_round
 
     rnd = random.Random(11)

@@ -54,16 +54,21 @@ def test_exact_dup_groups_partition_the_corpus(spark, texts):
 @SLOW
 def test_connected_components_fixpoint(spark, edges):
     """Components are a fixpoint: each vertex's label equals the component
-    min, and both endpoints of every edge share a label."""
-    from youtubeanalyzerproject_big_data__spark.operators.graph import connected_components
+    min, and both endpoints of every edge share a label -- on the driver
+    union-find fast path and on the distributed star rounds alike."""
+    from youtubeanalyzerproject_big_data__spark.operators.graph import connected_components_star
 
     e = spark.createDataFrame([(a, b) for a, b in edges if a != b] or [(0, 1)], "src long, dst long")
-    labels = {r["id"]: r["component"] for r in connected_components(e).collect()}
-    for a, b in [(r["src"], r["dst"]) for r in e.collect()]:
-        assert labels[a] == labels[b]
-    for v, c in labels.items():
-        assert c <= v  # label is the min of the component, so never above v
-        assert labels[c] == c  # the representative labels itself
+    for threshold in (100_000, 0):
+        labels = {
+            r["id"]: r["component"]
+            for r in connected_components_star(e, small_graph_threshold=threshold).collect()
+        }
+        for a, b in [(r["src"], r["dst"]) for r in e.collect()]:
+            assert labels[a] == labels[b]
+        for v, c in labels.items():
+            assert c <= v  # label is the min of the component, so never above v
+            assert labels[c] == c  # the representative labels itself
 
 
 def test_survey_header_matches_contract():

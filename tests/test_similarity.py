@@ -50,27 +50,6 @@ def test_lsh_recall_on_clustered_vectors(clustered):
     assert recall >= 0.8, f"LSH recall too low: {recall}"
 
 
-def test_ivf_recall_on_clustered_vectors(clustered):
-    from youtubeanalyzerproject_big_data__spark.operators.similarity import _ivf_topk_gemm, brute_force_topk
-
-    queries = clustered.where("vec_id IN (0, 10, 20)")
-    exact = {(r["query_id"], r["neighbor_id"]) for r in brute_force_topk(clustered, queries, "vec_id", "embedding", 3).collect()}
-    approx = {(r["query_id"], r["neighbor_id"]) for r in _ivf_topk_gemm(clustered, queries, "vec_id", "embedding", k=3, num_cells=3, nprobe=1).collect()}
-    recall = len(exact & approx) / len(exact)
-    # 3 clusters, 3 cells, probe 1: centroids should separate the clusters
-    assert recall >= 0.8, f"IVF recall too low: {recall}"
-
-
-def test_ivf_output_shape(clustered):
-    from youtubeanalyzerproject_big_data__spark.operators.similarity import _ivf_topk_gemm
-
-    out = _ivf_topk_gemm(clustered, clustered.where("vec_id = 0"), "vec_id", "embedding", k=3, num_cells=3, nprobe=3).collect()
-    assert len(out) == 3
-    ranks = sorted(r["nn_rank"] for r in out)
-    assert ranks == [1, 2, 3]
-    assert all(r["neighbor_id"] != 0 for r in out)
-
-
 def test_ivf_catalyst_recall_and_shape(clustered):
     """The oracle-checkable Catalyst IVF variant: same IVF semantics, so with
     nprobe == num_cells it must EQUAL brute force (every cell probed), and

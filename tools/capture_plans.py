@@ -1,12 +1,19 @@
-"""Capture .explain('formatted') for named queries into plans/r10/.
+"""Capture .explain('formatted') for named queries into plans/<round>/.
 
-Usage: python tools/capture_plans_r10.py <suffix> q1 q2 ...
-Writes plans/r10/<query>_<suffix>.txt for each query (suffix: before/after).
+Usage: python tools/capture_plans.py [--no-ckpt] <round> <suffix> q1 q2 ...
+Writes plans/<round>/<query>_<suffix>.txt for each query (round: e.g. r12;
+suffix: before/after).
 
-Queries that eagerly pin their result (localCheckpoint inside, e.g. c1, d7,
-d15, d2, d3) would show only a checkpoint scan; for those the LIVE internal
-plan is captured instead via their checkpoint=False internals where the
-operator exposes one, and noted in the file header.
+--no-ckpt flips graph._DISABLE_CHECKPOINTS, so ITERATIVE operators
+(g4/g13/g15/lp1/g8/g14) expose their full loop-body lineage instead of an
+11-line post-checkpoint stub -- the per-round Exchange counts become
+meaningful (VERDICT r10 item 7).  Only use it for plan capture: the
+resulting plans are exponential-ish in rounds and must never execute.
+
+Queries that eagerly pin their result (localCheckpoint inside, e.g. c1,
+d2, d3, g9, g10) would show only a checkpoint scan; for those the LIVE
+internal plan is captured via their checkpoint=False internals and noted
+in the file header.
 """
 
 from __future__ import annotations
@@ -16,8 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
 from pyspark.sql import functions as F
+from youtubeanalyzerproject_big_data__spark import contract
 from youtubeanalyzerproject_big_data__spark.io import load_table
 from youtubeanalyzerproject_big_data__spark.operators import dedup, graph
 from youtubeanalyzerproject_big_data__spark.session import get_spark
@@ -40,54 +47,44 @@ def _live_df(spark, sf, name):
             "live internal plan (checkpoint=False): q_d3 pins eagerly",
         )
     if name == "c1_corpus_curation":
-        result, base = entrymod._c1_plan(spark, sf)
+        result, _ = contract.dedup._c1_plan(spark, sf)
         return result, "live internal plan (_c1_plan, pre-pin): q_c1 pins eagerly"
-    if name == "g9_adamic_adar":
+    if name in ("g9_adamic_adar", "g10_clustering_coefficient"):
         li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-        x, y = li.alias("x"), li.alias("y")
-        pairs = entrymod._copurchase_pairs(li) if hasattr(entrymod, "_copurchase_pairs") else (
-            x.join(
-                y,
-                (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-            ).select(F.col("x.l_partkey").alias("src"), F.col("y.l_partkey").alias("dst"))
-        )
+        pairs = contract.graph._copurchase_pairs(li)
+        if name == "g10_clustering_coefficient":
+            return (
+                graph.clustering_coefficient_topk(pairs, k=20, checkpoint=False),
+                "live internal plan (checkpoint=False): q_g10 pins eagerly",
+            )
         seeds = li.select(F.col("l_partkey").alias("seed")).where(F.col("l_partkey") % 1000 == 1).distinct()
         return (
             graph.adamic_adar(pairs, seeds, k=5, checkpoint=False),
             "live internal plan (checkpoint=False): q_g9 pins eagerly",
         )
-    if name == "g10_clustering_coefficient":
-        li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-        x, y = li.alias("x"), li.alias("y")
-        pairs = entrymod._copurchase_pairs(li) if hasattr(entrymod, "_copurchase_pairs") else (
-            x.join(
-                y,
-                (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-            ).select(F.col("x.l_partkey").alias("src"), F.col("y.l_partkey").alias("dst"))
-        )
-        return (
-            graph.clustering_coefficient_topk(pairs, k=20, checkpoint=False),
-            "live internal plan (checkpoint=False): q_g10 pins eagerly",
-        )
     return None, None
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    args = sys.argv[1:]
+    no_ckpt = "--no-ckpt" in args
+    if no_ckpt:
+        args.remove("--no-ckpt")
+        graph._DISABLE_CHECKPOINTS = True
+    rnd, suffix, names = args[0], args[1], args[2:]
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10")
+    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    qs = contract.queries()
     for name in names:
         df, note = _live_df(spark, sf, name)
         if df is None:
             df = qs[name](spark, sf)
             note = "declared query plan as returned by queries()"
+        if no_ckpt:
+            note += " -- graph._DISABLE_CHECKPOINTS=True (full loop lineage, capture-only)"
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:

@@ -1,7 +1,7 @@
 """Segmented DuckDB oracles for queries whose one-shot SQL exceeds temp disk
 at high scale factors.
 
-g4/g5's oracle is an UNROLLED 10-join CTE (`__spark_entry__._pagerank_oracle`):
+g4/g5's oracle is an UNROLLED 10-join CTE (`contract/graph._pagerank_oracle`):
 at sf10 each of the 10 rank-join intermediates materializes against the
 60M-edge table inside one query and DuckDB's temp spill hit ENOSPC (see
 FIXTURES.md "Scale-replay exclusions").  The arithmetic itself is fine -- so
@@ -585,7 +585,7 @@ def _doc_query_sql(con: duckdb.DuckDBPyConnection, name: str) -> str:
     compare) or aggregate it into the digest-sum scalars without ever
     materializing the result (d3's sf30 pair set is ~246M rows -- VERDICT
     r9 item 1)."""
-    import __spark_entry__ as entrymod
+    from youtubeanalyzerproject_big_data__spark import contract
     from youtubeanalyzerproject_big_data__spark.operators import dedup
 
     capped_preds = {"t_jac08": f"{JAC_EXPR} >= 0.8", "t_cont09": CONT_ANY}
@@ -608,7 +608,7 @@ def _doc_query_sql(con: duckdb.DuckDBPyConnection, name: str) -> str:
         # Both legs run on the deterministic md5 sample, truth UNCAPPED
         # (max_df=None) exactly as the one-shot SQL; only the evaluation
         # order is segmented.
-        sample_src = entrymod._DR1_SAMPLE_SQL
+        sample_src = contract.dedup._DR1_SAMPLE_SQL
         _mat_thresh_pairs(con, None, {"s_jac08": f"{JAC_EXPR} >= 0.8"}, p="s", n_batches=32, source=sample_src)
         _mat_lsh_pairs(con, p="s", max_bucket=2000, n_batches=16, source=sample_src)
         return """WITH tru AS (SELECT doc1, doc2 FROM s_jac08),
@@ -644,7 +644,7 @@ def _doc_query_sql(con: duckdb.DuckDBPyConnection, name: str) -> str:
               FROM (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x != '') AS tk
                     FROM documents)
             ),
-            lng AS (SELECT doc_id, lang_pred FROM ({entrymod._lang_id_oracle()}))
+            lng AS (SELECT doc_id, lang_pred FROM ({contract.text._lang_id_oracle()}))
             SELECT q.doc_id, q.n_tokens, lng.lang_pred
             FROM q JOIN lng ON q.doc_id = lng.doc_id
             JOIN rep ON q.doc_id = rep.doc_id
@@ -706,12 +706,12 @@ def main() -> None:
     for nm in digest_only - set(names):
         names.append(nm)
 
-    import __spark_entry__ as entrymod
     from tools.verify_local import _digest_compare, canon
+    from youtubeanalyzerproject_big_data__spark import contract
     from youtubeanalyzerproject_big_data__spark.session import get_spark
 
     spark = get_spark("segmented-oracle")
-    qs = entrymod.queries()
+    qs = contract.queries()
     records: dict[str, dict] = {}
     from youtubeanalyzerproject_big_data__spark.session import scratch_dir
 
@@ -774,7 +774,7 @@ def main() -> None:
                 # stay allocated while the Spark leg runs (see _scoped_oracle)
                 orows = _scoped_oracle(
                     tmp, sf, "g13",
-                    lambda c: _segmented_kcore(c, entrymod.G13_CORE_K, entrymod.G13_CORE_ROUNDS),
+                    lambda c: _segmented_kcore(c, contract.graph.G13_CORE_K, contract.graph.G13_CORE_ROUNDS),
                 )
             elif name == "g6_triangle_census":
                 orows = _segmented_triangles(con)
@@ -784,7 +784,7 @@ def main() -> None:
                 orows = _segmented_clustering_topk(con)
             else:
                 edges_sql, seeds_key = SEGMENTED[name]
-                seeds = getattr(entrymod, seeds_key) if seeds_key else None
+                seeds = getattr(contract.graph, seeds_key) if seeds_key else None
                 orows = _segmented_pagerank(con, edges_sql, seeds)
             t_oracle = time.time() - t0
             t1 = time.time()

@@ -204,36 +204,6 @@ def make_pq_recon(book, sub: int):
     return _recon
 
 
-def make_nearest_cell(cents):
-    """argmax-cosine cell assignment against a fixed centroid matrix
-    (captured in the closure, shipped once per executor)."""
-
-    @pandas_udf("int")
-    def _nearest(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        return pd.Series(np.argmax(m @ cents.T, axis=1).astype("int32"))
-
-    return _nearest
-
-
-def make_probe_cells(cents, nprobe: int):
-    """Top-nprobe nearest centroid cells per query vector."""
-
-    @pandas_udf("array<int>")
-    def _probe(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        order = np.argsort(-(m @ cents.T), axis=1)[:, :nprobe].astype("int32")
-        return pd.Series(list(order))
-
-    return _probe
-
-
 def make_char_window_hashes(span_len: int):
     """Arrow-batched stride-1 char-window md5s over ALREADY-NORMALIZED text
     -- byte-identical to the Catalyst transform(sequence, unhex(md5(substr)))

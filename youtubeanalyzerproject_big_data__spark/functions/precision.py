@@ -5,7 +5,7 @@ DuckDB oracle would disagree in the last ulps and fail value-hash checks.
 Fix: route sums through exact DECIMAL arithmetic (associative, so partial
 aggregation / AQE re-partitioning cannot change the result), cast back to
 double, and round.  The same recipe is mirrored in the oracle SQL
-(`__spark_entry__.oracle_sql`).
+(the contract's oracle twins, `contract/_sql.py`).
 
 This also matters at 100 TB: decimal sums keep map-side partial aggregation
 (HashAggregateExec partial+final) bit-identical regardless of partitioning,
@@ -42,7 +42,7 @@ def dec_sum_col(col: str | Column) -> Column:
     (|sum| ~ 9.2e12 in one group -- beyond any gate or tiled replay).
 
     SQL twin: ``CAST(CAST(SUM(CAST(x AS DECIMAL(18,6))) * 1000000
-    AS BIGINT) AS DOUBLE) / 1000000`` (`__spark_entry__._dsum`).
+    AS BIGINT) AS DOUBLE) / 1000000`` (`contract/_sql._dsum`).
     """
     c = F.col(col) if isinstance(col, str) else col
     micros = (F.sum(c.cast(DEC)) * 1_000_000).cast("long")
@@ -70,7 +70,7 @@ def dec_sum_round(col: str | Column, scale: int) -> Column:
     int64 -> double / 1e6 materialization -- IEEE-correctly-rounded in
     both engines -- touches floating point.
 
-    SQL twin: ``__spark_entry__._dsum_round``.
+    SQL twin: ``contract/_sql._dsum_round``.
     """
     if not 0 <= scale < 6:
         raise ValueError("dec_sum_round is for scale < 6; use dec_sum at scale 6")
@@ -179,7 +179,7 @@ def micro_round(col: str | Column, alias: str | None = None, scale: int = 6) -> 
     micro invariant).  Ties round toward +inf rather than away from zero;
     for the contract's in-[-1,1] similarity outputs the distinction never
     materialized, and cross-engine identity is the contract, not decimal
-    HALF_UP.  SQL twin: ``__spark_entry__._dmicro``."""
+    HALF_UP.  SQL twin: ``contract/_sql._dmicro``."""
     p = float(10**scale)
     c = (F.col(col) if isinstance(col, str) else col).cast("double")
     out = F.floor(c * F.lit(p) + F.lit(0.5)).cast("double") / F.lit(p)
@@ -190,7 +190,7 @@ def dratio_sql(num: str, den: str, scale: int = 6) -> str:
     """DuckDB twin of ratio_round -- ALL-INTEGER half-up of an integer
     ratio (HUGEINT intermediates mirror the Spark side's decimal(38,0), so
     group-sum-micro numerators never overflow; // and % are exact; requires
-    den > 0).  Lives here (not __spark_entry__) so tools/segmented_oracle.py
+    den > 0).  Lives here (not in contract/_sql) so tools/segmented_oracle.py
     shares the one definition, same pattern as hashing.md5_int32_lane_sql."""
     p = 10**scale
     t = f"(CAST({2 * p} AS HUGEINT) * ABS(CAST({num} AS HUGEINT)) + CAST({den} AS HUGEINT))"

@@ -16,8 +16,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from youtubeanalyzerproject_big_data__spark.schema import TESTDATA_TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -56,16 +54,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_type == "timestamp_ntz":
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or list(TESTDATA_TABLES))}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a SQL temp view so ``spark.sql`` works verbatim."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_json_artifact(df: DataFrame, path: str) -> None:

@@ -1,4 +1,4 @@
 """Operator inventory (SURVEY.md par.2), expressed as generic DataFrame
 transformations.  Each module maps to a reference capability family; the
-driver contract in ``__spark_entry__.py`` binds them to the benchmark tables.
+query contract (``contract/``) binds them to the benchmark tables.
 """

@@ -1,7 +1,6 @@
 """Distributed Lloyd's k-means over embedding columns.
 
-The canonical iterative trainer (the full-data version of the bounded-sample
-refinement in similarity._centroids): per iteration, every vector is
+The canonical iterative trainer: per iteration, every vector is
 assigned to its nearest centroid map-side (broadcast centroid literals, no
 shuffle) and centroids re-estimate with ONE hash aggregate on (cell, pos).
 At 100 TB that is the textbook plan -- per iteration exactly one shuffle

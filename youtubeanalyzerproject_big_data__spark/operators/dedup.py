@@ -187,23 +187,6 @@ def _repartitioned_cids(keyed: DataFrame) -> DataFrame:
     )
 
 
-def _prefix_alpha_coeff(threshold: float) -> int:
-    """2*T - 1 for the smallest integer micros T whose double
-    materialization T/1e6 passes ``>= threshold`` -- the exact-integer
-    translation of the jaccard gate (ratio_round is half-up on exact
-    integers: micro >= T <=> 2e6*c >= (2T-1)*(n1+n2-c)).  Any qualifying
-    pair therefore has capped intersection c >= ceil((2T-1)*n_i/2e6) for
-    EACH side i (substitute n_other >= c) -- the per-side prefix bound."""
-    import math
-
-    t_min = math.ceil(threshold * 1e6)
-    while t_min / 1e6 < threshold:  # same IEEE compare Spark executes
-        t_min += 1
-    while t_min >= 1 and (t_min - 1) / 1e6 >= threshold:
-        t_min -= 1
-    return 2 * t_min - 1
-
-
 def _capped_intersections(
     df: DataFrame,
     id_col: str,
@@ -211,7 +194,6 @@ def _capped_intersections(
     n: int,
     max_df: int | None,
     pair_filter=None,
-    prefix_threshold: float | None = None,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """(doc1 < doc2, n_common, n1, n2) for every pair sharing >= 1 surviving
     shingle under the ``max_df`` stop-shingle cut -- the shared pair stage of
@@ -304,124 +286,30 @@ def _capped_intersections(
     )
     if max_df is not None:
         groups = groups.where(F.col("dfd") <= max_df)
-    if prefix_threshold is not None:
-        # PPJoin-style PREFIX FILTER (r11, guide par.2.3/par.3.2): the full
-        # index expands sum_sh C(df, 2) pair-occurrence rows -- QUADRATIC in
-        # per-shingle document frequency and the d2 scale-killer (~5e9 rows
-        # at sf10) -- into one exchange.  A pair qualifying the jaccard gate
-        # at threshold t has capped intersection c >= alpha_i =
-        # ceil((2T-1)*n_i/2e6) on EACH side (_prefix_alpha_coeff); order the
-        # surviving shingle universe totally by (dfd, sh) and the globally
-        # smallest common surviving shingle of any qualifying pair sits
-        # within the first s_i - c + 1 <= s_i - alpha_i + 1 elements of both
-        # sides' capped sets (all c common elements rank at or after it).
-        # So indexing ONLY each content's prefix generates a candidate
-        # superset, and exact verification re-computes c as
-        # |capped(A) & capped(B)| via array_intersect -- bit-identical to
-        # the counted multiplicity (capped sets ARE the index population).
-        # Every stage is LINEAR in shingle rows; candidates are
-        # verification-bounded, never C(df,2)-expanded.  Same-content self
-        # pairs (m >= 2) never need the index: their n_common is exactly
-        # s (every capped shingle shared), computed from the per-content
-        # row directly.  The caller's pair_filter below remains the exact
-        # gate for both branches, so false-positive candidates drop out.
-        acoef = _prefix_alpha_coeff(prefix_threshold)
-        rows = groups.select("sh", "dfd", F.explode("cs").alias("x")).select(
-            F.col("x.c").alias("c"), F.col("x.m").alias("m"), F.col("x.n").alias("n"), "dfd", "sh"
+    # structs sort by c first (n is functionally dependent on c), so the
+    # in-array pair expansion keeps the canonical c1 < c2 orientation with
+    # each side's denominator riding along.  Cross pairs and same-content
+    # self pairs (m >= 2) concatenate into ONE exploded array, so the
+    # index subtree is built once -- the former cross/selfs union planned
+    # the whole groupBy(sh) aggregation TWICE, one copy per branch.
+    cn = F.transform("cs", lambda x: F.struct(x["c"].alias("c"), x["n"].alias("n")))
+    self_structs = F.transform(
+        F.filter("cs", lambda x: x["m"] >= 2),
+        lambda s: F.struct(
+            F.struct(s["c"].alias("c"), s["n"].alias("n")).alias("doc1"),
+            F.struct(s["c"].alias("c"), s["n"].alias("n")).alias("doc2"),
+        ),
+    )
+    expanded = (
+        groups.select(F.explode(F.concat(_ordered_pairs(cn), self_structs)).alias("p"))
+        .select(
+            F.col("p.doc1.c").alias("c1"),
+            F.col("p.doc2.c").alias("c2"),
+            F.col("p.doc1.n").alias("n1"),
+            F.col("p.doc2.n").alias("n2"),
         )
-        per_content = (
-            rows.groupBy("c")
-            .agg(
-                F.sort_array(F.collect_list(F.struct(F.col("dfd"), F.col("sh")))).alias("vs"),
-                F.min("m").alias("m"),
-                F.min("n").alias("n"),
-            )
-            .withColumn("s", F.size("vs").cast("long"))
-            .persist(StorageLevel.MEMORY_ONLY)
-        )
-        alpha = F.greatest(F.lit(1).cast("long"), F.expr(f"({acoef}L * n + 1999999L) DIV 2000000L"))
-        plen = (F.col("s") - alpha + F.lit(1)).cast("int")
-        # Prefix index: bucket key is the shingle hash alone (dfd is
-        # functionally dependent -- the struct rode the sort only).
-        pref = per_content.where(plen >= 1).select(
-            "c", F.explode(F.transform(F.slice("vs", F.lit(1), plen), lambda x: x["sh"])).alias("psh")
-        )
-        # Candidate CONTENT set, not candidate pairs: a qualifying pair's
-        # two sides share a prefix bucket (the bound above), so every
-        # member of a multi-member prefix bucket -- and ONLY those -- can
-        # participate in a result pair.  No pair explosion here at all: a
-        # hot prefix bucket costs df rows, never C(df, 2).  Verification
-        # then re-runs the exact in-array counting explosion over the
-        # shingle rows of candidate contents only.  Result-identical
-        # because (a) restricting the corpus to a subset cannot change
-        # what two surviving sets share, so the recount is exact, and (b)
-        # every gate-passing pair among candidate contents is a true pair
-        # (the count is exact) while every true pair has both members in
-        # the candidate set -- no pair straddles the cut.  Shipping
-        # per-content shingle ARRAYS onto candidate pairs instead (the d3
-        # verification shape) measured 78 MB shuffle at sf0.1 (two full
-        # corpus-array exchanges); this form re-explodes only
-        # candidate-content rows.
-        cand_contents = (
-            pref.groupBy("psh")
-            .agg(F.collect_set("c").alias("cs2"))
-            .where(F.size("cs2") >= 2)
-            .select(F.explode("cs2").alias("c"))
-            .distinct()
-        )
-        sub = per_content.join(cand_contents.hint("shuffle_hash"), "c", "left_semi")
-        rows2 = sub.select(
-            "c", "n", F.explode(F.transform("vs", lambda x: x["sh"])).alias("sh2")
-        )
-        verified = (
-            rows2.groupBy("sh2")
-            .agg(F.sort_array(F.collect_list(F.struct(F.col("c").alias("c"), F.col("n").alias("n")))).alias("cn"))
-            .where(F.size("cn") >= 2)
-            .select(F.explode(_ordered_pairs(F.col("cn"))).alias("p"))
-            .select(
-                F.col("p.doc1.c").alias("c1"),
-                F.col("p.doc2.c").alias("c2"),
-                F.col("p.doc1.n").alias("n1"),
-                F.col("p.doc2.n").alias("n2"),
-            )
-            .groupBy("c1", "c2", "n1", "n2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        self_out = per_content.where((F.col("m") >= 2) & (F.col("s") >= 1)).select(
-            F.col("c").alias("c1"),
-            F.col("c").alias("c2"),
-            F.col("n").alias("n1"),
-            F.col("n").alias("n2"),
-            F.col("s").alias("n_common"),
-        )
-        pairs_c = verified.unionByName(self_out)
-        extra_handles = [per_content]
-    else:
-        # structs sort by c first (n is functionally dependent on c), so the
-        # in-array pair expansion keeps the canonical c1 < c2 orientation with
-        # each side's denominator riding along.  Cross pairs and same-content
-        # self pairs (m >= 2) concatenate into ONE exploded array, so the
-        # index subtree is built once -- the former cross/selfs union planned
-        # the whole groupBy(sh) aggregation TWICE, one copy per branch.
-        cn = F.transform("cs", lambda x: F.struct(x["c"].alias("c"), x["n"].alias("n")))
-        self_structs = F.transform(
-            F.filter("cs", lambda x: x["m"] >= 2),
-            lambda s: F.struct(
-                F.struct(s["c"].alias("c"), s["n"].alias("n")).alias("doc1"),
-                F.struct(s["c"].alias("c"), s["n"].alias("n")).alias("doc2"),
-            ),
-        )
-        expanded = (
-            groups.select(F.explode(F.concat(_ordered_pairs(cn), self_structs)).alias("p"))
-            .select(
-                F.col("p.doc1.c").alias("c1"),
-                F.col("p.doc2.c").alias("c2"),
-                F.col("p.doc1.n").alias("n1"),
-                F.col("p.doc2.n").alias("n2"),
-            )
-        )
-        pairs_c = expanded.groupBy("c1", "c2", "n1", "n2").agg(F.count(F.lit(1)).alias("n_common"))
-        extra_handles = []
+    )
+    pairs_c = expanded.groupBy("c1", "c2", "n1", "n2").agg(F.count(F.lit(1)).alias("n_common"))
     if pair_filter is not None:
         # Pair-level threshold gate BEFORE member expansion: the member
         # joins then carry only qualifying (result-bound) pairs instead of
@@ -455,7 +343,7 @@ def _capped_intersections(
         .where(F.col("d1") < F.col("d2"))
         .select(F.col("d1").alias("doc1"), F.col("d2").alias("doc2"), "n_common", "n1", "n2")
     )
-    return cross_docs.unionByName(self_docs), [sh, *extra_handles, pairs_c]
+    return cross_docs.unionByName(self_docs), [sh, pairs_c]
 
 
 def ngram_jaccard_pairs(
@@ -466,7 +354,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     max_df: int | None = DEFAULT_MAX_DF,
     checkpoint: bool = True,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard near-dup pairs (doc1 < doc2, jaccard >= t).
 
@@ -496,21 +383,7 @@ def ngram_jaccard_pairs(
     """
     # Jaccard is symmetric in (n1, n2), so the threshold gate evaluates
     # EXACTLY at content-pair level and runs pre-expansion: the member
-    # joins see only qualifying pairs (r10).  ``prefix_filter=True`` routes
-    # candidate generation through a ppjoin-style prefix index instead of
-    # the full sum C(df,2) pair-occurrence explosion; it is
-    # result-identical (property-fuzzed against the full-index path in
-    # tests/test_dedup.py) but DEFAULT OFF after the r11 adjudication: on
-    # this corpus family the intersecting-pair mass is ~1.1 shared
-    # shingles per pair (junk df=2 overlaps), so exact verification of the
-    # prefix candidates costs as much as counting all occurrences, and the
-    # prefix path nets +23% shuffle / +85% wall at sf0.1 (numbers in
-    # OPTIMIZATION_r11.md).  It remains the right shape for SPARSE real
-    # corpora where candidates << intersecting pairs; the max_df cap
-    # already bounds the full-index quadratic term to <= max_df/2 x the
-    # (linear) shingle-row count at any scale.  Containment (d12) can
-    # never use it: a tiny subset partner admits no per-side lower bound
-    # on c, so no prefix exists for containment.
+    # joins see only qualifying pairs (r10).
     pairs, handles = _capped_intersections(
         df,
         id_col,
@@ -518,7 +391,6 @@ def ngram_jaccard_pairs(
         n,
         max_df,
         pair_filter=lambda c, n1, n2: ratio_round(c, n1 + n2 - c) >= threshold,
-        prefix_threshold=threshold if prefix_filter else None,
     )
     result = (
         pairs.withColumn("jaccard", ratio_round(F.col("n_common"), F.col("n1") + F.col("n2") - F.col("n_common")))
@@ -535,18 +407,6 @@ def ngram_jaccard_pairs(
         for h in handles:
             h.unpersist()
     return result
-
-
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 16) -> DataFrame:
-    """(doc_id, minhash array<long>[num_hashes]) from word-n-gram shingles.
-
-    minhash_j(doc) = min over shingles of lane (j%4) of md5(seed=j//4 digest)
-    -- one 128-bit digest feeds four 32-bit hash lanes, so K minhashes cost
-    ceil(K/4) md5 evaluations per shingle (md5_int32_lanes).  Computed as one
-    explode + single groupBy with num_hashes min() aggregates (one shuffle
-    keyed by doc_id, map-side combined).
-    """
-    return _minhash_sigs_from_shingles(_shingles(df, id_col, text_col, n), num_hashes)
 
 
 def _minhash_sigs_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:

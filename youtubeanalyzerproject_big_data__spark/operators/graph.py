@@ -312,81 +312,6 @@ def personalized_pagerank(
     return result
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20, num_partitions: int | None = None) -> DataFrame:
-    """Connected components by min-label propagation: every vertex converges
-    to the smallest vertex id reachable from it (undirected).
-
-    The dedup pipeline's clustering step: near-dup PAIRS (d2/d3/d4 output)
-    become duplicate GROUPS.  Each round is one join + one aggregation over
-    the symmetrized edge table (cached, hash-partitioned once, like
-    pagerank); the loop stops early when a round changes no label, so
-    runtime is O(component diameter) rounds -- small for dedup clusters.
-    Returns (id, component) for every vertex WITH an edge; isolated
-    vertices are their own component by definition (callers left-join).
-    """
-    if max_iter < 1:
-        # changed starts at 0, so a zero-round loop would skip the
-        # non-convergence guard and return every-vertex-labels-itself.
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Canonicalize FIRST, symmetrize by union (the kcore r10 collapse):
-    # distinct runs over m canonical rows instead of 2m symmetrized ones --
-    # half the dedup exchange.  The two directions of a canonical-distinct
-    # set are disjoint (u < v vs v > u), so canon + canon.swap IS the old
-    # distinct(sym); self-loops (u == v) stay as the single canonical row,
-    # exactly as the old distinct kept them (they only assert the vertex
-    # exists -- min-label over a self edge is the identity).
-    canon = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("src"),
-            F.greatest(F.col("src"), F.col("dst")).alias("dst"),
-        )
-        .distinct()
-    )
-    sym = (
-        canon.union(
-            canon.where(F.col("src") != F.col("dst")).select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .repartition(n_part, "src")
-        .cache()
-    )
-    labels = sym.select(F.col("src").alias("id")).distinct().select("id", F.col("id").alias("component"))
-    labels = labels.transform(_ckpt)
-    changed = 0
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("id", "dst").withColumnRenamed("component", "nbr"), "dst")
-            .groupBy("src")
-            .agg(F.min("nbr").alias("nbr"))
-        )
-        new_labels = (
-            labels.join(nbr_min.withColumnRenamed("src", "id"), "id", "left")
-            .select("id", F.least("component", F.coalesce("nbr", "component")).alias("component"))
-            .transform(_ckpt)  # flat lineage; also feeds the change count
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), "id")
-            .where(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    sym.unpersist()
-    if changed > 0:
-        # Silent truncation would hand back WRONG cluster ids (a chain with
-        # diameter > max_iter leaves labels unconverged) -- fail loudly.
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter or use "
-            "connected_components_star (O(log n) rounds)"
-        )
-    return labels
-
-
 def _local_components(rows) -> list:
     """Driver-side union-find over collected (u, v) edges; returns
     (id, min-reachable-id) pairs -- the same contract as the distributed
@@ -435,9 +360,9 @@ def connected_components_star(
     keyed by vertex id; edges are re-canonicalized + distinct'd each round
     so the edge set shrinks monotonically toward |V| - #components.
     Returns (id, component) for every vertex WITH a non-self-loop edge,
-    component = the smallest reachable id -- same contract as
-    connected_components except pure self-loop vertices are dropped with
-    their loops (callers pre-filter; edges_from_pairs never emits them).
+    component = the smallest reachable id; pure self-loop vertices are
+    dropped with their loops (callers pre-filter; edges_from_pairs never
+    emits them).
 
     Small-graph fast path: dedup pair graphs are #near-dup-pairs-sized --
     typically tens of edges per million documents -- and each distributed

@@ -209,47 +209,6 @@ def lsh_topk(
     return _topk_per_query(scored, k)
 
 
-def _centroids(corpus: DataFrame, id_col: str, vec_col: str, num_cells: int, refine_iters: int = 1):
-    """Deterministic centroid model: seed with the num_cells corpus vectors
-    of smallest xxhash64(id) (a seedless, order-stable pseudo-random
-    sample), then run ``refine_iters`` Lloyd step(s) driver-side over a
-    bounded sample.  Returns a unit-normalized numpy array (num_cells x d).
-
-    The model is tiny and train-once -- same lifecycle as the ALS model;
-    at 100 TB you train on a sample and broadcast, never on the full scan.
-    """
-    import numpy as np
-
-    seeds = (
-        corpus.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col).cast("string")).alias("h"))
-        .orderBy("h")
-        .limit(num_cells)
-        .collect()
-    )
-    cents = np.stack([np.asarray(r["v"], dtype=np.float64) for r in seeds])
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    if refine_iters:
-        # bounded, deterministic refinement sample (first 4096 by hash order)
-        sample = (
-            corpus.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col).cast("string")).alias("h"))
-            .orderBy("h")
-            .limit(4096)
-            .collect()
-        )
-        X = np.stack([np.asarray(r["v"], dtype=np.float64) for r in sample])
-        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        for _ in range(refine_iters):
-            assign = np.argmax(Xn @ cents.T, axis=1)
-            for c in range(len(cents)):
-                members = Xn[assign == c]
-                if len(members):
-                    m = members.mean(axis=0)
-                    norm = np.linalg.norm(m)
-                    if norm > 0:
-                        cents[c] = m / norm
-    return cents
-
-
 def _centroids_exact(
     corpus: DataFrame, id_col: str, vec_col: str, num_cells: int, hash_seed: str = "ivf"
 ) -> list[list[float]]:
@@ -262,7 +221,9 @@ def _centroids_exact(
     numpy's pairwise/SIMD reductions are library-specific, while this exact
     IEEE sequence is what the DuckDB oracle's SQL chain computes, so
     centroid components are bit-identical across engines.  Bounded collect:
-    num_cells rows (same model lifecycle as _centroids).
+    num_cells rows.  The model is tiny and train-once -- same lifecycle as
+    the ALS model; at 100 TB you train on a sample and broadcast, never on
+    the full scan.
     """
     import math
 
@@ -284,8 +245,6 @@ def _centroids_exact(
     return cents
 
 
-
-
 def ivf_topk_catalyst(
     corpus: DataFrame,
     queries: DataFrame,
@@ -295,21 +254,21 @@ def ivf_topk_catalyst(
     num_cells: int = 16,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF ANN with ENGINE-PORTABLE arithmetic -- the oracle-checkable twin
-    of :func:`_ivf_topk_gemm`.
+    """IVF ANN with ENGINE-PORTABLE arithmetic.
 
-    Same inverted-file shape (assign corpus rows to nearest centroid cell,
-    probe nprobe cells per query, exact re-rank inside them), but the model
-    is deterministic (md5-seeded _centroids_exact) and every fold -- cell
-    dots, scoring cosine -- is the exact left-to-right IEEE sequence the
-    DuckDB oracle replays bit-for-bit, so cell membership, not just the
-    re-ranked output, is verified cross-engine.  The kernels run as Arrow
+    Inverted-file shape: assign corpus rows to their nearest centroid cell,
+    probe the nprobe nearest cells per query, re-rank exactly inside them.
+    The cell equi-join replaces the all-pairs product with a
+    1/(num_cells/nprobe) slice of it (probe cost ~ nprobe/num_cells); the
+    output schema matches brute_force_topk so recall is directly
+    measurable.  The model is deterministic (md5-seeded _centroids_exact)
+    and every fold -- cell dots, scoring cosine -- is the exact
+    left-to-right IEEE sequence the DuckDB oracle replays bit-for-bit, so
+    cell membership, not just the re-ranked output, is verified
+    cross-engine.  The kernels run as Arrow
     exact-sequential batches (vectorized over rows, sequential over dims --
     see functions._arrow_udfs): pure-Catalyst forms lose either way (HOF
     folds run interpreted; unrolled chains blow Janino's 64 KB limit).
-    This is the ONE public IVF entry point; the free-arithmetic numpy-GEMM
-    twin is internal (:func:`_ivf_topk_gemm`) and scales identically
-    (probe cost ~ nprobe/num_cells).
     """
     from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import (
         make_cell_probe,
@@ -323,56 +282,6 @@ def ivf_topk_catalyst(
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")).withColumn(
         "cell", F.explode(make_cell_probe(cents, nprobe)(F.col("qv")))
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", make_cosine_seq()(F.col("qv"), F.col("cv")))
-    )
-    return _topk_per_query(scored, k)
-
-
-def _ivf_topk_gemm(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    num_cells: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
-    """INTERNAL free-arithmetic IVF variant (numpy GEMM argmax).
-
-    ivf_topk_catalyst is the one public IVF entry point (the wired s3/s5
-    route); this twin trades engine-portable arithmetic for BLAS argmax
-    throughput and exists for tests/experiments.  Same index shape, same
-    output schema, same scaling.
-
-    ANN top-k via an IVF (inverted-file) index.
-
-    Corpus rows are assigned to their nearest centroid cell (one
-    Arrow-batched argmax GEMM per batch); each query probes its ``nprobe``
-    nearest cells and re-ranks exactly inside them.  The cell equi-join
-    replaces the all-pairs product with a 1/(num_cells/nprobe) slice of it.
-    Output schema matches brute_force_topk so recall is directly
-    measurable.
-    """
-    from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import (
-        make_cosine_seq,
-        make_nearest_cell,
-        make_probe_cells,
-    )
-
-    cents = _centroids(corpus, id_col, vec_col, num_cells)
-    nearest_cell = make_nearest_cell(cents)
-    probe_cells = make_probe_cells(cents, nprobe)
-
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")).withColumn(
-        "cell", nearest_cell("cv")
-    )
-    q = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-        .withColumn("cell", F.explode(probe_cells("qv")))
     )
     scored = (
         c.join(F.broadcast(q), "cell")

@@ -18,20 +18,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    """The `.explain("formatted")` text, as a string instead of stdout."""
-    return df._jdf.queryExecution().explainString("formatted")
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """Every PushedFilters list that reaches a scan, raw text per scan."""
-    out = []
-    for line in executed_plan(df).splitlines():
-        if "PushedFilters:" in line:
-            out.append(line.split("PushedFilters:", 1)[1].strip())
-    return out
-
-
 def scan_schemas(df: DataFrame) -> list[str]:
     """ReadSchema of each scan -- the column-pruning evidence."""
     out = []

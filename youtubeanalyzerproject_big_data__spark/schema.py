@@ -64,37 +64,3 @@ RATINGS_SCHEMA = T.StructType(
         T.StructField("rating", T.DoubleType(), True),
     ]
 )
-
-# --- driver benchmark tables (TESTDATA.md) --------------------------------
-
-TESTDATA_TABLES: dict[str, list[str]] = {
-    "region": ["r_regionkey", "r_name"],
-    "nation": ["n_nationkey", "n_name", "n_regionkey"],
-    "customer": ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
-    "supplier": ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    "part": ["p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"],
-    "orders": [
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderdate",
-        "o_orderpriority",
-    ],
-    "lineitem": [
-        "l_orderkey",
-        "l_partkey",
-        "l_suppkey",
-        "l_linenumber",
-        "l_quantity",
-        "l_extendedprice",
-        "l_discount",
-        "l_tax",
-        "l_returnflag",
-        "l_linestatus",
-        "l_shipdate",
-    ],
-    "events": ["event_id", "ts", "user_id", "event_type", "value", "props"],
-    "documents": ["doc_id", "text", "lang", "source", "n_chars"],
-    "embeddings": ["vec_id", "embedding", "label"],
-}
