@@ -164,6 +164,29 @@ def test_triangle_count_known_graphs(spark):
     assert (r["n_edges"], r["n_wedges"], r["n_triangles"]) == (2, 0, 0)
 
 
+def _rank_replica(edges, seeds=None, reset=0.15, max_iter=10):
+    """Pure-Python replay of graph._rank_rounds' quantized recurrence plus
+    the final held-vertex step: PageRank when ``seeds`` is None (held: every
+    src), personalized PageRank otherwise (held: the seeds; zero ranks
+    dropped).  Same IEEE operations in the same order as the engine."""
+    from collections import Counter, defaultdict
+
+    outd = Counter(s for s, _ in edges)
+    on = (lambda v: True) if seeds is None else (lambda v: v in seeds)
+    ranks = None
+    for _ in range(max_iter):
+        contrib = defaultdict(int)
+        for s, d in edges:
+            r = (1.0 if on(s) else 0.0) if ranks is None else ranks.get(s, reset if on(s) else 0.0)
+            contrib[d] += int(round(r * (1.0 / outd[s]) * 1e9))
+        ranks = {d: (reset if on(d) else 0.0) + (1.0 - reset) * (c / 1e9) for d, c in contrib.items()}
+    ranks = ranks or {}
+    held = {s for s, _ in edges} if seeds is None else set(seeds)
+    out = dict(ranks) if seeds is None else {v: r for v, r in ranks.items() if r > 0}
+    out.update({v: reset for v in held - set(ranks)})
+    return {v: round(r, 6) for v, r in out.items()}
+
+
 def test_personalized_pagerank_matches_python_replica(spark):
     """Tiny-graph PPR equals a literal Python replay of the quantized
     iteration; unreachable vertices are absent; sink seeds hold reset."""
@@ -172,24 +195,82 @@ def test_personalized_pagerank_matches_python_replica(spark):
     edges = [("A", "B"), ("B", "A"), ("A", "C"), ("X", "Y")]  # X,Y unreachable from A
     df = spark.createDataFrame(edges, "src string, dst string")
     out = {r["id"]: r["pagerank"] for r in personalized_pagerank(df, ["A"], 0.15, max_iter=10).collect()}
-
-    # python replica (same quantized arithmetic)
-    from collections import defaultdict
-
-    outd = defaultdict(int)
-    for s, d in edges:
-        outd[s] += 1
-    ranks = {"A": 1.0}
-    for _ in range(10):
-        contrib = defaultdict(int)
-        for s, d in edges:
-            r = ranks.get(s, 0.15 if s == "A" else 0.0)
-            contrib[d] += int(round(r * (1.0 / outd[s]) * 1e9))
-        ranks = {d: (0.15 if d == "A" else 0.0) + 0.85 * (c / 1e9) for d, c in contrib.items()}
-    expected = {v: round(r, 6) for v, r in ranks.items() if r > 0}
-    assert out == expected
+    assert out == _rank_replica(edges, ["A"])
     assert "X" not in out  # zero rank, excluded
     assert out["A"] > out["B"] > 0 and out["C"] > 0
+
+
+_DEGENERATE_GRAPHS = {
+    "single_edge": [("a", "b")],
+    "all_dangling_star": [("h", f"l{i}") for i in range(5)],
+    "self_loops_only": [("a", "a"), ("b", "b")],
+    "duplicate_edges": [("a", "b"), ("a", "b"), ("b", "a"), ("a", "c"), ("c", "a"), ("c", "a")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DEGENERATE_GRAPHS))
+def test_rank_functions_on_degenerate_graphs(spark, case):
+    """ROADMAP item 5 for both rank functions: each degenerate graph, after
+    edges_from_pairs' cleaning (self-loops dropped, duplicates kept as
+    multiplicity), matches the Python replica -- an empty graph yields an
+    empty PageRank and only the held seeds for PPR, never an exception."""
+    rows = _DEGENERATE_GRAPHS[case]
+    edges = graph.edges_from_pairs(spark.createDataFrame(rows, "src string, dst string"), "src", "dst")
+    clean = [(s, d) for s, d in rows if s != d]
+    assert sorted(tuple(r) for r in edges.collect()) == sorted(clean)
+    pr = {r["id"]: r["pagerank"] for r in graph.pagerank(edges).collect()}
+    assert pr == _rank_replica(clean)
+    for seeds in (["a"], ["b", "h"], []):
+        ppr = {r["id"]: r["pagerank"] for r in graph.personalized_pagerank(edges, seeds).collect()}
+        assert ppr == _rank_replica(clean, seeds), seeds
+
+
+def test_loop_partitions_empty_table_is_one_partition(spark, tmp_path):
+    """An empty edge table lays out as one partition, and both rank
+    functions return an empty frame over it."""
+    path = str(tmp_path / "edges")
+    spark.createDataFrame([], "src string, dst string").write.parquet(path)
+    edges = spark.read.parquet(path)
+    assert graph.loop_partitions(edges) == 1
+    assert graph.pagerank(edges).count() == 0
+    assert graph.personalized_pagerank(edges, []).count() == 0
+
+
+def test_loop_partitions_crawl_sized_graph_is_one_partition(spark, tmp_path):
+    """A crawl-shaped graph (~38.7k related-video edges, 11-char ids) fits
+    one AQE minimum partition by Catalyst's estimate: one partition."""
+    n_v = 7_740
+    videos = spark.createDataFrame(
+        [(f"v{i:010d}", [f"v{(i * 31 + k * 977) % n_v:010d}" for k in range(5)]) for i in range(n_v)],
+        "video_id string, related array<string>",
+    )
+    path = str(tmp_path / "videos")
+    videos.write.parquet(path)
+    edges = graph.edges_from_arrays(graph.densify(spark.read.parquet(path), "related"), "video_id", "related")
+    assert graph.loop_partitions(edges) == 1
+
+
+def test_loop_partitions_large_graph_capped_by_spark_confs(spark):
+    """A 200k-edge graph is laid out in spark.sql.shuffle.partitions pieces;
+    the rule reads only Spark's own confs (minPartitionSize and the shuffle
+    partition cap), so changing them moves the answer."""
+    import inspect
+
+    from pyspark.sql import functions as F
+
+    edges = spark.range(200_000).select(F.col("id").alias("src"), (F.col("id") * 7 % 5_000).alias("dst"))
+    assert graph.loop_partitions(edges) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        assert graph.loop_partitions(edges) == 3
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64MB")
+        assert graph.loop_partitions(edges) == 1
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert "environ" not in inspect.getsource(graph.loop_partitions)
 
 
 def test_personalized_pagerank_sink_seed(spark):

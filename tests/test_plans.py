@@ -402,28 +402,53 @@ def _graph_full_lineage():
     return cm()
 
 
-def test_pagerank_loop_shape(spark):
-    """g4/g5: with a materialized prepare_weighted_edges handle, every
-    iteration must read the CACHE (InMemoryTableScan), the rank-side joins
-    must stay hash joins (no sort-merge of the edge table, no cartesian),
-    and the per-iteration aggregate shuffles on dst only."""
+def _outside_caches(plan: str) -> list[str]:
+    """Plan lines outside every InMemoryRelation subtree: the operators
+    that run per query, not the cached table's own (one-time) build."""
+    depth = lambda ln: len(ln) - len(ln.lstrip(" :|+-"))  # noqa: E731
+    out, cut = [], None
+    for ln in plan.splitlines():
+        if cut is not None and depth(ln) > cut:
+            continue
+        cut = depth(ln) if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return out
+
+
+def _assert_rank_joins_co_partitioned(plan: str) -> None:
+    """Every rank join is a pinned shuffle-hash join over the edge layout:
+    no broadcast, no sort-merge, no cartesian, and the edge table is never
+    re-shuffled on src outside its cache."""
     import re
 
+    outside = "\n".join(_outside_caches(plan))
+    assert plan.count("BroadcastHashJoin") == 0
+    assert plan.count("SortMergeJoin") == 0 and plan.count("CartesianProduct") == 0
+    joins = re.findall(r"(\w+Join) \[", outside)
+    assert joins and set(joins) == {"ShuffledHashJoin"}, joins
+    assert not re.search(r"Exchange hashpartitioning\(src", outside)
+
+
+def test_pagerank_loop_shape(spark):
+    """g4/g5 on the sf0.001 fixture (one-partition layout): with a
+    materialized prepare_weighted_edges handle, every iteration reads the
+    CACHE (InMemoryTableScan), every rank join is a ShuffledHashJoin (no
+    per-round broadcast), and nothing between the cache reads and the
+    result is an Exchange."""
     with _graph_full_lineage() as graphmod:
         handle = contract.graph._prepared_pagerank_edges(spark, SF, "fwd")
         handle.count()  # materialize so references plan as cache reads
         ranks = graphmod.pagerank(None, max_iter=3, weighted=handle)
         plan = _plan(ranks)
     assert plan.count("InMemoryTableScan") >= 4  # 3 iterations + src_only all read the cache
-    assert plan.count("SortMergeJoin") == 0
-    assert plan.count("BroadcastHashJoin") == 3  # 2 rank joins + 1 left-anti src_only
-    assert plan.count("CartesianProduct") == 0
-    assert re.search(r"Exchange hashpartitioning\(dst", plan)  # contribution agg key
+    _assert_rank_joins_co_partitioned(plan)
+    assert not any("Exchange" in ln for ln in _outside_caches(plan))
 
 
 def test_ppr_seeds_compile_to_inlist(spark):
     """g7: the seed set must reach the plan as IN-list literals, never a
-    join; loop shape mirrors g4 (hash joins only, cache reads)."""
+    join; loop shape mirrors g4 (shuffle-hash rank joins, cache reads, and
+    no Exchange outside the cache on the one-partition layout)."""
     with _graph_full_lineage() as graphmod:
         handle = contract.graph._prepared_pagerank_edges(spark, SF, "cyclic")
         handle.count()
@@ -431,10 +456,41 @@ def test_ppr_seeds_compile_to_inlist(spark):
         ranks = graphmod.personalized_pagerank(None, [3, 5], max_iter=3, weighted=handle)
         plan = _plan(ranks)
     assert "INSET" in plan.upper() or " IN (" in plan  # literal membership test
-    assert plan.count("SortMergeJoin") == 0
-    assert plan.count("BroadcastHashJoin") == 3
     assert plan.count("InMemoryTableScan") >= 3
-    assert plan.count("CartesianProduct") == 0
+    _assert_rank_joins_co_partitioned(plan)
+    assert not any("Exchange" in ln for ln in _outside_caches(plan))
+
+
+def test_rank_rounds_multi_partition_layout(spark):
+    """A 200k-edge graph is laid out in spark.sql.shuffle.partitions
+    pieces: each round is exactly one Exchange (the dst aggregate), the
+    rank join reads the cached src layout in place, and both rank
+    functions keep that shape end to end."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    e = spark.range(200_000).select(
+        (F.col("id") % 40_000).alias("src"), (F.col("id") * 7919 % 50_000 + 40_000).alias("dst")
+    )
+    with _graph_full_lineage() as graphmod:
+        handle = graphmod.prepare_weighted_edges(e)
+        try:
+            handle.count()
+            assert graphmod.loop_partitions(e) == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+            reset = lambda c: F.lit(0.15)  # noqa: E731
+            rounds = graphmod._rank_rounds(handle, reset, lambda c: F.lit(1.0), 0.15, 3, 1e9)
+            outside = _outside_caches(_plan(rounds))
+            assert sum(bool(re.search(r"Exchange hashpartitioning\(dst", ln)) for ln in outside) == 3
+            assert sum("Exchange" in ln for ln in outside) == 3
+            assert sum("InMemoryTableScan" in ln for ln in outside) == 3
+            for ranks in (
+                graphmod.pagerank(None, max_iter=3, weighted=handle),
+                graphmod.personalized_pagerank(None, [3, 5], max_iter=3, weighted=handle),
+            ):
+                _assert_rank_joins_co_partitioned(_plan(ranks))
+        finally:
+            handle.unpersist()
 
 
 def test_label_propagation_round_has_no_window(spark):

@@ -10,13 +10,15 @@ YoutubeNetworkAgg_Final.py:85-139):
 
 Scale design:
   * Degrees are single partial+final hash aggregates on the edge table.
-  * PageRank hash-partitions edges by ``src`` ONCE and reuses that
-    partitioning across all iterations (the rank side is re-shuffled each
-    round, but the 100x-larger edge table never moves -- this is the
+  * The PageRank loops hash-partition edges by ``src`` ONCE, into a
+    data-sized count (one piece when the graph fits one AQE minimum
+    partition), and join the ranks to that layout as a pinned shuffle-hash
+    build side: no per-round broadcast, the edge table never moves, and a
+    round's only exchange is its dst aggregate (none on one piece) -- the
     co-partitioning the reference approximated with repartition(400),
-    PageRank_Spark_v5.py:94-95).
-  * localCheckpoint every few iterations truncates lineage so the plan
-    doesn't grow unboundedly (driver OOM / scheduler stalls at scale).
+    PageRank_Spark_v5.py:94-95.
+  * The other loops localCheckpoint each round, so their plans don't grow
+    unboundedly (driver OOM / scheduler stalls at scale).
 """
 
 from __future__ import annotations
@@ -116,14 +118,32 @@ def degree_distribution(edges: DataFrame, direction: str = "out") -> DataFrame:
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("num_vertices")).orderBy("degree")
 
 
-def prepare_weighted_edges(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Build the PageRank-family weighted edge table: repartition by src,
-    then a partition-local window count gives each edge weight
-    1/out_deg(src) in ONE scan + ONE shuffle (a groupBy+join formulation
-    scans the edge source twice -- measured ~30% slower end-to-end).
-    Returned CACHED (lazily -- populated by the first job that touches it);
-    the iteration loops then only shuffle the vertex-sized rank table and
-    this edge table never moves again.
+def loop_partitions(edges: DataFrame) -> int:
+    """Partition count of the rank loops' edge layout, from the data: 1
+    when Catalyst's size estimate of the edge plan (plan statistics, no
+    pass) fits one ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+    (the crawl graph: 0.10 MB), else ``spark.sql.shuffle.partitions``.
+
+    No count in between: a round's dst aggregate shuffles into
+    ``spark.sql.shuffle.partitions`` pieces, so a narrower layout either
+    drops the aggregate's map-side combine (g5 at sf0.1, 6 of 8 pieces:
+    107 vs 63 MB) or re-shuffles the edge table every round (151 MB)."""
+    spark = edges.sparkSession
+    est = edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    return 1 if est <= floor else int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
+    """Build the PageRank-family weighted edge table: hash-partition by src
+    into :func:`loop_partitions` pieces, then a partition-local window count
+    gives each edge weight 1/out_deg(src) in ONE scan + ONE shuffle (a
+    groupBy+join formulation scans the edge source twice -- measured ~30%
+    slower end-to-end).  Returned CACHED (lazily -- populated by the first
+    job that touches it); every rank round joins against this layout, so
+    the edge table never moves again.
 
     g4/g5/g7 all need exactly this intermediate.  A session running
     several rank variants over one graph (the bench session builds it 3x
@@ -133,38 +153,31 @@ def prepare_weighted_edges(edges: DataFrame, num_partitions: int | None = None) 
     the cache lifecycle (those functions never unpersist a provided
     handle), so release it with ``handle.unpersist()`` when done.
     """
-    spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        edges.repartition(n_part, "src")
+        edges.repartition(loop_partitions(edges), "src")
         .select("src", "dst", (F.lit(1.0) / F.count(F.lit(1)).over(Window.partitionBy("src"))).alias("weight"))
         .cache()
     )
 
 
-def pagerank(
-    edges: DataFrame | None,
-    reset_prob: float = 0.15,
-    max_iter: int = 10,
-    checkpoint_every: int = 5,
-    num_partitions: int | None = None,
-    contrib_scale: float = 1e9,
-    weighted: DataFrame | None = None,
-) -> DataFrame:
-    """G4: iterative DataFrame PageRank, reference params resetProb=0.15
-    maxIter=10 (PageRank_Spark_v5.py:102).
+def _rank_rounds(weighted: DataFrame, reset_of, init_of, reset_prob: float, max_iter: int, contrib_scale: float) -> DataFrame:
+    """Round kernel of :func:`pagerank` and :func:`personalized_pagerank`:
+    (id, rank) after ``max_iter >= 1`` rounds of
 
-    Formula per iteration (classic non-normalized form, matching GraphFrames):
-        rank(v) = reset_prob + (1 - reset_prob) * sum_{u->v} rank(u) / out_deg(u)
-    Dangling vertices (no out-edges) contribute no mass; vertices with no
-    in-edges settle at reset_prob.  Returns (id, pagerank).
+        rank(v) = reset_of(v) + (1 - reset_prob) * sum_{u->v} rank(u) / out_deg(u)
 
-    Loop shape: the rank table is maintained ONLY over vertices that have
-    in-edges (everything a contribution can reach).  A vertex with no
-    in-edges holds rank 1.0 before the first iteration and exactly
-    reset_prob after it, so the per-iteration join coalesces missing src
-    ranks to that constant instead of materializing a full vertex table --
-    one join + one aggregation per iteration, nothing else.
+    from rank ``init_of(v)`` (both map an id column name to a Column).  The
+    rank table covers ONLY vertices with in-edges (all a contribution can
+    reach): round 1 reads the literal initial ranks (no join), and later a
+    src missing from the ranks has no in-edges and holds its reset term,
+    so the join coalesces to it instead of materializing a full vertex
+    table -- one join + one aggregation per round, nothing else.
+
+    Layout: the rank table is the pinned ``shuffle_hash`` build side, so
+    the join runs in place on the cached src layout -- no broadcast, no
+    edge exchange.  A round's only exchange is its dst aggregate, whose
+    output is already partitioned like the edges (none on one partition).
+    No mid-loop checkpoint: its output would lose that layout.
 
     Determinism: each edge contribution is quantized to an INTEGER number of
     1/contrib_scale units (round(rank*weight*scale) as long) and the
@@ -175,6 +188,55 @@ def pagerank(
     depend on partitioning (float addition is not associative).  The 1e-9
     quantum is ~7 orders below the 1e-6 output rounding, so it never costs
     ranking precision; long sums also map-side combine cheaper than doubles.
+    """
+    scale = F.lit(contrib_scale)
+    ranks = None
+    for _ in range(max_iter):
+        if ranks is None:
+            base, src_rank = weighted, init_of("src")
+        else:
+            base = weighted.join(ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src", "left")
+            src_rank = F.coalesce(F.col("rank"), reset_of("src"))
+        contribs = (
+            base.select("dst", F.round(src_rank * F.col("weight") * scale).cast("long").alias("ci"))
+            .groupBy("dst")
+            .agg(F.sum("ci").alias("ci"))
+        )
+        ranks = contribs.select(
+            F.col("dst").alias("id"),
+            (reset_of("dst") + F.lit(1.0 - reset_prob) * (F.col("ci") / scale)).alias("rank"),
+        )
+    return ranks
+
+
+def _with_held(ranks: DataFrame, held_ids: DataFrame, reset_prob: float, keep=None) -> DataFrame:
+    """Final rank table: the ``keep``-filtered ``ranks`` plus every id of
+    ``held_ids`` missing from ``ranks`` at reset_prob (a vertex with no
+    in-edges never appears as a dst), rounded to 6 places and pinned."""
+    held = held_ids.join(ranks.select("id").hint("shuffle_hash"), "id", "left_anti")
+    return (
+        (ranks if keep is None else ranks.where(keep))
+        .unionByName(held.select("id", F.lit(reset_prob).alias("rank")))
+        .select("id", F.round("rank", 6).alias("pagerank"))
+        .transform(_ckpt)  # pin before releasing the edge cache
+    )
+
+
+def pagerank(
+    edges: DataFrame | None,
+    reset_prob: float = 0.15,
+    max_iter: int = 10,
+    contrib_scale: float = 1e9,
+    weighted: DataFrame | None = None,
+) -> DataFrame:
+    """G4: iterative DataFrame PageRank, reference params resetProb=0.15
+    maxIter=10 (PageRank_Spark_v5.py:102).
+
+    Formula per iteration (classic non-normalized form, matching GraphFrames):
+        rank(v) = reset_prob + (1 - reset_prob) * sum_{u->v} rank(u) / out_deg(u)
+    Dangling vertices (no out-edges) contribute no mass; vertices with no
+    in-edges settle at reset_prob.  Returns (id, pagerank); the loop is
+    :func:`_rank_rounds` from rank 1.0.
 
     ``weighted``: a :func:`prepare_weighted_edges` handle to reuse across
     rank variants (caller owns its cache; ``edges`` may then be None).
@@ -184,52 +246,14 @@ def pagerank(
         # Lazy cache: populated by the first iteration's job and reused by
         # every later one -- an eager count() here is a whole extra pass
         # over the edges (measured ~25% of total runtime at bench scale).
-        weighted = prepare_weighted_edges(edges, num_partitions)
-
-    scale = F.lit(contrib_scale)
-    damp = 1.0 - reset_prob
-    ranks = None  # None => every vertex still at the initial rank of 1.0
-    absent_rank = 1.0  # rank of any src missing from `ranks` (no in-edges)
-    for i in range(max_iter):
-        if ranks is None:
-            # First iteration: all ranks are the constant 1.0 -- no join.
-            ci = F.round(F.col("weight") * scale).cast("long")
-            contribs = weighted.select("dst", ci.alias("ci")).groupBy("dst").agg(F.sum("ci").alias("ci"))
-        else:
-            ci = F.round(F.coalesce(F.col("rank"), F.lit(absent_rank)) * F.col("weight") * scale).cast("long")
-            contribs = (
-                weighted.join(ranks.withColumnRenamed("id", "src"), "src", "left")
-                .select("dst", ci.alias("ci"))
-                .groupBy("dst")
-                .agg(F.sum("ci").alias("ci"))
-            )
-        ranks = contribs.select(
-            F.col("dst").alias("id"),
-            (F.lit(reset_prob) + F.lit(damp) * (F.col("ci") / scale)).alias("rank"),
-        )
-        absent_rank = reset_prob
-        if (i + 1) % checkpoint_every == 0 and i + 1 < max_iter:
-            ranks = ranks.transform(_ckpt)  # truncate lineage
-
-    if ranks is None:  # max_iter == 0: everything at the initial rank
-        vertices = weighted.select(F.col("src").alias("id")).union(weighted.select("dst")).distinct()
-        result = vertices.select("id", F.lit(1.0).alias("pagerank")).transform(_ckpt)
-        if owns_weighted:
-            weighted.unpersist()
-        return result
-
-    # Vertices that only ever appear as src (no in-edges) sit at reset_prob.
-    src_only = (
-        weighted.select(F.col("src").alias("id"))
-        .distinct()
-        .join(ranks.select("id"), "id", "left_anti")
-        .select("id", F.lit(reset_prob).alias("rank"))
-    )
-    result = (
-        ranks.unionByName(src_only)
-        .select("id", F.round("rank", 6).alias("pagerank"))
-        .transform(_ckpt)  # pin before releasing the edge cache
-    )
+        weighted = prepare_weighted_edges(edges)
+    src_ids = weighted.select(F.col("src").alias("id")).distinct()
+    if max_iter < 1:  # everything at the initial rank
+        result = src_ids.union(weighted.select("dst")).distinct().select("id", F.lit(1.0).alias("pagerank")).transform(_ckpt)
+    else:
+        reset = lambda c: F.lit(reset_prob)  # noqa: E731
+        ranks = _rank_rounds(weighted, reset, lambda c: F.lit(1.0), reset_prob, max_iter, contrib_scale)
+        result = _with_held(ranks, src_ids, reset_prob)
     if owns_weighted:
         weighted.unpersist()
     return result
@@ -240,8 +264,6 @@ def personalized_pagerank(
     sources: list,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    checkpoint_every: int = 5,
-    num_partitions: int | None = None,
     contrib_scale: float = 1e9,
     weighted: DataFrame | None = None,
 ) -> DataFrame:
@@ -252,61 +274,37 @@ def personalized_pagerank(
 
         rank(v) = reset_prob*[v in S] + (1-reset_prob) * sum_{u->v} rank(u)/out_deg(u)
 
-    starting from rank = 1.0 on sources, 0.0 elsewhere.  Same loop shape,
-    edge-caching, and integer-quantized contribution sums as
-    :func:`pagerank` (bit-identical across partitionings and engines);
-    vertices whose rank is identically zero (unreachable from S) are
-    omitted from the result.  ``sources`` is a literal seed list --
-    seed sets are query parameters, small by nature, so membership tests
-    compile to IN-list predicates, never a join.  ``weighted``: a
-    :func:`prepare_weighted_edges` handle to reuse across rank variants
-    (caller owns its cache; ``edges`` may then be None).
+    starting from rank = 1.0 on sources, 0.0 elsewhere.  Same round kernel
+    (:func:`_rank_rounds`), edge layout, and integer-quantized contribution
+    sums as :func:`pagerank` (bit-identical across partitionings and
+    engines); vertices whose rank is identically zero (unreachable from S)
+    are omitted from the result, and seeds with no in-edges hold reset.
+    ``sources`` is a literal seed list -- seed sets are query parameters,
+    small by nature, so membership tests compile to IN-list predicates,
+    never a join.  ``weighted``: a :func:`prepare_weighted_edges` handle to
+    reuse across rank variants (caller owns its cache; ``edges`` may then
+    be None).
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     owns_weighted = weighted is None
     if owns_weighted:
-        weighted = prepare_weighted_edges(edges, num_partitions)
-    spark = weighted.sparkSession
-    scale = F.lit(contrib_scale)
-    damp = 1.0 - reset_prob
-    in_s = lambda c: F.col(c).isin(list(sources))  # noqa: E731
-    reset_of_dst = F.when(in_s("dst"), F.lit(reset_prob)).otherwise(F.lit(0.0))
-    ranks = None
-    for i in range(max_iter):
-        if ranks is None:
-            # initial ranks are literal: 1.0 on sources, 0.0 elsewhere
-            src_rank = F.when(in_s("src"), F.lit(1.0)).otherwise(F.lit(0.0))
-        else:
-            # absent src = no in-edges: holds reset on sources, 0 elsewhere
-            absent = F.when(in_s("src"), F.lit(reset_prob)).otherwise(F.lit(0.0))
-            src_rank = F.coalesce(F.col("rank"), absent)
-        base = weighted if ranks is None else weighted.join(ranks.withColumnRenamed("id", "src"), "src", "left")
-        contribs = (
-            base.select("dst", F.round(src_rank * F.col("weight") * scale).cast("long").alias("ci"))
-            .groupBy("dst")
-            .agg(F.sum("ci").alias("ci"))
-        )
-        ranks = contribs.select(
-            F.col("dst").alias("id"),
-            (reset_of_dst + F.lit(damp) * (F.col("ci") / scale)).alias("rank"),
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < max_iter:
-            ranks = ranks.transform(_ckpt)
-    # seeds with no in-edges never appear as a dst; they still hold reset.
-    # Seed type follows the edge id type (see k_hop_distances).
-    from pyspark.sql.types import StructField, StructType
+        weighted = prepare_weighted_edges(edges)
+    seeds = list(sources)
 
-    seed_df = spark.createDataFrame(
-        [(s,) for s in sources], StructType([StructField("id", weighted.schema["src"].dataType)])
+    def on_seeds(value):
+        return lambda c: F.when(F.col(c).isin(seeds), F.lit(value)).otherwise(F.lit(0.0))
+
+    ranks = _rank_rounds(weighted, on_seeds(reset_prob), on_seeds(1.0), reset_prob, max_iter, contrib_scale)
+    # Seeds as a one-partition Range projection, typed like the edge ids: a
+    # local relation's layout is unknown, which would re-shuffle the ranks
+    # for the anti-join even on a one-partition layout.
+    seed_df = weighted.sparkSession.range(len(seeds), numPartitions=1).select(
+        F.element_at(F.array(*[F.lit(s) for s in seeds]), F.col("id").cast("int") + 1)
+        .cast(weighted.schema["src"].dataType)
+        .alias("id")
     )
-    seed_only = seed_df.join(ranks.select("id"), "id", "left_anti").select("id", F.lit(reset_prob).alias("rank"))
-    result = (
-        ranks.where(F.col("rank") > 0.0)
-        .unionByName(seed_only)
-        .select("id", F.round("rank", 6).alias("pagerank"))
-        .transform(_ckpt)
-    )
+    result = _with_held(ranks, seed_df, reset_prob, keep=F.col("rank") > 0.0)
     if owns_weighted:
         weighted.unpersist()
     return result
