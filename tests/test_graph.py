@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from youtubeanalyzerproject_big_data__spark import session
 from youtubeanalyzerproject_big_data__spark.operators import graph, joins
 
 
@@ -231,7 +232,7 @@ def test_loop_partitions_empty_table_is_one_partition(spark, tmp_path):
     path = str(tmp_path / "edges")
     spark.createDataFrame([], "src string, dst string").write.parquet(path)
     edges = spark.read.parquet(path)
-    assert graph.loop_partitions(edges) == 1
+    assert session.loop_partitions(edges) == 1
     assert graph.pagerank(edges).count() == 0
     assert graph.personalized_pagerank(edges, []).count() == 0
 
@@ -247,7 +248,7 @@ def test_loop_partitions_crawl_sized_graph_is_one_partition(spark, tmp_path):
     path = str(tmp_path / "videos")
     videos.write.parquet(path)
     edges = graph.edges_from_arrays(graph.densify(spark.read.parquet(path), "related"), "video_id", "related")
-    assert graph.loop_partitions(edges) == 1
+    assert session.loop_partitions(edges) == 1
 
 
 def test_loop_partitions_large_graph_capped_by_spark_confs(spark):
@@ -259,18 +260,18 @@ def test_loop_partitions_large_graph_capped_by_spark_confs(spark):
     from pyspark.sql import functions as F
 
     edges = spark.range(200_000).select(F.col("id").alias("src"), (F.col("id") * 7 % 5_000).alias("dst"))
-    assert graph.loop_partitions(edges) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert session.loop_partitions(edges) == int(spark.conf.get("spark.sql.shuffle.partitions"))
     keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.minPartitionSize")
     saved = {k: spark.conf.get(k) for k in keys}
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        assert graph.loop_partitions(edges) == 3
+        assert session.loop_partitions(edges) == 3
         spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64MB")
-        assert graph.loop_partitions(edges) == 1
+        assert session.loop_partitions(edges) == 1
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-    assert "environ" not in inspect.getsource(graph.loop_partitions)
+    assert "environ" not in inspect.getsource(session.loop_partitions)
 
 
 def test_personalized_pagerank_sink_seed(spark):

@@ -88,11 +88,25 @@ def test_json_artifact_roundtrip(spark, tmp_path):
     """S9 sink + S10 source: the reference's materialized-view layer."""
     from youtubeanalyzerproject_big_data__spark.io import read_json_artifact, write_json_artifact
 
-    df = spark.createDataFrame([("Music", 10, 4.2), ("Comedy", 7, 3.9)], "category string, n long, avg_rate double")
+    schema = "category string, n long, avg_rate double"
+    df = spark.createDataFrame([("Music", 10, 4.2), ("Comedy", 7, 3.9)], schema)
     path = str(tmp_path / "cache_json")
     write_json_artifact(df, path)
-    back = read_json_artifact(spark, path)
+    back = read_json_artifact(spark, path, df.schema)
     assert {(r["category"], r["n"], r["avg_rate"]) for r in back.collect()} == {("Music", 10, 4.2), ("Comedy", 7, 3.9)}
+
+    # the JSON writer drops null fields, so a column null in every row (and
+    # every column of an empty frame) survives only through the schema
+    nulls = spark.createDataFrame([("Music", 10, None), (None, 7, None)], schema)
+    write_json_artifact(nulls, str(tmp_path / "nulls_json"))
+    back = read_json_artifact(spark, str(tmp_path / "nulls_json"), nulls.schema)
+    assert back.columns == ["category", "n", "avg_rate"]
+    assert {tuple(r) for r in back.collect()} == {("Music", 10, None), (None, 7, None)}
+
+    empty = spark.createDataFrame([], schema)
+    write_json_artifact(empty, str(tmp_path / "empty_json"))
+    back = read_json_artifact(spark, str(tmp_path / "empty_json"), empty.schema)
+    assert back.columns == ["category", "n", "avg_rate"] and back.collect() == []
 
 
 def test_jsonl_roundtrip_preserves_tricky_strings(spark, tmp_path_factory):

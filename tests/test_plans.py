@@ -470,6 +470,8 @@ def test_rank_rounds_multi_partition_layout(spark):
 
     from pyspark.sql import functions as F
 
+    from youtubeanalyzerproject_big_data__spark.session import loop_partitions
+
     e = spark.range(200_000).select(
         (F.col("id") % 40_000).alias("src"), (F.col("id") * 7919 % 50_000 + 40_000).alias("dst")
     )
@@ -477,7 +479,7 @@ def test_rank_rounds_multi_partition_layout(spark):
         handle = graphmod.prepare_weighted_edges(e)
         try:
             handle.count()
-            assert graphmod.loop_partitions(e) == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+            assert loop_partitions(e) == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
             reset = lambda c: F.lit(0.15)  # noqa: E731
             rounds = graphmod._rank_rounds(handle, reset, lambda c: F.lit(1.0), 0.15, 3, 1e9)
             outside = _outside_caches(_plan(rounds))

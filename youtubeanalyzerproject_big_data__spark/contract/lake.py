@@ -255,11 +255,11 @@ def q_v1(spark: SparkSession, sf: str) -> DataFrame:
     )
     cache_dir = _scratch_dir("v1_cache_")
     try:
-        svc = serve.QueryService(spark, videos, cache_dir)
-        svc.serve("categorystats")  # miss: compute + materialize
-        hit = svc.serve("categorystats")  # hit: read the committed artifact
-        out = hit.select("category", "num_videos", "avg_views", "max_views", "avg_length", "avg_rating")
-        rows, schema = out.collect(), out.schema
+        with serve.QueryService(spark, videos, cache_dir) as svc:
+            svc.serve("categorystats")  # miss: compute + materialize
+            hit = svc.serve("categorystats")  # hit: read the committed artifact
+            out = hit.select("category", "num_videos", "avg_views", "max_views", "avg_length", "avg_rating")
+            rows, schema = out.collect(), out.schema
     finally:
         shutil.rmtree(cache_dir, ignore_errors=True)
     return spark.createDataFrame(rows, schema)

@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -65,11 +66,16 @@ def write_json_artifact(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").json(path)
 
 
-def read_json_artifact(spark: SparkSession, path: str) -> DataFrame:
+def read_json_artifact(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """JSON cache source (S10): the reference's Phase-2 GUI reads its cache
     files back for interactive serving (guiV5.py:66-78,108-119); here that
-    round-trip is spark.read.json over the artifact directory."""
-    return spark.read.json(path)
+    round-trip is spark.read.json over the artifact directory.
+
+    ``schema`` is the writing job's schema, and it is required: Spark's JSON
+    writer drops null fields, so an inferred schema loses every column that
+    is null in all rows (an empty artifact infers zero columns), and
+    inference is an extra job over the files on every read."""
+    return spark.read.schema(schema).json(path)
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -106,14 +112,10 @@ def write_jsonl(df: DataFrame, path: str, n_files: int = 8) -> None:
     df.repartition(n_files).write.mode("overwrite").json(path)
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """JSONL corpus source with an EXPLICIT schema (inference at 100 TB
-    means a full extra pass over the data -- always pass the schema in
-    production; None keeps the convenience path for ad-hoc use)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+    means a full extra pass over the data)."""
+    return spark.read.schema(schema).json(path)
 
 
 def compact_parquet(spark: SparkSession, src_path: str, dst_path: str, n_files: int, sort_col: str) -> None:

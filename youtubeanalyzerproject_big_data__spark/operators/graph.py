@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from youtubeanalyzerproject_big_data__spark.session import loop_partitions
+
 
 _DISABLE_CHECKPOINTS = False
 """Test hook (tests/test_plans.py): True disables every localCheckpoint in
@@ -116,24 +118,6 @@ def degree_distribution(edges: DataFrame, direction: str = "out") -> DataFrame:
     """A5: degree -> number of vertices with that degree."""
     deg = out_degrees(edges).withColumnRenamed("out_degree", "degree") if direction == "out" else in_degrees(edges).withColumnRenamed("in_degree", "degree")
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("num_vertices")).orderBy("degree")
-
-
-def loop_partitions(edges: DataFrame) -> int:
-    """Partition count of the rank loops' edge layout, from the data: 1
-    when Catalyst's size estimate of the edge plan (plan statistics, no
-    pass) fits one ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
-    (the crawl graph: 0.10 MB), else ``spark.sql.shuffle.partitions``.
-
-    No count in between: a round's dst aggregate shuffles into
-    ``spark.sql.shuffle.partitions`` pieces, so a narrower layout either
-    drops the aggregate's map-side combine (g5 at sf0.1, 6 of 8 pieces:
-    107 vs 63 MB) or re-shuffles the edge table every round (151 MB)."""
-    spark = edges.sparkSession
-    est = edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    )
-    return 1 if est <= floor else int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def prepare_weighted_edges(edges: DataFrame) -> DataFrame:

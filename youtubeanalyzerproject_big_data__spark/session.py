@@ -12,9 +12,30 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def loop_partitions(df: DataFrame) -> int:
+    """Partition count of a data-sized layout: 1 when Catalyst's size
+    estimate of ``df``'s plan (plan statistics, no pass) fits one
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (the crawl
+    graph: 0.10 MB), else ``spark.sql.shuffle.partitions``.  Lays out the
+    rank loops' edge table (``graph.prepare_weighted_edges``) and
+    ``serve.QueryService``'s held videos table.
+
+    No count in between: a rank round's dst aggregate shuffles into
+    ``spark.sql.shuffle.partitions`` pieces, so a narrower layout either
+    drops the aggregate's map-side combine (g5 at sf0.1, 6 of 8 pieces:
+    107 vs 63 MB) or re-shuffles the edge table every round (151 MB)."""
+    spark = df.sparkSession
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    return 1 if est <= floor else int(spark.conf.get("spark.sql.shuffle.partitions"))
+
 
 # All engine scratch (Spark local dirs for shuffle/blockmgr spill, streaming
 # source/sink/checkpoint dirs, layout-query write-read dirs) lives under the
