@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from youtubeanalyzerproject_big_data__spark import jobs
 
+NETAGG_ARTIFACTS = ("categorystats", "sizestats", "viewstats", "degreestat")
+
 
 def test_category_stats_preserves_entity_dupes(videos):
     rows = {r["category"]: r for r in jobs.category_stats_job(videos).collect()}
@@ -68,8 +70,47 @@ def test_als_job_shape(spark, videos):
 def test_run_netagg_writes_artifacts(spark, videos, tmp_path):
     out = str(tmp_path / "caches")
     jobs.run_netagg(videos, out)
-    for name in ("categorystats", "sizestats", "viewstats", "degreestat"):
+    for name in NETAGG_ARTIFACTS:
         assert spark.read.json(f"{out}/{name}").count() > 0
+
+
+def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):
+    """run_netagg, pagerank_job and a serve miss write the same rows on the
+    one-piece layout (the fixture fits one AQE minimum partition) and on
+    the source layout (minPartitionSize below the table's estimate)."""
+    import glob
+    import os
+
+    from youtubeanalyzerproject_big_data__spark.serve import QueryService
+    from youtubeanalyzerproject_big_data__spark.session import data_sized
+
+    path = str(tmp_path / "videos_pq")
+    videos.repartition(3).write.parquet(path)
+    source = spark.read.parquet(path)
+
+    def refresh(out: str, pieces: int):
+        assert data_sized(source).rdd.getNumPartitions() == pieces
+        jobs.run_netagg(source, out)
+        lines = {
+            name: sorted(ln for f in glob.glob(os.path.join(out, name, "part-*")) for ln in open(f))
+            for name in NETAGG_ARTIFACTS
+        }
+        ranks = jobs.pagerank_job(source, top_n=10, min_related=1).collect()
+        with QueryService(spark, source, out) as svc:
+            stats = svc.serve("globalstats").collect()
+        return lines, ranks, stats
+
+    one = refresh(str(tmp_path / "one"), 1)
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        many = refresh(str(tmp_path / "many"), 3)
+    finally:
+        spark.conf.set(key, saved)
+    assert one == many
+    lines, ranks, stats = one
+    assert all(lines.values()) and ranks and stats[0]["cnt"] == 6
 
 
 def test_curation_job_end_to_end_deterministic(spark, tmp_path):

@@ -495,6 +495,37 @@ def test_rank_rounds_multi_partition_layout(spark):
             handle.unpersist()
 
 
+def test_refresh_one_piece_layout_has_no_exchange(spark, videos, tmp_path, monkeypatch):
+    """On the one-piece layout (a crawl-sized videos table) the Phase-1
+    refresh shuffles nothing: no line of the plan of any of the four netagg
+    artifacts, the globalstats serve miss, or the weighted-edge build is a
+    shuffle Exchange.  (degreestat's two degree tables still reach its
+    vertex joins as BroadcastExchanges, which write no shuffle.)"""
+    import re
+
+    from youtubeanalyzerproject_big_data__spark import jobs, serve
+    from youtubeanalyzerproject_big_data__spark.operators import graph
+
+    path = str(tmp_path / "videos_pq")
+    videos.repartition(3).write.parquet(path)
+    videos = spark.read.parquet(path)  # a sized source, as ingest stores it
+    written = {}
+    capture = lambda df, path: written.setdefault(path.rsplit("/", 1)[-1], df)  # noqa: E731
+    monkeypatch.setattr(jobs, "write_json_artifact", capture)
+    monkeypatch.setattr(serve, "write_json_artifact", capture)
+    jobs.run_netagg(videos, str(tmp_path / "caches"))
+    serve.QueryService(spark, videos, str(tmp_path / "caches")).refresh("globalstats")
+    plans = {name: _plan(df) for name, df in written.items()}
+    handle = graph.prepare_weighted_edges(graph.edges_from_arrays(videos, "video_id", "related"))
+    try:
+        plans["weighted_edges"] = _plan(handle)
+    finally:
+        handle.unpersist()
+    assert sorted(plans) == ["categorystats", "degreestat", "globalstats", "sizestats", "viewstats", "weighted_edges"]
+    for name, plan in plans.items():
+        assert not [ln for ln in plan.splitlines() if re.search(r"\bExchange\b", ln)], (name, plan)
+
+
 def test_label_propagation_round_has_no_window(spark):
     """lp1: one round = edges join labels + (dst,label) count + min-struct
     argmax -- hash aggregates only, NO analytic window anywhere (a window

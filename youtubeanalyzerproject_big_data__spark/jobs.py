@@ -22,6 +22,12 @@ Reference quirks preserved deliberately (SURVEY.md par.7.4):
   * The view histogram orders by bucket LABEL (lexicographic).
 Divergence: the reference's N+1 ``find_one`` uploader loop is replaced by a
 broadcast join (same output, distributed mechanics -- SURVEY.md J6).
+
+Layout: ``run_netagg`` and ``pagerank_job`` lay ``videos`` out once through
+``session.data_sized``.  A crawl-sized table (one AQE minimum partition)
+becomes one coalesced piece, so every aggregate, sort, window and join of
+the refresh runs without a shuffle; a larger table keeps its source
+partitions and plans exactly as the bare jobs do.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pyspark.sql import functions as F
 from youtubeanalyzerproject_big_data__spark.io import write_json_artifact
 from youtubeanalyzerproject_big_data__spark.operators import aggregates as agg
 from youtubeanalyzerproject_big_data__spark.operators import graph, joins, recommend
+from youtubeanalyzerproject_big_data__spark.session import data_sized
 
 # Reference bucket constants (YoutubeNetworkAgg_Final.py:189-194, 227-234).
 LENGTH_BUCKETS: list[tuple[float, str]] = [(240, "1_short_lt240s"), (1200, "2_medium_240to1199s")]
@@ -103,6 +110,7 @@ def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> D
     """run_pagerank_job.py end-to-end: densify -> edges -> PageRank(0.15, 10)
     -> top-N -> uploader enrichment via broadcast join (replaces the
     reference's per-row find_one loop, run_pagerank_job.py:124-140)."""
+    videos = data_sized(videos)
     dense = graph.densify(videos, "related", min_related)
     edges = graph.edges_from_arrays(dense, "video_id", "related")
     top = graph.top_influencers(graph.pagerank(edges, reset_prob=0.15, max_iter=10), top_n)
@@ -117,17 +125,24 @@ def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> D
 def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> DataFrame:
     """run_alsrecs_job.py end-to-end: the uploader 'rates' their own videos
     with the video's average rate (SURVEY.md par.1.4 semantic quirk,
-    preserved); 10% Bernoulli sample seed 42; 500 users x 5 recs."""
+    preserved); 10% Bernoulli sample seed 42; 500 users x 5 recs.  A
+    sample with no ratings gives an empty result of the same schema."""
     base = videos.select(
         F.col("uploader").alias("user"), F.col("video_id").alias("item"), F.col("rate").alias("rating")
     )
     ratings = recommend.build_ratings(base, "user", "item", "rating", sample_fraction=0.10)
+    if ratings.isEmpty():  # ALS cannot fit zero ratings: no user gets a recommendation
+        return ratings.select("user_idx", "user_label", F.array("item_label").alias("recommendations"))
     model = recommend.train_als(ratings, max_iter=10, reg_param=0.1, rank=10, seed=42)
     return recommend.recommend_for_users(model, ratings, n_users=n_users, n_recs=n_recs)
 
 
 def run_netagg(videos: DataFrame, out_dir: str) -> None:
-    """The four cache artifacts of run_netagg_job.py (S9 layer)."""
+    """The four cache artifacts of run_netagg_job.py (S9 layer), all
+    written from one data-sized layout of ``videos``.  Not cached: each
+    artifact re-reads the (sub-MB) source, which costs less than AQE's
+    table-cache stage job."""
+    videos = data_sized(videos)
     write_json_artifact(category_stats_job(videos), os.path.join(out_dir, "categorystats"))
     write_json_artifact(size_stats_job(videos), os.path.join(out_dir, "sizestats"))
     write_json_artifact(view_histogram_job(videos), os.path.join(out_dir, "viewstats"))

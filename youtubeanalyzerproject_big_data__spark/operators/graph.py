@@ -10,11 +10,12 @@ YoutubeNetworkAgg_Final.py:85-139):
 
 Scale design:
   * Degrees are single partial+final hash aggregates on the edge table.
-  * The PageRank loops hash-partition edges by ``src`` ONCE, into a
-    data-sized count (one piece when the graph fits one AQE minimum
-    partition), and join the ranks to that layout as a pinned shuffle-hash
-    build side: no per-round broadcast, the edge table never moves, and a
-    round's only exchange is its dst aggregate (none on one piece) -- the
+  * The PageRank loops lay edges out by ``src`` ONCE, through
+    ``session.data_sized`` (one coalesced piece, no shuffle, when the graph
+    fits one AQE minimum partition; else a hash repartition), and join the
+    ranks to that layout as a pinned shuffle-hash build side: no
+    per-round broadcast, the edge table never moves, and a round's only
+    exchange is its dst aggregate (none on one piece) -- the
     co-partitioning the reference approximated with repartition(400),
     PageRank_Spark_v5.py:94-95.
   * The other loops localCheckpoint each round, so their plans don't grow
@@ -26,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from youtubeanalyzerproject_big_data__spark.session import loop_partitions
+from youtubeanalyzerproject_big_data__spark.session import data_sized
 
 
 _DISABLE_CHECKPOINTS = False
@@ -121,13 +122,19 @@ def degree_distribution(edges: DataFrame, direction: str = "out") -> DataFrame:
 
 
 def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
-    """Build the PageRank-family weighted edge table: hash-partition by src
-    into :func:`loop_partitions` pieces, then a partition-local window count
-    gives each edge weight 1/out_deg(src) in ONE scan + ONE shuffle (a
-    groupBy+join formulation scans the edge source twice -- measured ~30%
-    slower end-to-end).  Returned CACHED (lazily -- populated by the first
-    job that touches it); every rank round joins against this layout, so
-    the edge table never moves again.
+    """Build the PageRank-family weighted edge table: lay the edges out by
+    src through :func:`session.data_sized` (``coalesce(1)`` when the graph
+    fits one AQE minimum partition, else a hash repartition by src), then a
+    partition-local window count gives each edge weight 1/out_deg(src) in
+    ONE scan and at most ONE shuffle (a groupBy+join formulation scans the
+    edge source twice -- measured ~30% slower end-to-end).  Either layout
+    satisfies the window and every shuffle-hash rank join, so the edge
+    table never moves again.
+
+    Returned CACHED and already built, by one noop write (a pass over the
+    plan with no count aggregate to shuffle): while a cache is unbuilt,
+    AQE plans each reference to it as a table-cache stage job of its own,
+    and the rank loop reads it once per round.
 
     g4/g5/g7 all need exactly this intermediate.  A session running
     several rank variants over one graph (the bench session builds it 3x
@@ -137,11 +144,13 @@ def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
     the cache lifecycle (those functions never unpersist a provided
     handle), so release it with ``handle.unpersist()`` when done.
     """
-    return (
-        edges.repartition(loop_partitions(edges), "src")
+    weighted = (
+        data_sized(edges, "src")
         .select("src", "dst", (F.lit(1.0) / F.count(F.lit(1)).over(Window.partitionBy("src"))).alias("weight"))
         .cache()
     )
+    weighted.write.format("noop").mode("overwrite").save()
+    return weighted
 
 
 def _rank_rounds(weighted: DataFrame, reset_of, init_of, reset_prob: float, max_iter: int, contrib_scale: float) -> DataFrame:
@@ -227,9 +236,6 @@ def pagerank(
     """
     owns_weighted = weighted is None
     if owns_weighted:
-        # Lazy cache: populated by the first iteration's job and reused by
-        # every later one -- an eager count() here is a whole extra pass
-        # over the edges (measured ~25% of total runtime at bench scale).
         weighted = prepare_weighted_edges(edges)
     src_ids = weighted.select(F.col("src").alias("id")).distinct()
     if max_iter < 1:  # everything at the initial rank

@@ -22,13 +22,18 @@ way the reference GUI keeps its DataFrame and caches in the session
 (guiV5.py:236-263,342-394), so each op is one execution of a small plan:
 
   * live queries run over one in-memory copy of the videos table, built on
-    the first live call and laid out by ``session.loop_partitions`` (one
+    the first live call and laid out by ``session.data_sized`` (one
     partition when the table fits one AQE minimum partition, so even the
     count's global aggregate needs no exchange; else the source partitions).
     ``close()`` releases it, and so does assigning ``videos``;
-  * artifact reads carry the Phase-1 job's schema (analysis only, no
-    inference job) and are kept per artifact until its ``_SUCCESS`` marker
-    changes, so a repeat hit re-executes an already-planned DataFrame.
+  * a cache miss runs its job over the same data-sized layout of the
+    source, not over the held table, so a service that only serves
+    artifacts never builds it;
+  * artifact reads carry the Phase-1 job's schema, taken from the job over
+    no rows (analysis only for the netagg jobs; PageRank and ALS run on an
+    empty input, never on the table), and are kept per artifact until its
+    ``_SUCCESS`` marker changes, so a repeat hit re-executes an
+    already-planned DataFrame.
 """
 
 from __future__ import annotations
@@ -42,7 +47,7 @@ from pyspark.sql import functions as F
 from youtubeanalyzerproject_big_data__spark import jobs
 from youtubeanalyzerproject_big_data__spark.io import read_json_artifact, write_json_artifact
 from youtubeanalyzerproject_big_data__spark.operators import filters, topk
-from youtubeanalyzerproject_big_data__spark.session import loop_partitions
+from youtubeanalyzerproject_big_data__spark.session import data_sized
 
 # Phase-1 job registry: artifact name -> job over the videos model.
 # Names follow the reference's cache collections (run_netagg_job.py,
@@ -53,6 +58,8 @@ CACHED_JOBS: dict[str, Callable[[DataFrame], DataFrame]] = {
     "viewstats": jobs.view_histogram_job,
     "globalstats": jobs.global_view_stats_job,
     "degreestat": jobs.degree_stats_job,
+    "pagerank": jobs.pagerank_job,
+    "alsrecs": jobs.als_recs_job,
 }
 
 
@@ -117,24 +124,23 @@ class QueryService:
         stamp = os.stat(marker).st_mtime_ns
         memo = self._reads.get(name)
         if memo is None or memo[0] != stamp:
-            memo = (stamp, read_json_artifact(self.spark, path, CACHED_JOBS[name](self.videos).schema))
+            memo = (stamp, read_json_artifact(self.spark, path, CACHED_JOBS[name](self.videos.limit(0)).schema))
             self._reads[name] = memo
         return memo[1]
 
     def refresh(self, name: str) -> None:
-        """Force Phase-1 recomputation of one artifact."""
+        """Force Phase-1 recomputation of one artifact, over a data-sized
+        layout of the source (not the held table: a service that only
+        serves artifacts never builds it)."""
         self._reads.pop(name, None)
-        write_json_artifact(CACHED_JOBS[name](self.videos), self._path(name))
+        write_json_artifact(CACHED_JOBS[name](data_sized(self.videos)), self._path(name))
 
     # -- live query surface (guiV5.py:80-103 search paths) ----------------
 
     def _live(self) -> DataFrame:
         """The held in-memory videos table, built on first use."""
         if self._table is None:
-            videos = self.videos
-            if loop_partitions(videos) == 1:
-                videos = videos.coalesce(1)
-            self._table = videos.cache()
+            self._table = data_sized(self.videos).cache()
         return self._table
 
     def lookup(self, video_id: str) -> DataFrame:

@@ -21,9 +21,8 @@ def loop_partitions(df: DataFrame) -> int:
     """Partition count of a data-sized layout: 1 when Catalyst's size
     estimate of ``df``'s plan (plan statistics, no pass) fits one
     ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (the crawl
-    graph: 0.10 MB), else ``spark.sql.shuffle.partitions``.  Lays out the
-    rank loops' edge table (``graph.prepare_weighted_edges``) and
-    ``serve.QueryService``'s held videos table.
+    graph: 0.10 MB), else ``spark.sql.shuffle.partitions``.  The one rule
+    behind :func:`data_sized`; callers lay tables out through that.
 
     No count in between: a rank round's dst aggregate shuffles into
     ``spark.sql.shuffle.partitions`` pieces, so a narrower layout either
@@ -35,6 +34,20 @@ def loop_partitions(df: DataFrame) -> int:
         spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
     )
     return 1 if est <= floor else int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def data_sized(df: DataFrame, key: str | None = None) -> DataFrame:
+    """``df`` in its data-sized layout, the one layout helper that jobs,
+    graph and serve share.  On one piece (:func:`loop_partitions` is 1) it
+    is ``df.coalesce(1)``: a narrow step, no shuffle, and its
+    ``SinglePartition`` output satisfies every downstream aggregate, sort,
+    window and shuffle-hash join without an exchange.  Otherwise it is
+    ``df.repartition(n, key)``, or ``df`` unchanged (its source partitions)
+    when no key is given."""
+    n = loop_partitions(df)
+    if n == 1:
+        return df.coalesce(1)
+    return df if key is None else df.repartition(n, key)
 
 
 # All engine scratch (Spark local dirs for shuffle/blockmgr spill, streaming
