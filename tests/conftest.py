@@ -42,3 +42,16 @@ def videos(spark):
     return spark.createDataFrame(
         rows, "video_id string, uploader string, category string, length int, views long, rate double, related array<string>"
     )
+
+
+@pytest.fixture(scope="session")
+def crawl_videos(spark, videos):
+    """A 300-video table with 5 related ids each: enough for PageRank's
+    default >=5-related densification and a non-empty 10% ALS sample."""
+    n = 300
+    rows = [
+        (f"v{i:04d}", f"u{i % 30:02d}", "Music", 100 + i, 10 * i, float(i % 5),
+         [f"v{(i * 7 + k * 13 + 1) % n:04d}" for k in range(5)])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, videos.schema)

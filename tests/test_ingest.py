@@ -84,6 +84,19 @@ def test_dedup_sink_is_duplicate_tolerant(spark, xml_files, tmp_path):
     assert spark.read.parquet(out).count() == 3  # S4: dup keys collapsed
 
 
+def test_dedup_sink_keeps_one_input_row_per_key(spark, tmp_path):
+    """Duplicates that differ: the sink keeps exactly one row per key, and
+    each stored row is one of that key's input rows (which one is not
+    specified)."""
+    rows = [("v01", 1, "a"), ("v01", 2, "b"), ("v02", 3, "c"), ("v01", 1, "c"), ("v02", 4, "c"), ("v03", 5, "d")]
+    df = spark.createDataFrame(rows, "video_id string, views long, category string").repartition(3)
+    out = str(tmp_path / "videos_parquet")
+    xml_ingest.write_dedup_parquet(df, out, ["video_id"])
+    stored = [tuple(r) for r in spark.read.parquet(out).collect()]
+    assert sorted(r[0] for r in stored) == ["v01", "v02", "v03"]
+    assert set(stored) <= set(rows)
+
+
 def test_json_artifact_roundtrip(spark, tmp_path):
     """S9 sink + S10 source: the reference's materialized-view layer."""
     from youtubeanalyzerproject_big_data__spark.io import read_json_artifact, write_json_artifact

@@ -4,9 +4,50 @@ in-degrees, HTML-entity category parity, enrichment joins)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
 from youtubeanalyzerproject_big_data__spark import jobs
 
 NETAGG_ARTIFACTS = ("categorystats", "sizestats", "viewstats", "degreestat")
+
+
+def _artifact_lines(out: str) -> dict[str, list[str]]:
+    """Each netagg artifact's lines, in file order."""
+    return {
+        name: [ln for f in sorted(glob.glob(os.path.join(out, name, "part-*"))) for ln in open(f)]
+        for name in NETAGG_ARTIFACTS
+    }
+
+
+def _write_each_alone(videos, out: str) -> None:
+    """The four netagg artifacts written one after another from one
+    data-sized layout, each job alone."""
+    from youtubeanalyzerproject_big_data__spark.io import write_json_artifact
+    from youtubeanalyzerproject_big_data__spark.serve import CACHED_JOBS
+    from youtubeanalyzerproject_big_data__spark.session import data_sized
+
+    laid = data_sized(videos)
+    for name in NETAGG_ARTIFACTS:
+        write_json_artifact(CACHED_JOBS[name](laid), os.path.join(out, name))
+
+
+def _group_job_ids(spark, run) -> list[int]:
+    """Ids of the Spark jobs ``run()`` starts, read from a job group of its
+    own set on the calling thread."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_category_stats_preserves_entity_dupes(videos):
@@ -72,6 +113,64 @@ def test_run_netagg_writes_artifacts(spark, videos, tmp_path):
     jobs.run_netagg(videos, out)
     for name in NETAGG_ARTIFACTS:
         assert spark.read.json(f"{out}/{name}").count() > 0
+
+
+@pytest.mark.parametrize("table", ["fixture", "empty"])
+def test_run_netagg_writes_what_each_job_writes_alone(spark, videos, tmp_path, table):
+    """The four concurrent writes produce the same lines, in the same
+    order, as the four jobs written one after another."""
+    source = videos if table == "fixture" else spark.createDataFrame([], videos.schema)
+    jobs.run_netagg(source, str(tmp_path / "together"))
+    _write_each_alone(source, str(tmp_path / "alone"))
+    together = _artifact_lines(str(tmp_path / "together"))
+    assert together == _artifact_lines(str(tmp_path / "alone"))
+    assert all(together.values()) == (table == "fixture")
+
+
+def test_run_netagg_jobs_keep_the_callers_job_group(spark, videos, tmp_path):
+    """Every job run_netagg starts from its threads carries the caller's
+    job group: as many jobs as the sequential writes run, and no job
+    outside the group between the sequential writes and a later probe
+    (job ids are handed out in submission order)."""
+    alone = _group_job_ids(spark, lambda: _write_each_alone(videos, str(tmp_path / "alone")))
+    together = _group_job_ids(spark, lambda: jobs.run_netagg(videos, str(tmp_path / "together")))
+    probe = _group_job_ids(spark, lambda: spark.range(1).collect())
+    assert len(alone) >= len(NETAGG_ARTIFACTS)
+    assert len(together) == len(alone)
+    assert together == list(range(alone[-1] + 1, probe[0]))
+
+
+def test_run_netagg_raises_a_failed_write_after_the_others_finish(spark, videos, tmp_path, monkeypatch):
+    """A write that fails raises from run_netagg, and only once the other
+    three artifacts are committed and no Spark job is left running."""
+    write = jobs.write_json_artifact
+
+    def failing_viewstats(df, path):
+        if path.endswith("viewstats"):
+            df = df.where(F.raise_error(F.lit("viewstats write failed")).isNull())
+        write(df, path)
+
+    monkeypatch.setattr(jobs, "write_json_artifact", failing_viewstats)
+    out = str(tmp_path / "caches")
+    with pytest.raises(Exception, match="viewstats write failed"):
+        jobs.run_netagg(videos, out)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    committed = {name: os.path.exists(os.path.join(out, name, "_SUCCESS")) for name in NETAGG_ARTIFACTS}
+    assert committed == {name: name != "viewstats" for name in NETAGG_ARTIFACTS}
+
+
+def test_declared_schemas_are_the_jobs_output(spark, videos, crawl_videos):
+    """PAGERANK_SCHEMA and ALS_RECS_SCHEMA (the schemas a cache hit is read
+    with) carry the names and types the jobs return, with rows and on an
+    empty table; declared nullable throughout, as a JSON read gives."""
+    empty = spark.createDataFrame([], videos.schema)
+    for job, declared in ((jobs.pagerank_job, jobs.PAGERANK_SCHEMA), (jobs.als_recs_job, jobs.ALS_RECS_SCHEMA)):
+        assert all(f.nullable for f in declared.fields)
+        shape = [(f.name, f.dataType) for f in declared]
+        full = job(crawl_videos)
+        assert full.collect()
+        assert [(f.name, f.dataType) for f in full.schema] == shape
+        assert [(f.name, f.dataType) for f in job(empty).schema] == shape
 
 
 def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):

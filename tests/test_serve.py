@@ -240,26 +240,22 @@ def test_close_releases_held_table(spark, videos, tmp_path):
 
 
 @pytest.mark.parametrize("name", ["pagerank", "alsrecs"])
-def test_serve_answers_rank_and_recs_caches(spark, tmp_path, name):
+def test_serve_answers_rank_and_recs_caches(spark, crawl_videos, tmp_path, name):
     """The reference's pagerank_cache.json and als_recs_cache.json
     (guiV5.py:108-119) are served like the netagg caches: a miss writes the
     job's rows, and a hit from a fresh service reads them back with the
-    job's columns and types."""
-    n = 300
-    rows = [
-        (f"v{i:04d}", f"u{i % 30:02d}", "Music", 100 + i, 10 * i, float(i % 5),
-         [f"v{(i * 7 + k * 13 + 1) % n:04d}" for k in range(5)])
-        for i in range(n)
-    ]
-    videos = _parquet(spark, spark.createDataFrame(rows, VIDEOS_SCHEMA), str(tmp_path / "videos_pq"))
+    job's columns and types in exactly one Spark job (its read schema is
+    declared, so no PageRank or ALS job runs)."""
+    videos = _parquet(spark, crawl_videos, str(tmp_path / "videos_pq"))
     expected = CACHED_JOBS[name](videos)
     cache = str(tmp_path / "cache")
     with QueryService(spark, videos, cache) as svc:
         miss = svc.serve(name)
         miss_rows = _by_name(miss)
     with QueryService(spark, videos, cache) as svc:
-        hit = svc.serve(name)
+        hit, _, jobs = _run(spark, lambda: svc.serve(name))
         assert _by_name(hit) == miss_rows
+    assert jobs == 1
     assert [(f.name, f.dataType) for f in hit.schema] == [(f.name, f.dataType) for f in expected.schema]
     assert miss_rows and miss_rows == _by_name(expected)
 

@@ -27,15 +27,23 @@ Layout: ``run_netagg`` and ``pagerank_job`` lay ``videos`` out once through
 ``session.data_sized``.  A crawl-sized table (one AQE minimum partition)
 becomes one coalesced piece, so every aggregate, sort, window and join of
 the refresh runs without a shuffle; a larger table keeps its source
-partitions and plans exactly as the bare jobs do.
+partitions and plans exactly as the bare jobs do.  ``run_netagg`` then
+builds and writes its four artifacts at once from driver threads: on one
+piece each write is a one-task job bound by driver-side planning and the
+commit, so overlapping them saves most of that time.  Every thread body
+is wrapped by ``inheritable_thread_target``, so its jobs keep the
+caller's job group.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from youtubeanalyzerproject_big_data__spark.io import write_json_artifact
 from youtubeanalyzerproject_big_data__spark.operators import aggregates as agg
@@ -106,6 +114,19 @@ def degree_distributions_job(videos: DataFrame, limit: int = 20) -> dict[str, Da
     }
 
 
+# Output schema of pagerank_job, declared so that a cache hit is read without
+# running the job: building its DataFrame already runs the PageRank rounds.
+# Nullable throughout, as a JSON read gives it.
+PAGERANK_SCHEMA = T.StructType(
+    [
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("video_id", T.StringType()),
+        T.StructField("influence_score", T.DoubleType()),
+        T.StructField("uploader", T.StringType()),
+    ]
+)
+
+
 def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> DataFrame:
     """run_pagerank_job.py end-to-end: densify -> edges -> PageRank(0.15, 10)
     -> top-N -> uploader enrichment via broadcast join (replaces the
@@ -120,6 +141,17 @@ def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> D
         .withColumn("rank", F.row_number().over(Window.orderBy(F.desc("pagerank"), F.asc("id"))))
         .select("rank", F.col("id").alias("video_id"), F.col("pagerank").alias("influence_score"), "uploader")
     )
+
+
+# Output schema of als_recs_job, declared for the same reason as
+# PAGERANK_SCHEMA: building its DataFrame samples the ratings and fits ALS.
+ALS_RECS_SCHEMA = T.StructType(
+    [
+        T.StructField("user_idx", T.IntegerType()),
+        T.StructField("user_label", T.StringType()),
+        T.StructField("recommendations", T.ArrayType(T.StringType())),
+    ]
+)
 
 
 def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> DataFrame:
@@ -139,14 +171,36 @@ def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> Data
 
 def run_netagg(videos: DataFrame, out_dir: str) -> None:
     """The four cache artifacts of run_netagg_job.py (S9 layer), all
-    written from one data-sized layout of ``videos``.  Not cached: each
-    artifact re-reads the (sub-MB) source, which costs less than AQE's
-    table-cache stage job."""
+    written from one data-sized layout of ``videos``, as four concurrent
+    Spark jobs.
+
+    The reference writes its caches one after another
+    (run_netagg_job.py:198-221).  On a crawl-sized table each write is a
+    one-task job that spends most of its time in driver-side planning and
+    the commit, so one driver thread per artifact builds and writes it,
+    and the four plans are analysed and run side by side.  Each thread
+    body is wrapped by ``inheritable_thread_target`` (once per thread: the
+    wrapper installs its own copy of the caller's local properties), so
+    every job carries the caller's job group.  The call returns or raises
+    only after every write has finished; a failed write raises its error
+    then.  Not cached: each artifact re-reads the (sub-MB) source, which
+    costs less than AQE's table-cache stage job."""
     videos = data_sized(videos)
-    write_json_artifact(category_stats_job(videos), os.path.join(out_dir, "categorystats"))
-    write_json_artifact(size_stats_job(videos), os.path.join(out_dir, "sizestats"))
-    write_json_artifact(view_histogram_job(videos), os.path.join(out_dir, "viewstats"))
-    write_json_artifact(degree_stats_job(videos), os.path.join(out_dir, "degreestat"))
+    artifacts = {
+        "categorystats": category_stats_job,
+        "sizestats": size_stats_job,
+        "viewstats": view_histogram_job,
+        "degreestat": degree_stats_job,
+    }
+
+    def write(name: str, job) -> None:
+        write_json_artifact(job(videos), os.path.join(out_dir, name))
+
+    spark = videos.sparkSession
+    with ThreadPoolExecutor(len(artifacts)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(write), name, job) for name, job in artifacts.items()]
+    for future in futures:
+        future.result()
 
 
 def curation_job(spark, sf_dir: str, out_dir: str, seq_len: int = 512, budget_per_source: int = 800) -> dict:

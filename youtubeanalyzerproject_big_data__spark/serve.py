@@ -29,10 +29,11 @@ way the reference GUI keeps its DataFrame and caches in the session
   * a cache miss runs its job over the same data-sized layout of the
     source, not over the held table, so a service that only serves
     artifacts never builds it;
-  * artifact reads carry the Phase-1 job's schema, taken from the job over
-    no rows (analysis only for the netagg jobs; PageRank and ALS run on an
-    empty input, never on the table), and are kept per artifact until its
-    ``_SUCCESS`` marker changes, so a repeat hit re-executes an
+  * artifact reads carry the Phase-1 job's schema: for the netagg
+    artifacts the job's over no rows (analysis only), for PageRank and ALS
+    the schema declared beside the job in ``jobs.py`` (building those jobs
+    runs them), so a hit runs no Phase-1 job.  Reads are kept per artifact
+    until its ``_SUCCESS`` marker changes, so a repeat hit re-executes an
     already-planned DataFrame.
 """
 
@@ -43,6 +44,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from youtubeanalyzerproject_big_data__spark import jobs
 from youtubeanalyzerproject_big_data__spark.io import read_json_artifact, write_json_artifact
@@ -61,6 +63,10 @@ CACHED_JOBS: dict[str, Callable[[DataFrame], DataFrame]] = {
     "pagerank": jobs.pagerank_job,
     "alsrecs": jobs.als_recs_job,
 }
+
+# Read schemas of the artifacts whose job runs Spark work as its DataFrame
+# is built; every other artifact is read with its job's schema over no rows.
+DECLARED_SCHEMAS: dict[str, StructType] = {"pagerank": jobs.PAGERANK_SCHEMA, "alsrecs": jobs.ALS_RECS_SCHEMA}
 
 
 class QueryService:
@@ -124,7 +130,8 @@ class QueryService:
         stamp = os.stat(marker).st_mtime_ns
         memo = self._reads.get(name)
         if memo is None or memo[0] != stamp:
-            memo = (stamp, read_json_artifact(self.spark, path, CACHED_JOBS[name](self.videos.limit(0)).schema))
+            schema = DECLARED_SCHEMAS.get(name) or CACHED_JOBS[name](self.videos.limit(0)).schema
+            memo = (stamp, read_json_artifact(self.spark, path, schema))
             self._reads[name] = memo
         return memo[1]
 

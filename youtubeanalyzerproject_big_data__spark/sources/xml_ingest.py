@@ -12,7 +12,8 @@ Reference behavior being reproduced (YoutubeDataset_loader_final.py):
       array<string> column (:39-51);
   S4  duplicate-tolerant batched sink -- ``insert_many(ordered=False)``
       swallowing duplicate-key errors (:87-123) becomes dropDuplicates on
-      the natural key before an append-mode parquet write.
+      the natural key before an append-mode parquet write; one row per key
+      is kept, which one unspecified.
 
 Division of labor, deliberately:
   * Python (executor-side) does ONLY raw string extraction -- one dict of
@@ -126,6 +127,9 @@ def read_users_xml(spark: SparkSession, paths: list[str]) -> DataFrame:
 
 def write_dedup_parquet(df: DataFrame, path: str, key_cols: list[str]) -> None:
     """S4: duplicate-tolerant sink.  The reference's unordered insert_many
-    ignores duplicate-key errors; relationally that is 'first writer wins on
-    the natural key', i.e. dropDuplicates(key) before an append-mode write."""
+    ignores duplicate-key errors, so one document per natural key survives;
+    here that is dropDuplicates(key) before an append-mode write.  Which row
+    of a key is kept is unspecified (it depends on partitioning and task
+    order), not the first one read.  A crawl re-emits a video as an
+    identical copy, so for crawl input the choice does not show."""
     df.dropDuplicates(key_cols).write.mode("append").parquet(path)
