@@ -1,0 +1,112 @@
+"""Every top-level function, class and constant of the package is used by
+some non-test file: code that only tests call, or nothing calls, is
+deleted (git keeps it).  A static scan of the source; no Spark needed."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = "youtubeanalyzerproject_big_data__spark"
+
+# Kept without a caller, each for its reason.
+ALLOWED = {
+    (f"{PACKAGE}.sources.xml_ingest", "read_users_xml"): "the reference's users loader "
+    "(YoutubeDataset_loader_final.py:55-72); the engine ingests both collections",
+    (f"{PACKAGE}.schema", "USERS_SCHEMA"): "the users collection's data model, which "
+    "read_users_xml produces (YoutubeDataset_loader_final.py:55-72)",
+}
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _non_test_sources() -> dict[str, ast.Module]:
+    paths = (
+        p for p in sorted(ROOT.rglob("*.py"))
+        if not any(part == "tests" or part.startswith(".") for part in p.relative_to(ROOT).parts)
+    )
+    return {_module_name(p): ast.parse(p.read_text(), str(p)) for p in paths}
+
+
+def _dotted(node: ast.Attribute) -> list[str] | None:
+    names = []
+    while isinstance(node, ast.Attribute):
+        names.append(node.attr)
+        node = node.value
+    return [node.id, *reversed(names)] if isinstance(node, ast.Name) else None
+
+
+def _references(sources: dict[str, ast.Module]) -> set[tuple[str, str]]:
+    """(module, name) pairs that some source loads: a name read in its own
+    module, imported from its module, or reached as ``module.name``
+    through an imported module.  A name imported into one module and
+    imported from there in turn counts for the module that defines it."""
+    refs: set[tuple[str, str]] = set()
+    reexported: dict[tuple[str, str], tuple[str, str]] = {}
+    for mod, tree in sources.items():
+        modules: dict[str, str] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    bound = a.name if a.asname else a.name.split(".")[0]
+                    modules[a.asname or bound] = bound
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                for a in node.names:
+                    if f"{node.module}.{a.name}" in sources:
+                        modules[a.asname or a.name] = f"{node.module}.{a.name}"
+                    else:
+                        refs.add((node.module, a.name))
+                        reexported[(mod, a.asname or a.name)] = (node.module, a.name)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                refs.add((mod, node.id))
+            elif isinstance(node, ast.Attribute) and (path := _dotted(node)) and path[0] in modules:
+                target, rest = modules[path[0]], path[1:]
+                while rest and f"{target}.{rest[0]}" in sources:
+                    target, rest = f"{target}.{rest[0]}", rest[1:]
+                if rest:
+                    refs.add((target, rest[0]))
+    pending = list(refs)
+    while pending:
+        origin = reexported.get(pending.pop())
+        if origin is not None and origin not in refs:
+            refs.add(origin)
+            pending.append(origin)
+    return refs
+
+
+def _declared_query(node: ast.AST) -> bool:
+    """A ``@query(...)`` body: the contract registry calls it."""
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
+        for d in getattr(node, "decorator_list", [])
+    )
+
+
+def _top_level_symbols(sources: dict[str, ast.Module]):
+    for mod, tree in sources.items():
+        if mod != PACKAGE and not mod.startswith(f"{PACKAGE}."):
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) and not _declared_query(node):
+                yield mod, node.name, node.lineno
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    if isinstance(t, ast.Name) and not t.id.startswith("__"):
+                        yield mod, t.id, node.lineno
+
+
+def test_every_package_symbol_has_a_non_test_caller():
+    sources = _non_test_sources()
+    refs = _references(sources)
+    symbols = {(mod, name): line for mod, name, line in _top_level_symbols(sources)}
+    unused = [f"{mod}:{line} {name}" for (mod, name), line in symbols.items() if (mod, name) not in refs]
+    expected = [f"{mod}:{symbols.get((mod, name))} {name}" for mod, name in ALLOWED]
+    assert sorted(unused) == sorted(expected), "package symbols no non-test file uses:\n" + "\n".join(unused)

@@ -13,14 +13,12 @@ from pyspark.sql import functions as F
 
 from youtubeanalyzerproject_big_data__spark import jobs
 
-NETAGG_ARTIFACTS = ("categorystats", "sizestats", "viewstats", "degreestat")
-
 
 def _artifact_lines(out: str) -> dict[str, list[str]]:
     """Each netagg artifact's lines, in file order."""
     return {
         name: [ln for f in sorted(glob.glob(os.path.join(out, name, "part-*"))) for ln in open(f)]
-        for name in NETAGG_ARTIFACTS
+        for name in jobs.NETAGG_ARTIFACTS
     }
 
 
@@ -28,12 +26,12 @@ def _write_each_alone(videos, out: str) -> None:
     """The four netagg artifacts written one after another from one
     data-sized layout, each job alone."""
     from youtubeanalyzerproject_big_data__spark.io import write_json_artifact
-    from youtubeanalyzerproject_big_data__spark.serve import CACHED_JOBS
     from youtubeanalyzerproject_big_data__spark.session import data_sized
 
     laid = data_sized(videos)
-    for name in NETAGG_ARTIFACTS:
-        write_json_artifact(CACHED_JOBS[name](laid), os.path.join(out, name))
+    for name in jobs.NETAGG_ARTIFACTS:
+        job = jobs.ARTIFACTS[name][0]
+        write_json_artifact(job(laid), os.path.join(out, name))
 
 
 def _group_job_ids(spark, run) -> list[int]:
@@ -76,12 +74,6 @@ def test_degree_stats_preserve_zero_and_dangling(videos):
     assert deg["v04"] == (0, 0)  # empty related, never referenced
     assert deg["v05"] == (0, 0)  # null related preserved via left join + fillna
     assert deg["v01"][0] == 3 and deg["v01"][1] == 3
-    dists = jobs.degree_distributions_job(videos)
-    out_dist = {r["degree"]: r["num_vertices"] for r in dists["out_distribution"].collect()}
-    # zero-out vertices (v04, v05, dangling1) don't appear: the distribution
-    # is built on the edge table only (reference semantics)
-    assert 0 not in out_dist
-    assert out_dist[1] == 2  # v02, v03 (self-loop removed)
 
 
 def test_pagerank_job_enriches_uploader(spark, videos):
@@ -111,7 +103,7 @@ def test_als_job_shape(spark, videos):
 def test_run_netagg_writes_artifacts(spark, videos, tmp_path):
     out = str(tmp_path / "caches")
     jobs.run_netagg(videos, out)
-    for name in NETAGG_ARTIFACTS:
+    for name in jobs.NETAGG_ARTIFACTS:
         assert spark.read.json(f"{out}/{name}").count() > 0
 
 
@@ -135,7 +127,7 @@ def test_run_netagg_jobs_keep_the_callers_job_group(spark, videos, tmp_path):
     alone = _group_job_ids(spark, lambda: _write_each_alone(videos, str(tmp_path / "alone")))
     together = _group_job_ids(spark, lambda: jobs.run_netagg(videos, str(tmp_path / "together")))
     probe = _group_job_ids(spark, lambda: spark.range(1).collect())
-    assert len(alone) >= len(NETAGG_ARTIFACTS)
+    assert len(alone) >= len(jobs.NETAGG_ARTIFACTS)
     assert len(together) == len(alone)
     assert together == list(range(alone[-1] + 1, probe[0]))
 
@@ -155,22 +147,23 @@ def test_run_netagg_raises_a_failed_write_after_the_others_finish(spark, videos,
     with pytest.raises(Exception, match="viewstats write failed"):
         jobs.run_netagg(videos, out)
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
-    committed = {name: os.path.exists(os.path.join(out, name, "_SUCCESS")) for name in NETAGG_ARTIFACTS}
-    assert committed == {name: name != "viewstats" for name in NETAGG_ARTIFACTS}
+    committed = {name: os.path.exists(os.path.join(out, name, "_SUCCESS")) for name in jobs.NETAGG_ARTIFACTS}
+    assert committed == {name: name != "viewstats" for name in jobs.NETAGG_ARTIFACTS}
 
 
 def test_declared_schemas_are_the_jobs_output(spark, videos, crawl_videos):
-    """PAGERANK_SCHEMA and ALS_RECS_SCHEMA (the schemas a cache hit is read
-    with) carry the names and types the jobs return, with rows and on an
-    empty table; declared nullable throughout, as a JSON read gives."""
+    """Every ARTIFACTS read schema (what a cache hit is read with) carries
+    the names and types its job returns, with rows and on an empty table;
+    declared nullable throughout, as a JSON read gives."""
     empty = spark.createDataFrame([], videos.schema)
-    for job, declared in ((jobs.pagerank_job, jobs.PAGERANK_SCHEMA), (jobs.als_recs_job, jobs.ALS_RECS_SCHEMA)):
-        assert all(f.nullable for f in declared.fields)
+    for name, (job, ddl) in jobs.ARTIFACTS.items():
+        declared = spark.createDataFrame([], ddl).schema
+        assert all(f.nullable for f in declared.fields), name
         shape = [(f.name, f.dataType) for f in declared]
         full = job(crawl_videos)
-        assert full.collect()
-        assert [(f.name, f.dataType) for f in full.schema] == shape
-        assert [(f.name, f.dataType) for f in job(empty).schema] == shape
+        assert full.collect(), name
+        assert [(f.name, f.dataType) for f in full.schema] == shape, name
+        assert [(f.name, f.dataType) for f in job(empty).schema] == shape, name
 
 
 def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):
@@ -192,7 +185,7 @@ def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):
         jobs.run_netagg(source, out)
         lines = {
             name: sorted(ln for f in glob.glob(os.path.join(out, name, "part-*")) for ln in open(f))
-            for name in NETAGG_ARTIFACTS
+            for name in jobs.NETAGG_ARTIFACTS
         }
         ranks = jobs.pagerank_job(source, top_n=10, min_related=1).collect()
         with QueryService(spark, source, out) as svc:
@@ -210,24 +203,3 @@ def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):
     assert one == many
     lines, ranks, stats = one
     assert all(lines.values()) and ranks and stats[0]["cnt"] == 6
-
-
-def test_curation_job_end_to_end_deterministic(spark, tmp_path):
-    """The composed curation pipeline writes both artifacts, produces a
-    sane summary, and is rerun-identical (every selection step is hash- or
-    rule-based)."""
-    from youtubeanalyzerproject_big_data__spark.jobs import curation_job
-
-    sf = "/root/testdata/sf0.001"
-    out1, out2 = str(tmp_path / "run1"), str(tmp_path / "run2")
-    s1 = curation_job(spark, sf, out1)
-    s2 = curation_job(spark, sf, out2)
-    assert s1 == s2
-    assert s1["n_selected"] > 0 and s1["n_chunks"] >= s1["n_selected"] and s1["n_bins"] > 0
-    sel1 = sorted(map(tuple, spark.read.parquet(f"{out1}/selected").collect()))
-    sel2 = sorted(map(tuple, spark.read.parquet(f"{out2}/selected").collect()))
-    assert sel1 == sel2
-    cols = set(spark.read.parquet(f"{out1}/selected").columns)
-    assert {"doc_id", "source", "n_tokens", "start_offset", "bin_id", "pos_in_bin"} <= cols
-    # decontamination: no eval-set ids survive
-    assert all(r[0] % 97 != 0 for r in sel1)

@@ -9,6 +9,12 @@ from youtubeanalyzerproject_big_data__spark.plans.inspect import executed_plan a
 SF = "/root/testdata/sf0.001"
 
 
+def operator_counts(df) -> dict[str, int]:
+    """Occurrence count per physical operator name in the executed plan."""
+    plan = _plan(df)
+    return {op: plan.count(op) for op in ("Exchange", "SortMergeJoin")}
+
+
 def test_filter_pushed_to_parquet_scan(spark):
     plan = _plan(contract.relational.q_f5(spark, SF))
     assert "PushedFilters: [" in plan
@@ -94,10 +100,10 @@ def test_ann_rerank_is_two_stage_topk(spark):
 def test_partitioned_write_prunes_partitions(spark, tmp_path_factory):
     """Partition-layout round trip: a filter on the partition column must
     become a PartitionFilters entry (directory pruning), not a row filter."""
-    from youtubeanalyzerproject_big_data__spark.io import load_table, write_parquet
+    from youtubeanalyzerproject_big_data__spark.io import load_table
 
     out = str(tmp_path_factory.mktemp("part") / "orders_by_status")
-    write_parquet(load_table(spark, SF, "orders"), out, partition_by=["o_orderstatus"])
+    load_table(spark, SF, "orders").write.partitionBy("o_orderstatus").parquet(out)
     df = spark.read.parquet(out).where("o_orderstatus = 'F'").select("o_orderkey")
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -109,14 +115,14 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path_factory):
     Exchange operators -- the pre-paid-shuffle (co-located join) strategy."""
     from pyspark.sql import functions as F
 
-    from youtubeanalyzerproject_big_data__spark.io import load_table, write_bucketed
-    from youtubeanalyzerproject_big_data__spark.plans.inspect import operator_counts
+    from youtubeanalyzerproject_big_data__spark.io import load_table
 
     base = tmp_path_factory.mktemp("bucketed")
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_extendedprice")
     o = load_table(spark, SF, "orders").select("o_orderkey", "o_orderpriority")
-    write_bucketed(li, "li_b", str(base / "li"), ["l_orderkey"], 4, sort_cols=["l_orderkey"])
-    write_bucketed(o, "o_b", str(base / "o"), ["o_orderkey"], 4, sort_cols=["o_orderkey"])
+    # external tables: bucket metadata lives in the catalog, not the files
+    for df, table, key in ((li, "li_b", "l_orderkey"), (o, "o_b", "o_orderkey")):
+        df.write.option("path", str(base / table)).bucketBy(4, key).sortBy(key).saveAsTable(table)
     thresholds = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
     saved = {k: spark.conf.get(k, None) for k in thresholds}
     try:
@@ -160,8 +166,6 @@ def test_pack_sequences_has_no_global_data_window(spark):
 def test_chunking_is_shuffle_free(spark):
     """c4: chunking must plan as scan -> generate (posexplode) -> project
     with no Exchange at all."""
-    from youtubeanalyzerproject_big_data__spark.plans.inspect import operator_counts
-
     df = contract.dedup.q_c4(spark, SF)
     df.collect()
     assert operator_counts(df).get("Exchange", 0) == 0
@@ -170,8 +174,6 @@ def test_chunking_is_shuffle_free(spark):
 def test_zorder_keys_are_map_side(spark):
     """l1: after the min/max scalar aggregate, key computation must be a
     pure scan+project -- zero Exchange in the returned plan."""
-    from youtubeanalyzerproject_big_data__spark.plans.inspect import operator_counts
-
     df = contract.lake.q_l1(spark, SF)
     df.collect()
     assert operator_counts(df).get("Exchange", 0) == 0
@@ -313,10 +315,10 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path_factory):
     partitions and reading 300 (star-schema query shape)."""
     from pyspark.sql import functions as F
 
-    from youtubeanalyzerproject_big_data__spark.io import load_table, write_parquet
+    from youtubeanalyzerproject_big_data__spark.io import load_table
 
     out = str(tmp_path_factory.mktemp("dpp") / "orders_by_priority")
-    write_parquet(load_table(spark, SF, "orders"), out, partition_by=["o_orderpriority"])
+    load_table(spark, SF, "orders").write.partitionBy("o_orderpriority").parquet(out)
     fact = spark.read.parquet(out)
     dim = spark.createDataFrame(
         [("1-URGENT", "u"), ("2-HIGH", "h"), ("3-MEDIUM", "m")], "o_orderpriority string, tag string"

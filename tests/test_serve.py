@@ -9,7 +9,8 @@ import uuid
 import pytest
 
 from youtubeanalyzerproject_big_data__spark.plans.inspect import executed_plan
-from youtubeanalyzerproject_big_data__spark.serve import CACHED_JOBS, QueryService
+from youtubeanalyzerproject_big_data__spark.jobs import ARTIFACTS
+from youtubeanalyzerproject_big_data__spark.serve import QueryService
 
 VIDEOS_SCHEMA = (
     "video_id string, uploader string, category string, length int, views long, rate double, related array<string>"
@@ -135,8 +136,8 @@ def test_live_ops_run_one_job_without_exchange(spark, videos, open_service, tmp_
 
 def test_serve_hit_reuses_planned_read(spark, videos, open_service, tmp_path):
     """A repeat hit returns the same planned DataFrame and runs one job; a
-    rewritten artifact, refresh() and a swapped videos table each replace
-    it."""
+    rewritten artifact and refresh() each replace it, a swapped videos
+    table does not."""
     svc = open_service(_parquet(spark, videos, str(tmp_path / "videos_pq")))
     first = svc.serve("categorystats")
     df, rows, jobs = _run(spark, lambda: svc.serve("categorystats"))
@@ -156,8 +157,10 @@ def test_serve_hit_reuses_planned_read(spark, videos, open_service, tmp_path):
     assert refreshed is not reread
     assert {r["category"]: r["num_videos"] for r in refreshed.collect()}["Music"] == 3
 
+    # the read schema is declared, not derived from the table: a swapped
+    # table keeps the planned read of an unchanged artifact
     svc.videos = svc.videos.where("views > 0")
-    assert svc.serve("categorystats") is not refreshed
+    assert svc.serve("categorystats") is refreshed
 
 
 def test_held_table_keeps_source_partitions_above_min_size(spark, videos, open_service, tmp_path):
@@ -203,7 +206,7 @@ def test_serve_keeps_job_schema_on_degenerate_tables(degenerate, open_service):
     artifact has no rows."""
     videos, n = degenerate
     svc = open_service(videos)
-    for name, job in CACHED_JOBS.items():
+    for name, (job, _) in ARTIFACTS.items():
         served, expected = svc.serve(name), job(videos)
         assert sorted(served.columns) == sorted(expected.columns), name
         assert _by_name(served) == _by_name(expected), name
@@ -239,19 +242,25 @@ def test_close_releases_held_table(spark, videos, tmp_path):
     assert not held.storageLevel.useMemory
 
 
-@pytest.mark.parametrize("name", ["pagerank", "alsrecs"])
-def test_serve_answers_rank_and_recs_caches(spark, crawl_videos, tmp_path, name):
-    """The reference's pagerank_cache.json and als_recs_cache.json
-    (guiV5.py:108-119) are served like the netagg caches: a miss writes the
-    job's rows, and a hit from a fresh service reads them back with the
-    job's columns and types in exactly one Spark job (its read schema is
-    declared, so no PageRank or ALS job runs)."""
+@pytest.mark.parametrize("name", sorted(ARTIFACTS))
+def test_serve_answers_rank_and_recs_caches(spark, crawl_videos, tmp_path, monkeypatch, name):
+    """Every reference cache, the pagerank_cache.json and
+    als_recs_cache.json of guiV5.py:108-119 included, is served one way: a
+    miss writes the job's rows, and a hit from a fresh service reads them
+    back with the job's columns and types in exactly one Spark job, without
+    calling the job (its read schema is declared in ARTIFACTS)."""
     videos = _parquet(spark, crawl_videos, str(tmp_path / "videos_pq"))
-    expected = CACHED_JOBS[name](videos)
+    job, ddl = ARTIFACTS[name]
+    expected = job(videos)
     cache = str(tmp_path / "cache")
     with QueryService(spark, videos, cache) as svc:
         miss = svc.serve(name)
         miss_rows = _by_name(miss)
+
+    def not_on_a_hit(_videos):
+        raise AssertionError(f"a {name} hit called its job")
+
+    monkeypatch.setitem(ARTIFACTS, name, (not_on_a_hit, ddl))
     with QueryService(spark, videos, cache) as svc:
         hit, _, jobs = _run(spark, lambda: svc.serve(name))
         assert _by_name(hit) == miss_rows

@@ -81,9 +81,13 @@ def test_stream_sessionize_runs(spark, events_dir):
 
 def test_stream_user_totals_matches_batch(spark, events_dir):
     """applyInPandasWithState custom stateful operator == batch groupBy."""
-    from youtubeanalyzerproject_big_data__spark.streaming.events import stream_user_totals, user_totals
+    from youtubeanalyzerproject_big_data__spark.functions.precision import dec_sum
+    from youtubeanalyzerproject_big_data__spark.streaming.events import stream_user_totals
 
-    batch = {r["user_id"]: (r["n_events"], round(r["sum_value"], 6)) for r in user_totals(spark.read.parquet(events_dir)).collect()}
+    totals = spark.read.parquet(events_dir).groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"), dec_sum("value", "sum_value")
+    )
+    batch = {r["user_id"]: (r["n_events"], round(r["sum_value"], 6)) for r in totals.collect()}
     q = (
         stream_user_totals(spark, events_dir)
         .writeStream.format("memory")

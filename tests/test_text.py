@@ -76,19 +76,6 @@ def test_repetition_signals(spark):
     assert out[4]["n_bigrams"] == 0 and out[4]["top_bigram_ratio"] == 0.0
 
 
-def test_char_ngrams_function(spark):
-    """char_ngrams: normalized, deduplicated character shingles."""
-    from pyspark.sql import functions as F
-
-    from youtubeanalyzerproject_big_data__spark.functions.textfns import char_ngrams
-
-    df = spark.createDataFrame([("abcab",), ("  A  b ",), ("ab",)], "t string")
-    out = [r["g"] for r in df.select(char_ngrams(F.col("t"), 3).alias("g")).collect()]
-    assert out[0] == ["abc", "bca", "cab"]  # 'abc' appears once (distinct)
-    assert out[1] == ["a b"]  # lowered + whitespace-collapsed to 'a b'
-    assert out[2] == []  # shorter than n -> empty, not sequence-down bug
-
-
 def test_unigram_logprob_quantized_exact(spark):
     """Per-token contributions are integer-quantized micros: the per-doc sum
     must equal the hand-computed sum regardless of partitioning."""

@@ -40,12 +40,12 @@ def test_quantize_clamps_top_edge(spark):
 
 
 def test_zordered_layout_tightens_file_spans(spark, tmp_path_factory):
-    """After write_zordered on (a, b), the summed per-file min/max span of
+    """After a z-ordered write on (a, b), the summed per-file min/max span of
     EACH column must shrink vs a hash-scattered layout -- the footer-level
     fact that makes scans prune files on either column."""
     import random
 
-    from youtubeanalyzerproject_big_data__spark.functions.zorder import write_zordered
+    from youtubeanalyzerproject_big_data__spark.functions.zorder import zorder_key
 
     rng = random.Random(3)
     rows = [(i, rng.randrange(10_000), rng.random() * 1000.0) for i in range(20_000)]
@@ -54,7 +54,9 @@ def test_zordered_layout_tightens_file_spans(spark, tmp_path_factory):
     scattered = str(base / "scattered")
     df.repartition(16).write.mode("overwrite").parquet(scattered)
     ordered = str(base / "zordered")
-    write_zordered(df, ["a", "b"], ordered, n_files=16, bits=8)
+    # range-repartition on the key, so files hold contiguous key ranges
+    keyed = df.withColumn("_zkey", zorder_key(df, ["a", "b"], bits=8))
+    keyed.repartitionByRange(16, "_zkey").sortWithinPartitions("_zkey").drop("_zkey").write.parquet(ordered)
 
     for col in ("a", "b"):
         span_scattered = sum(hi - lo for lo, hi in _file_spans(scattered, col))

@@ -50,7 +50,7 @@ def _dsum_round(col_expr: str, scale: int) -> str:
 
 
 # DuckDB cosine fragment: exact per-element double arithmetic (matches the
-# Spark zip_with/aggregate fold in functions/vectors.py).
+# left-to-right fold of the Arrow cosine kernel, functions/_arrow_udfs.py).
 def _cos_sql(a: str, b: str) -> str:
     d = f"list_sum(list_transform(generate_series(1, len({a})), i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
     na = f"sqrt(list_sum(list_transform(generate_series(1, len({a})), i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE))))"

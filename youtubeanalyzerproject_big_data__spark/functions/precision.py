@@ -125,14 +125,6 @@ def dec_avg(col: str | Column, alias: str, scale: int = 6) -> Column:
     return (F.when(s < 0, -q).otherwise(q).cast("double") / F.lit(float(p))).alias(alias)
 
 
-def r4(col: Column, alias: str) -> Column:
-    return F.round(col, 4).alias(alias)
-
-
-def r6(col: Column, alias: str) -> Column:
-    return F.round(col, 6).alias(alias)
-
-
 def ratio_round(num: str | Column, den: str | Column, alias: str | None = None, scale: int = 6) -> Column:
     """HALF-UP rounding of an INTEGER ratio num/den at ``scale`` decimals,
     decided on exact integers -- the per-row sibling of dec_avg.

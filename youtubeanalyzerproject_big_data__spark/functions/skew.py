@@ -47,31 +47,6 @@ def salted_agg(
     return partial.groupBy(key).agg(*final_aggs)
 
 
-def salted_count(df: DataFrame, key: str, num_salts: int = 16, alias: str = "cnt") -> DataFrame:
-    """Convenience: skew-safe COUNT(*) per key."""
-    return salted_agg(
-        df,
-        key,
-        [F.count(F.lit(1)).alias("_c")],
-        [F.sum("_c").cast("long").alias(alias)],
-        num_salts,
-    )
-
-
-def salted_collect_set(df: DataFrame, key: str, value: str, num_salts: int = 16, alias: str = "vals") -> DataFrame:
-    """Skew-safe collect_set: per-salt sets stay bounded per task, then a
-    flatten+dedup combine per key -- the case where salting genuinely beats
-    map-side partial aggregation (one giant set would otherwise live in a
-    single reducer's buffer)."""
-    return salted_agg(
-        df,
-        key,
-        [F.collect_set(value).alias("_s")],
-        [F.array_distinct(F.flatten(F.collect_list("_s"))).alias(alias)],
-        num_salts,
-    )
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,

@@ -45,14 +45,6 @@ def word_ngrams(text: Column, n: int) -> Column:
     return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(F.array().cast("array<string>"))
 
 
-def char_ngrams(text: Column, n: int) -> Column:
-    """Array of character n-gram shingles over normalized text, deduplicated."""
-    norm = normalize(text)
-    idx = F.sequence(F.lit(1), F.length(norm) - (n - 1))
-    grams = F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(n))))
-    return F.when(F.length(norm) >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
 def adjacent_pairs(toks_col: Column) -> Column:
     """Adjacent-bigram strings ("w1 w2") from a BOUND token-array column,
     occurrences preserved (no dedup): zip_with of the array against its

@@ -52,20 +52,6 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> Column:
     return interleave_bits(qs, bits)
 
 
-def write_zordered(df: DataFrame, cols: list[str], path: str, n_files: int = 32, bits: int = 8) -> None:
-    """Materialize a z-ordered layout: range-repartition on the key (so
-    files hold contiguous key ranges -> tight per-file min/max on every
-    participating column), sort within partitions, drop the key, write."""
-    keyed = df.withColumn("_zkey", zorder_key(df, cols, bits))
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def hilbert_key_2d(df: DataFrame, qx: Column, qy: Column, bits: int = 8, out_name: str = "hkey") -> DataFrame:
     """Hilbert-curve key for two quantized columns (cells in [0, 2^bits)):
     the locality-preserving successor to the Morton key -- consecutive

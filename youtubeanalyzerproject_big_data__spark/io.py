@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one benchmark table (S5 analog: full-collection scan -> DataFrame).
@@ -66,42 +64,17 @@ def write_json_artifact(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").json(path)
 
 
-def read_json_artifact(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+def read_json_artifact(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
     """JSON cache source (S10): the reference's Phase-2 GUI reads its cache
     files back for interactive serving (guiV5.py:66-78,108-119); here that
     round-trip is spark.read.json over the artifact directory.
 
-    ``schema`` is the writing job's schema, and it is required: Spark's JSON
-    writer drops null fields, so an inferred schema loses every column that
-    is null in all rows (an empty artifact infers zero columns), and
+    ``schema`` is the writing job's schema (a DDL string for the reference
+    caches, declared in ``jobs.ARTIFACTS``), and it is required: Spark's
+    JSON writer drops null fields, so an inferred schema loses every column
+    that is null in all rows (an empty artifact infers zero columns), and
     inference is an extra job over the files on every read."""
     return spark.read.schema(schema).json(path)
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame, table: str, path: str, bucket_cols: list[str], num_buckets: int, sort_cols: list[str] | None = None
-) -> None:
-    """Bucketed external table: rows are hash-clustered into ``num_buckets``
-    files per partition on ``bucket_cols``.
-
-    Two tables bucketed the same way join WITHOUT a shuffle (each bucket
-    pair joins locally) and aggregations on the bucket key skip their
-    exchange -- the pre-paid-shuffle strategy for fact-fact joins that
-    would otherwise move 100 TB per query.  Registered as an EXTERNAL table
-    (explicit ``path``) because bucket metadata lives in the catalog, not
-    the parquet footer.
-    """
-    w = df.write.mode("overwrite").format("parquet").option("path", path).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
 
 
 def write_jsonl(df: DataFrame, path: str, n_files: int = 8) -> None:

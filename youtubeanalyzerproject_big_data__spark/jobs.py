@@ -23,6 +23,11 @@ Reference quirks preserved deliberately (SURVEY.md par.7.4):
 Divergence: the reference's N+1 ``find_one`` uploader loop is replaced by a
 broadcast join (same output, distributed mechanics -- SURVEY.md J6).
 
+Registry: ``ARTIFACTS`` declares each of the reference's seven JSON caches
+once, as its job and the schema a cache hit is read with.
+``serve.QueryService`` serves and refreshes from it, and ``run_netagg``
+takes its four jobs from it.
+
 Layout: ``run_netagg`` and ``pagerank_job`` lay ``videos`` out once through
 ``session.data_sized``.  A crawl-sized table (one AQE minimum partition)
 becomes one coalesced piece, so every aggregate, sort, window and join of
@@ -38,12 +43,12 @@ caller's job group.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from youtubeanalyzerproject_big_data__spark.io import write_json_artifact
 from youtubeanalyzerproject_big_data__spark.operators import aggregates as agg
@@ -90,7 +95,7 @@ def global_view_stats_job(videos: DataFrame) -> DataFrame:
     return agg.global_stats(videos, "views")
 
 
-def degree_stats_job(videos: DataFrame, top_n: int = 20) -> DataFrame:
+def degree_stats_job(videos: DataFrame) -> DataFrame:
     """A5/J1/J2/G2/G3 (run_netagg_job.py:17-72): vertices with both degrees,
     zero-degree preserved, dangling dst ids included on the in-side."""
     edges = graph.edges_from_arrays(videos, "video_id", "related")
@@ -101,30 +106,6 @@ def degree_stats_job(videos: DataFrame, top_n: int = 20) -> DataFrame:
     in_deg = graph.in_degrees(edges).withColumnRenamed("dst", "id")
     both = joins.left_join_fill_zero(vertices, out_deg, "id", ["out_degree"])
     return joins.left_join_fill_zero(both, in_deg, "id", ["in_degree"])
-
-
-def degree_distributions_job(videos: DataFrame, limit: int = 20) -> dict[str, DataFrame]:
-    """The four lists of degreestat_cache.json (run_netagg_job.py:32-43)."""
-    edges = graph.edges_from_arrays(videos, "video_id", "related")
-    return {
-        "out_distribution": graph.degree_distribution(edges, "out").limit(limit),
-        "in_distribution": graph.degree_distribution(edges, "in").limit(limit),
-        "top_by_out": graph.out_degrees(edges).orderBy(F.desc("out_degree"), "src").limit(limit),
-        "top_by_in": graph.in_degrees(edges).orderBy(F.desc("in_degree"), "dst").limit(limit),
-    }
-
-
-# Output schema of pagerank_job, declared so that a cache hit is read without
-# running the job: building its DataFrame already runs the PageRank rounds.
-# Nullable throughout, as a JSON read gives it.
-PAGERANK_SCHEMA = T.StructType(
-    [
-        T.StructField("rank", T.IntegerType()),
-        T.StructField("video_id", T.StringType()),
-        T.StructField("influence_score", T.DoubleType()),
-        T.StructField("uploader", T.StringType()),
-    ]
-)
 
 
 def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> DataFrame:
@@ -143,17 +124,6 @@ def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> D
     )
 
 
-# Output schema of als_recs_job, declared for the same reason as
-# PAGERANK_SCHEMA: building its DataFrame samples the ratings and fits ALS.
-ALS_RECS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_idx", T.IntegerType()),
-        T.StructField("user_label", T.StringType()),
-        T.StructField("recommendations", T.ArrayType(T.StringType())),
-    ]
-)
-
-
 def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> DataFrame:
     """run_alsrecs_job.py end-to-end: the uploader 'rates' their own videos
     with the video's average rate (SURVEY.md par.1.4 semantic quirk,
@@ -167,6 +137,33 @@ def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> Data
         return ratings.select("user_idx", "user_label", F.array("item_label").alias("recommendations"))
     model = recommend.train_als(ratings, max_iter=10, reg_param=0.1, rank=10, seed=42)
     return recommend.recommend_for_users(model, ratings, n_users=n_users, n_recs=n_recs)
+
+
+# The reference's seven JSON caches (run_netagg_job.py:198-221,
+# run_pagerank_job.py:143-146, run_alsrecs_job.py; served by
+# guiV5.py:66-78,108-119): artifact name -> (its job over the videos model,
+# the schema a cache hit is read with).  The read schema is declared, not
+# derived from the job: building the PageRank and ALS DataFrames already
+# runs Spark work, and analysing any other job costs a plan on every fresh
+# read.  DDL without NOT NULL: a JSON read makes every field nullable anyway.
+ARTIFACTS: dict[str, tuple[Callable[[DataFrame], DataFrame], str]] = {
+    "categorystats": (
+        category_stats_job,
+        "category STRING, num_videos BIGINT, avg_views DOUBLE, max_views DOUBLE, avg_length DOUBLE, avg_rating DOUBLE",
+    ),
+    "sizestats": (size_stats_job, "bucket STRING, num_videos BIGINT, avg_views DOUBLE, max_views DOUBLE"),
+    "viewstats": (view_histogram_job, "bucket STRING, num_videos BIGINT"),
+    "globalstats": (
+        global_view_stats_job,
+        "cnt BIGINT, avg_val DOUBLE, stddev_val DOUBLE, p50_val DOUBLE, p90_val DOUBLE, max_val DOUBLE, sum_val DOUBLE",
+    ),
+    "degreestat": (degree_stats_job, "id STRING, out_degree BIGINT, in_degree BIGINT"),
+    "pagerank": (pagerank_job, "rank INT, video_id STRING, influence_score DOUBLE, uploader STRING"),
+    "alsrecs": (als_recs_job, "user_idx INT, user_label STRING, recommendations ARRAY<STRING>"),
+}
+
+# The artifacts run_netagg writes, the caches of run_netagg_job.py.
+NETAGG_ARTIFACTS = ("categorystats", "sizestats", "viewstats", "degreestat")
 
 
 def run_netagg(videos: DataFrame, out_dir: str) -> None:
@@ -186,77 +183,13 @@ def run_netagg(videos: DataFrame, out_dir: str) -> None:
     then.  Not cached: each artifact re-reads the (sub-MB) source, which
     costs less than AQE's table-cache stage job."""
     videos = data_sized(videos)
-    artifacts = {
-        "categorystats": category_stats_job,
-        "sizestats": size_stats_job,
-        "viewstats": view_histogram_job,
-        "degreestat": degree_stats_job,
-    }
 
-    def write(name: str, job) -> None:
+    def write(name: str) -> None:
+        job = ARTIFACTS[name][0]
         write_json_artifact(job(videos), os.path.join(out_dir, name))
 
     spark = videos.sparkSession
-    with ThreadPoolExecutor(len(artifacts)) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(write), name, job) for name, job in artifacts.items()]
+    with ThreadPoolExecutor(len(NETAGG_ARTIFACTS)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(write), name) for name in NETAGG_ARTIFACTS]
     for future in futures:
         future.result()
-
-
-def curation_job(spark, sf_dir: str, out_dir: str, seq_len: int = 512, budget_per_source: int = 800) -> dict:
-    """End-to-end training-data curation pipeline (the extension-side
-    analog of the reference's Phase-1 jobs): documents in, packed training
-    chunks out, every stage one of the engine's oracle-checked operators.
-
-        quality/lang gate -> near-dup representative selection (c1 rule)
-        -> eval-set decontamination (c3 rule) -> per-source token budget
-        (c2 rule) -> 64/48 chunking (c4) -> sequence packing (c5)
-
-    Writes two parquet artifacts under ``out_dir`` (selected/: the kept
-    document ids with their packing assignment; chunks/: the chunk table)
-    and returns a small summary dict.  Deterministic end to end -- every
-    selection step is hash- or rule-based, so reruns produce identical
-    artifacts (golden-tested).
-    """
-    from youtubeanalyzerproject_big_data__spark.functions.sampling import pack_sequences, token_budget_sample
-    from youtubeanalyzerproject_big_data__spark.functions.textfns import token_count
-    from youtubeanalyzerproject_big_data__spark.io import load_table
-    from youtubeanalyzerproject_big_data__spark.operators import dedup, textanalysis as text
-
-    docs = load_table(spark, sf_dir, "documents")
-    quality = text.quality_scores(docs, "doc_id", "text").select("doc_id", "n_tokens", "dup_token_ratio")
-    lang = text.language_id(docs, "doc_id", "text").select("doc_id", "lang_pred")
-    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
-    comp = graph.connected_components_star(pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst")))
-    reps = (
-        docs.select("doc_id")
-        .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .where(F.coalesce("component", "doc_id") == F.col("doc_id"))
-        .select("doc_id")
-    )
-    eval_docs = docs.where(F.col("doc_id") % 97 == 0)
-    corpus = docs.where(F.col("doc_id") % 97 != 0)
-    contam = dedup.decontaminate(corpus, eval_docs, "doc_id", "text", n=5)
-    clean_ids = (
-        quality.join(lang, "doc_id")
-        .join(reps, "doc_id", "left_semi")
-        .join(contam.where(~F.col("contaminated")).select("doc_id"), "doc_id", "left_semi")
-        .where((F.col("lang_pred") == "en") & (F.col("n_tokens") >= 10) & (F.col("dup_token_ratio") <= 0.6))
-        .select("doc_id")
-    )
-    kept = docs.join(clean_ids, "doc_id", "left_semi").select(
-        "doc_id", "source", "text", token_count(F.col("text")).alias("n_tokens")
-    )
-    mixed = token_budget_sample(kept, "doc_id", "source", "n_tokens", budget_per_stratum=budget_per_source, seed="mix")
-    packed = pack_sequences(mixed, "doc_id", "n_tokens", seq_len=seq_len, bucket_span=100)
-    chunks = text.chunk_documents(mixed, "doc_id", "text", chunk_tokens=64, stride=48)
-    selected = mixed.select("doc_id", "source", "n_tokens").join(packed.drop("n_tokens"), "doc_id")
-    selected.write.mode("overwrite").parquet(os.path.join(out_dir, "selected"))
-    chunks.write.mode("overwrite").parquet(os.path.join(out_dir, "chunks"))
-    n_sel = selected.count()
-    return {
-        "n_selected": n_sel,
-        "n_chunks": chunks.count(),
-        "n_tokens": (mixed.agg(F.sum("n_tokens")).collect()[0][0] or 0),
-        "n_bins": (packed.agg(F.countDistinct("bin_id")).collect()[0][0] or 0) if n_sel else 0,
-    }

@@ -115,12 +115,6 @@ def in_degrees(edges: DataFrame) -> DataFrame:
     return edges.groupBy("dst").agg(F.count(F.lit(1)).alias("in_degree"))
 
 
-def degree_distribution(edges: DataFrame, direction: str = "out") -> DataFrame:
-    """A5: degree -> number of vertices with that degree."""
-    deg = out_degrees(edges).withColumnRenamed("out_degree", "degree") if direction == "out" else in_degrees(edges).withColumnRenamed("in_degree", "degree")
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("num_vertices")).orderBy("degree")
-
-
 def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
     """Build the PageRank-family weighted edge table: lay the edges out by
     src through :func:`session.data_sized` (``coalesce(1)`` when the graph

@@ -27,23 +27,6 @@ def scan_schemas(df: DataFrame) -> list[str]:
     return out
 
 
-def operator_counts(df: DataFrame, operators: tuple[str, ...] = (
-    "Exchange",
-    "BroadcastHashJoin",
-    "SortMergeJoin",
-    "ShuffledHashJoin",
-    "HashAggregate",
-    "TakeOrderedAndProject",
-    "WholeStageCodegen",
-    "Expand",
-    "Window",
-)) -> dict[str, int]:
-    """Occurrence count per physical operator name -- quick shuffle/join
-    audits (``operator_counts(df)["Exchange"]``)."""
-    plan = executed_plan(df)
-    return {op: plan.count(op) for op in operators}
-
-
 def stage_metrics(spark) -> dict[str, int]:
     """Cumulative physical-execution counters from Spark's AppStatusStore
     (works with the UI disabled): shuffle read/write bytes, input bytes,

@@ -7,10 +7,11 @@ queries from Phase-1 JSON caches (guiV5.py:66-103) and runs point/range
 searches live.  This module reproduces that contract engine-side, minus the
 presentation:
 
-  * CACHED queries -- each name maps to a Phase-1 precompute job
-    (jobs.py); ``serve`` reads the materialized JSON artifact if present
-    and otherwise computes + materializes it first (write-through), exactly
-    the cache-or-compute flow of guiV5.py:66-78.
+  * CACHED queries -- each name is a reference cache declared in
+    ``jobs.ARTIFACTS`` with its Phase-1 precompute job; ``serve`` reads the
+    materialized JSON artifact if present and otherwise computes +
+    materializes it first (write-through), exactly the cache-or-compute
+    flow of guiV5.py:66-78.
   * LIVE queries -- parameterized operator dispatch (point lookup, range
     scan, dynamic search count, top-k), the guiV5.py:80-103 search paths,
     served straight from the operator library.
@@ -29,44 +30,23 @@ way the reference GUI keeps its DataFrame and caches in the session
   * a cache miss runs its job over the same data-sized layout of the
     source, not over the held table, so a service that only serves
     artifacts never builds it;
-  * artifact reads carry the Phase-1 job's schema: for the netagg
-    artifacts the job's over no rows (analysis only), for PageRank and ALS
-    the schema declared beside the job in ``jobs.py`` (building those jobs
-    runs them), so a hit runs no Phase-1 job.  Reads are kept per artifact
-    until its ``_SUCCESS`` marker changes, so a repeat hit re-executes an
-    already-planned DataFrame.
+  * artifact reads carry the read schema declared with the artifact in
+    ``jobs.ARTIFACTS``, so a hit neither runs nor analyses a Phase-1 job.
+    Reads are kept per artifact until its ``_SUCCESS`` marker changes, so a
+    repeat hit re-executes an already-planned DataFrame.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from youtubeanalyzerproject_big_data__spark import jobs
 from youtubeanalyzerproject_big_data__spark.io import read_json_artifact, write_json_artifact
+from youtubeanalyzerproject_big_data__spark.jobs import ARTIFACTS
 from youtubeanalyzerproject_big_data__spark.operators import filters, topk
 from youtubeanalyzerproject_big_data__spark.session import data_sized
-
-# Phase-1 job registry: artifact name -> job over the videos model.
-# Names follow the reference's cache collections (run_netagg_job.py,
-# run_pagerank_job.py, run_alsrecs_job.py).
-CACHED_JOBS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "categorystats": jobs.category_stats_job,
-    "sizestats": jobs.size_stats_job,
-    "viewstats": jobs.view_histogram_job,
-    "globalstats": jobs.global_view_stats_job,
-    "degreestat": jobs.degree_stats_job,
-    "pagerank": jobs.pagerank_job,
-    "alsrecs": jobs.als_recs_job,
-}
-
-# Read schemas of the artifacts whose job runs Spark work as its DataFrame
-# is built; every other artifact is read with its job's schema over no rows.
-DECLARED_SCHEMAS: dict[str, StructType] = {"pagerank": jobs.PAGERANK_SCHEMA, "alsrecs": jobs.ALS_RECS_SCHEMA}
 
 
 class QueryService:
@@ -83,6 +63,7 @@ class QueryService:
         self.spark = spark
         self.cache_dir = cache_dir
         self._table: DataFrame | None = None
+        self._reads: dict[str, tuple[int, DataFrame]] = {}
         self.videos = videos
 
     @property
@@ -91,11 +72,10 @@ class QueryService:
 
     @videos.setter
     def videos(self, videos: DataFrame) -> None:
-        """Swap the source table: drops the held copy and the planned
-        artifact reads (their schemas come from jobs over this table)."""
+        """Swap the source table: drops the held copy.  Artifacts stay as
+        they are until ``refresh``, and so do their planned reads."""
         self.close()
         self._videos = videos
-        self._reads: dict[str, tuple[int, DataFrame]] = {}
 
     def close(self) -> None:
         """Release the held videos table (idempotent)."""
@@ -117,8 +97,8 @@ class QueryService:
         miss -> run the Phase-1 job, materialize, then read back (so the
         caller always sees exactly what the cache holds).  Repeat hits on
         an unchanged artifact return the same planned DataFrame."""
-        if name not in CACHED_JOBS:
-            raise KeyError(f"unknown cached query {name!r}; available: {sorted(CACHED_JOBS)}")
+        if name not in ARTIFACTS:
+            raise KeyError(f"unknown cached query {name!r}; available: {sorted(ARTIFACTS)}")
         path = self._path(name)
         # A bare os.path.exists(path) would treat a crashed, partially
         # written Phase-1 directory as a permanent cache hit; only a commit
@@ -130,8 +110,7 @@ class QueryService:
         stamp = os.stat(marker).st_mtime_ns
         memo = self._reads.get(name)
         if memo is None or memo[0] != stamp:
-            schema = DECLARED_SCHEMAS.get(name) or CACHED_JOBS[name](self.videos.limit(0)).schema
-            memo = (stamp, read_json_artifact(self.spark, path, schema))
+            memo = (stamp, read_json_artifact(self.spark, path, ARTIFACTS[name][1]))
             self._reads[name] = memo
         return memo[1]
 
@@ -140,7 +119,8 @@ class QueryService:
         layout of the source (not the held table: a service that only
         serves artifacts never builds it)."""
         self._reads.pop(name, None)
-        write_json_artifact(CACHED_JOBS[name](data_sized(self.videos)), self._path(name))
+        job = ARTIFACTS[name][0]
+        write_json_artifact(job(data_sized(self.videos)), self._path(name))
 
     # -- live query surface (guiV5.py:80-103 search paths) ----------------
 

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from youtubeanalyzerproject_big_data__spark.schema import VIDEOS_SCHEMA
+
 VIDEO_INT_FIELDS = ["age", "length", "views", "ratings", "comments", "size_bytes", "bitrate_kbps"]
 USER_INT_FIELDS = ["uploads", "watches", "friends"]
 
@@ -100,23 +102,18 @@ def _sentinel_int(col: str, dtype: str) -> F.Column:
 
 
 def read_videos_xml(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """S1+S2+S3: videos XML files -> typed DataFrame (schema.VIDEOS_SCHEMA)."""
+    """S1+S2+S3: videos XML files -> typed DataFrame, with the columns and
+    types of schema.VIDEOS_SCHEMA, in its order."""
     raw = _raw_rows(spark, paths, "video", _RAW_VIDEO_SCHEMA)
-    int_types = {"age": "int", "length": "int", "views": "long", "ratings": "long", "comments": "long", "size_bytes": "long", "bitrate_kbps": "int"}
-    return raw.select(
-        "video_id",
-        "uploader",
-        "category",
-        _sentinel_int("age", int_types["age"]),
-        _sentinel_int("length", int_types["length"]),
-        _sentinel_int("views", int_types["views"]),
-        F.col("rate").try_cast("double").alias("rate"),
-        _sentinel_int("ratings", int_types["ratings"]),
-        _sentinel_int("comments", int_types["comments"]),
-        _sentinel_int("size_bytes", int_types["size_bytes"]),
-        _sentinel_int("bitrate_kbps", int_types["bitrate_kbps"]),
-        "related",
-    )
+
+    def typed(field: T.StructField) -> F.Column:
+        if field.name in VIDEO_INT_FIELDS:
+            return _sentinel_int(field.name, field.dataType.simpleString())
+        if field.name == "rate":
+            return F.col("rate").try_cast(field.dataType).alias("rate")
+        return F.col(field.name)
+
+    return raw.select(*[typed(f) for f in VIDEOS_SCHEMA])
 
 
 def read_users_xml(spark: SparkSession, paths: list[str]) -> DataFrame:

@@ -155,15 +155,6 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     )
 
 
-def user_totals(events: DataFrame) -> DataFrame:
-    """Batch twin of stream_user_totals: per-user event count + value sum."""
-    return (
-        events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), dec_sum("value", "sum_value"))
-        .orderBy("user_id")
-    )
-
-
 def stream_user_totals(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
