@@ -110,3 +110,23 @@ def test_every_package_symbol_has_a_non_test_caller():
     unused = [f"{mod}:{line} {name}" for (mod, name), line in symbols.items() if (mod, name) not in refs]
     expected = [f"{mod}:{symbols.get((mod, name))} {name}" for mod, name in ALLOWED]
     assert sorted(unused) == sorted(expected), "package symbols no non-test file uses:\n" + "\n".join(unused)
+
+
+def test_local_checkpoint_only_inside_session_pin():
+    """``session.pin`` is the package's one materialization step (pin the
+    bounded result, then release what it was built from, or hand it back
+    live under ``session.LIVE_PLANS``): no other package code calls
+    ``.localCheckpoint(``."""
+    sites = []
+    for mod, tree in _non_test_sources().items():
+        if mod != PACKAGE and not mod.startswith(f"{PACKAGE}."):
+            continue
+        scope = {}  # node -> innermost enclosing function (walk is outer-first)
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scope.update((node, fn.name) for node in ast.walk(fn))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "localCheckpoint":
+                sites.append((mod, scope.get(node, "<module>"), node.lineno))
+    where = "\n".join(f"{mod}:{line} in {fn}" for mod, fn, line in sites)
+    assert [(mod, fn) for mod, fn, _ in sites] == [(f"{PACKAGE}.session", "pin")], where

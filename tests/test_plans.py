@@ -3,10 +3,25 @@ actually appear in the executed plan (SURVEY.md par.4)."""
 
 from __future__ import annotations
 
-from youtubeanalyzerproject_big_data__spark import contract
+import contextlib
+
+from youtubeanalyzerproject_big_data__spark import contract, session
+from youtubeanalyzerproject_big_data__spark.operators import graph as graphmod
 from youtubeanalyzerproject_big_data__spark.plans.inspect import executed_plan as _plan
 
 SF = "/root/testdata/sf0.001"
+
+
+@contextlib.contextmanager
+def _live_plans():
+    """Every ``session.pin`` hands its frame back live
+    (``session.LIVE_PLANS``), so plan gates see the whole lineage: loop
+    bodies and the plans behind pinned results."""
+    session.LIVE_PLANS = True
+    try:
+        yield
+    finally:
+        session.LIVE_PLANS = False
 
 
 def operator_counts(df) -> dict[str, int]:
@@ -70,7 +85,8 @@ def test_c1_single_documents_scan(spark):
     """c1: quality, language-ID, and the shingle index must all feed off ONE
     cached documents scan -- the old form re-scanned/re-tokenized the corpus
     three times (r4 advice item 3)."""
-    result, base = contract.dedup._c1_plan(spark, SF)
+    with _live_plans():
+        result = contract.dedup.q_c1(spark, SF)
     try:
         plan = _plan(result)
         scan_lines = [ln for ln in plan.splitlines() if "Scan parquet" in ln or "FileScan parquet" in ln]
@@ -80,7 +96,7 @@ def test_c1_single_documents_scan(spark):
         assert len(doc_scans) <= 1, doc_scans
         assert plan.count("InMemoryTableScan") >= 2  # prof + reps read the cache
     finally:
-        base.unpersist()
+        spark.catalog.clearCache()
 
 
 def test_ann_rerank_is_two_stage_topk(spark):
@@ -212,16 +228,15 @@ def test_bloom_probe_joins_broadcast_bit_positions(spark):
 def test_dsir_bucket_model_joins_broadcast(spark):
     # The <= m-row log-ratio model must broadcast back to the (doc, bucket)
     # counts -- the only corpus-sized shuffle is that count aggregate.
-    # (_checkpoint=False exposes the real plan; the public path pins the
-    # k-row result behind a localCheckpoint.)
+    # (Live plans expose the real plan; the public path pins the k-row
+    # result behind a localCheckpoint.)
     from youtubeanalyzerproject_big_data__spark.io import load_table
     from youtubeanalyzerproject_big_data__spark.operators.textanalysis import dsir_importance_select
     from pyspark.sql import functions as F
 
     docs = load_table(spark, SF, "documents")
-    df = dsir_importance_select(
-        docs, docs.where(F.col("source") == "src0"), "doc_id", "text", m_buckets=4096, k=50, _checkpoint=False
-    )
+    with _live_plans():
+        df = dsir_importance_select(docs, docs.where(F.col("source") == "src0"), "doc_id", "text", m_buckets=4096, k=50)
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan  # deterministic top-k, no full sort
@@ -274,9 +289,8 @@ def test_rfm_scoring_is_map_side_after_cutpoints(spark):
     from youtubeanalyzerproject_big_data__spark.operators.aggregates import rfm_segments
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = rfm_segments(
-        load_table(spark, SF, "orders"), "o_custkey", "o_orderdate", "o_totalprice", checkpoint=False
-    )
+    with _live_plans():
+        df = rfm_segments(load_table(spark, SF, "orders"), "o_custkey", "o_orderdate", "o_totalprice")
     try:
         plan = _plan(df)
         # after the customer grid, scoring uses literal cutpoints: no join at all
@@ -297,7 +311,8 @@ def test_adamic_adar_frontier_broadcasts(spark):
         y, (F.col("x.l_orderkey") == F.col("y.l_orderkey")) & (F.col("x.l_partkey") < F.col("y.l_partkey"))
     ).select(F.col("x.l_partkey").alias("src"), F.col("y.l_partkey").alias("dst"))
     seeds = li.select(F.col("l_partkey").alias("seed")).where(F.col("l_partkey") % 1000 == 1).distinct()
-    df = adamic_adar(pairs, seeds, k=5, checkpoint=False)
+    with _live_plans():
+        df = adamic_adar(pairs, seeds, k=5)
     try:
         plan = _plan(df)
         # the seed frontier (2-hop expansion) and the degree-weight table both
@@ -373,9 +388,10 @@ def test_graph_auto_broadcast_flips_on_edge_count(spark):
     try:
         for c in thresholds:  # the explicit hint must be the ONLY broadcast lever
             spark.conf.set(c, "-1")
-        small = clustering_coefficient_topk(pairs, k=5, checkpoint=False)
+        with _live_plans():
+            small = clustering_coefficient_topk(pairs, k=5)
+            big = clustering_coefficient_topk(pairs, k=5, auto_broadcast_max_edges=0)
         assert "BroadcastHashJoin" in _plan(small)
-        big = clustering_coefficient_topk(pairs, k=5, auto_broadcast_max_edges=0, checkpoint=False)
         plan_big = _plan(big)
         assert "SortMergeJoin" in plan_big
         # both modes return identical rows -- strategy, not semantics
@@ -384,24 +400,6 @@ def test_graph_auto_broadcast_flips_on_edge_count(spark):
         for c, v in saved.items():
             spark.conf.unset(c) if v is None else spark.conf.set(c, v)
         spark.catalog.clearCache()
-
-
-def _graph_full_lineage():
-    """Context manager: disable graph-module localCheckpoints so plan
-    gates see full loop lineage (graph._DISABLE_CHECKPOINTS hook)."""
-    import contextlib
-
-    import youtubeanalyzerproject_big_data__spark.operators.graph as graphmod
-
-    @contextlib.contextmanager
-    def cm():
-        graphmod._DISABLE_CHECKPOINTS = True
-        try:
-            yield graphmod
-        finally:
-            graphmod._DISABLE_CHECKPOINTS = False
-
-    return cm()
 
 
 def _outside_caches(plan: str) -> list[str]:
@@ -437,7 +435,7 @@ def test_pagerank_loop_shape(spark):
     CACHE (InMemoryTableScan), every rank join is a ShuffledHashJoin (no
     per-round broadcast), and nothing between the cache reads and the
     result is an Exchange."""
-    with _graph_full_lineage() as graphmod:
+    with _live_plans():
         handle = contract.graph._prepared_pagerank_edges(spark, SF, "fwd")
         handle.count()  # materialize so references plan as cache reads
         ranks = graphmod.pagerank(None, max_iter=3, weighted=handle)
@@ -451,7 +449,7 @@ def test_ppr_seeds_compile_to_inlist(spark):
     """g7: the seed set must reach the plan as IN-list literals, never a
     join; loop shape mirrors g4 (shuffle-hash rank joins, cache reads, and
     no Exchange outside the cache on the one-partition layout)."""
-    with _graph_full_lineage() as graphmod:
+    with _live_plans():
         handle = contract.graph._prepared_pagerank_edges(spark, SF, "cyclic")
         handle.count()
         # seeds in the r11 integer encoding (parts P1, P2 -> 2k+1)
@@ -477,13 +475,13 @@ def test_rank_rounds_multi_partition_layout(spark):
     e = spark.range(200_000).select(
         (F.col("id") % 40_000).alias("src"), (F.col("id") * 7919 % 50_000 + 40_000).alias("dst")
     )
-    with _graph_full_lineage() as graphmod:
+    with _live_plans():
         handle = graphmod.prepare_weighted_edges(e)
         try:
             handle.count()
             assert loop_partitions(e) == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
             reset = lambda c: F.lit(0.15)  # noqa: E731
-            rounds = graphmod._rank_rounds(handle, reset, lambda c: F.lit(1.0), 0.15, 3, 1e9)
+            rounds = graphmod._rank_rounds(handle, reset, lambda c: F.lit(1.0), 0.15, 3)
             outside = _outside_caches(_plan(rounds))
             assert sum(bool(re.search(r"Exchange hashpartitioning\(dst", ln)) for ln in outside) == 3
             assert sum("Exchange" in ln for ln in outside) == 3
@@ -542,7 +540,7 @@ def test_label_propagation_round_has_no_window(spark):
         F.concat(F.lit("P"), F.col("l_partkey")).alias("dst"),
     )
     edges = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    with _graph_full_lineage() as graphmod:
+    with _live_plans():
         labels = graphmod.label_propagation(edges, max_iter=1)
         plan = _plan(labels)
     assert plan.count("Window") == 0
@@ -564,7 +562,7 @@ def test_khop_frontier_expansion_is_hash_joined(spark):
         F.concat(F.lit("P"), F.col("l_partkey")).alias("dst"),
     )
     edges = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    with _graph_full_lineage() as graphmod:
+    with _live_plans():
         visited = graphmod.k_hop_distances(edges, ["P1", "P2"], max_hops=2)
         plan = _plan(visited)
     assert "LeftAnti" in plan  # frontier-minus-visited is an anti join
@@ -581,10 +579,10 @@ def test_minhash_candidates_meet_in_buckets_not_crossjoin(spark):
     from youtubeanalyzerproject_big_data__spark.io import load_table
     from youtubeanalyzerproject_big_data__spark.operators.dedup import minhash_lsh_pairs
 
-    df = minhash_lsh_pairs(
-        load_table(spark, SF, "documents"), "doc_id", "text",
-        n=3, num_hashes=16, bands=4, threshold=0.8, checkpoint=False,
-    )
+    with _live_plans():
+        df = minhash_lsh_pairs(
+            load_table(spark, SF, "documents"), "doc_id", "text", n=3, num_hashes=16, bands=4, threshold=0.8
+        )
     try:
         plan = _plan(df)
         assert plan.count("CartesianProduct") == 0
@@ -617,7 +615,8 @@ def test_ngram_pair_stage_joins_are_shuffle_hash_not_broadcast(spark):
 
     docs = load_table(spark, SF, "documents")
     for fn in (ngram_jaccard_pairs, containment_pairs):
-        df = fn(docs, "doc_id", "text", checkpoint=False)
+        with _live_plans():
+            df = fn(docs, "doc_id", "text")
         try:
             plan = _plan(df)
             assert plan.count("BroadcastHashJoin") == 0, fn.__name__
@@ -747,19 +746,15 @@ def test_kcore_semijoins_are_not_broadcast_forced(spark):
     broadcast (the r5 g10 lesson) -- with Spark's own broadcast thresholds
     disabled, the delta-peel round's joins must degrade to shuffle joins
     instead of aborting at scale."""
-    from pyspark.sql import functions as F
-
-    from youtubeanalyzerproject_big_data__spark.operators import graph as graphmod
-
     clique = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
     edges = spark.createDataFrame(clique + [(4, 5), (5, 6)], "src long, dst long")
     thresholds = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
     saved = {c: spark.conf.get(c, None) for c in thresholds}
-    graphmod._DISABLE_CHECKPOINTS = True
     try:
         for c in thresholds:
             spark.conf.set(c, "-1")
-        out = graphmod.kcore(edges, k=3, max_rounds=2)
+        with _live_plans():
+            out = graphmod.kcore(edges, k=3, max_rounds=2)
         plan = _plan(out)
         assert "BroadcastHashJoin" not in plan, "kcore must not force-broadcast vertex keysets"
         # delta-peel shape: per-round dec (edges into this round's removed
@@ -771,7 +766,6 @@ def test_kcore_semijoins_are_not_broadcast_forced(spark):
             "SortMergeJoin" in ln and "LeftOuter" in ln for ln in plan.splitlines()
         ), "delta-peel degree fold (SMJ LeftOuter) missing from kcore round"
     finally:
-        graphmod._DISABLE_CHECKPOINTS = False
         for c, v in saved.items():
             spark.conf.unset(c) if v is None else spark.conf.set(c, v)
 
@@ -941,23 +935,19 @@ def test_hits_loop_shape(spark):
     broadcast-1-row-max pattern (BroadcastNestedLoopJoin, never a real
     CartesianProduct), rank-side joins stay hash joins (no sort-merge of
     the edge table), and both top-k cuts compile to TakeOrdered -- plus
-    the reason _ckpt exists: the unpinned tree RE-INLINES (4 pinned
+    the reason the loop pins: the unpinned tree RE-INLINES (4 pinned
     nodes would be 4 BNLJs; full lineage shows the blow-up)."""
-    import youtubeanalyzerproject_big_data__spark.operators.graph as graphmod
     from pyspark.sql import functions as F
 
     from youtubeanalyzerproject_big_data__spark.io import load_table
 
-    graphmod._DISABLE_CHECKPOINTS = True
-    try:
-        li = load_table(spark, SF, "lineitem")
-        edges = li.select(
-            F.concat(F.lit("O"), F.col("l_orderkey")).alias("src"),
-            F.concat(F.lit("P"), F.col("l_partkey")).alias("dst"),
-        )
+    li = load_table(spark, SF, "lineitem")
+    edges = li.select(
+        F.concat(F.lit("O"), F.col("l_orderkey")).alias("src"),
+        F.concat(F.lit("P"), F.col("l_partkey")).alias("dst"),
+    )
+    with _live_plans():
         plan = _plan(graphmod.hits(edges, rounds=2, k=10))
-    finally:
-        graphmod._DISABLE_CHECKPOINTS = False
     assert plan.count("SortMergeJoin") == 0
     assert plan.count("CartesianProduct") == 0
     assert plan.count("BroadcastNestedLoopJoin") >= 4  # one per renorm, re-inlined
@@ -986,23 +976,19 @@ def test_m8_model_joins_broadcast_no_doc_sized_join(spark):
     """m8: every join is a model-sized broadcast (prior cross, lp left);
     the true label rides through the test aggregate, so NO doc-sized
     join -- a SortMergeJoin anywhere means a corpus-vs-corpus shuffle
-    crept back in.  checkpoint=False exposes the live plan (the operator
-    pins its train aggregate + result when checkpointing, which truncates
-    the lineage the assertions need to see)."""
+    crept back in.  Live plans expose the whole lineage (the operator pins
+    its train aggregate + result, which truncates the lineage the
+    assertions need to see)."""
     from pyspark.sql import functions as F
 
     from youtubeanalyzerproject_big_data__spark.io import load_table
     from youtubeanalyzerproject_big_data__spark.operators import classify as classify_ops
 
     docs = load_table(spark, SF, "documents")
-    out = classify_ops.naive_bayes_confusion(
-        docs.where(F.col("doc_id") % 5 != 0),
-        docs.where(F.col("doc_id") % 5 == 0),
-        "doc_id",
-        "text",
-        "lang",
-        checkpoint=False,
-    )
+    with _live_plans():
+        out = classify_ops.naive_bayes_confusion(
+            docs.where(F.col("doc_id") % 5 != 0), docs.where(F.col("doc_id") % 5 == 0), "doc_id", "text", "lang"
+        )
     plan = _plan(out)
     assert plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin") >= 3
     assert "SortMergeJoin" not in plan

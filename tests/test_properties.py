@@ -8,6 +8,8 @@ is the generator exploring corpus shapes the hand-written fixtures miss
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -20,6 +22,8 @@ doc_strategy = st.lists(
     min_size=2,
     max_size=8,
 )
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 SLOW = settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 
@@ -80,7 +84,7 @@ def test_survey_header_matches_contract():
 
     import __spark_entry__ as entrymod
 
-    text = open("/root/repo/SURVEY.md").read()
+    text = (ROOT / "SURVEY.md").read_text()
     m = re.search(r"\*\*Round-\d+ state\*\*: (\d+) driver queries \((\d+) with oracle twins", text)
     assert m, "SURVEY.md round-state header line not found"
     assert int(m.group(1)) == len(entrymod.queries()), (
@@ -97,23 +101,23 @@ def test_survey_ledger_references_resolve():
     and round 9 shipped a stale function name (`dedup.embedding_lsh_near_dups`
     after the rename to `embedding_near_dup_pairs_lsh`, VERDICT r9).  This is
     the header-count gate's sibling: drift becomes a test failure, not a
-    judge finding."""
+    judge finding.  A slashed cite (``functions/skew.salted_agg/salted_join``)
+    names several attributes of one module; each must resolve."""
     import importlib
-    import os
     import re
 
     import __spark_entry__ as entrymod
 
     pkg = "youtubeanalyzerproject_big_data__spark"
-    text = open("/root/repo/SURVEY.md").read()
+    text = (ROOT / "SURVEY.md").read_text()
     ledger = text[text.index("## 8."):]
-    cites = set(re.findall(r"`([A-Za-z_][A-Za-z0-9_/]*\.[A-Za-z_][A-Za-z0-9_.]*)`", ledger))
+    cites = set(re.findall(r"`([A-Za-z_][A-Za-z0-9_/]*\.[A-Za-z_][A-Za-z0-9_./]*)`", ledger))
     bad = []
     for cite in sorted(cites):
         if re.search(r"[A-Z]", cite.split(".")[0]):
             continue  # artifacts like CORRECTNESS_*.json, not code citations
         if cite.endswith((".py", ".json", ".md")):
-            if not (os.path.exists(f"/root/repo/{cite}") or os.path.exists(f"/root/repo/{pkg}/{cite}")):
+            if not ((ROOT / cite).exists() or (ROOT / pkg / cite).exists()):
                 bad.append(cite)
             continue
         head, _, attr = cite.partition(".")
@@ -131,11 +135,13 @@ def test_survey_ledger_references_resolve():
             if obj is None:
                 bad.append(cite)
                 continue
-        for part in attr.split("."):
-            obj = getattr(obj, part, None)
-            if obj is None:
-                bad.append(cite)
-                break
+        for name in attr.split("/"):
+            target = obj
+            for part in name.split("."):
+                target = getattr(target, part, None)
+                if target is None:
+                    bad.append(f"{cite} ({name})")
+                    break
     assert not bad, f"SURVEY.md §8 citations that do not resolve: {bad}"
 
 

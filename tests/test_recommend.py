@@ -57,12 +57,14 @@ def test_recommend_dims_semi_reduced_before_broadcast(interactions):
     the plan must carry two LeftSemi broadcast joins below the enrichment."""
     from youtubeanalyzerproject_big_data__spark.operators.recommend import build_ratings, recommend_for_users, train_als
     from youtubeanalyzerproject_big_data__spark.plans.inspect import executed_plan
+    from test_plans import _live_plans
 
     ratings = build_ratings(interactions, "user", "item", "rating")
     model = train_als(ratings, max_iter=1, seed=42)
-    # pin_result=False keeps the lazy plan visible (default checkpoints,
-    # which truncates lineage and hides the joins from inspection)
-    out = recommend_for_users(model, ratings, n_users=5, n_recs=3, pin_result=False)
+    # live plans keep the lazy plan visible (the default pin truncates
+    # lineage and hides the joins from inspection)
+    with _live_plans():
+        out = recommend_for_users(model, ratings, n_users=5, n_recs=3)
     plan = executed_plan(out)
     assert plan.count("LeftSemi, BuildRight") >= 2, plan
 

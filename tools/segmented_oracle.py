@@ -56,16 +56,17 @@ def _segmented_pagerank(
     reset: float = 0.15,
     max_iter: int = 10,
     k: int = 100,
-    scale: float = 1e9,
 ) -> list[tuple]:
     """Iteration-materialized twin of _pagerank_oracle / _ppr_oracle: the
     same round->int64 quantized per-edge contributions (bit-for-bit the
     engine's arithmetic -- see _pagerank_oracle's docstring for why the
     quantization makes summation order irrelevant), with each r_i landed
     as a TABLE and its predecessor dropped."""
+    from youtubeanalyzerproject_big_data__spark.operators.graph import CONTRIB_SCALE
+
     r = f"CAST({reset!r} AS DOUBLE)"
     d = f"CAST({1.0 - reset!r} AS DOUBLE)"
-    s = f"CAST({int(scale)} AS DOUBLE)"
+    s = f"CAST({int(CONTRIB_SCALE)} AS DOUBLE)"
     if seeds is None:
         reset_dst, init_src, absent_src = r, "CAST(1.0 AS DOUBLE)", r
     else:

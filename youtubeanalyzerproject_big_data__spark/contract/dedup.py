@@ -16,6 +16,7 @@ from youtubeanalyzerproject_big_data__spark.contract import query
 from youtubeanalyzerproject_big_data__spark.contract._sql import _cos_sql, _dmicro, _dratio
 from youtubeanalyzerproject_big_data__spark.contract.text import _lang_id_oracle
 from youtubeanalyzerproject_big_data__spark.contract.vectors import _hyperplane_band_sql, _kmeans_ctes
+from youtubeanalyzerproject_big_data__spark.session import pin
 
 
 # DuckDB word-shingle CTE fragment shared by the text-dedup oracles.
@@ -771,33 +772,6 @@ def q_d8(spark: SparkSession, sf: str) -> DataFrame:
     return dedup.cross_corpus_near_dups(new, corpus, "doc_id", "text", n=3, threshold=0.8)
 
 
-def _c1_plan(spark: SparkSession, sf: str):
-    """Lazy c1 pipeline over ONE cached documents scan; returns
-    (result_df, cached_base).  Split out so tests/test_plans.py can assert
-    the single-scan shape before the eager pin in q_c1 hides it."""
-    base = (
-        load_table(spark, sf, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    prof = text.profile_text(base, "doc_id", "text").select("doc_id", "n_tokens", "dup_token_ratio", "lang_pred")
-    pairs = dedup.ngram_jaccard_pairs(base, "doc_id", "text", n=3, threshold=0.8)
-    comp = graph.connected_components_star(pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst")))
-    reps = (
-        base.select("doc_id")
-        .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .where(F.coalesce("component", "doc_id") == F.col("doc_id"))
-        .select("doc_id")
-    )
-    result = (
-        prof.join(reps, "doc_id", "left_semi")
-        .where((F.col("lang_pred") == "en") & (F.col("n_tokens") >= 10) & (F.col("dup_token_ratio") <= 0.6))
-        .select("doc_id", "n_tokens", "lang_pred")
-    )
-    return result, base
-
-
 # Curation = lang filter (t3 logic) + quality floors (t2 logic) +
 # dup-cluster representative (d7 closure); fragments reused verbatim.
 @query("c1_corpus_curation", bench=True, stdout=True, oracle=rf"""
@@ -839,11 +813,28 @@ def q_c1(spark: SparkSession, sf: str) -> DataFrame:
     old form re-scanned and re-tokenized the corpus three times, which at
     100 TB is two full passes of wasted IO/CPU.  The curated id list
     (bounded: it only shrinks the corpus) is pinned eagerly, then the cache
-    is released (pin-result-then-unpersist, same as ngram_jaccard_pairs)."""
-    result, base = _c1_plan(spark, sf)
-    pinned = result.localCheckpoint(eager=True)
-    base.unpersist()
-    return pinned
+    is released (``session.pin``, as in ngram_jaccard_pairs)."""
+    base = (
+        load_table(spark, sf, "documents")
+        .select("doc_id", "text")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .cache()
+    )
+    prof = text.profile_text(base, "doc_id", "text").select("doc_id", "n_tokens", "dup_token_ratio", "lang_pred")
+    pairs = dedup.ngram_jaccard_pairs(base, "doc_id", "text", n=3, threshold=0.8)
+    comp = graph.connected_components_star(pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst")))
+    reps = (
+        base.select("doc_id")
+        .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
+        .where(F.coalesce("component", "doc_id") == F.col("doc_id"))
+        .select("doc_id")
+    )
+    result = (
+        prof.join(reps, "doc_id", "left_semi")
+        .where((F.col("lang_pred") == "en") & (F.col("n_tokens") >= 10) & (F.col("dup_token_ratio") <= 0.6))
+        .select("doc_id", "n_tokens", "lang_pred")
+    )
+    return pin(result, base)
 
 
 @query("c9_temperature_mix", oracle=f"""

@@ -338,7 +338,7 @@ def _prepared_pagerank_edges(spark: SparkSession, sf: str, kind: str) -> DataFra
     return handle
 
 
-def _pagerank_oracle(edges_sql: str, reset: float = 0.15, max_iter: int = 10, k: int = 100, scale: float = 1e9) -> str:
+def _pagerank_oracle(edges_sql: str, reset: float = 0.15, max_iter: int = 10, k: int = 100) -> str:
     """DuckDB replay of graph.pagerank's integer-quantized iterations.
 
     Both engines compute, per edge and iteration, the IDENTICAL IEEE double
@@ -351,7 +351,7 @@ def _pagerank_oracle(edges_sql: str, reset: float = 0.15, max_iter: int = 10, k:
     """
     r = f"CAST({reset!r} AS DOUBLE)"
     d = f"CAST({1.0 - reset!r} AS DOUBLE)"
-    s = f"CAST({int(scale)} AS DOUBLE)"
+    s = f"CAST({int(graph.CONTRIB_SCALE)} AS DOUBLE)"
     ctes = [
         f"edges AS ({edges_sql})",
         "deg AS (SELECT src, COUNT(*) AS dg FROM edges GROUP BY src)",
@@ -422,7 +422,7 @@ def q_pagerank_cyclic(spark: SparkSession, sf: str) -> DataFrame:
 PPR_SEEDS = ["P1", "P2", "P3", "P4", "P5"]
 
 
-def _ppr_oracle(edges_sql: str, sources: list, reset: float = 0.15, max_iter: int = 10, k: int = 100, scale: float = 1e9) -> str:
+def _ppr_oracle(edges_sql: str, sources: list, reset: float = 0.15, max_iter: int = 10, k: int = 100) -> str:
     """DuckDB replay of graph.personalized_pagerank: _pagerank_oracle's
     integer-quantized unrolled CTEs with the seed-set reset vector --
     initial rank CASE-folds to 1.0 on seeds / 0.0 elsewhere, absent-src
@@ -430,7 +430,7 @@ def _ppr_oracle(edges_sql: str, sources: list, reset: float = 0.15, max_iter: in
     adds reset only on seed dsts.  Same bit-exact arithmetic argument."""
     r = f"CAST({reset!r} AS DOUBLE)"
     d = f"CAST({1.0 - reset!r} AS DOUBLE)"
-    s = f"CAST({int(scale)} AS DOUBLE)"
+    s = f"CAST({int(graph.CONTRIB_SCALE)} AS DOUBLE)"
     lst = _seed_sql(sources)
     reset_dst = f"CASE WHEN w.dst IN ({lst}) THEN {r} ELSE CAST(0.0 AS DOUBLE) END"
     init_src = f"CASE WHEN w.src IN ({lst}) THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END"
@@ -655,7 +655,7 @@ def q_g15(spark: SparkSession, sf: str) -> DataFrame:
     authority-heavy parts, the link-analysis complement of g4's PageRank
     (which ranks by in-link mass only).  No float normalization, so both
     engines replay the scores bit-exactly; each renormalized table is
-    localCheckpoint-pinned (it's referenced twice -- value + max -- and an
+    pinned (it's referenced twice -- value + max -- and an
     expression fold would double the plan per half-round, the Hilbert
     lesson).  Top-20 per role with (score desc, id) deterministic ranks.
 

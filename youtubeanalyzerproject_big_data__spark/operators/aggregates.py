@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from youtubeanalyzerproject_big_data__spark.functions.precision import dec_avg, dec_sum, micro_round
+from youtubeanalyzerproject_big_data__spark.session import pin
 
 
 def category_stats(df: DataFrame, key: str, value: str, extra_avgs: dict[str, str] | None = None) -> DataFrame:
@@ -314,7 +315,6 @@ def rfm_segments(
     amount_col: str,
     approx: bool = False,
     accuracy: int = 10000,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """RFM customer segmentation (Hughes 1994, the classic marketing
     quartile scheme): per customer recency (days since last order, vs the
@@ -382,9 +382,5 @@ def rfm_segments(
     )
     # Pin the segment-sized result, then release the customer-grid cache
     # (session cache hygiene: operators must not leak entries -- see
-    # tests/test_dedup.py::test_dedup_releases_cached_shingles).
-    # checkpoint=False -> live plan for plan tests, caller owns cleanup.
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        rfm.unpersist()
-    return out
+    # tests/test_dedup.py::test_pinning_operators_release_what_they_built).
+    return pin(out, rfm)

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from youtubeanalyzerproject_big_data__spark.session import pin
+
 
 def logreg_separability_gate(
     emb: DataFrame,
@@ -269,7 +271,6 @@ def naive_bayes_confusion(
     id_col: str,
     text_col: str,
     label_col: str,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Multinomial naive Bayes over whitespace tokens, trained on
     ``train`` and evaluated on ``test`` as a confusion matrix -- the
@@ -315,8 +316,7 @@ def naive_bayes_confusion(
     # per-label doc counts, and lp each take an action over it, and without
     # the pin every action re-scans and re-explodes the training corpus.
     # Model-sized (vocab x labels rows), released before return.
-    if checkpoint:
-        tf_tr = tf_tr.localCheckpoint(eager=True)
+    tf_tr = pin(tf_tr)
     ny = tf_tr.groupBy("y").agg(F.sum("c").cast("long").alias("n"))
     n_vocab = tf_tr.select("token").distinct().count()  # scalar, model-sized
 
@@ -325,8 +325,7 @@ def naive_bayes_confusion(
     d_by_y = train.groupBy(F.col(label_col).alias("y")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
-    if checkpoint:
-        d_by_y = d_by_y.localCheckpoint(eager=True)  # label-cardinality rows
+    d_by_y = pin(d_by_y)  # label-cardinality rows
     d_tot = sum(int(r["d"]) for r in d_by_y.select("d").collect())
     prior = (
         d_by_y
@@ -395,10 +394,6 @@ def naive_bayes_confusion(
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
         .orderBy("true_label", "pred_label")
     )
-    if checkpoint:
-        # Pin the bounded result (labels^2 rows), then release the pinned
-        # intermediates -- the repo's release-before-return convention.
-        out = out.localCheckpoint(eager=True)
-        tf_tr.unpersist()
-        d_by_y.unpersist()
-    return out
+    # Pin the bounded result (labels^2 rows), then release the pinned
+    # intermediates -- the repo's release-before-return convention.
+    return pin(out, tf_tr, d_by_y)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from youtubeanalyzerproject_big_data__spark.functions.hashing import md5_int32, md5_int32_lanes
 from youtubeanalyzerproject_big_data__spark.functions.precision import micro_round, ratio_round
 from youtubeanalyzerproject_big_data__spark.functions.textfns import normalize, token_count, tokens, word_ngrams
+from youtubeanalyzerproject_big_data__spark.session import pin
 
 # Default hot-key caps (shared with the driver oracles, which mirror the
 # same cuts so capped results stay hash-exact cross-engine).  A key shared
@@ -231,7 +232,7 @@ def _capped_intersections(
         ordering swap, which containment (asymmetric) relies on.
 
     Returns the pair DataFrame plus the handles persisted while building it
-    (caller materializes, then unpersists them).
+    (the caller's ``session.pin`` releases them).
     """
     keyed = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
     # cid as 16-byte BINARY, not the 32-char hex string: the content key
@@ -353,7 +354,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = DEFAULT_MAX_DF,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard near-dup pairs (doc1 < doc2, jaccard >= t).
 
@@ -374,12 +374,6 @@ def ngram_jaccard_pairs(
     denominators stay exact), so pairs whose overlap is carried entirely by
     stop-shingles are missed -- the documented trade-off; the driver oracle
     mirrors the same cut, and None restores the exact path.
-
-    ``checkpoint=False`` is TEST-ONLY (plan-shape inspection): it returns
-    the live plan WITHOUT unpersisting the internal shingle caches, so a
-    long-lived session would leak corpus-sized executor storage (the test
-    harness clears the catalog cache after each assertion).  Production
-    callers must keep the default.
     """
     # Jaccard is symmetric in (n1, n2), so the threshold gate evaluates
     # EXACTLY at content-pair level and runs pre-expansion: the member
@@ -397,16 +391,10 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("doc1", "doc2", "jaccard")
     )
-    if checkpoint:
-        # Pin the (threshold-bounded) pairs, then release the big cached
-        # shingle table -- a long-lived session must not accumulate corpus
-        # x shingle rows of executor storage (pattern: pagerank:169).
-        # checkpoint=False -> live plan for plan-shape tests; caller owns
-        # the shingle cache cleanup.
-        result = result.localCheckpoint(eager=True)
-        for h in handles:
-            h.unpersist()
-    return result
+    # Pin the (threshold-bounded) pairs, then release the big cached
+    # shingle tables -- a long-lived session must not accumulate corpus x
+    # shingle rows of executor storage.
+    return pin(result, *handles)
 
 
 def _minhash_sigs_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
@@ -429,7 +417,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.8,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
@@ -468,9 +455,6 @@ def minhash_lsh_pairs(
         the clone docs co-occurred in their shared bucket before;
       * shingle-less contents (< n tokens) never enter band_rows, so they
         produce no pairs -- as before.
-
-    ``checkpoint=False`` is TEST-ONLY (plan inspection; leaks the shingle
-    cache by design) -- see ngram_jaccard_pairs.
     """
     rows_per_band = num_hashes // bands
     keyed = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
@@ -553,15 +537,9 @@ def minhash_lsh_pairs(
         .where(F.col("d1") < F.col("d2"))
         .select(F.col("d1").alias("doc1"), F.col("d2").alias("doc2"), F.lit(1.0).alias("jaccard"))
     )
-    result = cross_docs.unionByName(self_docs)
-    if checkpoint:
-        # Pin the verified pairs, release the cached shingles (see
-        # ngram_jaccard_pairs for the storage-hygiene rationale).
-        # checkpoint=False -> live plan for plan-shape tests; caller owns
-        # the shingle cache cleanup.
-        result = result.localCheckpoint(eager=True)
-        sh_rows.unpersist()
-    return result
+    # Pin the verified pairs, release the cached shingles (see
+    # ngram_jaccard_pairs for the storage-hygiene rationale).
+    return pin(cross_docs.unionByName(self_docs), sh_rows)
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
@@ -828,7 +806,7 @@ def semantic_dedup_flags(
     assigned = kmeans_assign_final(emb, id_col, vec_col, dim, k=k, iters=iters, hash_seed=hash_seed)
     # Pin the assignment once: the self-join reads it twice and the final
     # left join a third time; recomputing would re-run the Lloyd trajectory.
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
     members = assigned.select("cell", "id", "v")
     if max_cell is not None:
         sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
@@ -901,12 +879,9 @@ def cross_corpus_near_dups(
         .withColumn("jaccard", ratio_round(F.col("n_common"), F.col("n1") + F.col("n2") - F.col("n_common")))
         .where(F.col("jaccard") >= threshold)
         .select("new_id", "corpus_id", "jaccard")
-        # Pin pairs, release both cached shingle sides (storage hygiene).
-        .localCheckpoint(eager=True)
     )
-    sh_new.unpersist()
-    sh_old.unpersist()
-    return result
+    # Pin pairs, release both cached shingle sides (storage hygiene).
+    return pin(result, sh_new, sh_old)
 
 
 def decontaminate(
@@ -1173,7 +1148,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.9,
     max_df: int | None = DEFAULT_MAX_DF,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: shingle containment
     C(A in B) = |A & B| / |A| >= threshold -- catches quotes, excerpts,
@@ -1188,9 +1162,6 @@ def containment_pairs(
     intersection, max_df stop-shingle cut mirrored by the oracle); emits
     BOTH directions of a qualifying pair separately since containment is
     directional: (contained_id, container_id, containment).
-
-    ``checkpoint=False`` is TEST-ONLY (plan inspection; leaks the shingle
-    cache by design) -- see ngram_jaccard_pairs.
     """
     # Directional thresholds union to max(c/n1, c/n2) = c/min(n1, n2) at
     # pair level: a pair survives in SOME direction iff the gate passes, so
@@ -1214,14 +1185,8 @@ def containment_pairs(
         F.col("doc1").alias("container_id"),
         ratio_round(F.col("n_common"), F.col("n2"), "containment"),
     )
-    result = fwd.unionByName(rev).where(F.col("containment") >= threshold)
-    if checkpoint:
-        # bounded pairs; release the shingle cache (checkpoint=False ->
-        # live plan for plan-shape tests; caller owns the cache cleanup)
-        result = result.localCheckpoint(eager=True)
-        for h in handles:
-            h.unpersist()
-    return result
+    # bounded pairs; release the shingle caches
+    return pin(fwd.unionByName(rev).where(F.col("containment") >= threshold), *handles)
 
 
 def edit_distance_pairs(

@@ -18,60 +18,30 @@ Scale design:
     exchange is its dst aggregate (none on one piece) -- the
     co-partitioning the reference approximated with repartition(400),
     PageRank_Spark_v5.py:94-95.
-  * The other loops localCheckpoint each round, so their plans don't grow
-    unboundedly (driver OOM / scheduler stalls at scale).
+  * The other loops pin each round through ``session.pin``, so their
+    plans don't grow unboundedly (driver OOM / scheduler stalls at scale).
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from youtubeanalyzerproject_big_data__spark.session import data_sized
+from youtubeanalyzerproject_big_data__spark.session import data_sized, pin
 
+CONTRIB_SCALE = 1e9
+"""Rank contributions are summed as integer multiples of 1/CONTRIB_SCALE
+(see :func:`_rank_rounds`); the DuckDB oracles of g4/g5/g7 replay the same
+quantum."""
 
-_DISABLE_CHECKPOINTS = False
-"""Test hook (tests/test_plans.py): True disables every localCheckpoint in
-this module so plan-shape gates can see FULL loop lineage.  Production code
-never flips it -- checkpoints are what keep iterative plans bounded."""
-
-from pyspark import StorageLevel as _SL  # noqa: E402
-
-_HITS_EDGE_STORAGE = _SL.MEMORY_ONLY
+_HITS_EDGE_STORAGE = StorageLevel.MEMORY_ONLY
 """Storage level for hits' two edge-table caches (src- and dst-partitioned).
 MEMORY_ONLY, not the default MEMORY_AND_DISK: A/B at the sf1 replay (r11,
 VERDICT r10 item 6) measured 11.8 vs 12.3 s median (cold first sample 13.9
 vs 26.9 s), and the dedup-shingle precedent applies -- an iterative
 edge-table cache is scan-shaped state whose DISK spill competes with the
 shuffle's disk at scale; evicted partitions recompute (CPU) instead."""
-
-
-def _ckpt_level():
-    """Storage level for iterative-loop checkpoints, from
-    ``SPARK_GRAFT_CKPT_LEVEL`` (e.g. ``DISK_ONLY``, ``MEMORY_AND_DISK``).
-
-    Default (unset) keeps Spark's localCheckpoint default: deserialized
-    MEMORY_AND_DISK.  That is the right call while the loop state fits in
-    the storage pool, but a corpus-sized edge table cached as deserialized
-    row objects costs ~50-70 bytes/row of heap PER ROUND (superseded
-    rounds linger until session end) -- at the sf30 replay g13's ~750M-row
-    undirected edge set OOM'd an 80 g heap through three tuning attempts.
-    ``DISK_ONLY`` (with ``spark.rdd.compress=true``) streams the blocks
-    out serialized instead, which is the 1000-executor answer too: an
-    iterative edge table is scan-shaped state, not working-set."""
-    import os
-
-    from pyspark import StorageLevel
-
-    name = os.environ.get("SPARK_GRAFT_CKPT_LEVEL")
-    return getattr(StorageLevel, name) if name else None
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """localCheckpoint(eager) unless the plan-test hook disabled it."""
-    if _DISABLE_CHECKPOINTS:
-        return df
-    return df.localCheckpoint(eager=True, storageLevel=_ckpt_level())
 
 
 def densify(df: DataFrame, related_col: str, min_related: int = 5) -> DataFrame:
@@ -147,7 +117,7 @@ def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
     return weighted
 
 
-def _rank_rounds(weighted: DataFrame, reset_of, init_of, reset_prob: float, max_iter: int, contrib_scale: float) -> DataFrame:
+def _rank_rounds(weighted: DataFrame, reset_of, init_of, reset_prob: float, max_iter: int) -> DataFrame:
     """Round kernel of :func:`pagerank` and :func:`personalized_pagerank`:
     (id, rank) after ``max_iter >= 1`` rounds of
 
@@ -167,7 +137,7 @@ def _rank_rounds(weighted: DataFrame, reset_of, init_of, reset_prob: float, max_
     No mid-loop checkpoint: its output would lose that layout.
 
     Determinism: each edge contribution is quantized to an INTEGER number of
-    1/contrib_scale units (round(rank*weight*scale) as long) and the
+    1/CONTRIB_SCALE units (round(rank*weight*scale) as long) and the
     per-vertex sum runs over longs, which is exact and order-independent --
     the result is bit-identical across partition counts, executor counts,
     AQE decisions, and engines (the DuckDB oracle replays the same integer
@@ -176,7 +146,7 @@ def _rank_rounds(weighted: DataFrame, reset_of, init_of, reset_prob: float, max_
     quantum is ~7 orders below the 1e-6 output rounding, so it never costs
     ranking precision; long sums also map-side combine cheaper than doubles.
     """
-    scale = F.lit(contrib_scale)
+    scale = F.lit(CONTRIB_SCALE)
     ranks = None
     for _ in range(max_iter):
         if ranks is None:
@@ -205,7 +175,7 @@ def _with_held(ranks: DataFrame, held_ids: DataFrame, reset_prob: float, keep=No
         (ranks if keep is None else ranks.where(keep))
         .unionByName(held.select("id", F.lit(reset_prob).alias("rank")))
         .select("id", F.round("rank", 6).alias("pagerank"))
-        .transform(_ckpt)  # pin before releasing the edge cache
+        .transform(pin)  # pin before releasing the edge cache
     )
 
 
@@ -213,7 +183,6 @@ def pagerank(
     edges: DataFrame | None,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    contrib_scale: float = 1e9,
     weighted: DataFrame | None = None,
 ) -> DataFrame:
     """G4: iterative DataFrame PageRank, reference params resetProb=0.15
@@ -233,10 +202,10 @@ def pagerank(
         weighted = prepare_weighted_edges(edges)
     src_ids = weighted.select(F.col("src").alias("id")).distinct()
     if max_iter < 1:  # everything at the initial rank
-        result = src_ids.union(weighted.select("dst")).distinct().select("id", F.lit(1.0).alias("pagerank")).transform(_ckpt)
+        result = src_ids.union(weighted.select("dst")).distinct().select("id", F.lit(1.0).alias("pagerank")).transform(pin)
     else:
         reset = lambda c: F.lit(reset_prob)  # noqa: E731
-        ranks = _rank_rounds(weighted, reset, lambda c: F.lit(1.0), reset_prob, max_iter, contrib_scale)
+        ranks = _rank_rounds(weighted, reset, lambda c: F.lit(1.0), reset_prob, max_iter)
         result = _with_held(ranks, src_ids, reset_prob)
     if owns_weighted:
         weighted.unpersist()
@@ -248,7 +217,6 @@ def personalized_pagerank(
     sources: list,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    contrib_scale: float = 1e9,
     weighted: DataFrame | None = None,
 ) -> DataFrame:
     """Personalized PageRank: the reset mass returns only to ``sources``
@@ -279,7 +247,7 @@ def personalized_pagerank(
     def on_seeds(value):
         return lambda c: F.when(F.col(c).isin(seeds), F.lit(value)).otherwise(F.lit(0.0))
 
-    ranks = _rank_rounds(weighted, on_seeds(reset_prob), on_seeds(1.0), reset_prob, max_iter, contrib_scale)
+    ranks = _rank_rounds(weighted, on_seeds(reset_prob), on_seeds(1.0), reset_prob, max_iter)
     # Seeds as a one-partition Range projection, typed like the edge ids: a
     # local relation's layout is unknown, which would re-shuffle the ranks
     # for the anti-join even on a one-partition layout.
@@ -360,7 +328,7 @@ def connected_components_star(
         .where(F.col("src") != F.col("dst"))
         .select(F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v"))
         .distinct()
-        .transform(_ckpt)
+        .transform(pin)
     )
     if small_graph_threshold and e.count() <= small_graph_threshold:
         spark = edges.sparkSession
@@ -408,7 +376,7 @@ def connected_components_star(
             small.where(F.col("u") != F.col("v"))
             .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
-            .transform(_ckpt)  # flat lineage; also feeds signature
+            .transform(pin)  # flat lineage; also feeds signature
         )
         new_sig = signature(e)
         if new_sig == sig:
@@ -568,7 +536,7 @@ def k_hop_distances(edges: DataFrame, seeds: list, max_hops: int = 3) -> DataFra
     seed_df = spark.createDataFrame(
         [(s,) for s in seeds], StructType([StructField("id", id_type)])
     ).distinct()
-    visited = seed_df.select("id", F.lit(0).cast("long").alias("hops")).transform(_ckpt)
+    visited = seed_df.select("id", F.lit(0).cast("long").alias("hops")).transform(pin)
     frontier = visited.select("id")
     for h in range(1, max_hops + 1):
         reached = (
@@ -579,7 +547,7 @@ def k_hop_distances(edges: DataFrame, seeds: list, max_hops: int = 3) -> DataFra
         new = reached.join(visited.select("id"), "id", "left_anti").select(
             "id", F.lit(h).cast("long").alias("hops")
         )
-        visited = visited.unionByName(new).transform(_ckpt)
+        visited = visited.unionByName(new).transform(pin)
         frontier = new.select("id")
     e.unpersist()
     return visited
@@ -602,7 +570,7 @@ def weighted_shortest_paths(edges: DataFrame, seeds: list, max_hops: int = 3) ->
     variant only re-relaxes improved vertices and wins when few change per
     round, but its trajectory is input-order-free too, so the simple
     synchronous form is kept for oracle parity.  Lineage checkpoints per
-    round (graph._ckpt).
+    round (``session.pin``).
 
     ``edges`` must carry (src, dst, w) with long weights (use integer
     micros for fractional costs).  Returns (id, dist) for every vertex
@@ -619,14 +587,14 @@ def weighted_shortest_paths(edges: DataFrame, seeds: list, max_hops: int = 3) ->
         spark.createDataFrame([(s,) for s in seeds], StructType([StructField("id", id_type)]))
         .distinct()
         .select("id", F.lit(0).cast("long").alias("dist"))
-        .transform(_ckpt)
+        .transform(pin)
     )
     for _ in range(max_hops):
         relax = e.join(
             dist.select(F.col("id").alias("src"), F.col("dist").alias("_d")), "src"
         ).select(F.col("dst").alias("id"), (F.col("_d") + F.col("w")).cast("long").alias("dist"))
         dist = (
-            dist.unionByName(relax).groupBy("id").agg(F.min("dist").alias("dist")).transform(_ckpt)
+            dist.unionByName(relax).groupBy("id").agg(F.min("dist").alias("dist")).transform(pin)
         )
     e.unpersist()
     return dist
@@ -680,7 +648,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 2) -> DataFrame:
         # cur_r = best_r outright: every key of cur_{r-1} is a dst, and
         # best_r re-covers EVERY dst each round (counted spans every edge),
         # so the coalesce-merge with the previous delta is provably empty.
-        cur = best.transform(_ckpt)
+        cur = best.transform(pin)
     # Materialize the full vertex set ONCE, at the end: isolated-as-dst
     # vertices (never a dst) keep their own id via the left join.
     vertices = e.select(F.col("src").alias("id")).union(e.select("dst")).distinct()
@@ -693,7 +661,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 2) -> DataFrame:
             vertices.join(cur.withColumnRenamed("label", "_l"), "id", "left")
             .select("id", F.coalesce("_l", "id").alias("label"))
         )
-    labels = labels.transform(_ckpt)
+    labels = labels.transform(pin)
     e.unpersist()
     return labels
 
@@ -707,7 +675,6 @@ def adamic_adar(
     k: int = 5,
     hint_small_vertices: bool | None = None,
     auto_broadcast_max_edges: int = AUTO_BROADCAST_MAX_EDGES,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Link prediction for a seed set: top-``k`` new-neighbor candidates
     per seed vertex by Adamic-Adar score AA(s,y) = sum over common
@@ -797,13 +764,8 @@ def adamic_adar(
         .orderBy("src", "rank")
     )
     # Pin the |S|*k-sized result, then release the adjacency/frontier
-    # caches (session cache hygiene).  checkpoint=False keeps the live
-    # plan visible for plan-shape tests (caller owns cache cleanup).
-    if checkpoint:
-        out = out.transform(_ckpt)
-        sadj.unpersist()
-        adj.unpersist()
-    return out
+    # caches (session cache hygiene).
+    return pin(out, sadj, adj)
 
 
 def clustering_coefficient_topk(
@@ -813,7 +775,6 @@ def clustering_coefficient_topk(
     k: int = 20,
     hint_small_vertices: bool | None = None,
     auto_broadcast_max_edges: int = AUTO_BROADCAST_MAX_EDGES,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-vertex local clustering coefficient, top-``k`` by triangle
     count: C(v) = 2*tri(v) / (d(v)*(d(v)-1)) -- the neighborhood-density
@@ -885,13 +846,8 @@ def clustering_coefficient_topk(
         .limit(k)
     )
     # Pin the k-sized result, then release the edge/adjacency/closure
-    # caches (session cache hygiene); checkpoint=False -> live plan for
-    # plan tests, caller owns cleanup.
-    if checkpoint:
-        out = out.transform(_ckpt)
-        for cached in (closures, adj, e):
-            cached.unpersist()
-    return out
+    # caches (session cache hygiene).
+    return pin(out, closures, adj, e)
 
 
 def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -958,7 +914,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 10) -> DataFrame:
       * The survivor keyset is VERTEX-sized, so the semi-joins are NOT
         broadcast-forced -- AQE picks broadcast while it fits and degrades
         to shuffle beyond (the g10/g6 blind-broadcast lesson, VERDICT r5).
-      * Every round ends in graph._ckpt, keeping loop lineage bounded.
+      * Every round ends in a ``session.pin``, keeping loop lineage bounded.
       * The per-round early-exit probe collects ONE scalar (bad-vertex
         count), never ids.
 
@@ -995,7 +951,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 10) -> DataFrame:
     # distinct(sym) -- at half the distinct's exchange bytes, with no
     # second edge-sized materialization (e0 is a cheap union of two
     # projections over the checkpointed canon, re-derived per scan).
-    canon = _ckpt(
+    canon = pin(
         edges.select(
             F.least(F.col("src"), F.col("dst")).alias("u"),
             F.greatest(F.col("src"), F.col("dst")).alias("v"),
@@ -1006,7 +962,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 10) -> DataFrame:
     e0 = canon.select(F.col("u").alias("src"), F.col("v").alias("dst")).union(
         canon.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    deg = _ckpt(e0.groupBy("src").agg(F.count(F.lit(1)).alias("_d")))
+    deg = pin(e0.groupBy("src").agg(F.count(F.lit(1)).alias("_d")))
     for _ in range(max_rounds):
         # Vertex-sized removed set; NOT broadcast-forced (the r5 g10
         # lesson) -- AQE picks broadcast while it fits.  No checkpoint of
@@ -1021,7 +977,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 10) -> DataFrame:
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
-        deg = _ckpt(
+        deg = pin(
             deg.where(F.col("_d") >= k)
             .join(dec, "src", "left")
             .select("src", (F.col("_d") - F.coalesce(F.col("_c"), F.lit(0))).alias("_d"))
@@ -1064,7 +1020,7 @@ def hits(
         tables are vertex-sized and they alone re-shuffle.
       * The per-round max is a 1-row aggregate crossJoin-broadcast back
         (the quality.py totals pattern) -- no driver collect in the loop.
-      * Each renormalized table is pinned through graph._ckpt: the renorm
+      * Each renormalized table is pinned through ``session.pin``: the renorm
         references its input twice (value + max), so an unpinned
         expression fold would re-inline and DOUBLE the plan tree per
         half-round (the Hilbert exponential-lineage lesson, CLAUDE.md).
@@ -1106,7 +1062,7 @@ def hits(
         # returned projection is lazy (re-evaluating it for its consumers
         # costs a pinned scan, not an edge pass).  Plan growth stays
         # bounded: the pin truncates lineage each half-round either way.
-        raw = _ckpt(raw)
+        raw = pin(raw)
         mx = raw.agg(F.max(col).alias("_mx"))
         return raw.crossJoin(F.broadcast(mx)).select(
             "id", F.expr(f"({col} * {int(quantum)}L) div _mx").alias(col[:-4])
@@ -1159,7 +1115,7 @@ def hits(
         .unionByName(topk(h, "h", "hub"))
         .orderBy("role", "rank")
     )
-    result = _ckpt(result)  # pin the 2k-row output before releasing the edge caches
+    result = pin(result)  # pin the 2k-row output before releasing the edge caches
     e_dst.unpersist()
     e.unpersist()
     return result

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from youtubeanalyzerproject_big_data__spark.session import pin
+
 
 def strip_metadata(df: DataFrame) -> DataFrame:
     """M2: rebuild schema without StringIndexer label metadata so ALS task
@@ -52,9 +54,7 @@ def build_ratings(df: DataFrame, user_col: str, item_col: str, rating_col: str, 
     # Pin the indexed ratings once (ALS fit + the dim-reduction joins in
     # recommend_for_users all re-read them), then release the cached input
     # so repeated pipeline runs in one session don't accumulate storage.
-    out = strip_metadata(out).localCheckpoint(eager=True)
-    clean.unpersist()
-    return out
+    return pin(strip_metadata(out), clean)
 
 
 def train_als(
@@ -91,19 +91,16 @@ def train_als(
 
 
 def recommend_for_users(
-    model, ratings: DataFrame, n_users: int = 500, n_recs: int = 5, pin_result: bool = True
+    model, ratings: DataFrame, n_users: int = 500, n_recs: int = 5
 ) -> DataFrame:
     """M4 + A7/J3/J4: top-n_recs items for a deterministic user subset,
     labels re-attached via broadcast joins (replacing the reference's N+1
     find_one loop, run_pagerank_job.py:124-140), re-nested deterministically.
 
-    Returns (user_idx, user_label, recommendations array<string>).
-
-    ``pin_result`` (default): the bounded n_users-row result is
-    localCheckpoint-ed and the internal recs cache released, so long-lived
-    serving sessions don't accumulate executor storage.  Pass False to get
-    the lazy plan instead (plan inspection / further composition); the
-    caller then owns unpersisting via spark.catalog.clearCache().
+    Returns (user_idx, user_label, recommendations array<string>): the
+    bounded n_users-row result, pinned, with the internal recs cache
+    released so long-lived serving sessions don't accumulate executor
+    storage.
     """
     users = ratings.select("user_idx").distinct().orderBy("user_idx").limit(n_users)
     recs = model.recommendForUserSubset(users, n_recs)
@@ -143,10 +140,4 @@ def recommend_for_users(
             F.transform("_recs", lambda r: r.getField("item_label")).alias("recommendations"),
         )
     )
-    if pin_result:
-        # Pin the (n_users-row) result, then release the cached recs so a
-        # long-lived serving session doesn't accumulate executor storage
-        # (same pattern as pagerank's weighted.unpersist()).
-        result = result.localCheckpoint(eager=True)
-        exploded.unpersist()
-    return result
+    return pin(result, exploded)

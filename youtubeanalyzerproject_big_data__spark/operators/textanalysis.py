@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from youtubeanalyzerproject_big_data__spark.functions.hashing import md5_int32
 from youtubeanalyzerproject_big_data__spark.functions.precision import dec_avg, micro_round, ratio_round
 from youtubeanalyzerproject_big_data__spark.functions.textfns import adjacent_pairs, normalize, token_count, tokens
+from youtubeanalyzerproject_big_data__spark.session import pin
 
 # Tiny marker-word lists per language for the n-gram/stopword heuristic.
 # (A real pipeline would use fastText/CLD3; those libs aren't in this
@@ -680,13 +681,10 @@ def pmi_collocations(df: DataFrame, text_col: str, min_count: int = 5, k: int = 
         .withColumn("pmi", F.col("pmi_micro").cast("double") / F.lit(1e6))
         .orderBy(F.col("pmi_micro").desc(), "w1", "w2")
         .limit(k)
-        # Pin the k-row result, release both cached model tables (storage
-        # hygiene, the d2 recipe).
-        .localCheckpoint(eager=True)
     )
-    pc.unpersist()
-    uni.unpersist()
-    return result
+    # Pin the k-row result, release both cached model tables (storage
+    # hygiene, the d2 recipe).
+    return pin(result, pc, uni)
 
 
 def dsir_importance_select(
@@ -697,7 +695,6 @@ def dsir_importance_select(
     m_buckets: int = 4096,
     k: int = 50,
     seed: str = "dsir",
-    _checkpoint: bool = True,
 ) -> DataFrame:
     """DSIR-style data selection (Xie et al. 2023, arXiv:2302.03169):
     score every raw-corpus document by its hashed-n-gram importance weight
@@ -770,10 +767,7 @@ def dsir_importance_select(
         .orderBy(F.col("score_micro").desc(), "doc_id")
         .limit(k)
     )
-    if _checkpoint:  # pin the k rows, then release the cached bucket model
-        result = result.localCheckpoint(eager=True)
-        raw_c.unpersist()
-    return result
+    return pin(result, raw_c)  # pin the k rows, then release the cached bucket model
 
 
 def bpe_pair_counts(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:

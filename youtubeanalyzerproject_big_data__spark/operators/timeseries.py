@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from youtubeanalyzerproject_big_data__spark.session import free, pin
+
 
 def gap_fill(
     events: DataFrame,
@@ -156,14 +158,9 @@ def acf_ppm(
     hour = F.expr(f"unix_micros({ts_col}) div 3600000000")
     # Materialize the calendar-bounded hour aggregate ONCE: three driver
     # actions follow (bounds, denominator, lag numerators) and each would
-    # otherwise re-scan the corpus.  localCheckpoint pins ~1e5 rows and
-    # truncates lineage (eager so the single corpus scan happens here).
-    hourly = (
-        events.select(hour.alias("h"))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-        .localCheckpoint(eager=True)
-    )
+    # otherwise re-scan the corpus.  The pin holds ~1e5 rows and truncates
+    # lineage (eager, so the single corpus scan happens here).
+    hourly = pin(events.select(hour.alias("h")).groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("x")))
     b = hourly.agg(
         F.min("h").alias("h0"), F.max("h").alias("h1"), F.sum("x").cast("long").alias("s")
     ).collect()[0]
@@ -193,7 +190,7 @@ def acf_ppm(
     )
     # Release the pinned hour aggregate: the result below is driver-built
     # (model-sized rows), so nothing downstream needs the checkpoint.
-    hourly.unpersist()
+    free(hourly)
     rows = []
     for r in nums:
         num = int(r["num"])

@@ -50,6 +50,38 @@ def data_sized(df: DataFrame, key: str | None = None) -> DataFrame:
     return df if key is None else df.repartition(n, key)
 
 
+LIVE_PLANS = False
+"""True makes :func:`pin` hand its frame back live and release nothing, so
+plan tests and ``tools/capture_plans.py --no-ckpt`` see the whole lineage
+(the caller then owns any cache the operator built).  Production code
+never sets it: the pins are what keep loop plans bounded."""
+
+
+def pin(df: DataFrame, *release: DataFrame) -> DataFrame:
+    """The one materialization step: ``df.localCheckpoint(eager=True)``
+    (the bounded result computed once, its lineage cut), then :func:`free`
+    on each frame of ``release``, which the pinned result no longer
+    reads.  Under :data:`LIVE_PLANS`, ``df`` itself and nothing released."""
+    if LIVE_PLANS:
+        return df
+    pinned = df.localCheckpoint(eager=True)
+    free(*release)
+    return pinned
+
+
+def free(*frames: DataFrame) -> None:
+    """Drop each frame's stored blocks: a cache through ``unpersist()``; a
+    pinned frame through its checkpoint RDD, since ``unpersist()`` on a
+    ``localCheckpoint`` result leaves the blocks stored (Spark 4.1: the
+    RDD stays in ``getRDDStorageInfo()``).  Nothing may read them after."""
+    for df in frames:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(True)
+        else:
+            df.unpersist()
+
+
 # All engine scratch (Spark local dirs for shuffle/blockmgr spill, streaming
 # source/sink/checkpoint dirs, layout-query write-read dirs) lives under the
 # repo, NOT /tmp.  Round 7's post-round bench and verify both died with
