@@ -112,6 +112,15 @@ def test_every_package_symbol_has_a_non_test_caller():
     assert sorted(unused) == sorted(expected), "package symbols no non-test file uses:\n" + "\n".join(unused)
 
 
+def _enclosing_functions(tree: ast.Module) -> dict:
+    """node -> name of its innermost enclosing function (walk is outer-first)."""
+    scope = {}
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope.update((node, fn.name) for node in ast.walk(fn))
+    return scope
+
+
 def test_local_checkpoint_only_inside_session_pin():
     """``session.pin`` is the package's one materialization step (pin the
     bounded result, then release what it was built from, or hand it back
@@ -121,12 +130,28 @@ def test_local_checkpoint_only_inside_session_pin():
     for mod, tree in _non_test_sources().items():
         if mod != PACKAGE and not mod.startswith(f"{PACKAGE}."):
             continue
-        scope = {}  # node -> innermost enclosing function (walk is outer-first)
-        for fn in ast.walk(tree):
-            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                scope.update((node, fn.name) for node in ast.walk(fn))
+        scope = _enclosing_functions(tree)
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "localCheckpoint":
                 sites.append((mod, scope.get(node, "<module>"), node.lineno))
     where = "\n".join(f"{mod}:{line} in {fn}" for mod, fn, line in sites)
     assert [(mod, fn) for mod, fn, _ in sites] == [(f"{PACKAGE}.session", "pin")], where
+
+
+def test_graph_layouts_come_from_data_sized():
+    """Every edge layout in ``operators/graph.py`` comes from
+    ``session.data_sized``, the one layout rule: the module makes no
+    ``.repartition(`` call and reads no ``spark.sql.shuffle.partitions``."""
+    tree = ast.parse((ROOT / PACKAGE / "operators" / "graph.py").read_text())
+    scope = _enclosing_functions(tree)
+
+    def second_rule(node: ast.AST) -> str | None:
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "repartition":
+            return ".repartition("
+        if isinstance(node, ast.Constant) and node.value == "spark.sql.shuffle.partitions":
+            return "spark.sql.shuffle.partitions"
+        return None
+
+    sites = sorted((n.lineno, scope.get(n, "<module>"), what) for n in ast.walk(tree) if (what := second_rule(n)))
+    where = "\n".join(f"{fn}:{line} {what}" for line, fn, what in sites)
+    assert sites == [], "graph layouts outside session.data_sized:\n" + where

@@ -52,9 +52,10 @@ def test_minhash_lsh_recalls_exact_and_near_dups(docs):
 
 
 def _release_cases():
-    """Every operator that pins its result and releases what it built, as
-    name -> (spark, docs) -> zero-argument call; inputs a call needs but
-    does not build (the ALS model) are built before the call."""
+    """Every operator that pins its result or its loop rounds and releases
+    what it built, as name -> (spark, docs) -> zero-argument call; inputs a
+    call needs but does not build (the ALS model) are built before the
+    call.  The loops run 3 rounds each."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -118,6 +119,17 @@ def _release_cases():
         ),
         "clustering_coefficient_topk": lambda spark, d: lambda: graph.clustering_coefficient_topk(edges(spark), k=3),
         "acf_ppm": lambda spark, d: lambda: timeseries.acf_ppm(events(spark), "ts", lags=(1, 2)),
+        "hits": lambda spark, d: lambda: graph.hits(edges(spark), rounds=3, k=3),
+        "kcore": lambda spark, d: lambda: graph.kcore(edges(spark), k=3, max_rounds=3),
+        "k_hop_distances": lambda spark, d: lambda: graph.k_hop_distances(edges(spark), [1, 1, 5], max_hops=3),
+        "weighted_shortest_paths": lambda spark, d: lambda: graph.weighted_shortest_paths(
+            edges(spark).withColumn("w", F.col("src") + F.col("dst")), [1, 5], max_hops=3
+        ),
+        "label_propagation": lambda spark, d: lambda: graph.label_propagation(edges(spark), max_iter=3),
+        "connected_components_star_fast_path": lambda spark, d: lambda: graph.connected_components_star(edges(spark)),
+        "connected_components_star_distributed": lambda spark, d: lambda: graph.connected_components_star(
+            edges(spark), small_graph_threshold=0
+        ),
     }
 
 
@@ -130,16 +142,22 @@ def test_pinning_operators_release_what_they_built(spark, docs, name):
     it built on the way (VERDICT r2 finding #2 -- bench no longer
     clearCache()s between queries, so a leak here would accumulate executor
     storage across a serving session): after the call, the session's
-    persistent RDDs may gain at most the returned frame's own checkpoint.
-    ``unpersist()`` on a pinned intermediate frees nothing, so this also
-    catches a pin released that way."""
+    persistent RDDs may gain at most the pins the returned plan still reads
+    (its ``LogicalRDD`` leaves) -- a loop round it supersedes, an edge cache
+    or a pinned intermediate counts as a leak.  ``unpersist()`` on a pinned
+    intermediate frees nothing, so this also catches a pin released that
+    way."""
     call = RELEASE_CASES[name](spark, docs)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     out = call()
     out.collect()
-    plan = out._jdf.queryExecution().analyzed()
-    own = {plan.rdd().id()} if plan.getClass().getSimpleName() == "LogicalRDD" else set()
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    own = {
+        leaf.rdd().id()
+        for leaf in map(leaves.apply, range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }
     gained = set(jsc.getPersistentRDDs().keySet().toArray()) - before - own
     assert gained == set(), f"{name} left persistent RDDs {sorted(gained)} besides its result"
 

@@ -226,6 +226,129 @@ def test_rank_functions_on_degenerate_graphs(spark, case):
         assert ppr == _rank_replica(clean, seeds), seeds
 
 
+def test_repeated_seeds_count_once(spark):
+    """A seed listed twice is one seed: every seeded loop returns the same
+    rows as for the seed listed once, with no id twice (row lists, which
+    the dict-built degenerate-graph checks cannot see)."""
+    rows = _DEGENERATE_GRAPHS["all_dangling_star"]
+    edges = graph.edges_from_pairs(spark.createDataFrame(rows, "src string, dst string"), "src", "dst")
+    weighted = edges.withColumn("w", F.lit(1).cast("long"))
+    for run in (
+        lambda seeds: graph.personalized_pagerank(edges, seeds),
+        lambda seeds: graph.k_hop_distances(edges, seeds),
+        lambda seeds: graph.weighted_shortest_paths(weighted, seeds),
+    ):
+        once = sorted(tuple(r) for r in run(["h"]).collect())
+        assert sorted(tuple(r) for r in run(["h", "h"]).collect()) == once
+        assert len({r[0] for r in once}) == len(once) == 6
+
+
+def _bfs_replica(edges, seeds, max_hops=3):
+    hops = dict.fromkeys(seeds, 0)
+    frontier = set(seeds)
+    for h in range(1, max_hops + 1):
+        frontier = {d for s, d in edges if s in frontier} - hops.keys()
+        hops.update(dict.fromkeys(frontier, h))
+    return hops
+
+
+def _bellman_ford_replica(edges, seeds, max_hops=3):
+    dist = dict.fromkeys(seeds, 0)
+    for _ in range(max_hops):
+        relaxed = dict(dist)
+        for s, d, w in edges:
+            if s in dist:
+                relaxed[d] = min(relaxed.get(d, dist[s] + w), dist[s] + w)
+        dist = relaxed
+    return dist
+
+
+def _label_propagation_replica(edges, max_iter=2):
+    from collections import Counter
+
+    labels = {v: v for e in edges for v in e}
+    for _ in range(max_iter):
+        best = {}
+        for (v, label), c in Counter((d, labels[s]) for s, d in edges).items():
+            best[v] = min(best.get(v, (-c, label)), (-c, label))
+        labels = {v: best[v][1] if v in best else label for v, label in labels.items()}
+    return labels
+
+
+def _kcore_replica(edges, k, max_rounds=10):
+    nbrs = {}
+    for s, d in edges:
+        nbrs.setdefault(s, set()).add(d)
+        nbrs.setdefault(d, set()).add(s)
+    for _ in range(max_rounds):
+        removed = {v for v, n in nbrs.items() if len(n) < k}
+        if not removed:
+            break
+        nbrs = {v: n - removed for v, n in nbrs.items() if v not in removed}
+    return {v: len(n) for v, n in nbrs.items() if n}
+
+
+def _components_replica(edges):
+    comp = {v: v for e in edges for v in e}
+    changed = True
+    while changed:
+        changed = False
+        for s, d in edges:
+            if comp[s] != comp[d]:
+                comp[s] = comp[d] = min(comp[s], comp[d])
+                changed = True
+    return comp
+
+
+def _hits_rows(edges, k=20):
+    if not edges:
+        return []
+    rows = []
+    for role, scores in zip(("authority", "hub"), _ref_hits(edges)):
+        top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+        rows += [(role, rank, v, score) for rank, (v, score) in enumerate(top, 1)]
+    return rows
+
+
+@pytest.mark.parametrize("case", sorted({**_DEGENERATE_GRAPHS, "empty": []}))
+def test_loops_on_degenerate_graphs(spark, case, tmp_path):
+    """ROADMAP item 5 for the other loops: each degenerate graph and an
+    empty edge table, read from parquet (so Catalyst sizes it) and cleaned
+    by edges_from_pairs, takes the one-piece layout, and every loop matches
+    its Python replica without raising.  On an empty graph k-hop and
+    Bellman-Ford return only the seeds (at 0) and the others return
+    nothing."""
+    rows = {**_DEGENERATE_GRAPHS, "empty": []}[case]
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(rows, "src string, dst string").write.parquet(path)
+    edges = graph.edges_from_pairs(spark.read.parquet(path), "src", "dst")
+    clean = [(s, d) for s, d in rows if s != d]
+    assert session.loop_partitions(edges) == 1
+    seeds = ["a", "h", "zz"]  # zz is in no graph
+
+    def by_id(df, col):
+        return {r["id"]: r[col] for r in df.collect()}
+
+    hops = by_id(graph.k_hop_distances(edges, seeds), "hops")
+    weighted = edges.withColumn("w", F.length("dst").cast("long"))
+    dist = by_id(graph.weighted_shortest_paths(weighted, seeds), "dist")
+    labels = by_id(graph.label_propagation(edges), "label")
+    core = {r["src"]: r["core_degree"] for r in graph.kcore(edges, k=2).collect()}
+    fast, distributed = (  # union-find fast path, star rounds
+        by_id(graph.connected_components_star(edges, small_graph_threshold=t), "component") for t in (100_000, 0)
+    )
+    authorities_hubs = [tuple(r) for r in graph.hits(edges).collect()]
+    assert hops == _bfs_replica(clean, seeds)
+    assert dist == _bellman_ford_replica([(s, d, len(d)) for s, d in clean], seeds)
+    assert labels == _label_propagation_replica(clean)
+    assert core == _kcore_replica(clean, 2)
+    assert fast == distributed == _components_replica(clean)
+    assert authorities_hubs == _hits_rows(clean)
+    if not clean:
+        assert hops == dist == dict.fromkeys(seeds, 0)
+        assert not (labels or core or fast or authorities_hubs)
+
+
 def test_loop_partitions_empty_table_is_one_partition(spark, tmp_path):
     """An empty edge table lays out as one partition, and both rank
     functions return an empty frame over it."""
@@ -594,22 +717,3 @@ def test_hits_star_graph_extremes(spark):
     hubs = {r["id"]: r["score_ppm"] for r in out if r["role"] == "hub"}
     assert auth == [("v", 1_000_000)]
     assert hubs == {f"u{i}": 1_000_000 for i in range(4)}
-
-
-def test_hits_releases_edge_cache(spark):
-    from youtubeanalyzerproject_big_data__spark.operators import graph
-
-    def noncheckpoint_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {
-            rid for rid in jmap.keySet().toArray() if not jmap.get(rid).rdd().isLocallyCheckpointed()
-        }
-
-    # Snapshot first: the shared session may legitimately carry caches from
-    # earlier tests (e.g. the sanctioned g4/g5/g7 prepared-edge memo) --
-    # the gate is that hits() adds NO new non-checkpoint entry.
-    before = noncheckpoint_ids()
-    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
-    graph.hits(edges, rounds=2, k=5).collect()
-    leaked = sorted(noncheckpoint_ids() - before)
-    assert leaked == [], f"hits() leaked cached (non-checkpoint) RDD ids: {leaked}"

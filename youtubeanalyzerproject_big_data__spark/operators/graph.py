@@ -18,8 +18,14 @@ Scale design:
     exchange is its dst aggregate (none on one piece) -- the
     co-partitioning the reference approximated with repartition(400),
     PageRank_Spark_v5.py:94-95.
-  * The other loops pin each round through ``session.pin``, so their
-    plans don't grow unboundedly (driver OOM / scheduler stalls at scale).
+  * The other edge-table loops (k-hop, Bellman-Ford, label propagation,
+    hits) take their layout from the same rule, keyed by ``src`` (hits'
+    hub copy by ``dst``): one coalesced piece below one AQE minimum
+    partition, else ``repartition(n, key)``.
+  * Every loop pins each round through ``session.pin``, so its plan
+    doesn't grow unboundedly (planner OOM / scheduler stalls at scale), and
+    that pin releases the round it replaces once nothing lazy reads it;
+    the final pin releases the edge caches.
 """
 
 from __future__ import annotations
@@ -28,7 +34,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from youtubeanalyzerproject_big_data__spark.session import data_sized, pin
+from youtubeanalyzerproject_big_data__spark.session import data_sized, free, pin
 
 CONTRIB_SCALE = 1e9
 """Rank contributions are summed as integer multiples of 1/CONTRIB_SCALE
@@ -212,6 +218,19 @@ def pagerank(
     return result
 
 
+def _seed_frame(edges: DataFrame, seeds: list) -> DataFrame:
+    """The seed list as an ``id`` frame typed like ``edges.src``, each seed
+    once, in first-seen order: a one-partition Range projection, since a
+    local relation's layout is unknown, which would re-shuffle the other
+    side of a join even on a one-partition layout."""
+    seeds = list(dict.fromkeys(seeds))
+    return edges.sparkSession.range(len(seeds), numPartitions=1).select(
+        F.element_at(F.array(*[F.lit(s) for s in seeds]), F.col("id").cast("int") + 1)
+        .cast(edges.schema["src"].dataType)
+        .alias("id")
+    )
+
+
 def personalized_pagerank(
     edges: DataFrame | None,
     sources: list,
@@ -248,15 +267,7 @@ def personalized_pagerank(
         return lambda c: F.when(F.col(c).isin(seeds), F.lit(value)).otherwise(F.lit(0.0))
 
     ranks = _rank_rounds(weighted, on_seeds(reset_prob), on_seeds(1.0), reset_prob, max_iter)
-    # Seeds as a one-partition Range projection, typed like the edge ids: a
-    # local relation's layout is unknown, which would re-shuffle the ranks
-    # for the anti-join even on a one-partition layout.
-    seed_df = weighted.sparkSession.range(len(seeds), numPartitions=1).select(
-        F.element_at(F.array(*[F.lit(s) for s in seeds]), F.col("id").cast("int") + 1)
-        .cast(weighted.schema["src"].dataType)
-        .alias("id")
-    )
-    result = _with_held(ranks, seed_df, reset_prob, keep=F.col("rank") > 0.0)
+    result = _with_held(ranks, _seed_frame(weighted, seeds), reset_prob, keep=F.col("rank") > 0.0)
     if owns_weighted:
         weighted.unpersist()
     return result
@@ -331,15 +342,12 @@ def connected_components_star(
         .transform(pin)
     )
     if small_graph_threshold and e.count() <= small_graph_threshold:
-        spark = edges.sparkSession
         pairs = _local_components(e.collect())
-        id_type = e.schema["u"].dataType
-        from pyspark.sql.types import StructField, StructType
-
-        schema = StructType([StructField("id", id_type), StructField("component", id_type)])
+        id_type = e.schema["u"].dataType.simpleString()
+        free(e)
         if _round_counter is not None:
             _round_counter.append(0)
-        return spark.createDataFrame(pairs, schema)
+        return edges.sparkSession.createDataFrame(pairs, f"id {id_type}, component {id_type}")
 
     def signature(df: DataFrame):
         # decimal(38,0) sums: exact and overflow-free under ANSI mode
@@ -372,11 +380,11 @@ def connected_components_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
         )
-        e = (
+        e = pin(  # flat lineage; also feeds signature
             small.where(F.col("u") != F.col("v"))
             .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-            .transform(pin)  # flat lineage; also feeds signature
+            .distinct(),
+            e,
         )
         new_sig = signature(e)
         if new_sig == sig:
@@ -516,40 +524,28 @@ def k_hop_distances(edges: DataFrame, seeds: list, max_hops: int = 3) -> DataFra
 
     Loop shape for scale: the FRONTIER (just-reached vertices), not the
     visited set, drives each round's join -- frontier joins edges on src
-    (the edge table, repartitioned by src once, never moves again), new
-    vertices are frontier-minus-visited via a left-anti join, and the
-    visited set grows by union.  All-integer state (vertex id, hop), no
-    floats anywhere; lineage is checkpointed per round (iterative unions
-    otherwise stack exponentially-replanned DAGs).
+    (the edge table, laid out by src once through ``session.data_sized``,
+    never moves again), new vertices are frontier-minus-visited via a
+    left-anti join, and the visited set grows by union.  All-integer state
+    (vertex id, hop), no floats anywhere; each round is pinned (iterative
+    unions otherwise stack exponentially-replanned DAGs), and the frontier
+    is the pinned set's newest hop, so the pin frees the round before it;
+    the last one also frees the edge cache.  ``max_hops`` must be >= 1.
 
     Seeds not present in the graph still report distance 0 (they are
     trivially reachable from themselves).  Returns (id, hops).
     """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.repartition(n_part, "src").cache()
-    # Seed type follows the edge id type (string graphs AND integer-encoded
-    # ones -- the r11 g8/g14 narrow-id path -- share this operator).
-    from pyspark.sql.types import StructField, StructType
-
-    id_type = edges.schema["src"].dataType
-    seed_df = spark.createDataFrame(
-        [(s,) for s in seeds], StructType([StructField("id", id_type)])
-    ).distinct()
-    visited = seed_df.select("id", F.lit(0).cast("long").alias("hops")).transform(pin)
-    frontier = visited.select("id")
+    if max_hops < 1:
+        raise ValueError(f"max_hops must be >= 1, got {max_hops}")
+    e = data_sized(edges, "src").cache()
+    visited = pin(_seed_frame(edges, seeds).select("id", F.lit(0).cast("long").alias("hops")))
     for h in range(1, max_hops + 1):
-        reached = (
-            e.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
+        frontier = visited.where(F.col("hops") == h - 1).select(F.col("id").alias("src"))
+        reached = e.join(frontier, "src").select(F.col("dst").alias("id")).distinct()
         new = reached.join(visited.select("id"), "id", "left_anti").select(
             "id", F.lit(h).cast("long").alias("hops")
         )
-        visited = visited.unionByName(new).transform(pin)
-        frontier = new.select("id")
-    e.unpersist()
+        visited = pin(visited.unionByName(new), visited, *([e] if h == max_hops else []))
     return visited
 
 
@@ -563,40 +559,34 @@ def weighted_shortest_paths(edges: DataFrame, seeds: list, max_hops: int = 3) ->
     (integer min/+ has no ordering sensitivity), oracle-replayable as the
     same unrolled recurrence.
 
-    Scale shape: the edge table repartitions by src ONCE and never moves
-    again; each round shuffles the vertex-sized dist table plus the
-    edge-sized relax output into a min aggregate (map-side partial min
-    first).  This is textbook distributed Bellman-Ford; a delta/frontier
-    variant only re-relaxes improved vertices and wins when few change per
-    round, but its trajectory is input-order-free too, so the simple
-    synchronous form is kept for oracle parity.  Lineage checkpoints per
-    round (``session.pin``).
+    Scale shape: the edge table is laid out by src ONCE, through
+    ``session.data_sized``, and never moves again; each round shuffles the
+    vertex-sized dist table plus the edge-sized relax output into a min
+    aggregate (map-side partial min first; no exchange on one piece).
+    This is textbook distributed Bellman-Ford; a delta/frontier variant
+    only re-relaxes improved vertices and wins when few change per round,
+    but its trajectory is input-order-free too, so the simple synchronous
+    form is kept for oracle parity.  Each round's pin frees the round
+    before it; the last one also frees the edge cache.  ``max_hops`` must
+    be >= 1.
 
     ``edges`` must carry (src, dst, w) with long weights (use integer
     micros for fractional costs).  Returns (id, dist) for every vertex
     reachable within ``max_hops`` hops; unreachable vertices are absent.
     """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.repartition(n_part, "src").cache()
-    # Seed type follows the edge id type (see k_hop_distances).
-    from pyspark.sql.types import StructField, StructType
-
-    id_type = edges.schema["src"].dataType
-    dist = (
-        spark.createDataFrame([(s,) for s in seeds], StructType([StructField("id", id_type)]))
-        .distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .transform(pin)
-    )
-    for _ in range(max_hops):
+    if max_hops < 1:
+        raise ValueError(f"max_hops must be >= 1, got {max_hops}")
+    e = data_sized(edges, "src").cache()
+    dist = pin(_seed_frame(edges, seeds).select("id", F.lit(0).cast("long").alias("dist")))
+    for h in range(1, max_hops + 1):
         relax = e.join(
             dist.select(F.col("id").alias("src"), F.col("dist").alias("_d")), "src"
         ).select(F.col("dst").alias("id"), (F.col("_d") + F.col("w")).cast("long").alias("dist"))
-        dist = (
-            dist.unionByName(relax).groupBy("id").agg(F.min("dist").alias("dist")).transform(pin)
+        dist = pin(
+            dist.unionByName(relax).groupBy("id").agg(F.min("dist").alias("dist")),
+            dist,
+            *([e] if h == max_hops else []),
         )
-    e.unpersist()
     return dist
 
 
@@ -608,18 +598,18 @@ def label_propagation(edges: DataFrame, max_iter: int = 2) -> DataFrame:
     a fully deterministic variant of the usually randomized sweep, which
     keeps the k-round trajectory oracle-replayable.
 
-    Scale shape per round: one edges-to-labels join (edge table
-    repartitioned by src ONCE and cached -- the rank-loop discipline of
-    pagerank), one (dst, label) count aggregate, one per-vertex argmax via
-    min(struct(-count, label)) -- no windows, no driver state; the label
-    table is vertex-sized.  Isolated vertices (never a dst) keep their own
-    label through a left join.
+    Scale shape per round: one edges-to-labels join (edge table laid out
+    by src ONCE through ``session.data_sized`` and cached -- the rank-loop
+    discipline of pagerank), one (dst, label) count aggregate, one
+    per-vertex argmax via min(struct(-count, label)) -- no windows, no
+    collected state; the label table is vertex-sized.  Isolated vertices
+    (never a dst) keep their own label through a left join.  Each round's
+    pin frees the round before it; the final pin frees the last round and
+    the edge cache.
 
     Returns (id, label) after ``max_iter`` rounds.
     """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.repartition(n_part, "src").cache()
+    e = data_sized(edges, "src").cache()
     # DELTA representation (r10): ``cur`` holds (id, label) ONLY for
     # vertices that have ever appeared as a dst (everything the sweep can
     # relabel); any vertex absent from it still carries its own id, so the
@@ -630,7 +620,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 2) -> DataFrame:
     # groupBy over the edge table), and no per-round vertex-table rewrite.
     # Trajectory is IDENTICAL: label_r(v) = coalesce(best_r(v),
     # label_{r-1}(v)) unrolls to exactly this merge.
-    cur = None
+    cur, held = None, []
     for _ in range(max_iter):
         if cur is None:
             counted = e.groupBy(F.col("dst").alias("id"), F.col("src").alias("label")).agg(
@@ -648,7 +638,8 @@ def label_propagation(edges: DataFrame, max_iter: int = 2) -> DataFrame:
         # cur_r = best_r outright: every key of cur_{r-1} is a dst, and
         # best_r re-covers EVERY dst each round (counted spans every edge),
         # so the coalesce-merge with the previous delta is provably empty.
-        cur = best.transform(pin)
+        cur = pin(best, *held)
+        held = [cur]
     # Materialize the full vertex set ONCE, at the end: isolated-as-dst
     # vertices (never a dst) keep their own id via the left join.
     vertices = e.select(F.col("src").alias("id")).union(e.select("dst")).distinct()
@@ -661,9 +652,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 2) -> DataFrame:
             vertices.join(cur.withColumnRenamed("label", "_l"), "id", "left")
             .select("id", F.coalesce("_l", "id").alias("label"))
         )
-    labels = labels.transform(pin)
-    e.unpersist()
-    return labels
+    return pin(labels, *held, e)
 
 
 def adamic_adar(
@@ -914,7 +903,9 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 10) -> DataFrame:
       * The survivor keyset is VERTEX-sized, so the semi-joins are NOT
         broadcast-forced -- AQE picks broadcast while it fits and degrades
         to shuffle beyond (the g10/g6 blind-broadcast lesson, VERDICT r5).
-      * Every round ends in a ``session.pin``, keeping loop lineage bounded.
+      * Every round ends in a ``session.pin``, keeping loop lineage
+        bounded, which frees the degrees it replaces; ``canon`` is freed
+        when the loop ends.
       * The per-round early-exit probe collects ONE scalar (bad-vertex
         count), never ids.
 
@@ -980,8 +971,10 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 10) -> DataFrame:
         deg = pin(
             deg.where(F.col("_d") >= k)
             .join(dec, "src", "left")
-            .select("src", (F.col("_d") - F.coalesce(F.col("_c"), F.lit(0))).alias("_d"))
+            .select("src", (F.col("_d") - F.coalesce(F.col("_c"), F.lit(0))).alias("_d")),
+            deg,
         )
+    free(canon)
     return deg.where(F.col("_d") > 0).select(
         "src", F.col("_d").cast("long").alias("core_degree")
     )
@@ -992,7 +985,6 @@ def hits(
     rounds: int = 3,
     quantum: int = 1_000_000,
     k: int = 20,
-    num_partitions: int | None = None,
     decode_id=None,
 ) -> DataFrame:
     """G15: HITS hubs & authorities (Kleinberg 1999) with EXACT-INTEGER
@@ -1015,33 +1007,38 @@ def hits(
     fan-in graphs.
 
     Scale discipline:
-      * Self-loops dropped, edges DISTINCT, cached once; each round is two
-        (join + hash-aggregate) passes over the edge table -- the rank
-        tables are vertex-sized and they alone re-shuffle.
+      * Self-loops dropped, edges DISTINCT, laid out by src through
+        ``session.data_sized`` and cached once, plus a dst-keyed copy for
+        the hub side; each round is two (join + hash-aggregate) passes
+        over the edge table -- the rank tables are vertex-sized and they
+        alone re-shuffle.
       * The per-round max is a 1-row aggregate crossJoin-broadcast back
         (the quality.py totals pattern) -- no driver collect in the loop.
-      * Each renormalized table is pinned through ``session.pin``: the renorm
+      * Each raw score table is pinned through ``session.pin``: the renorm
         references its input twice (value + max), so an unpinned
         expression fold would re-inline and DOUBLE the plan tree per
         half-round (the Hilbert exponential-lineage lesson, CLAUDE.md).
-      * Internal edge cache released before returning (result pinned
-        eagerly first -- the dedup release discipline).
+        A round's authority pin frees the previous round's two raw
+        tables, which nothing reads once the new one is built.
+      * The result's pin (the 2k-row output) frees the last round's raw
+        tables and both edge caches -- the dedup release discipline.
 
     Returns the top-``k`` per role: (role 'authority'|'hub', rank, id,
     score_ppm) with deterministic (score desc, id asc) ranking, ordered by
     (role, rank).
     """
-    spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = (
-        edges.select("src", "dst")
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
-        # ONE exchange, not two: hashpartitioning(src) satisfies the
-        # (src, dst) dedup aggregate's clustered-distribution requirement,
-        # so dropDuplicates AFTER the src-repartition runs partition-local
-        # and the old distinct().repartition(src) double shuffle collapses
+        # ONE exchange, not two: the src layout (hash by src, or one piece)
+        # satisfies the (src, dst) dedup aggregate's clustered-distribution
+        # requirement, so dropDuplicates AFTER it runs partition-local and
+        # the old distinct().repartition(src) double shuffle collapses
         # (guide: share one exchange between same-keyed operations).
-        .repartition(n_part, "src")
+        data_sized(
+            edges.select("src", "dst").where(
+                F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))
+            ),
+            "src",
+        )
         .dropDuplicates(["src", "dst"])
         .persist(_HITS_EDGE_STORAGE)
     )
@@ -1051,18 +1048,17 @@ def hits(
     # 100x-dominant relation; locally AQE hides it behind a broadcast of
     # the vertex side, but at scale both SMJ sides shuffle).  One extra
     # build-time exchange + cache buys an edge-sized exchange per round.
-    e_dst = e.repartition(n_part, "dst").persist(_HITS_EDGE_STORAGE)
+    e_dst = data_sized(e, "dst").persist(_HITS_EDGE_STORAGE)
     q = F.lit(int(quantum)).cast("long")
 
     def renorm(raw: DataFrame, col: str) -> DataFrame:
-        # Pin the RAW table, not the renormalized one: the renorm reads its
-        # input twice (broadcast max + value side), so pinning downstream
-        # would run the expensive join+aggregate TWICE per half-round --
-        # pinned-raw, both reads are cheap vertex-sized cache scans and the
-        # returned projection is lazy (re-evaluating it for its consumers
-        # costs a pinned scan, not an edge pass).  Plan growth stays
-        # bounded: the pin truncates lineage each half-round either way.
-        raw = pin(raw)
+        # ``raw`` is PINNED, not the renormalized table: the renorm reads
+        # its input twice (broadcast max + value side), so pinning
+        # downstream would run the expensive join+aggregate TWICE per
+        # half-round -- pinned-raw, both reads are cheap vertex-sized scans
+        # and the returned projection is lazy (re-evaluating it for its
+        # consumers costs a pinned scan, not an edge pass).  Plan growth
+        # stays bounded: the pin truncates lineage each half-round.
         mx = raw.agg(F.max(col).alias("_mx"))
         return raw.crossJoin(F.broadcast(mx)).select(
             "id", F.expr(f"({col} * {int(quantum)}L) div _mx").alias(col[:-4])
@@ -1070,6 +1066,7 @@ def hits(
 
     h = None  # None => every hub score still at the initial constant `quantum`
     a = None
+    raws = []  # the last round's two pinned raw tables
     for _ in range(rounds):
         if h is None:
             a_raw = e.groupBy(F.col("dst").alias("id")).agg(
@@ -1081,13 +1078,15 @@ def hits(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("h").alias("a_raw"))
             )
+        a_raw = pin(a_raw, *raws)  # h, the only reader of the old raws, is spent
         a = renorm(a_raw, "a_raw")
-        h_raw = (
+        h_raw = pin(
             e_dst.join(a.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("a").alias("h_raw"))
         )
         h = renorm(h_raw, "h_raw")
+        raws = [a_raw, h_raw]
 
     def topk(scores: DataFrame, col: str, role: str) -> DataFrame:
         if decode_id is not None:
@@ -1115,10 +1114,7 @@ def hits(
         .unionByName(topk(h, "h", "hub"))
         .orderBy("role", "rank")
     )
-    result = pin(result)  # pin the 2k-row output before releasing the edge caches
-    e_dst.unpersist()
-    e.unpersist()
-    return result
+    return pin(result, *raws, e_dst, e)
 
 
 def copurchase_edges(
