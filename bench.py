@@ -45,7 +45,7 @@ Known deliberate costs (do NOT chase as regressions):
   half-table twice via a lazy union instead of a second materialized
   full-width copy -- same bytes read, one materialization pass and half
   the distinct exchange saved, which is what matters off-box.
-- The 30 "regressions" in PERF_r10 ADJUDICATED (r11, same-boot full bench
+- The 30 "regressions" in PERF_r10 (git show f9fe9e0:PERF_r10.json) ADJUDICATED (r11, same-boot full bench
   at the r10-verdict HEAD, per-query shuffle bytes vs the r10 record):
   tpch_q1 (0 B both, 4.88 -> 2.71 s), a26 (2.2 MB =, 2.83 -> 2.15),
   q3 (0.4 MB =, 2.69 -> 2.15), s6 (0.7 MB =, 2.62 -> 2.39), q5 (0.5 MB =,
@@ -62,7 +62,7 @@ Known deliberate costs (do NOT chase as regressions):
   doc-granularity verification shuffle that killed the sf30 replay twice
   (300x clone density) -- the layers' cost is fixed while their savings
   scale with clone fan-out, which is the web-corpus norm.  Phase profile
-  in OPTIMIZATION_r11.md; do not chase.
+  in git show f9fe9e0:OPTIMIZATION_r11.md; do not chase.
 - d2/d12 carry ~0.5-1 s at sf0.1 from the r8 `hint("shuffle_hash")` pin on
   the doc-stat side of the pair-verification joins: Catalyst's static size
   estimate for the post-explode aggregate is unreliable and at sf10 it chose
@@ -119,12 +119,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from youtubeanalyzerproject_big_data__spark.contract import declared, queries
 from youtubeanalyzerproject_big_data__spark.plans.inspect import stage_metrics
-from youtubeanalyzerproject_big_data__spark.session import get_spark
+from youtubeanalyzerproject_big_data__spark.session import CPUS, get_spark
 
 # Headline set (``bench`` tag): the heavy/representative queries (joins,
 # multi-agg, window, graph/PageRank, dedup families, ANN, ALS) -- not the
 # trivial filters.  Printed subset (``stdout`` tag): the 47 queries the r10
-# record printed (BENCH_r10.json parsed.queries), so PERF round-over-round
+# record printed (git show f9fe9e0:BENCH_r10.json, parsed.queries), so PERF round-over-round
 # diffs see a stable set -- no phantom dropped_from_bench/new_in_bench
 # entries from boot-noise reordering (VERDICT r10 item 6).  These are the
 # heavy queries (everything >= ~1.5 s at sf0.1); tagging another query
@@ -138,7 +138,7 @@ def _stdout_line(headline: dict, timings: dict[str, float], budget: int = 1500) 
     """The one JSON line bench prints, at most ``budget`` bytes.
 
     The driver's round record keeps only the trailing 2000 BYTES of
-    combined output (measured: BENCH_r06.json tail len == 2000, r6's
+    combined output (measured: git show f9fe9e0:BENCH_r06.json, tail len == 2000, r6's
     110-query line ~3.4 KB -> truncated head, "parsed": null), so the line
     must fit with slack for any log line that races in after it.  Over
     budget, only the fixed STDOUT_QUERIES subset is printed and its
@@ -181,7 +181,7 @@ def main() -> None:
     from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_word_ngrams
 
     qs["a9_distinct_customers"](spark, sf_dir).collect()
-    spark.range(256).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).select(
+    spark.range(256).repartition(CPUS).select(
         make_word_ngrams(2)(F.lit("warm up workers")).alias("g")
     ).count()
 

@@ -91,40 +91,6 @@ def test_profile_columns_counts_nulls_and_formats_decimals(spark):
     assert e["n_nulls"] == 2 and e["min_str"] == "__null__" and e["max_str"] == "__null__"
 
 
-def test_gk_rank_window_holds_on_million_row_skewed_group(spark):
-    """a15/a17 at adversarial group sizes: one group holds 10^6 rows (the
-    shape where the exact percentile path reducer-buffers the whole group
-    and the GK sketch is the only viable plan at 100 TB).  The approx p50
-    must land inside the exact [p49, p51] rank window for BOTH the hot and
-    the cold group -- the sketch's mathematical contract (rank error <=
-    1/accuracy = 1e-4) independent of group size skew."""
-    from pyspark.sql import functions as F
-
-    from youtubeanalyzerproject_big_data__spark.operators.aggregates import grouped_percentiles
-
-    big = spark.range(1_000_000).select(
-        F.lit("hot").alias("g"), ((F.col("id") * 2654435761 % 997) * 1.0).alias("v")
-    )
-    small = spark.range(100).select(F.lit("cold").alias("g"), F.col("id").cast("double").alias("v"))
-    df = big.unionByName(small).repartition(32)
-
-    approx = {r["g"]: r for r in grouped_percentiles(df, "g", "v", percentiles=(0.5,), approx=True).collect()}
-    windows = {
-        r["g"]: r
-        for r in df.groupBy("g")
-        .agg(F.percentile("v", 0.49).alias("lo"), F.percentile("v", 0.51).alias("hi"))
-        .collect()
-    }
-    assert approx["hot"]["cnt"] == 1_000_000 and approx["cold"]["cnt"] == 100
-    for g in ("hot", "cold"):
-        assert windows[g]["lo"] - 1e-4 <= approx[g]["p50"] <= windows[g]["hi"] + 1e-4, (
-            g,
-            approx[g]["p50"],
-            windows[g]["lo"],
-            windows[g]["hi"],
-        )
-
-
 def test_robust_group_stats_mad_and_outliers(spark):
     from youtubeanalyzerproject_big_data__spark.operators.aggregates import robust_group_stats
 

@@ -112,6 +112,86 @@ def test_every_package_symbol_has_a_non_test_caller():
     assert sorted(unused) == sorted(expected), "package symbols no non-test file uses:\n" + "\n".join(unused)
 
 
+# Defaulted parameters no non-test call sets, each kept for its reason.
+ALLOWED_PARAMETERS = {
+    (f"{PACKAGE}.operators.dedup", "_shingles", "use_arrow"): "False is the Catalyst "
+    "reference the Arrow shingler is tested against",
+    (f"{PACKAGE}.operators.dedup", "duplicated_span_removal", "use_arrow"): "False is the "
+    "Catalyst reference the Arrow span kernel is tested against",
+    (f"{PACKAGE}.operators.clustering", "kmeans_lloyd", "use_arrow"): "False is the "
+    "zip_with/aggregate reference the Arrow assignment kernel is tested against",
+    (f"{PACKAGE}.operators.dedup", "minhash_lsh_pairs", "max_bucket"): "None is the uncapped "
+    "reference the bucket cap is tested against",
+    (f"{PACKAGE}.operators.graph", "connected_components_star", "small_graph_threshold"): "0 "
+    "forces the distributed star rounds that the driver-side fast path is tested against",
+    (f"{PACKAGE}.operators.graph", "connected_components_star", "_round_counter"): "the tests' "
+    "probe of the O(log n) round count",
+    (f"{PACKAGE}.session", "get_spark", "master"): "deployment setting: the cluster master URL",
+    (f"{PACKAGE}.session", "get_spark", "state_store"): "deployment setting: the streaming "
+    "state-store provider",
+}
+
+
+def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
+    """(name, positional index or None) of each parameter with a default;
+    the index counts from the first argument a call passes (after self)."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+    for i, arg in enumerate(pos[len(pos) - len(a.defaults) :], len(pos) - len(a.defaults)):
+        yield arg.arg, i - skip
+    for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+        if default is not None:
+            yield arg.arg, None
+
+
+def _calls_by_name(sources: dict[str, ast.Module]) -> dict[str, list[ast.Call]]:
+    """Every call, keyed by the called name (``f(...)`` or ``x.f(...)``),
+    with ``import f as g`` aliases resolved to ``f``.  Matching by name
+    over-approximates: a call of any function named ``f`` counts."""
+    aliases = {
+        a.asname: a.name
+        for tree in sources.values()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.asname
+    }
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in sources.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, (ast.Name, ast.Attribute)):
+                name = node.func.id if isinstance(node.func, ast.Name) else node.func.attr
+                calls.setdefault(aliases.get(name, name), []).append(node)
+    return calls
+
+
+def _sets(call: ast.Call, param: str, index: int | None) -> bool:
+    if any(k.arg in (param, None) for k in call.keywords) or any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    return index is not None and len(call.args) > index
+
+
+def test_every_defaulted_parameter_has_a_non_test_caller():
+    """A parameter with a default that no non-test call passes, by keyword
+    or by position, is an option nobody uses: its default is the code, so
+    it becomes a constant (a test that needs another value monkeypatches
+    the module constant)."""
+    sources = _non_test_sources()
+    calls = _calls_by_name(sources)
+    unset = {}
+    for mod, tree in sources.items():
+        if mod != PACKAGE and not mod.startswith(f"{PACKAGE}."):
+            continue
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for param, index in _defaulted(fn):
+                    if not any(_sets(c, param, index) for c in calls.get(fn.name, [])):
+                        unset[(mod, fn.name, param)] = fn.lineno
+    where = "\n".join(f"{mod}:{line} {fn}({param}=)" for (mod, fn, param), line in unset.items())
+    assert sorted(unset) == sorted(ALLOWED_PARAMETERS), "defaulted parameters no non-test call sets:\n" + where
+
+
 def _enclosing_functions(tree: ast.Module) -> dict:
     """node -> name of its innermost enclosing function (walk is outer-first)."""
     scope = {}

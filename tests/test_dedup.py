@@ -421,18 +421,20 @@ def test_semantic_dedup_smallest_id_wins_within_cell(spark):
     assert out[3]["kept"] == 1  # orthogonal survives sharing the cell
 
 
-def test_semantic_dedup_max_cell_skips_degenerate_cells(spark):
+def test_semantic_dedup_max_cell_skips_degenerate_cells(spark, monkeypatch):
     """An over-cap cell must skip pair generation entirely (all kept) --
     the bounded-work guarantee that makes within-cell pairing safe."""
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import semantic_dedup_flags
+    from youtubeanalyzerproject_big_data__spark.operators import dedup
 
     rows = [(i, [10.0, i * 0.0001, 0.0, 0.0]) for i in range(12)]  # one tight cluster of 12
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    capped = semantic_dedup_flags(emb, "vec_id", "embedding", dim=4, k=1, iters=1, threshold=0.99, max_cell=5)
+    monkeypatch.setattr(dedup, "DEFAULT_MAX_BUCKET", 5)
+    capped = dedup.semantic_dedup_flags(emb, "vec_id", "embedding", dim=4, k=1, iters=1, threshold=0.99)
     assert all(r["kept"] == 1 for r in capped.collect())  # cell of 12 > cap 5: no pairs generated
-    uncapped = semantic_dedup_flags(emb, "vec_id", "embedding", dim=4, k=1, iters=1, threshold=0.99, max_cell=None)
-    kept = {r["id"] for r in uncapped.collect() if r["kept"] == 1}
-    assert kept == {0}  # without the cap the whole cluster collapses to id 0
+    monkeypatch.setattr(dedup, "DEFAULT_MAX_BUCKET", 12)
+    at_cap = dedup.semantic_dedup_flags(emb, "vec_id", "embedding", dim=4, k=1, iters=1, threshold=0.99)
+    kept = {r["id"] for r in at_cap.collect() if r["kept"] == 1}
+    assert kept == {0}  # a cell of 12 within cap 12 collapses to id 0
 
 
 def test_segment_dedup_removes_all_copies_and_reconstructs(spark):
@@ -476,7 +478,7 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
     filler = " ".join(f"w{i} x{i} y{i}" for i in range(30))
     rows = [(1, quote), (2, quote + " " + filler)]  # doc 1 fully inside doc 2
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    cont = containment_pairs(df, "doc_id", "text", threshold=0.9, max_df=None).collect()
+    cont = containment_pairs(df, "doc_id", "text", threshold=0.9).collect()
     assert [(r["contained_id"], r["container_id"]) for r in cont] == [(1, 2)]
     assert cont[0]["containment"] == 1.0  # every shingle of 1 is in 2
     # symmetric Jaccard at the same bar sees nothing
@@ -494,7 +496,7 @@ def test_edit_distance_pairs_blocking_and_distance(spark):
         (4, base[:20] + " totally divergent tail of words"),   # same block, far
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = edit_distance_pairs(df, "doc_id", "text", max_distance=5).collect()
+    out = edit_distance_pairs(df, "doc_id", "text").collect()
     assert [(r["doc1"], r["doc2"], r["edit_distance"]) for r in out] == [(1, 2, 1)]
 
 
@@ -516,8 +518,8 @@ def test_contamination_report_counts_leaks_per_eval_doc(spark):
     assert out[1]["n_grams"] == 4  # 8 tokens -> 4 distinct 5-grams
 
 
-def test_sorted_neighborhood_pairs_cross_block(spark):
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import sorted_neighborhood_pairs
+def test_sorted_neighborhood_pairs_cross_block(spark, monkeypatch):
+    from youtubeanalyzerproject_big_data__spark.operators import dedup
 
     # a/b share only a 6-char prefix (separate 16-char d13 blocks) but sort
     # adjacent and have close heads -- SNM must pair them; c is far away in
@@ -530,9 +532,10 @@ def test_sorted_neighborhood_pairs_cross_block(spark):
         (5, "middle of the alphabet text that is completely unlike the others ok"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(dedup, "SNM_WINDOW", 2)
     got = {
         (r["doc1"], r["doc2"]): r["edit_distance"]
-        for r in sorted_neighborhood_pairs(df, "doc_id", "text", window=2).collect()
+        for r in dedup.sorted_neighborhood_pairs(df, "doc_id", "text").collect()
     }
     assert (1, 2) in got and got[(1, 2)] == 1  # 'banana'->'banapa', one substitution
     # 'guard'->'guards' insertion shifts the 64-char head cut by one -> distance 2
@@ -540,15 +543,17 @@ def test_sorted_neighborhood_pairs_cross_block(spark):
     assert all(p in {(1, 2), (3, 4)} for p in got)  # window=2: only adjacent, close pairs
 
 
-def test_sorted_neighborhood_candidate_count_is_skew_proof(spark):
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import sorted_neighborhood_pairs
+def test_sorted_neighborhood_candidate_count_is_skew_proof(spark, monkeypatch):
+    from youtubeanalyzerproject_big_data__spark.operators import dedup
 
     # 40 docs sharing one 24-char prefix: prefix blocking would generate
     # 40*39/2 = 780 candidates; SNM with window=3 compares each doc with
     # at most 2 neighbors -> <= 2n pairs survive even before the distance cut.
     rows = [(i, f"shared boilerplate opening line number {i:04d} end") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = sorted_neighborhood_pairs(df, "doc_id", "text", window=3, max_distance=64).collect()
+    monkeypatch.setattr(dedup, "SNM_WINDOW", 3)
+    monkeypatch.setattr(dedup, "SNM_MAX_DISTANCE", 64)
+    out = dedup.sorted_neighborhood_pairs(df, "doc_id", "text").collect()
     assert 0 < len(out) <= 2 * 40
 
 

@@ -76,9 +76,11 @@ def test_degree_stats_preserve_zero_and_dangling(videos):
     assert deg["v01"][0] == 3 and deg["v01"][1] == 3
 
 
-def test_pagerank_job_enriches_uploader(spark, videos):
+def test_pagerank_job_enriches_uploader(spark, videos, monkeypatch):
     # lower the densification threshold so the tiny fixture has a graph
-    out = jobs.pagerank_job(videos, top_n=10, min_related=1).collect()
+    monkeypatch.setattr(jobs, "PAGERANK_MIN_RELATED", 1)
+    monkeypatch.setattr(jobs, "PAGERANK_TOP_N", 10)
+    out = jobs.pagerank_job(videos).collect()
     assert len(out) > 0
     ranks = [r["rank"] for r in out]
     assert ranks == list(range(1, len(out) + 1))
@@ -166,7 +168,7 @@ def test_declared_schemas_are_the_jobs_output(spark, videos, crawl_videos):
         assert [(f.name, f.dataType) for f in job(empty).schema] == shape, name
 
 
-def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):
+def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path, monkeypatch):
     """run_netagg, pagerank_job and a serve miss write the same rows on the
     one-piece layout (the fixture fits one AQE minimum partition) and on
     the source layout (minPartitionSize below the table's estimate)."""
@@ -176,6 +178,8 @@ def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):
     from youtubeanalyzerproject_big_data__spark.serve import QueryService
     from youtubeanalyzerproject_big_data__spark.session import data_sized
 
+    monkeypatch.setattr(jobs, "PAGERANK_MIN_RELATED", 1)
+    monkeypatch.setattr(jobs, "PAGERANK_TOP_N", 10)
     path = str(tmp_path / "videos_pq")
     videos.repartition(3).write.parquet(path)
     source = spark.read.parquet(path)
@@ -187,7 +191,7 @@ def test_refresh_is_the_same_on_both_layouts(spark, videos, tmp_path):
             name: sorted(ln for f in glob.glob(os.path.join(out, name, "part-*")) for ln in open(f))
             for name in jobs.NETAGG_ARTIFACTS
         }
-        ranks = jobs.pagerank_job(source, top_n=10, min_related=1).collect()
+        ranks = jobs.pagerank_job(source).collect()
         with QueryService(spark, source, out) as svc:
             stats = svc.serve("globalstats").collect()
         return lines, ranks, stats

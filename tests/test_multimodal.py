@@ -317,7 +317,7 @@ def test_phash_pairs_rejects_unblockable_distance(spark):
 
     df = spark.createDataFrame([("1", 0)], "media_id string, phash long")
     with _pytest.raises(ValueError):
-        mm.phash_near_dup_pairs(df, n_bits=32, max_distance=4, n_chunks=4)
+        mm.phash_near_dup_pairs(df, n_bits=32, max_distance=4)
 
 
 def test_audio_features_exact_dsp_on_known_samples(spark):

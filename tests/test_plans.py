@@ -30,6 +30,26 @@ def operator_counts(df) -> dict[str, int]:
     return {op: plan.count(op) for op in ("Exchange", "SortMergeJoin")}
 
 
+def test_stage_metrics_counts_a_group_by_shuffle(spark):
+    """stage_metrics is bench.py's shuffle-bytes source: a groupBy writes
+    shuffle bytes, so the before/after delta is positive.  The status store
+    keeps spark.ui.retainedStages stages and drops a tenth of them when
+    full; a pair of snapshots around that drop (n_stages falls) is retaken,
+    and the drop leaves room for the retake."""
+    from pyspark.sql import functions as F
+
+    from youtubeanalyzerproject_big_data__spark.plans.inspect import stage_metrics
+
+    for _ in range(2):
+        before = stage_metrics(spark)
+        spark.range(10_000).groupBy((F.col("id") % 97).alias("k")).count().collect()
+        after = stage_metrics(spark)
+        if after["n_stages"] > before["n_stages"]:
+            break
+    assert after["shuffle_write_bytes"] > before["shuffle_write_bytes"], (before, after)
+    assert after["shuffle_read_bytes"] > before["shuffle_read_bytes"], (before, after)
+
+
 def test_filter_pushed_to_parquet_scan(spark):
     plan = _plan(contract.relational.q_f5(spark, SF))
     assert "PushedFilters: [" in plan
@@ -366,17 +386,17 @@ def test_hilbert_keys_are_map_side(spark):
     assert "Exchange" not in plan
 
 
-def test_graph_auto_broadcast_flips_on_edge_count(spark):
+def test_graph_auto_broadcast_flips_on_edge_count(spark, monkeypatch):
     """g6/g9/g10's degree/adjacency broadcast must be AUTO-selected from
     the measured edge count (VERDICT r5 item 2): below the ceiling the
     hint engages (BroadcastHashJoin even with Spark's own threshold
-    disabled); above it (forced via auto_broadcast_max_edges=0) the joins
+    disabled); above it (forced by lowering AUTO_BROADCAST_MAX_EDGES to 0) the joins
     stay un-hinted and plan as SortMergeJoin instead of aborting on the
     broadcast limit at scale."""
     from pyspark.sql import functions as F
 
     from youtubeanalyzerproject_big_data__spark.io import load_table
-    from youtubeanalyzerproject_big_data__spark.operators.graph import clustering_coefficient_topk
+    from youtubeanalyzerproject_big_data__spark.operators import graph
 
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
     x, y = li.alias("x"), li.alias("y")
@@ -389,8 +409,9 @@ def test_graph_auto_broadcast_flips_on_edge_count(spark):
         for c in thresholds:  # the explicit hint must be the ONLY broadcast lever
             spark.conf.set(c, "-1")
         with _live_plans():
-            small = clustering_coefficient_topk(pairs, k=5)
-            big = clustering_coefficient_topk(pairs, k=5, auto_broadcast_max_edges=0)
+            small = graph.clustering_coefficient_topk(pairs, k=5)
+            monkeypatch.setattr(graph, "AUTO_BROADCAST_MAX_EDGES", 0)
+            big = graph.clustering_coefficient_topk(pairs, k=5)
         assert "BroadcastHashJoin" in _plan(small)
         plan_big = _plan(big)
         assert "SortMergeJoin" in plan_big

@@ -152,18 +152,18 @@ def test_snm_matches_global_sort_reference(spark, texts):
     order: SNM pairs computed by Spark == pairs from a plain Python sort
     of (key, doc_id) with the same window -- for ANY corpus shape."""
     import re
+    from unittest import mock
 
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import sorted_neighborhood_pairs
+    from youtubeanalyzerproject_big_data__spark.operators import dedup
 
     key_len, compare_len, window = 4, 16, 3
     docs = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {
-        (r["doc1"], r["doc2"]): r["edit_distance"]
-        for r in sorted_neighborhood_pairs(
-            docs, "doc_id", "text", key_len=key_len, compare_len=compare_len,
-            window=window, max_distance=10_000, bucket_chars=2,
-        ).collect()
-    }
+    shape = dict(SNM_KEY_LEN=key_len, SNM_COMPARE_LEN=compare_len, SNM_WINDOW=window, SNM_MAX_DISTANCE=10_000)
+    with mock.patch.multiple(dedup, **shape):
+        got = {
+            (r["doc1"], r["doc2"]): r["edit_distance"]
+            for r in dedup.sorted_neighborhood_pairs(docs, "doc_id", "text").collect()
+        }
 
     def norm(t):
         return re.sub(r"\s+", " ", t.strip().lower())
@@ -189,10 +189,13 @@ def test_snm_matches_global_sort_reference(spark, texts):
 def test_quantile_merge_bound_universal(spark, vals, n_shards, k):
     """a26's merge-theorem gate must hold for ANY value multiset (heavy
     ties included) and ANY shard/sample-budget combination."""
-    from youtubeanalyzerproject_big_data__spark.operators.sketches import quantile_merge_estimates
+    from unittest import mock
+
+    from youtubeanalyzerproject_big_data__spark.operators import sketches
 
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "key long, v long")
-    out = quantile_merge_estimates(df, "key", F.col("v"), n_shards=n_shards, k=k).collect()
+    with mock.patch.multiple(sketches, QMERGE_SHARDS=n_shards, QMERGE_K=k):
+        out = sketches.quantile_merge_estimates(df, "key", F.col("v")).collect()
     assert len(out) == 3 and all(r["within_bound"] == 1 for r in out)
     # estimates are real data values
     assert all(r["est_micro"] in set(vals) for r in out)

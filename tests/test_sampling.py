@@ -132,18 +132,6 @@ def test_training_shuffle_is_balanced_permutation(spark):
     assert sorted(order1) == sorted(order0)
 
 
-def test_temperature_mix_rejects_non_sqrt_temperature(spark):
-    """Only T=2 ships: pow is not correctly-rounded IEEE across engines, so
-    any other exponent is rejected instead of carrying a silent ulp risk."""
-    import pytest
-
-    from youtubeanalyzerproject_big_data__spark.functions.sampling import temperature_mix_sample
-
-    df = spark.createDataFrame([(1, "a", 10)], "k long, s string, w long")
-    with pytest.raises(ValueError, match="temperature"):
-        temperature_mix_sample(df, "k", "s", "w", total_budget=100, temperature=1.5)
-
-
 def test_temperature_mix_caps_light_sources_and_thins_heavy(spark):
     """T=2 flattening: a source under its flattened allowance keeps ALL
     rows (rate capped at 1e6 ppm); a much heavier source thins; membership

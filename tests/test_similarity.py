@@ -22,6 +22,15 @@ def clustered(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+@pytest.fixture
+def small_pq(monkeypatch):
+    """4 subvectors x 8 codewords: the PQ shape for the 16-dim test vectors."""
+    from youtubeanalyzerproject_big_data__spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "PQ_SUB", 4)
+    monkeypatch.setattr(similarity, "PQ_CODES", 8)
+
+
 def _cos(a, b):
     d = sum(x * y for x, y in zip(a, b))
     return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
@@ -71,12 +80,12 @@ def test_ivf_catalyst_recall_and_shape(clustered):
     assert recall >= 0.8, f"catalyst IVF recall too low: {recall}"
 
 
-def test_pq_recall_on_clustered_vectors(clustered):
+def test_pq_recall_on_clustered_vectors(clustered, small_pq):
     from youtubeanalyzerproject_big_data__spark.operators.similarity import brute_force_topk, pq_topk
 
     queries = clustered.where("vec_id IN (0, 10, 20)")
     exact = {(r["query_id"], r["neighbor_id"]) for r in brute_force_topk(clustered, queries, "vec_id", "embedding", 3).collect()}
-    approx = {(r["query_id"], r["neighbor_id"]) for r in pq_topk(clustered, queries, "vec_id", "embedding", dim=16, k=3, num_sub=4, num_codes=8).collect()}
+    approx = {(r["query_id"], r["neighbor_id"]) for r in pq_topk(clustered, queries, "vec_id", "embedding", dim=16, k=3).collect()}
     recall = len(exact & approx) / len(exact)
     # quantized reconstructions keep cluster geometry: neighbors stay in-cluster
     assert recall >= 0.5, f"PQ recall too low: {recall}"
@@ -84,7 +93,7 @@ def test_pq_recall_on_clustered_vectors(clustered):
     assert all(q // 10 == n // 10 for q, n in approx)
 
 
-def test_ivfpq_recall_on_clustered_vectors(clustered):
+def test_ivfpq_recall_on_clustered_vectors(clustered, small_pq):
     """Composed IVF+PQ: probing restricts candidates to the query's cell
     neighborhood AND scoring runs on reconstructions -- recall must still
     track the cluster structure (the s5 billion-scale recipe)."""
@@ -95,7 +104,7 @@ def test_ivfpq_recall_on_clustered_vectors(clustered):
     approx = {
         (r["query_id"], r["neighbor_id"])
         for r in ivfpq_topk(
-            clustered, queries, "vec_id", "embedding", dim=16, k=3, num_cells=3, nprobe=2, num_sub=4, num_codes=8
+            clustered, queries, "vec_id", "embedding", dim=16, k=3, num_cells=3, nprobe=2
         ).collect()
     }
     recall = len(exact & approx) / len(exact)
@@ -104,11 +113,11 @@ def test_ivfpq_recall_on_clustered_vectors(clustered):
     assert all(q // 10 == n // 10 for q, n in approx)
 
 
-def test_pq_codebook_shape_and_determinism(clustered):
+def test_pq_codebook_shape_and_determinism(clustered, small_pq):
     from youtubeanalyzerproject_big_data__spark.operators.similarity import _pq_codebook_exact
 
-    b1 = _pq_codebook_exact(clustered, "vec_id", "embedding", dim=16, num_sub=4, num_codes=8)
-    b2 = _pq_codebook_exact(clustered, "vec_id", "embedding", dim=16, num_sub=4, num_codes=8)
+    b1 = _pq_codebook_exact(clustered, "vec_id", "embedding", dim=16)
+    b2 = _pq_codebook_exact(clustered, "vec_id", "embedding", dim=16)
     assert b1 == b2  # md5-order seed selection is run-stable
     assert len(b1) == 4 and all(len(bm) == 8 for bm in b1) and all(len(c) == 4 for bm in b1 for c in bm)
 
@@ -189,7 +198,7 @@ def test_topk_recall_counts(spark):
     assert out[2]["n_hits"] == 2 and out[2]["recall_at_2"] == 1.0
 
 
-def test_refine_topk_improves_or_matches_raw_index(clustered):
+def test_refine_topk_improves_or_matches_raw_index(clustered, small_pq):
     """Retrieve-then-refine: exact re-rank of generous candidates must
     recall at least what the raw compressed index recalls, results must be
     a subset of the candidates, and scores must equal brute-force cosines."""
@@ -204,10 +213,10 @@ def test_refine_topk_improves_or_matches_raw_index(clustered):
     exact_pairs = {(r["query_id"], r["neighbor_id"]) for r in exact}
     exact_scores = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in exact}
     raw = ivfpq_topk(
-        clustered, queries, "vec_id", "embedding", dim=16, k=3, num_cells=3, nprobe=2, num_sub=4, num_codes=8
+        clustered, queries, "vec_id", "embedding", dim=16, k=3, num_cells=3, nprobe=2
     ).collect()
     cand = ivfpq_topk(
-        clustered, queries, "vec_id", "embedding", dim=16, k=10, num_cells=3, nprobe=2, num_sub=4, num_codes=8
+        clustered, queries, "vec_id", "embedding", dim=16, k=10, num_cells=3, nprobe=2
     )
     refined = refine_topk(clustered, queries, cand, "vec_id", "embedding", k=3).collect()
 

@@ -73,10 +73,10 @@ def test_bloom_gate_rejects_bad_k(spark):
         bloom_membership_gate(df, df, "key", k_hashes=5)
 
 
-def test_quantile_merge_bound_holds_on_skewed_values(spark):
+def test_quantile_merge_bound_holds_on_skewed_values(spark, monkeypatch):
     from pyspark.sql import functions as F
 
-    from youtubeanalyzerproject_big_data__spark.operators.sketches import quantile_merge_estimates
+    from youtubeanalyzerproject_big_data__spark.operators import sketches
 
     # Zipf-ish skew: value i//10 repeats, plus a long tail -- step sampling
     # must still bracket every target rank within sum(step_s).
@@ -84,7 +84,9 @@ def test_quantile_merge_bound_holds_on_skewed_values(spark):
         F.col("id").alias("k"),
         F.when(F.col("id") < 4500, (F.col("id") / 10).cast("long")).otherwise(F.col("id") * 100).alias("v"),
     )
-    out = quantile_merge_estimates(df, "k", F.col("v"), n_shards=8, k=16).collect()
+    monkeypatch.setattr(sketches, "QMERGE_SHARDS", 8)
+    monkeypatch.setattr(sketches, "QMERGE_K", 16)
+    out = sketches.quantile_merge_estimates(df, "k", F.col("v")).collect()
     assert len(out) == 3
     for r in out:
         assert r["within_bound"] == 1
@@ -95,15 +97,16 @@ def test_quantile_merge_bound_holds_on_skewed_values(spark):
         assert r["r_lo"] <= r["target_rank"] - 1 + r["rank_bound"]
 
 
-def test_quantile_merge_summary_is_model_sized(spark):
+def test_quantile_merge_summary_is_model_sized(spark, monkeypatch):
     from pyspark.sql import functions as F
 
-    from youtubeanalyzerproject_big_data__spark.operators.sketches import quantile_merge_estimates
+    from youtubeanalyzerproject_big_data__spark.operators import sketches
 
     # exact quantiles when every shard holds fewer than k rows: step = 1,
     # the "summary" is the whole shard, and the estimate is rank-exact.
     df = spark.range(100).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    out = {r["q_ppm"]: r for r in quantile_merge_estimates(df, "k", F.col("v"), n_shards=4, k=64).collect()}
+    monkeypatch.setattr(sketches, "QMERGE_SHARDS", 4)
+    out = {r["q_ppm"]: r for r in sketches.quantile_merge_estimates(df, "k", F.col("v")).collect()}
     assert out[500_000]["est_micro"] == 49  # rank 50 of 0..99
     assert out[990_000]["est_micro"] == 98
     assert all(r["within_bound"] == 1 for r in out.values())

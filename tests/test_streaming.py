@@ -220,7 +220,7 @@ def test_stream_interval_join_matches_batch(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("state_store_provider", ["hdfs", "rocksdb"], indirect=True)
-def test_stream_dedup_ttl_expires_and_reemits(spark, tmp_path_factory, state_store_provider):
+def test_stream_dedup_ttl_expires_and_reemits(spark, tmp_path_factory, state_store_provider, monkeypatch):
     """Bounded-state TTL dedup: within the TTL a repeated digest is
     suppressed like se4; once the watermark passes last-arrival + TTL the
     digest's state expires (EventTimeTimeout) and a later duplicate
@@ -230,7 +230,9 @@ def test_stream_dedup_ttl_expires_and_reemits(spark, tmp_path_factory, state_sto
     cardinalities, so the TTL design is demonstrated on it."""
     import datetime as dt
 
-    from youtubeanalyzerproject_big_data__spark.streaming.events import stream_dedup_with_ttl
+    from youtubeanalyzerproject_big_data__spark.streaming import events
+
+    monkeypatch.setattr(events, "DEDUP_TTL_SECONDS", 60)
 
     src = str(tmp_path_factory.mktemp("docs_ttl_stream"))
     schema = "doc_id long, text string, ts timestamp"
@@ -242,7 +244,7 @@ def test_stream_dedup_ttl_expires_and_reemits(spark, tmp_path_factory, state_sto
     ).coalesce(1).write.mode("append").parquet(src)
 
     q = (
-        stream_dedup_with_ttl(spark, src, ttl_seconds=60)
+        events.stream_dedup_with_ttl(spark, src)
         .writeStream.format("memory")
         .queryName("ttl_dedup_stream")
         .outputMode("append")
@@ -562,13 +564,15 @@ def _state_rows_per_batch(q) -> list[int]:
 
 
 @pytest.mark.parametrize("state_store_provider", ["hdfs", "rocksdb"], indirect=True)
-def test_ttl_dedup_state_rows_bounded_by_live_window(spark, tmp_path_factory, state_store_provider):
+def test_ttl_dedup_state_rows_bounded_by_live_window(spark, tmp_path_factory, state_store_provider, monkeypatch):
     """se6's bound: state rows == digests whose TTL window is still open,
     NOT digests-ever-seen.  After the watermark passes the early keys'
     timeouts the store must shrink below the distinct-digest total."""
     import datetime as dt
 
-    from youtubeanalyzerproject_big_data__spark.streaming.events import stream_dedup_with_ttl
+    from youtubeanalyzerproject_big_data__spark.streaming import events
+
+    monkeypatch.setattr(events, "DEDUP_TTL_SECONDS", 60)
 
     src = str(tmp_path_factory.mktemp("ttl_state_rows"))
     schema = "doc_id long, text string, ts timestamp"
@@ -578,7 +582,7 @@ def test_ttl_dedup_state_rows_bounded_by_live_window(spark, tmp_path_factory, st
         [(i, f"text number {i}", t0) for i in range(5)], schema
     ).coalesce(1).write.mode("append").parquet(src)
     q = (
-        stream_dedup_with_ttl(spark, src, ttl_seconds=60)
+        events.stream_dedup_with_ttl(spark, src)
         .writeStream.format("memory")
         .queryName("ttl_state_rows")
         .outputMode("append")

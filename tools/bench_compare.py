@@ -1,7 +1,10 @@
 """Round-over-round bench diff: the analysis CLAUDE.md's benchmarking
 protocol prescribes, mechanized.
 
-    python tools/bench_compare.py BENCH_r05.json BENCH_DETAIL.json
+    python tools/bench_compare.py OLD.json BENCH_DETAIL.json
+
+(OLD: an earlier commit's BENCH_DETAIL.json, or a round record from git
+history, e.g. ``git show f9fe9e0:BENCH_r11.json > OLD.json``.)
 
 Accepts either a driver-recorded BENCH_r{N}.json (headline under "parsed")
 or a BENCH_DETAIL.json (headline at top level).  Prints: shared-subset

@@ -311,11 +311,11 @@ def _scoped_oracle(tmp: str, sf: str, tag: str, fn):
     the disk-guard floor with the query itself perfectly healthy.  A
     scoped file returns the space the moment the rows are fetched."""
     path = os.path.join(tmp, f"seg_{tag}.duckdb")
+    from tools.verify_local import bound_oracle
+
     c = duckdb.connect(path)
     try:
-        mem = os.environ.get("SPARK_GRAFT_ORACLE_MEM")
-        if mem:
-            c.execute(f"SET memory_limit='{mem}'")
+        bound_oracle(c, tmp)
         c.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf}/lineitem.parquet'")
         c.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
         return fn(c)
@@ -707,7 +707,7 @@ def main() -> None:
     for nm in digest_only - set(names):
         names.append(nm)
 
-    from tools.verify_local import _digest_compare, canon
+    from tools.verify_local import _digest_compare, bound_oracle, canon
     from youtubeanalyzerproject_big_data__spark import contract
     from youtubeanalyzerproject_big_data__spark.session import get_spark
 
@@ -719,9 +719,7 @@ def main() -> None:
     tmp = scratch_dir("segora_")  # repo-local: DuckDB spill can reach tens of GB and must not race a /tmp sweep
     try:
         con = duckdb.connect(os.path.join(tmp, "seg.duckdb"))  # on-disk: rank/edge tables may spill
-        mem = os.environ.get("SPARK_GRAFT_ORACLE_MEM")
-        if mem:
-            con.execute(f"SET memory_limit='{mem}'")
+        bound_oracle(con, tmp)
         con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf}/lineitem.parquet'")
         con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
         def _post_query() -> None:

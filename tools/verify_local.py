@@ -268,6 +268,38 @@ class _DiskWatchdog:
         return False
 
 
+def _bytes(size: str) -> int:
+    """Bytes of a JVM-style size ("8g", "4096m", "512k", "1t", or plain bytes)."""
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    size = size.strip().lower().removesuffix("b")
+    return int(size[:-1]) * units[size[-1]] if size[-1] in units else int(size)
+
+
+def oracle_memory_mb() -> int:
+    """DuckDB's memory budget: half of what the Spark driver heap
+    (SPARK_GRAFT_DRIVER_MEM, 8g unless set) leaves of the machine's memory
+    (or of the cgroup's limit, when lower); the other half is for the JVM
+    beyond its heap, the Python workers and the OS.  DuckDB's own default,
+    80% of RAM, next to an 8g driver got the sf1 replay OOM-killed in g13
+    on a 15 GB box."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            total = min(total, int(fh.read()))
+    except (OSError, ValueError):  # no cgroup v2 limit ("max") or no cgroup file
+        pass
+    left = total - _bytes(os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    return max(512, left // 2 >> 20)
+
+
+def bound_oracle(con: duckdb.DuckDBPyConnection, spill_dir: str) -> None:
+    """Cap ``con`` at :func:`oracle_memory_mb` and spill to ``spill_dir``
+    (a capped DuckDB without a temp directory fails an over-budget
+    operator instead of spilling it)."""
+    con.execute(f"SET memory_limit='{oracle_memory_mb()}MB'")
+    con.execute(f"SET temp_directory='{spill_dir}'")
+
+
 def main() -> None:
     argv = sys.argv[1:]
     json_out = None
@@ -288,26 +320,18 @@ def main() -> None:
     records: dict[str, dict] = {}
     spark = get_spark("verify-local")
     con = duckdb.connect()
-    oracle_scratch = None
-    # At tiled-fixture scales the oracle must share the box with a large
-    # Spark heap; DuckDB's default budget (80% of RAM) would let the two
-    # engines force the OOM killer. Opt-in via env for scale replays.
-    mem = os.environ.get("SPARK_GRAFT_ORACLE_MEM")
-    if mem:
-        con.execute(f"SET memory_limit='{mem}'")
-        # An in-memory DuckDB has no temp_directory, so a capped budget
-        # would make over-limit operators ERROR instead of spilling; point
-        # spill at the repo-local scratch (sweep-safe, same as Spark's).
-        from youtubeanalyzerproject_big_data__spark.session import scratch_dir
+    # The oracle shares the box with the Spark heap; spill goes to the
+    # repo-local scratch (sweep-safe, same as Spark's).
+    from youtubeanalyzerproject_big_data__spark.session import scratch_dir
 
-        oracle_scratch = scratch_dir("verora_")
-        con.execute(f"SET temp_directory='{oracle_scratch}'")
-        # scratch_dir's contract: caller cleans up. atexit covers crash
-        # exits too -- verora_* dirs accumulated across sweeps (ADVICE r8).
-        import atexit
-        import shutil
+    oracle_scratch = scratch_dir("verora_")
+    bound_oracle(con, oracle_scratch)
+    # scratch_dir's contract: caller cleans up. atexit covers crash
+    # exits too -- verora_* dirs accumulated across sweeps (ADVICE r8).
+    import atexit
+    import shutil
 
-        atexit.register(shutil.rmtree, oracle_scratch, ignore_errors=True)
+    atexit.register(shutil.rmtree, oracle_scratch, ignore_errors=True)
     for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
@@ -428,8 +452,7 @@ def main() -> None:
     if json_out:
         _flush()
         print(f"wrote {json_out} ({len(records)} queries)")
-    if oracle_scratch:
-        con.close()  # release temp files before the atexit rmtree
+    con.close()  # release temp files before the atexit rmtree
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
     if failures:
         # callers keying on exit status (CI, && chains) must see the failure,

@@ -7,6 +7,7 @@ from __future__ import annotations
 # package so tools/segmented_oracle.py shares them; see their docstrings
 # for the 41/640-class engine divergence they close).
 from youtubeanalyzerproject_big_data__spark.functions.precision import (
+    MICROS,
     dmicro_sql as _dmicro,
     dratio_sql as _dratio,
 )
@@ -23,12 +24,12 @@ def _dsum(col_expr: str) -> str:
     )
 
 
-def _davg(col_expr: str, scale: int = 6) -> str:
+def _davg(col_expr: str) -> str:
     # ALL-INTEGER half-up average -- the exact twin of precision.dec_avg
     # (see its docstring: the ROUND(double/count) form diverged on exact
     # half cases, first caught by the sf1 replay on e1).  DuckDB's // and %
     # are native int64 ops, so every step is exact.
-    p = 10**scale
+    p = MICROS
     s = f"CAST(SUM(CAST({col_expr} AS DECIMAL(18,6))) * {p} AS BIGINT)"
     n = f"COUNT({col_expr})"
     q = f"((ABS({s}) - ABS({s}) % {n}) // {n} + CASE WHEN 2 * (ABS({s}) % {n}) >= {n} THEN 1 ELSE 0 END)"

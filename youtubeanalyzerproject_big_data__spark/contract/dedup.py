@@ -585,26 +585,19 @@ def q_d6(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _semantic_dedup_oracle(
-    dim: int = 64, k: int = 8, iters: int = 2, threshold: float = 0.95, max_cell: int | None = None
-) -> str:
+def _semantic_dedup_oracle(dim: int, k: int, iters: int, threshold: float) -> str:
     """DuckDB replay of dedup.semantic_dedup_flags: the km1 cell trajectory
     (shared _kmeans_ctes), within-cell ordered pairs, the exact-sequential
-    cosine, and the smallest-id-wins drop rule; over-``max_cell`` cells
-    skip pair generation exactly like the engine."""
+    cosine, and the smallest-id-wins drop rule; cells over
+    dedup.DEFAULT_MAX_BUCKET skip pair generation exactly like the engine."""
     last = iters - 1
-    mem = f"cell{last}"
-    cap_cte = ""
-    if max_cell is not None:
-        cap_cte = f""",
-sizes AS (SELECT cell, COUNT(*) AS n FROM cell{last} GROUP BY cell),
-mem AS (SELECT c.* FROM cell{last} c JOIN sizes s ON c.cell = s.cell WHERE s.n <= {max_cell})"""
-        mem = "mem"
     return f"""
-WITH {_kmeans_ctes(dim, k, iters, final_grid=False)}{cap_cte},
+WITH {_kmeans_ctes(dim, k, iters, final_grid=False)},
+sizes AS (SELECT cell, COUNT(*) AS n FROM cell{last} GROUP BY cell),
+mem AS (SELECT c.* FROM cell{last} c JOIN sizes s ON c.cell = s.cell WHERE s.n <= {dedup.DEFAULT_MAX_BUCKET}),
 pairs AS (
   SELECT b.vec_id AS id2, {_cos_sql("a.embedding", "b.embedding")} AS cos
-  FROM {mem} a JOIN {mem} b ON a.cell = b.cell AND a.vec_id < b.vec_id
+  FROM mem a JOIN mem b ON a.cell = b.cell AND a.vec_id < b.vec_id
 ),
 dropped AS (SELECT DISTINCT id2 FROM pairs WHERE cos >= {threshold})
 SELECT c.vec_id AS id, CAST(c.cell AS INT) AS cell,
@@ -614,7 +607,7 @@ FROM cell{last} c LEFT JOIN dropped d ON c.vec_id = d.id2
 
 
 @query("d10_semantic_dedup", bench=True, stdout=True, oracle=_semantic_dedup_oracle(
-    dim=64, k=8, iters=2, threshold=0.44, max_cell=dedup.DEFAULT_MAX_BUCKET
+    dim=64, k=8, iters=2, threshold=0.44
 ))
 def q_d10(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup-style semantic dedup (dedup.semantic_dedup_flags): km1's
@@ -706,20 +699,17 @@ def q_d7(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _lsh_embedding_dedup_oracle(
-    threshold: float, dim: int = 64, num_planes: int = 16, bands: int = 4, max_bucket: int | None = None
-) -> str:
+def _lsh_embedding_dedup_oracle(threshold: float, dim: int) -> str:
     """DuckDB replay of dedup.embedding_near_dup_pairs_lsh: band buckets
     (capped like the engine), distinct id1<id2 candidates, cosine verify."""
     band_union = " UNION ALL ".join(
         f"SELECT vec_id, {b} AS band, {e} AS bval FROM embeddings"
-        for b, e in enumerate(_hyperplane_band_sql(dim, num_planes, bands))
+        for b, e in enumerate(_hyperplane_band_sql(dim))
     )
-    cap = "" if max_bucket is None else f"HAVING COUNT(*) <= {max_bucket}"
     cos = _cos_sql("e1.embedding", "e2.embedding")
     return f"""
 WITH bexp AS ({band_union}),
-bok AS (SELECT band, bval FROM bexp GROUP BY band, bval {cap}),
+bok AS (SELECT band, bval FROM bexp GROUP BY band, bval HAVING COUNT(*) <= {dedup.DEFAULT_MAX_BUCKET}),
 cand AS (
   SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
   FROM bexp a
@@ -732,9 +722,7 @@ WHERE {cos} >= {threshold}
 """
 
 
-@query("d9_embedding_lsh_near_dups", oracle=_lsh_embedding_dedup_oracle(
-    0.46, dim=64, max_bucket=dedup.DEFAULT_MAX_BUCKET
-))
+@query("d9_embedding_lsh_near_dups", oracle=_lsh_embedding_dedup_oracle(0.46, dim=64))
 def q_d9(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup via hyperplane-LSH buckets -- the sub-quadratic
     scale path (d5 is the exact GEMM baseline at the same threshold; d9's

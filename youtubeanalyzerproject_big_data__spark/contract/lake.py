@@ -65,7 +65,6 @@ def q_l1(spark: SparkSession, sf: str) -> DataFrame:
             """,
     "o_orderkey",
     bits=8,
-    out_name="hkey",
 ))
 def q_l3(spark: SparkSession, sf: str) -> DataFrame:
     """Hilbert-curve clustering keys over (o_custkey, o_totalprice) --

@@ -502,8 +502,8 @@ def q_a19(spark: SparkSession, sf: str) -> DataFrame:
         """)
 def q_a17(spark: SparkSession, sf: str) -> DataFrame:
     """Approx grouped percentiles gated per group: the 100 TB path of a15
-    (grouped_percentiles(approx=True) -- GK sketch, O(accuracy) state per
-    group instead of buffering the whole group on a reducer) must land its
+    (``percentile_approx`` -- GK sketch, O(accuracy) state per group
+    instead of buffering the whole group on a reducer) must land its
     per-group p50 inside the exact rank window [p49, p51].
 
     The window gate is the sketch's actual mathematical contract (rank

@@ -118,7 +118,7 @@ def q_s1(spark: SparkSession, sf: str) -> DataFrame:
     return out.withColumn("nn_rank", F.col("nn_rank").cast("long"))
 
 
-def _hyperplane_band_sql(dim: int, num_planes: int, bands: int) -> list[str]:
+def _hyperplane_band_sql(dim: int) -> list[str]:
     """SQL for the engine's hyperplane band values (similarity.
     _hyperplane_signature): the hyperplanes are deterministic md5
     derivations evaluated driver-side (similarity._plane_component), so the
@@ -129,27 +129,27 @@ def _hyperplane_band_sql(dim: int, num_planes: int, bands: int) -> list[str]:
     exactly.  Returns one expression per band (unaliased)."""
     from youtubeanalyzerproject_big_data__spark.operators.similarity import _plane_component
 
-    bits_per_band = num_planes // bands
+    bits_per_band = similarity.LSH_PLANES // similarity.LSH_BANDS
     bit_sql = []
-    for p in range(num_planes):
+    for p in range(similarity.LSH_PLANES):
         terms = " + ".join(
             f"CAST(embedding[{c + 1}] AS DOUBLE) * CAST({_plane_component(p, c)!r} AS DOUBLE)" for c in range(dim)
         )
         bit_sql.append(f"(CASE WHEN CAST(0.0 AS DOUBLE) + {terms} >= 0 THEN 1 ELSE 0 END)")
     return [
         " + ".join(f"{bit_sql[b * bits_per_band + r]} * {1 << r}" for r in range(bits_per_band))
-        for b in range(bands)
+        for b in range(similarity.LSH_BANDS)
     ]
 
 
-def _lsh_ann_oracle(dim: int = 64, num_planes: int = 16, bands: int = 4, k: int = 5) -> str:
+def _lsh_ann_oracle(dim: int = 64, k: int = 5) -> str:
     """DuckDB replay of similarity.lsh_topk (see _hyperplane_band_sql):
     candidates = any shared band value; exact cosine re-rank on candidates.
     """
     band_cols = ",\n         ".join(
-        f"{e} AS b{b}" for b, e in enumerate(_hyperplane_band_sql(dim, num_planes, bands))
+        f"{e} AS b{b}" for b, e in enumerate(_hyperplane_band_sql(dim))
     )
-    any_band = " OR ".join(f"q.b{b} = c.b{b}" for b in range(bands))
+    any_band = " OR ".join(f"q.b{b} = c.b{b}" for b in range(similarity.LSH_BANDS))
     cos = _cos_sql("qv", "cv")
     return f"""
 WITH sig AS (
@@ -170,7 +170,7 @@ WHERE rk <= {k}
 """
 
 
-@query("s2_ann_lsh_top5", oracle=_lsh_ann_oracle(dim=64, num_planes=16, bands=4, k=5))
+@query("s2_ann_lsh_top5", oracle=_lsh_ann_oracle(dim=64, k=5))
 def q_s2(spark: SparkSession, sf: str) -> DataFrame:
     """Hyperplane-LSH ANN top-5.  Oracle: _lsh_ann_oracle replays the
     md5-derived hyperplane signatures + banding + exact re-rank in DuckDB
@@ -329,16 +329,17 @@ def q_s8(spark: SparkSession, sf: str) -> DataFrame:
     return fused.orderBy(F.desc("rrf_nano"), "doc_id").limit(10)
 
 
-def _pq_ann_oracle(dim: int = 64, num_sub: int = 8, num_codes: int = 16, k: int = 5) -> str:
+def _pq_ann_oracle(dim: int = 64, k: int = 5) -> str:
     """DuckDB replay of similarity.pq_topk -- the full PQ pipeline.
 
-    The codebook is rebuilt IN SQL (sources = num_codes vectors of smallest
+    The codebook is rebuilt IN SQL (sources = PQ_CODES vectors of smallest
     (md5_int32(vec_id,'pq'), vec_id), subvector m taken verbatim), encoding
     replays the per-subspace sequential squared-L2 fold with the engine's
     (dist ASC, codeword ASC) tiebreak, reconstruction concatenates the
     chosen codewords, and scoring reuses the exact cosine chain -- all
     bit-identical IEEE sequences, so values hash-match without tolerance.
     """
+    num_sub, num_codes = similarity.PQ_SUB, similarity.PQ_CODES
     sub = dim // num_sub
     h = md5_int32_sql("CAST(vec_id AS VARCHAR)", "pq")
     # sequential fold ((0+t1)+t2)+... identical to zip_with+aggregate
@@ -384,7 +385,7 @@ WHERE rk <= {k}
 """
 
 
-@query("s4_ann_pq_top5", bench=True, oracle=_pq_ann_oracle(dim=64, num_sub=8, num_codes=16, k=5))
+@query("s4_ann_pq_top5", bench=True, oracle=_pq_ann_oracle(dim=64, k=5))
 def q_s4(spark: SparkSession, sf: str) -> DataFrame:
     """Product-quantization ANN top-5 (similarity.pq_topk): corpus
     compressed 32x (8 codes vs 64 floats), scored against reconstructions.
@@ -395,9 +396,7 @@ def q_s4(spark: SparkSession, sf: str) -> DataFrame:
     return out.withColumn("nn_rank", F.col("nn_rank").cast("long"))
 
 
-def _ivfpq_ann_oracle(
-    dim: int = 64, num_cells: int = 16, nprobe: int = 4, num_sub: int = 8, num_codes: int = 16, k: int = 5
-) -> str:
+def _ivfpq_ann_oracle(dim: int = 64, num_cells: int = 16, nprobe: int = 4, k: int = 5) -> str:
     """DuckDB replay of similarity.ivfpq_topk -- the COMPOSED IVF+PQ index.
 
     IVF half (verbatim from _ivf_ann_oracle, seed 'ivf'): centroid seeding +
@@ -409,6 +408,7 @@ def _ivfpq_ann_oracle(
     (asymmetric distance).  Every arithmetic step is the same IEEE sequence
     the engine computes, so values hash-match without tolerance.
     """
+    num_sub, num_codes = similarity.PQ_SUB, similarity.PQ_CODES
     sub = dim // num_sub
     hi = md5_int32_sql("CAST(vec_id AS VARCHAR)", "ivf")
     hp = md5_int32_sql("CAST(vec_id AS VARCHAR)", "pq")
@@ -484,7 +484,7 @@ WHERE rk <= {k}
 """
 
 
-@query("s5_ann_ivfpq_top5", bench=True, oracle=_ivfpq_ann_oracle(dim=64, num_cells=16, nprobe=4, num_sub=8, num_codes=16, k=5))
+@query("s5_ann_ivfpq_top5", bench=True, oracle=_ivfpq_ann_oracle(dim=64, num_cells=16, nprobe=4, k=5))
 def q_s5(spark: SparkSession, sf: str) -> DataFrame:
     """IVF+PQ composed ANN top-5 (similarity.ivfpq_topk): IVF bounds WHICH
     rows each query scores (probe 4/16 cells), PQ bounds WHAT is scored
@@ -499,14 +499,14 @@ def q_s5(spark: SparkSession, sf: str) -> DataFrame:
     return out.withColumn("nn_rank", F.col("nn_rank").cast("long"))
 
 
-def _refined_ann_oracle(k_cand: int = 20, k: int = 5) -> str:
+def _refined_ann_oracle() -> str:
     """DuckDB replay of similarity.refine_topk over ivfpq_topk candidates
-    (the s6 two-phase route): the composed-index replay proposes at
-    ``k_cand``, the exact brute-force cosine fragment decides ``k``."""
+    (the s6 two-phase route): the composed-index replay proposes 20, the
+    exact brute-force cosine fragment decides the top 5."""
     return f"""
             WITH cand AS (
               SELECT query_id, neighbor_id
-              FROM ({_ivfpq_ann_oracle(dim=64, num_cells=16, nprobe=4, num_sub=8, num_codes=16, k=k_cand)})),
+              FROM ({_ivfpq_ann_oracle(dim=64, num_cells=16, nprobe=4, k=20)})),
             s AS (
               SELECT cand.query_id, cand.neighbor_id,
                      {_cos_sql("q.embedding", "c.embedding")} AS cos
@@ -515,7 +515,7 @@ def _refined_ann_oracle(k_cand: int = 20, k: int = 5) -> str:
               JOIN embeddings c ON cand.neighbor_id = c.vec_id)
             SELECT query_id, neighbor_id, {_dmicro('cos')} AS cos_sim, CAST(rk AS BIGINT) AS nn_rank
             FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk FROM s)
-            WHERE rk <= {k}
+            WHERE rk <= 5
         """
 
 

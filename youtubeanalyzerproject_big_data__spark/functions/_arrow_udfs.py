@@ -76,11 +76,11 @@ def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _seq_dot_lit(a: np.ndarray, vec, offset: int = 0) -> np.ndarray:
+def _seq_dot_lit(a: np.ndarray, vec) -> np.ndarray:
     """Per-row exact sequential dot against a literal vector."""
     acc = np.zeros(a.shape[0], dtype=np.float64)
     for i, comp in enumerate(vec):
-        acc = acc + a[:, offset + i] * np.float64(comp)
+        acc = acc + a[:, i] * np.float64(comp)
     return acc
 
 

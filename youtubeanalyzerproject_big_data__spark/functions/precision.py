@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 # 100 TB row counts.
 DEC = "decimal(18,6)"
 
+# One micro: the six-decimal output scale of dec_avg, ratio_round and
+# their DuckDB twins contract/_sql._davg and dratio_sql.
+MICROS = 1_000_000
+
 
 def dec_sum_col(col: str | Column) -> Column:
     """Exact SUM of a double column as an UNALIASED double Column.
@@ -83,24 +87,24 @@ def dec_sum_round(col: str | Column, scale: int) -> Column:
     return rounded.cast("double") / F.lit(1_000_000.0)
 
 
-def dec_avg(col: str | Column, alias: str, scale: int = 6) -> Column:
-    """Deterministic AVG, HALF-UP at ``scale`` decimals via ALL-INTEGER
+def dec_avg(col: str | Column, alias: str) -> Column:
+    """Deterministic AVG, HALF-UP at six decimals via ALL-INTEGER
     arithmetic -- no double division anywhere near the rounding decision.
 
-    The old form (round(double(dec_sum)/count, scale)) diverged from the
+    The old form (round(double(dec_sum)/count, 6)) diverged from the
     DuckDB oracle on exact half cases: sum/count = x.xxxxxx5 makes Spark
     HALF_UP the double's full decimal expansion while DuckDB rounds the
-    10^scale-scaled double, and the two disagree by one last-digit ulp.
+    10^6-scaled double, and the two disagree by one last-digit ulp.
     Invisible at sf0.1; the sf1 replay hit it on its first run
     (e1 avg_value = 13911.3/320 = 43.4728125 exactly).
 
-    New recipe, exact at every step: s = the 10^scale-scaled decimal sum
+    New recipe, exact at every step: s = the 10^6-scaled decimal sum
     as int64; r = |s| mod n (exact JVM long op); the integer quotient
     (|s|-r)/n is recovered through DECIMAL division -- (|s|-r) is an exact
     multiple of n, the true quotient is an integer, and Spark evaluates
     decimal/decimal exactly before rounding to the result scale, so the
     long cast is bit-exact for every |s| that fits int64; the half-up
-    bump is the integer test 2r >= n.  The final avg = q/10^scale is one
+    bump is the integer test 2r >= n.  The final avg = q/10^6 is one
     exact double op both engines perform identically.
 
     (Historical: the first integer recipe recovered the quotient with
@@ -115,7 +119,7 @@ def dec_avg(col: str | Column, alias: str, scale: int = 6) -> Column:
     and ``%``.  Bounds: |scaled sum| must fit int64 (< 9.2e18).
     """
     c = F.col(col) if isinstance(col, str) else col
-    p = 10**scale
+    p = MICROS
     s = (F.sum(c.cast(DEC)) * p).cast("long")
     n = F.count(c)
     s_abs = F.abs(s)
@@ -125,8 +129,8 @@ def dec_avg(col: str | Column, alias: str, scale: int = 6) -> Column:
     return (F.when(s < 0, -q).otherwise(q).cast("double") / F.lit(float(p))).alias(alias)
 
 
-def ratio_round(num: str | Column, den: str | Column, alias: str | None = None, scale: int = 6) -> Column:
-    """HALF-UP rounding of an INTEGER ratio num/den at ``scale`` decimals,
+def ratio_round(num: str | Column, den: str | Column, alias: str | None = None) -> Column:
+    """HALF-UP rounding of an INTEGER ratio num/den at six decimals,
     decided on exact integers -- the per-row sibling of dec_avg.
 
     ``ROUND(num/den, 6)`` on the double quotient is input-fragile: when the
@@ -136,19 +140,19 @@ def ratio_round(num: str | Column, den: str | Column, alias: str | None = None, 
     scale-multiply round can split by one output ulp (probed: 10 divergent
     (p, q) pairs out of 2329 enumerated half-landing cases; the e1/q5 bug
     family).  Here the rounding decision is the integer floor
-    ((2*10^s*|num| + den) // (2*den)) -- floor(x + 1/2) of the exact
+    ((2*10^6*|num| + den) // (2*den)) -- floor(x + 1/2) of the exact
     rational -- with the exact-multiple division recovered through
     decimal(38,0) exactly as dec_avg (a double division silently breaks
-    past 2^53).  The final micros -> double /10^s materialization is
+    past 2^53).  The final micros -> double /10^6 materialization is
     IEEE-correctly-rounded in both engines.
 
-    Requires den > 0 and |num/den|*10^s < 9.2e18 (the QUOTIENT must fit
-    int64; the intermediate 2*10^s*|num| is computed in decimal(38,0), so
+    Requires den > 0 and |num/den|*10^6 < 9.2e18 (the QUOTIENT must fit
+    int64; the intermediate 2*10^6*|num| is computed in decimal(38,0), so
     there is NO int64 bound on num itself -- the first long-space draft
     overflowed on i1's group-sum micros, 2e6 * 1e15).  SQL twin:
     ``precision.dratio_sql`` (HUGEINT intermediates).
     """
-    p = 10**scale
+    p = MICROS
     nm = (F.col(num) if isinstance(num, str) else num).cast("long")
     dn = (F.col(den) if isinstance(den, str) else den).cast("long")
     dec38 = "decimal(38,0)"
@@ -178,13 +182,13 @@ def micro_round(col: str | Column, alias: str | None = None, scale: int = 6) -> 
     return out.alias(alias) if alias else out
 
 
-def dratio_sql(num: str, den: str, scale: int = 6) -> str:
+def dratio_sql(num: str, den: str) -> str:
     """DuckDB twin of ratio_round -- ALL-INTEGER half-up of an integer
     ratio (HUGEINT intermediates mirror the Spark side's decimal(38,0), so
     group-sum-micro numerators never overflow; // and % are exact; requires
     den > 0).  Lives here (not in contract/_sql) so tools/segmented_oracle.py
     shares the one definition, same pattern as hashing.md5_int32_lane_sql."""
-    p = 10**scale
+    p = MICROS
     t = f"(CAST({2 * p} AS HUGEINT) * ABS(CAST({num} AS HUGEINT)) + CAST({den} AS HUGEINT))"
     d2 = f"(2 * CAST({den} AS HUGEINT))"
     q = f"CAST(({t} - {t} % {d2}) // {d2} AS BIGINT)"

@@ -85,7 +85,6 @@ def temperature_mix_sample(
     stratum_col: str,
     weight_col: str,
     total_budget: int,
-    temperature: float = 2.0,
     seed: int | str = 0,
 ) -> DataFrame:
     """Temperature-flattened source mixture -- the multinomial data-mixing
@@ -96,9 +95,9 @@ def temperature_mix_sample(
     mass_s), membership by the deterministic md5 predicate (same contract
     as hash_sample: a pure function of key+seed).
 
-    Cross-engine exactness: only T = 2 (exponent 0.5) ships -- sqrt is
-    IEEE correctly-rounded on every engine while pow is not, so other
-    temperatures are rejected rather than carrying a silent ulp risk.
+    Cross-engine exactness: T is fixed at 2 (exponent 0.5) -- sqrt is
+    IEEE correctly-rounded on every engine while pow is not, and a pow ulp
+    could flip a floor-quantized rate.
     The arithmetic is then all-integer: q_s = floor(sqrt(mass_s) * 1e6)
     (one rounded multiply, identical sequence in DuckDB), Q = sum q_s
     (integer, order-free), rate_ppm_s = min(1e6, (B * q_s * 1e6) //
@@ -111,11 +110,6 @@ def temperature_mix_sample(
     """
     import math
 
-    if temperature != 2.0:
-        raise ValueError(
-            f"temperature={temperature!r}: only 2.0 ships (sqrt is correctly-rounded IEEE "
-            "on every engine; pow is not, and a pow ulp could flip a floor-quantized rate)"
-        )
     denominator = 1_000_000
     totals = df.groupBy(stratum_col).agg(F.sum(F.col(weight_col)).alias("_t")).collect()
     mass = {row[stratum_col]: int(row["_t"]) for row in totals}
@@ -260,9 +254,7 @@ def stratified_hash_sample(df: DataFrame, key_col: str, stratum_col: str, fracti
     return df.where(pred)
 
 
-def training_shuffle(
-    df: DataFrame, id_col: str, n_shards: int = 8, seed: int | str = 0, bucket_hex: int = 2
-) -> DataFrame:
+def training_shuffle(df: DataFrame, id_col: str, n_shards: int = 8, seed: int | str = 0) -> DataFrame:
     """Deterministic global training-order shuffle + round-robin sharding:
     every document gets a position in an md5-seeded permutation of the
     corpus and a shard assignment -- the randomize-then-shard step before
@@ -273,11 +265,11 @@ def training_shuffle(
     pack_sequences (a naive ``row_number() over (order by key)`` funnels
     100 TB through ONE reducer):
 
-    1. bucket = first ``bucket_hex`` hex chars of the md5 key -- 16^k
-       contiguous KEY ranges, uniformly sized because md5 is uniform; each
-       is a parallel window partition for the local rank (raise
-       ``bucket_hex`` as the corpus grows: 2 -> 256 reducers, 4 -> 65k);
-    2. per-bucket counts get the only serial cumsum, over 16^k rows;
+    1. bucket = first 2 hex chars of the md5 key -- 256 contiguous KEY
+       ranges, uniformly sized because md5 is uniform; each is a parallel
+       window partition for the local rank (4 chars would give 65k as the
+       corpus grows);
+    2. per-bucket counts get the only serial cumsum, over 256 rows;
     3. offsets broadcast back; global rank = offset + local rank, map-side.
 
     Round-robin (``rank % n_shards``) keeps shard sizes balanced to +/-1
@@ -288,7 +280,7 @@ def training_shuffle(
 
     key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
     d = df.select(F.col(id_col).alias("doc_id")).withColumn("_key", key).withColumn(
-        "_bucket", F.substring("_key", 1, bucket_hex)
+        "_bucket", F.substring("_key", 1, 2)
     )
     # _bucket is a PREFIX of _key, so (bucket asc, key asc) == global key order.
     w_local = Window.partitionBy("_bucket").orderBy("_key", "doc_id")
@@ -312,14 +304,7 @@ def training_shuffle(
     )
 
 
-def leakage_safe_split(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    val_pct: int = 1,
-    test_pct: int = 1,
-    seed: int | str = "split",
-) -> DataFrame:
+def leakage_safe_split(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Train/val/test split that can NEVER leak duplicates across splits:
     the split key is the md5 of the NORMALIZED TEXT (the exact-dup group
     key from dedup.exact_duplicates), not the row id, so every member of
@@ -329,9 +314,8 @@ def leakage_safe_split(
     "Deduplicating Training Data Makes Language Models Better" eval-leak
     finding.
 
-    Buckets: md5(seed:text_key) % 10 -> val takes the first ``val_pct``
-    buckets, test the next ``test_pct``, train the rest (percentages in
-    tenths).  Deterministic and engine-replayable like every md5 sample
+    Buckets: md5("split":text_key) % 10 -> val takes bucket 0, test
+    bucket 1, train the rest.  Deterministic and engine-replayable like every md5 sample
     here.
 
     Output: one row per split (split, n_docs, n_groups, n_tokens) plus
@@ -346,10 +330,10 @@ def leakage_safe_split(
     from youtubeanalyzerproject_big_data__spark.functions.textfns import normalize, token_count
 
     key = F.md5(normalize(F.col(text_col)))
-    bucket = md5_int32(key, seed) % 10
+    bucket = md5_int32(key, "split") % 10
     split = (
-        F.when(bucket < val_pct, F.lit("val"))
-        .when(bucket < val_pct + test_pct, F.lit("test"))
+        F.when(bucket < 1, F.lit("val"))
+        .when(bucket < 2, F.lit("test"))
         .otherwise(F.lit("train"))
     )
     base = df.select(

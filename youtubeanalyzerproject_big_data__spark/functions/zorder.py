@@ -52,7 +52,7 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> Column:
     return interleave_bits(qs, bits)
 
 
-def hilbert_key_2d(df: DataFrame, qx: Column, qy: Column, bits: int = 8, out_name: str = "hkey") -> DataFrame:
+def hilbert_key_2d(df: DataFrame, qx: Column, qy: Column, bits: int = 8) -> DataFrame:
     """Hilbert-curve key for two quantized columns (cells in [0, 2^bits)):
     the locality-preserving successor to the Morton key -- consecutive
     Hilbert keys are ALWAYS grid neighbors (no Z-shape jumps), so range
@@ -66,7 +66,7 @@ def hilbert_key_2d(df: DataFrame, qx: Column, qy: Column, bits: int = 8, out_nam
     arithmetic inside whole-stage codegen, engine-exact, and mirrored
     step-for-step by :func:`hilbert_sql_2d` for the oracle.
 
-    Takes and returns a DATAFRAME (adds ``out_name``, drops scratch):
+    Takes and returns a DATAFRAME (adds ``hkey``, drops scratch):
     each level materializes named columns, keeping the expression tree
     LINEAR in ``bits`` -- a pure column-expression fold re-inlines x/y at
     every level and grows the tree exponentially (a driver OOM at
@@ -93,10 +93,10 @@ def hilbert_key_2d(df: DataFrame, qx: Column, qy: Column, bits: int = 8, out_nam
                 "_hy": F.when(ry == 0, xr).otherwise(yr),
             }
         )
-    return cur.withColumn(out_name, F.col("_hd")).drop("_hx", "_hy", "_hd")
+    return cur.withColumn("hkey", F.col("_hd")).drop("_hx", "_hy", "_hd")
 
 
-def hilbert_sql_2d(base_sql: str, id_cols: str, bits: int = 8, out_name: str = "hkey") -> str:
+def hilbert_sql_2d(base_sql: str, id_cols: str, bits: int = 8) -> str:
     """DuckDB twin of :func:`hilbert_key_2d`: wraps ``base_sql`` (which
     must expose ``id_cols``, ``qx`` and ``qy``) in one derived table per
     level, replaying the identical fold.  (DuckDB's ``^`` is POWER, hence
@@ -118,7 +118,7 @@ def hilbert_sql_2d(base_sql: str, id_cols: str, bits: int = 8, out_name: str = "
             f"hd + {s * s} * xor(3 * {rx}, {ry}) AS hd "
             f"FROM ({sql})"
         )
-    return f"SELECT {id_cols}, CAST(hd AS BIGINT) AS {out_name} FROM ({sql})"
+    return f"SELECT {id_cols}, CAST(hd AS BIGINT) AS hkey FROM ({sql})"
 
 
 def zonemap_skip_report(
@@ -128,7 +128,6 @@ def zonemap_skip_report(
     probe_lo: float,
     probe_hi: float,
     rows_per_zone: int = 1000,
-    n_buckets: int = 1024,
 ) -> DataFrame:
     """Zone-map effectiveness audit: lay the table out in ``sort_key``
     order, cut it into fixed-size zones (the logical stand-in for files /
@@ -142,7 +141,7 @@ def zonemap_skip_report(
     not physical files, so the report is deterministic and engine-exact.
     The global rank follows the c5/c7 distributed-prefix-sum discipline --
     never a single-reducer window: rows bucket by an order-preserving
-    integer prefix of the sort key ((sk - min) DIV span over ``n_buckets``
+    integer prefix of the sort key ((sk - min) DIV span over 1024
     spans, from one 2-scalar min/max collect), rank locally per bucket,
     and offset by the model-sized exclusive prefix sum of bucket counts
     (broadcast back).  Zone stats depend only on the sorted multiset of
@@ -158,11 +157,11 @@ def zonemap_skip_report(
             "n_rows long, n_zones long, n_zones_hit long, n_zones_skipped long, skip_ppm long",
         )
     lo, hi = int(row["lo"]), int(row["hi"])
-    span = max(1, (hi - lo) // n_buckets + 1)
+    span = max(1, (hi - lo) // 1024 + 1)
     d = keyed.withColumn("_bucket", F.expr(f"(_sk - {lo}) DIV {span}"))
     w_local = Window.partitionBy("_bucket").orderBy("_sk", "_p")
     local = d.withColumn("_lr", F.row_number().over(w_local) - 1)
-    # exclusive prefix sum over <= n_buckets rows (model-sized); constant-
+    # exclusive prefix sum over <= 1024 rows (model-sized); constant-
     # valued pmod partition keeps WindowExec's warning out (sk3 rule)
     w_buckets = (
         Window.partitionBy(F.pmod(F.col("_bucket"), F.lit(1)))

@@ -67,14 +67,14 @@ VIEW_BUCKETS: list[tuple[float, str]] = [
 VIEW_DEFAULT = "e_ge1m"
 
 
-def category_stats_job(videos: DataFrame, limit: int = 50) -> DataFrame:
+def category_stats_job(videos: DataFrame) -> DataFrame:
     """A1 (run_netagg_job.py:75-97): per-category count/avg/max views +
     avg length + avg rating, biggest categories first, top-50."""
     return (
         agg.category_stats(videos, "category", "views", extra_avgs={"length": "avg_length", "rate": "avg_rating"})
         .withColumnRenamed("num_rows", "num_videos")
         .drop("min_views")
-        .limit(limit)
+        .limit(50)
     )
 
 
@@ -108,14 +108,20 @@ def degree_stats_job(videos: DataFrame) -> DataFrame:
     return joins.left_join_fill_zero(both, in_deg, "id", ["in_degree"])
 
 
-def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> DataFrame:
+# run_pagerank_job.py's densification threshold (videos with at least this
+# many related ids) and the number of influencers it keeps.
+PAGERANK_MIN_RELATED = 5
+PAGERANK_TOP_N = 500
+
+
+def pagerank_job(videos: DataFrame) -> DataFrame:
     """run_pagerank_job.py end-to-end: densify -> edges -> PageRank(0.15, 10)
     -> top-N -> uploader enrichment via broadcast join (replaces the
     reference's per-row find_one loop, run_pagerank_job.py:124-140)."""
     videos = data_sized(videos)
-    dense = graph.densify(videos, "related", min_related)
+    dense = graph.densify(videos, "related", PAGERANK_MIN_RELATED)
     edges = graph.edges_from_arrays(dense, "video_id", "related")
-    top = graph.top_influencers(graph.pagerank(edges, reset_prob=0.15, max_iter=10), top_n)
+    top = graph.top_influencers(graph.pagerank(edges, reset_prob=0.15, max_iter=10), PAGERANK_TOP_N)
     dim = videos.select(F.col("video_id").alias("id"), "uploader")
     return (
         joins.enrich_broadcast(top, dim, "id")
@@ -124,7 +130,7 @@ def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> D
     )
 
 
-def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> DataFrame:
+def als_recs_job(videos: DataFrame) -> DataFrame:
     """run_alsrecs_job.py end-to-end: the uploader 'rates' their own videos
     with the video's average rate (SURVEY.md par.1.4 semantic quirk,
     preserved); 10% Bernoulli sample seed 42; 500 users x 5 recs.  A
@@ -136,7 +142,7 @@ def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> Data
     if ratings.isEmpty():  # ALS cannot fit zero ratings: no user gets a recommendation
         return ratings.select("user_idx", "user_label", F.array("item_label").alias("recommendations"))
     model = recommend.train_als(ratings, max_iter=10, reg_param=0.1, rank=10, seed=42)
-    return recommend.recommend_for_users(model, ratings, n_users=n_users, n_recs=n_recs)
+    return recommend.recommend_for_users(model, ratings, n_users=500, n_recs=5)
 
 
 # The reference's seven JSON caches (run_netagg_job.py:198-221,

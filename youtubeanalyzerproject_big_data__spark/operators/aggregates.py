@@ -90,31 +90,18 @@ def global_stats(df: DataFrame, value_col: str) -> DataFrame:
     )
 
 
-def grouped_percentiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    percentiles=(0.25, 0.5, 0.75, 0.9),
-    approx: bool = False,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Per-group percentiles (A3 generalized): one hash aggregate.
+def grouped_percentiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Per-group p25/p50/p75/p90 (A3 generalized): one hash aggregate.
 
-    ``approx=False`` (default): Spark's exact ``percentile`` buffers each
-    group's values on the reducer -- fine for bounded group sizes, a
-    memory bomb for billion-row groups.  ``approx=True`` is the 100 TB
-    path: ``percentile_approx`` (GK sketch) holds O(accuracy) state per
-    group regardless of group size, with rank error <= 1/accuracy.  Same
-    output shape either way; the a16 gate query machine-checks the approx
-    variant's rank-window guarantee against the exact form."""
+    Spark's exact ``percentile`` buffers each group's values on the
+    reducer -- fine for bounded group sizes, a memory bomb for billion-row
+    groups, where ``percentile_approx`` (GK sketch, O(accuracy) state per
+    group) is the plan; the a17 gate query machine-checks that sketch's
+    rank-window guarantee against the exact form."""
     c = F.col(value_col)
-    if approx:
-        pctl = lambda p: F.percentile_approx(c, p, F.lit(accuracy))  # noqa: E731
-    else:
-        pctl = lambda p: F.percentile(c, p)  # noqa: E731
     return df.groupBy(group_col).agg(
         F.count(c).alias("cnt"),
-        *[micro_round(pctl(p), f"p{int(p * 100)}", scale=4) for p in percentiles],
+        *[micro_round(F.percentile(c, p), f"p{int(p * 100)}", scale=4) for p in (0.25, 0.5, 0.75, 0.9)],
     )
 
 
@@ -277,7 +264,7 @@ def robust_group_stats(df: DataFrame, group_col: str, value_col: str) -> DataFra
     broadcast back once more for the outlier count.  Every broadcast is
     model-sized; the data shuffles only into hash aggregates.  Reducer
     state is bounded by group size (grouped_percentiles' exact-percentile
-    caveat; its GK approx route generalizes identically at 100 TB).
+    caveat; a GK sketch generalizes identically at 100 TB).
 
     Returns (group, cnt, median_v, mad, n_outliers); the cut line uses
     the UNROUNDED MAD on both engines, outputs round at 6.
@@ -313,8 +300,6 @@ def rfm_segments(
     cust_col: str,
     date_col: str,
     amount_col: str,
-    approx: bool = False,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """RFM customer segmentation (Hughes 1994, the classic marketing
     quartile scheme): per customer recency (days since last order, vs the
@@ -329,10 +314,8 @@ def rfm_segments(
     score comparisons are therefore engine-exact, no float thresholds.
 
     Scale: one customer-grid shuffle (map-side combined), then a 9-scalar
-    cutpoint aggregate (``approx=True`` switches it to the GK sketch --
-    the billion-customer path, same shape as grouped_percentiles), then
-    map-side scoring + one segment-sized aggregate.  The only collect is
-    the 9 cutpoints.
+    exact-percentile cutpoint aggregate, then map-side scoring + one
+    segment-sized aggregate.  The only collect is the 9 cutpoints.
     """
     us_day = 86_400_000_000
     rfm = orders.groupBy(F.col(cust_col).alias("custkey")).agg(
@@ -344,10 +327,7 @@ def rfm_segments(
     )
     gmax = rfm.agg(F.max("last_us")).collect()[0][0]  # scalar
     rfm = rfm.withColumn("rec_days", ((F.lit(int(gmax)) - F.col("last_us")) / F.lit(us_day)).cast("long")).cache()
-    if approx:
-        pctl = lambda c: F.percentile_approx(F.col(c), [0.25, 0.5, 0.75], F.lit(accuracy))  # noqa: E731
-    else:
-        pctl = lambda c: F.percentile(F.col(c), [0.25, 0.5, 0.75])  # noqa: E731
+    pctl = lambda c: F.percentile(F.col(c), [0.25, 0.5, 0.75])  # noqa: E731
     cuts = rfm.agg(
         pctl("rec_days").alias("r"), pctl("frequency").alias("f"), pctl("mon_micros").alias("m")
     ).collect()[0]

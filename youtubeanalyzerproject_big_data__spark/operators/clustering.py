@@ -15,7 +15,7 @@ similarity.label_centroids):
   * centroid updates integer-quantize each element (floor(val * 1e6)),
     sum as int64 (exact in any order), and divide back with one
     correctly-rounded IEEE division;
-  * seed centroids are the k vectors of smallest (md5_int32(id, seed), id)
+  * seed centroids are the k vectors of smallest (md5_int32(id, "km"), id)
     -- rebuildable from the table by any engine.
 So the km1 DuckDB oracle replays every iteration bit-exactly.
 
@@ -76,7 +76,6 @@ def kmeans_lloyd(
     dim: int,
     k: int = 8,
     iters: int = 2,
-    hash_seed: str = "km",
     use_arrow: bool = True,
 ) -> DataFrame:
     """``iters`` Lloyd iterations; returns the final centroid grid.
@@ -88,7 +87,7 @@ def kmeans_lloyd(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    base, cents = _lloyd_final_cents(emb, id_col, vec_col, dim, k, iters, hash_seed, use_arrow)
+    base, cents = _lloyd_final_cents(emb, id_col, vec_col, dim, k, iters, use_arrow)
     assigned = _assign(base, "v", cents, use_arrow=use_arrow)
     grid = _update_grid(assigned, "v")
     return grid.select(
@@ -106,7 +105,6 @@ def _lloyd_final_cents(
     dim: int,
     k: int,
     iters: int,
-    hash_seed: str,
     use_arrow: bool,
 ):
     """Seed + the first ``iters - 1`` Lloyd updates: returns (base, cents)
@@ -116,7 +114,7 @@ def _lloyd_final_cents(
     EXACTLY km1's cells (same seeds, same trajectory, same arithmetic)."""
     seeds = (
         emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("h", md5_int32(F.col("id").cast("string"), seed=hash_seed))
+        .withColumn("h", md5_int32(F.col("id").cast("string"), seed="km"))
         .orderBy("h", "id")
         .limit(k)
         .collect()
@@ -140,8 +138,6 @@ def kmeans_assign_final(
     dim: int,
     k: int = 8,
     iters: int = 2,
-    hash_seed: str = "km",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id, v, cell): every vector's cell under the centroids entering the
     last Lloyd iteration -- the member lists behind kmeans_lloyd's
@@ -149,5 +145,5 @@ def kmeans_assign_final(
     dedup's within-cell pairing, dedup.semantic_dedup_flags)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    base, cents = _lloyd_final_cents(emb, id_col, vec_col, dim, k, iters, hash_seed, use_arrow)
-    return _assign(base, "v", cents, use_arrow=use_arrow).select("id", "v", F.col("cell").cast("int").alias("cell"))
+    base, cents = _lloyd_final_cents(emb, id_col, vec_col, dim, k, iters, use_arrow=True)
+    return _assign(base, "v", cents, use_arrow=True).select("id", "v", F.col("cell").cast("int").alias("cell"))

@@ -39,6 +39,13 @@ from youtubeanalyzerproject_big_data__spark.session import pin
 # uncapped hot keys are quadratic time bombs at corpus scale.
 DEFAULT_MAX_DF = 1000  # docs per shingle before it's treated as a stop-shingle
 DEFAULT_MAX_BUCKET = 2000  # docs per LSH band bucket before the bucket is dropped
+# sorted_neighborhood_pairs (oracle d14): sort-key prefix chars, compared
+# head chars, neighbors window, distance cut, rank-bucket prefix chars.
+SNM_KEY_LEN = 24
+SNM_COMPARE_LEN = 64
+SNM_WINDOW = 4
+SNM_MAX_DISTANCE = 10
+SNM_BUCKET_CHARS = 2
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -655,12 +662,10 @@ def simhash_pairs(
     )
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95, num_blocks: int = 4
-) -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup pairs (id1 < id2, cosine >= threshold).
 
-    Exact all-pairs via BLOCK matrix product: rows hash into ``num_blocks``
+    Exact all-pairs via BLOCK matrix product: rows hash into num_blocks = 4
     blocks; every unordered block pair (g1 <= g2) becomes one applyInPandas
     group whose task runs a single float64 GEMM over the two blocks.  Each
     row is replicated num_blocks times (the standard all-pairs-similarity
@@ -673,6 +678,7 @@ def embedding_near_dup_pairs(
     import numpy as np
     import pandas as pd
 
+    num_blocks = 4
     id_type = dict(emb.dtypes)[id_col]
     blocked = emb.select(
         F.col(id_col).alias("id"),
@@ -720,9 +726,6 @@ def embedding_near_dup_pairs_lsh(
     vec_col: str,
     threshold: float = 0.95,
     dim: int = 64,
-    num_planes: int = 16,
-    bands: int = 4,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Embedding near-dup pairs via hyperplane-LSH bucketing -- the
     SUB-QUADRATIC scale path (embedding_near_dup_pairs is the exact
@@ -731,35 +734,20 @@ def embedding_near_dup_pairs_lsh(
     Candidates are id pairs sharing any band of their md5-derived
     hyperplane signature (similarity._hyperplane_signature -- deterministic,
     oracle-replayable); only candidates are cosine-verified, so total work
-    is O(n * bucket_occupancy), and ``max_bucket`` caps degenerate buckets
-    exactly like the MinHash banding path.  Recall follows the LSH
+    is O(n * bucket_occupancy), and DEFAULT_MAX_BUCKET caps degenerate
+    buckets exactly like the MinHash banding path.  Recall follows the LSH
     collision curve: pairs above threshold missing from every shared band
     are missed (the trade for sub-quadratic candidates).
     Returns (id1, id2, cos_sim) with id1 < id2.
     """
     from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_cosine_seq
-    from youtubeanalyzerproject_big_data__spark.operators.similarity import _hyperplane_signature
+    from youtubeanalyzerproject_big_data__spark.operators.similarity import _hyperplane_signature, _lsh_bands
 
-    bits_per_band = num_planes // bands
-    mask = (1 << bits_per_band) - 1
     sigd = emb.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v")).withColumn(
-        "sig", _hyperplane_signature("v", dim, num_planes)
+        "sig", _hyperplane_signature("v", dim)
     )
-    banded = sigd.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sig"), b * bits_per_band).bitwiseAND(F.lit(mask)).alias("bval"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bval")
-    candidates = _pairs_from_groups(banded, ["band", "bval"], max_group=max_bucket)
+    banded = sigd.select("doc_id", F.explode(_lsh_bands(F.col("sig"))).alias("bk")).select("doc_id", "bk.band", "bk.bval")
+    candidates = _pairs_from_groups(banded, ["band", "bval"], max_group=DEFAULT_MAX_BUCKET)
     vecs = sigd.select("doc_id", "v")
     return (
         candidates.join(vecs.select(F.col("doc_id").alias("doc1"), F.col("v").alias("v1")), "doc1")
@@ -778,8 +766,6 @@ def semantic_dedup_flags(
     k: int = 8,
     iters: int = 2,
     threshold: float = 0.95,
-    max_cell: int | None = DEFAULT_MAX_BUCKET,
-    hash_seed: str = "km",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     k-means partitions the embedding space, then near-duplicates are pruned
@@ -793,8 +779,8 @@ def semantic_dedup_flags(
     int key; AQE splits a skewed cell's join), scored with the exact-
     sequential cosine kernel, and a doc is DROPPED iff some smaller-id doc
     in its cell is cosine->= ``threshold`` (deterministic representative:
-    smallest id wins, the d1/c1 convention).  ``max_cell`` caps degenerate
-    cells like the LSH ``max_bucket``: an over-cap cell skips pair
+    smallest id wins, the d1/c1 convention).  DEFAULT_MAX_BUCKET caps
+    degenerate cells like the LSH buckets: an over-cap cell skips pair
     generation entirely (all its docs kept) rather than running an
     unbounded quadratic task -- mirrored in the oracle.
 
@@ -803,14 +789,13 @@ def semantic_dedup_flags(
     from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_cosine_seq
     from youtubeanalyzerproject_big_data__spark.operators.clustering import kmeans_assign_final
 
-    assigned = kmeans_assign_final(emb, id_col, vec_col, dim, k=k, iters=iters, hash_seed=hash_seed)
+    assigned = kmeans_assign_final(emb, id_col, vec_col, dim, k=k, iters=iters)
     # Pin the assignment once: the self-join reads it twice and the final
     # left join a third time; recomputing would re-run the Lloyd trajectory.
     assigned = pin(assigned)
-    members = assigned.select("cell", "id", "v")
-    if max_cell is not None:
-        sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
-        members = members.join(F.broadcast(sizes.where(F.col("_n") <= max_cell).select("cell")), "cell")
+    sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
+    capped = sizes.where(F.col("_n") <= DEFAULT_MAX_BUCKET).select("cell")
+    members = assigned.select("cell", "id", "v").join(F.broadcast(capped), "cell")
     pairs = (
         members.alias("a")
         .join(members.alias("b"), (F.col("a.cell") == F.col("b.cell")) & (F.col("a.id") < F.col("b.id")))
@@ -836,7 +821,6 @@ def cross_corpus_near_dups(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    max_df: int | None = DEFAULT_MAX_DF,
 ) -> DataFrame:
     """Near-dups of an INCOMING batch against an EXISTING corpus -- the
     incremental-ingestion contamination/dedup filter (drop new documents
@@ -846,7 +830,7 @@ def cross_corpus_near_dups(
     corpus-side shingles on the hash, so within-side pairs are never
     generated, and the shuffle keys are 8-byte hashes.  With shingles
     distinct per doc, pair multiplicity equals the intersection size.
-    ``max_df`` is the stop-shingle cut over the COMBINED corpus (both
+    DEFAULT_MAX_DF is the stop-shingle cut over the COMBINED corpus (both
     sides): a boilerplate shingle on both sides explodes the cross join
     quadratically; denominators stay exact, same trade-off as
     ngram_jaccard_pairs.  Returns (new_id, corpus_id, jaccard).
@@ -855,19 +839,16 @@ def cross_corpus_near_dups(
     sh_old = _hashed_shingles(corpus_docs, id_col, text_col, n).cache()
     n_new = sh_new.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n1"))
     n_old = sh_old.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n2"))
-    sh_new_j = sh_new.select(F.col("doc_id").alias("new_id"), "sh")
-    sh_old_j = sh_old.select(F.col("doc_id").alias("corpus_id"), "sh")
-    if max_df is not None:
-        ok = (
-            sh_new.select("sh")
-            .unionAll(sh_old.select("sh"))
-            .groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("dfc"))
-            .where(F.col("dfc") <= max_df)
-            .select("sh")
-        )
-        sh_new_j = sh_new_j.join(ok, "sh", "left_semi")
-        sh_old_j = sh_old_j.join(ok, "sh", "left_semi")
+    ok = (
+        sh_new.select("sh")
+        .unionAll(sh_old.select("sh"))
+        .groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("dfc"))
+        .where(F.col("dfc") <= DEFAULT_MAX_DF)
+        .select("sh")
+    )
+    sh_new_j = sh_new.select(F.col("doc_id").alias("new_id"), "sh").join(ok, "sh", "left_semi")
+    sh_old_j = sh_old.select(F.col("doc_id").alias("corpus_id"), "sh").join(ok, "sh", "left_semi")
     inter = (
         sh_new_j.join(sh_old_j, "sh")
         .groupBy("new_id", "corpus_id")
@@ -1147,7 +1128,6 @@ def containment_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.9,
-    max_df: int | None = DEFAULT_MAX_DF,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: shingle containment
     C(A in B) = |A & B| / |A| >= threshold -- catches quotes, excerpts,
@@ -1159,7 +1139,7 @@ def containment_pairs(
     Same inverted-index engine as ngram_jaccard_pairs (one
     groupBy(shingle) pair expansion over DISTINCT CONTENTS -- see
     _capped_intersections for the exact-duplicate collapse -- multiplicity =
-    intersection, max_df stop-shingle cut mirrored by the oracle); emits
+    intersection, DEFAULT_MAX_DF stop-shingle cut mirrored by the oracle); emits
     BOTH directions of a qualifying pair separately since containment is
     directional: (contained_id, container_id, containment).
     """
@@ -1172,7 +1152,7 @@ def containment_pairs(
         id_col,
         text_col,
         n,
-        max_df,
+        DEFAULT_MAX_DF,
         pair_filter=lambda c, n1, n2: ratio_round(c, F.least(n1, n2)) >= threshold,
     )
     fwd = both.select(
@@ -1189,50 +1169,41 @@ def containment_pairs(
     return pin(fwd.unionByName(rev).where(F.col("containment") >= threshold), *handles)
 
 
-def edit_distance_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    prefix_len: int = 16,
-    compare_len: int = 64,
-    max_distance: int = 10,
-    max_block: int = 64,
-) -> DataFrame:
+def edit_distance_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Edit-distance near-dup pairs with prefix blocking: documents whose
-    normalized texts share a ``prefix_len``-char prefix are compared by
-    Levenshtein distance over their first ``compare_len`` chars -- the
+    normalized texts share a 16-char prefix are compared by
+    Levenshtein distance over their first 64 chars -- the
     short-text/title dedup route (shingle methods need enough tokens to
     shingle; edit distance catches single-character typo dups they
     miss).  Both engines ship the identical classic Levenshtein, so
     distances are exact ints.
 
     Scale levers (same shape as d2/d3): blocking caps candidate
-    generation (only same-prefix docs pair); ``max_block`` drops
+    generation (only same-prefix docs pair); a 64-doc cap drops
     degenerate prefix groups (boilerplate openings) the way max_df drops
-    stop-shingles -- mirrored by the oracle; ``compare_len`` bounds the
+    stop-shingles -- mirrored by the oracle; the 64-char head bounds the
     O(n*m) per-pair DP.  Pair expansion is the one-groupBy in-array form,
     never a self-join.
 
-    Returns (doc1, doc2, edit_distance), doc1 < doc2, distance <=
-    ``max_distance``.
+    Returns (doc1, doc2, edit_distance), doc1 < doc2, distance <= 10.
     """
     norm = normalize(F.col(text_col))
     keyed = df.select(
         F.col(id_col).alias("doc_id"),
-        F.substring(norm, 1, prefix_len).alias("blk"),
-        F.substring(norm, 1, compare_len).alias("head"),
-    ).where(F.length("blk") >= prefix_len)
+        F.substring(norm, 1, 16).alias("blk"),
+        F.substring(norm, 1, 64).alias("head"),
+    ).where(F.length("blk") >= 16)
     groups = (
         keyed.groupBy("blk")
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "head"))).alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_block))
+        .where((F.size("ds") >= 2) & (F.size("ds") <= 64))
     )
     pairs = groups.select(F.explode(_ordered_pairs_structs(F.col("ds"))).alias("p")).select(
         F.col("p.d1.doc_id").alias("doc1"),
         F.col("p.d2.doc_id").alias("doc2"),
         F.levenshtein(F.col("p.d1.head"), F.col("p.d2.head")).alias("edit_distance"),
     )
-    return pairs.where(F.col("edit_distance") <= max_distance)
+    return pairs.where(F.col("edit_distance") <= 10)
 
 
 def _ordered_pairs_structs(arr):
@@ -1305,30 +1276,21 @@ def contamination_report(
     )
 
 
-def sorted_neighborhood_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    key_len: int = 24,
-    compare_len: int = 64,
-    window: int = 4,
-    max_distance: int = 10,
-    bucket_chars: int = 2,
-) -> DataFrame:
+def sorted_neighborhood_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Sorted-neighborhood near-dup pairs (Hernandez & Stolfo's SNM, the
     classic alternative to hash blocking): sort the corpus by a sorting
-    key (the ``key_len``-char normalized-text prefix), then compare each
-    document ONLY with its next ``window - 1`` neighbors in that order.
+    key (the SNM_KEY_LEN-char normalized-text prefix), then compare each
+    document ONLY with its next SNM_WINDOW - 1 neighbors in that order.
     Unlike prefix blocking (edit_distance_pairs), SNM pairs documents
     ACROSS block boundaries (two docs adjacent in sort order but
-    differing inside the first ``key_len`` chars still meet) and has no
+    differing inside the first SNM_KEY_LEN chars still meet) and has no
     degenerate-block blowup: candidate count is exactly
     (window - 1) * n no matter how skewed the key distribution is.
 
     Scale shape: the naive ``row_number() OVER (ORDER BY key)`` global
     rank funnels the corpus through one reducer, so the rank is the
     training_shuffle two-level form (functions/sampling.py): bucket =
-    first ``bucket_chars`` chars of the sort key (a PREFIX, so
+    first SNM_BUCKET_CHARS chars of the sort key (a PREFIX, so
     (bucket, key) order == global key order), per-bucket parallel
     row_number, bucket counts cumsum'd serially (bucket-count-sized),
     offsets broadcast back.  Text-prefix buckets are skewed where md5
@@ -1339,17 +1301,17 @@ def sorted_neighborhood_pairs(
     and never a window over the full corpus.
 
     Returns (doc1, doc2, edit_distance) with doc1 < doc2 and distance
-    (over ``compare_len``-char heads) <= ``max_distance``.
+    (over SNM_COMPARE_LEN-char heads) <= SNM_MAX_DISTANCE.
     """
     from pyspark.sql import Window
 
     norm = normalize(F.col(text_col))
     keyed = df.select(
         F.col(id_col).alias("doc_id"),
-        F.substring(norm, 1, key_len).alias("sk"),
-        F.substring(norm, 1, compare_len).alias("head"),
-    ).where(F.length("sk") >= key_len)
-    keyed = keyed.withColumn("_bucket", F.substring("sk", 1, bucket_chars))
+        F.substring(norm, 1, SNM_KEY_LEN).alias("sk"),
+        F.substring(norm, 1, SNM_COMPARE_LEN).alias("head"),
+    ).where(F.length("sk") >= SNM_KEY_LEN)
+    keyed = keyed.withColumn("_bucket", F.substring("sk", 1, SNM_BUCKET_CHARS))
     w_local = Window.partitionBy("_bucket").orderBy("sk", "doc_id")
     local = keyed.withColumn("_local", F.row_number().over(w_local))
     w_buckets = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
@@ -1368,11 +1330,11 @@ def sorted_neighborhood_pairs(
         F.col("rn").alias("rn_l"),
         F.col("doc_id").alias("id_l"),
         F.col("head").alias("head_l"),
-        F.explode(F.array(*[F.lit(o) for o in range(1, window)])).alias("_o"),
+        F.explode(F.array(*[F.lit(o) for o in range(1, SNM_WINDOW)])).alias("_o"),
     ).withColumn("rn_r", F.col("rn_l") + F.col("_o"))
     pairs = left.join(ranked.withColumnRenamed("rn", "rn_r"), "rn_r").select(
         F.least("id_l", "doc_id").alias("doc1"),
         F.greatest("id_l", "doc_id").alias("doc2"),
         F.levenshtein(F.col("head_l"), F.col("head")).alias("edit_distance"),
     )
-    return pairs.where(F.col("edit_distance") <= max_distance)
+    return pairs.where(F.col("edit_distance") <= SNM_MAX_DISTANCE)

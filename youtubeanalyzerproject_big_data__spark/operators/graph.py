@@ -301,7 +301,6 @@ def _local_components(rows) -> list:
 
 def connected_components_star(
     edges: DataFrame,
-    max_rounds: int = 50,
     small_graph_threshold: int = 100_000,
     _round_counter: list | None = None,
 ) -> DataFrame:
@@ -360,7 +359,7 @@ def connected_components_star(
         return (row["n"], row["h1"], row["h2"])
 
     sig = signature(e)
-    for rnd in range(max_rounds):
+    for rnd in range(50):
         # large-star: m(u) = min over sym-neighborhood(u) + {u}; for every
         # neighbor v > u emit (v, m).  m <= u < v, so no self-loops arise.
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -394,7 +393,7 @@ def connected_components_star(
         sig = new_sig
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge within {max_rounds} rounds"
+            "connected_components_star did not converge within 50 rounds"
         )
     # Fixpoint is (child, root) stars: children label from their edge, roots
     # label themselves.
@@ -423,13 +422,36 @@ def top_influencers(ranks: DataFrame, k: int = 500) -> DataFrame:
 AUTO_BROADCAST_MAX_EDGES = 8_000_000
 
 
-def triangle_count(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    hint_small_vertices: bool | None = None,
-    auto_broadcast_max_edges: int = AUTO_BROADCAST_MAX_EDGES,
-) -> DataFrame:
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(a, b) with a < b: each undirected (src, dst) edge once, self-loops dropped."""
+    a, b = F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    return edges.select(a, b).where(F.col("a") != F.col("b")).distinct()
+
+
+def _endpoint_degrees(e: DataFrame) -> DataFrame:
+    """(v, d): the degree of every endpoint of the canonical edges ``e``."""
+    return (
+        e.select(F.col("a").alias("v"))
+        .unionAll(e.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).cast("long").alias("d"))
+    )
+
+
+def _oriented(e: DataFrame, deg: DataFrame, maybe_bcast) -> DataFrame:
+    """(u, w): each canonical edge pointed from its (degree, id)-smaller end."""
+    ed = (
+        e.join(maybe_bcast(deg.select(F.col("v").alias("a"), F.col("d").alias("da"))), "a")
+        .join(maybe_bcast(deg.select(F.col("v").alias("b"), F.col("d").alias("db"))), "b")
+    )
+    lo_first = (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
+    return ed.select(
+        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("w"),
+    )
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle / wedge / edge counts via degree-ordered orientation
     -- the clustering-coefficient numerator, and the classic demonstration
     that join ORDER is the scale lever in graph analytics.
@@ -463,36 +485,17 @@ def triangle_count(
     pipeline per count (measured 3-4x slowdown).  Returns one row:
     (n_edges, n_wedges, n_triangles).
 
-    ``hint_small_vertices``: True broadcast-hints the degree/adjacency
-    joins (right whenever vertices are a dimension -- parts, users,
-    videos); False leaves them un-hinted for AQE.  Default None
-    AUTO-SELECTS from the measured canonical edge count (the count is
-    needed for the census anyway, so auto mode costs nothing extra):
-    broadcast iff m <= ``auto_broadcast_max_edges``.  The adjacency
-    payload is edge-sized, so trusting a static flag means a 100x-scale
-    run aborts on the broadcast limit instead of degrading to sort-merge.
+    The degree/adjacency joins broadcast-hint (vertices are a dimension --
+    parts, users, videos) iff the measured canonical edge count m <=
+    AUTO_BROADCAST_MAX_EDGES (the count is needed for the census anyway);
+    above it they stay un-hinted for AQE.  The adjacency payload is
+    edge-sized, so a static hint would make a 100x-scale run abort on the
+    broadcast limit instead of degrading to sort-merge.
     """
-    a, b = F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = edges.select(a, b).where(F.col("a") != F.col("b")).distinct().cache()  # edge-sized, like pagerank's
+    e = _undirected(edges).cache()  # edge-sized, like pagerank's
     n_edges = e.count()  # also populates the cache before the joins
-    if hint_small_vertices is None:
-        hint_small_vertices = n_edges <= auto_broadcast_max_edges
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionAll(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    maybe_bcast = F.broadcast if hint_small_vertices else (lambda df: df)
-    ed = (
-        e.join(maybe_bcast(deg.select(F.col("v").alias("a"), F.col("d").alias("da"))), "a")
-        .join(maybe_bcast(deg.select(F.col("v").alias("b"), F.col("d").alias("db"))), "b")
-    )
-    lo_first = (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = ed.select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-    ).cache()
+    maybe_bcast = F.broadcast if n_edges <= AUTO_BROADCAST_MAX_EDGES else (lambda df: df)
+    oriented = _oriented(e, _endpoint_degrees(e), maybe_bcast).cache()
     adj = (
         oriented.groupBy("u")
         .agg(F.collect_list("w").alias("nbrs"), F.count(F.lit(1)).cast("long").alias("d_out"))
@@ -658,12 +661,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 2) -> DataFrame:
 def adamic_adar(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "seed",
     k: int = 5,
-    hint_small_vertices: bool | None = None,
-    auto_broadcast_max_edges: int = AUTO_BROADCAST_MAX_EDGES,
 ) -> DataFrame:
     """Link prediction for a seed set: top-``k`` new-neighbor candidates
     per seed vertex by Adamic-Adar score AA(s,y) = sum over common
@@ -690,25 +688,21 @@ def adamic_adar(
     a ~160x safety margin, machine-checked by
     tests/test_graph.py::test_adamic_adar_weight_floor_is_libm_stable.
 
-    ``hint_small_vertices``: as in triangle_count -- degree/weight tables
-    are vertex-dimension-sized and broadcast for this engine's graphs;
-    None (default) auto-selects from the measured adjacency row count
-    (2m rows: broadcast iff m <= ``auto_broadcast_max_edges``), so a
-    100x-scale run degrades to AQE's choice instead of aborting on the
-    broadcast limit.  The frontier broadcasts are unconditional -- they
-    are seed-bounded by construction.
+    As in triangle_count, the degree/weight tables are vertex-dimension-
+    sized and broadcast iff the measured adjacency (2m rows) has m <=
+    AUTO_BROADCAST_MAX_EDGES, so a 100x-scale run degrades to AQE's choice
+    instead of aborting on the broadcast limit.  The frontier broadcasts
+    are unconditional -- they are seed-bounded by construction.  Seeds
+    come in the ``seed`` column of ``seeds``.
 
     Returns (src, dst, n_common, aa_micro, aa_score) ordered by seed then
     rank.
     """
-    a, b = F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = edges.select(a, b).where(F.col("a") != F.col("b")).distinct()
+    e = _undirected(edges)
     adj = e.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("v"), F.col("a").alias("n"))
     ).cache()
-    if hint_small_vertices is None:
-        hint_small_vertices = adj.count() <= 2 * auto_broadcast_max_edges
-    maybe_bcast = F.broadcast if hint_small_vertices else (lambda df: df)
+    maybe_bcast = F.broadcast if adj.count() <= 2 * AUTO_BROADCAST_MAX_EDGES else (lambda df: df)
     w = (
         adj.groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
@@ -721,7 +715,7 @@ def adamic_adar(
     # and the existing-neighbor anti-join runs against the SAME tiny
     # frontier rather than the full adjacency.
     sadj = adj.join(
-        F.broadcast(seeds.select(F.col(seed_col).alias("v")).distinct()), "v"
+        F.broadcast(seeds.select(F.col("seed").alias("v")).distinct()), "v"
     ).select(F.col("v").alias("s"), F.col("n").alias("z")).cache()
     cand = (
         F.broadcast(sadj)
@@ -757,14 +751,7 @@ def adamic_adar(
     return pin(out, sadj, adj)
 
 
-def clustering_coefficient_topk(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    k: int = 20,
-    hint_small_vertices: bool | None = None,
-    auto_broadcast_max_edges: int = AUTO_BROADCAST_MAX_EDGES,
-) -> DataFrame:
+def clustering_coefficient_topk(edges: DataFrame, k: int = 20) -> DataFrame:
     """Per-vertex local clustering coefficient, top-``k`` by triangle
     count: C(v) = 2*tri(v) / (d(v)*(d(v)-1)) -- the neighborhood-density
     score behind community/spam detection (Watts & Strogatz 1998).
@@ -781,32 +768,15 @@ def clustering_coefficient_topk(
     Determinism: coefficients ship as floor(2*tri*1e6 / (d*(d-1)))
     integer micros (exact int64 arithmetic); cut ties (tri desc, v).
 
-    ``hint_small_vertices=None`` (default) auto-selects the join strategy
-    from the measured canonical edge count exactly as in
-    :func:`triangle_count` -- the degree/adjacency payload is edge-sized,
-    so only edge sets below ``auto_broadcast_max_edges`` broadcast; above
-    it the joins stay un-hinted for AQE.
+    The join strategy comes from the measured canonical edge count
+    exactly as in :func:`triangle_count` -- the degree/adjacency payload
+    is edge-sized, so only edge sets up to AUTO_BROADCAST_MAX_EDGES
+    broadcast; above it the joins stay un-hinted for AQE.
     """
-    a, b = F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = edges.select(a, b).where(F.col("a") != F.col("b")).distinct().cache()
-    if hint_small_vertices is None:
-        hint_small_vertices = e.count() <= auto_broadcast_max_edges
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionAll(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    maybe_bcast = F.broadcast if hint_small_vertices else (lambda df: df)
-    ed = (
-        e.join(maybe_bcast(deg.select(F.col("v").alias("a"), F.col("d").alias("da"))), "a")
-        .join(maybe_bcast(deg.select(F.col("v").alias("b"), F.col("d").alias("db"))), "b")
-    )
-    lo_first = (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = ed.select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-    )
+    e = _undirected(edges).cache()
+    maybe_bcast = F.broadcast if e.count() <= AUTO_BROADCAST_MAX_EDGES else (lambda df: df)
+    deg = _endpoint_degrees(e)
+    oriented = _oriented(e, deg, maybe_bcast)
     adj = oriented.groupBy("u").agg(F.collect_list("w").alias("nbrs")).cache()
     closures = (
         oriented.join(maybe_bcast(adj.select(F.col("u"), F.col("nbrs").alias("nbrs_u"))), "u")
@@ -839,7 +809,7 @@ def clustering_coefficient_topk(
     return pin(out, closures, adj, e)
 
 
-def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002): Pearson correlation
     of endpoint degrees over undirected edges -- do hubs link to hubs
     (r > 0, social nets) or to leaves (r < 0, co-purchase/biological)?
@@ -856,14 +826,8 @@ def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -
     Scale: two hash aggregates (degrees, one 4-scalar moment aggregate
     over the degree-joined edges); degree table broadcasts (vertex dim).
     """
-    a, b = F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = edges.select(a, b).where(F.col("a") != F.col("b")).distinct()
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionAll(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    e = _undirected(edges)
+    deg = _endpoint_degrees(e)
     ed = (
         e.join(F.broadcast(deg.select(F.col("v").alias("a"), F.col("d").alias("ja"))), "a")
         .join(F.broadcast(deg.select(F.col("v").alias("b"), F.col("d").alias("jb"))), "b")

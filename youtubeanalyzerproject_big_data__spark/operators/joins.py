@@ -23,9 +23,9 @@ def left_join_fill_zero(base: DataFrame, counts: DataFrame, key: str, fill_cols:
     return base.join(counts, key, "left").fillna({c: 0 for c in fill_cols})
 
 
-def enrich_broadcast(fact: DataFrame, dim: DataFrame, key: str, how: str = "left") -> DataFrame:
-    """J3/J4/J6: broadcast-hash enrichment join against a small dimension."""
-    return fact.join(F.broadcast(dim), key, how)
+def enrich_broadcast(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
+    """J3/J4/J6: broadcast-hash left enrichment join against a small dimension."""
+    return fact.join(F.broadcast(dim), key, "left")
 
 
 def semi_join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
@@ -46,7 +46,6 @@ def interval_join_binned(
     left_ts: str,
     right_ts: str,
     window_us: int,
-    bin_us: int | None = None,
 ) -> DataFrame:
     """Interval (range) join: pair each left row with the right rows of the
     same key whose timestamp falls in ``[left_ts, left_ts + window)``.
@@ -54,9 +53,8 @@ def interval_join_binned(
     Spark plans the naive ``ON key = key AND r.ts BETWEEN ...`` as a hash
     join on the key followed by a per-key filter -- fine for small keys, but
     a single hot key degenerates to quadratic row pairing.  This is the
-    BINNED form: quantize time into ``bin_us`` buckets, explode each left
-    row to the (at most ``window/bin + 1``, i.e. 2 at the default) buckets
-    its window overlaps, and equi-join on (key, bucket) before applying the
+    BINNED form: quantize time into window-sized buckets, explode each
+    left row to the (at most 2) buckets its window overlaps, and equi-join on (key, bucket) before applying the
     exact range predicate.  The shuffle key becomes (key, time-bucket), so
     a key's rows spread over its whole time range instead of one reducer --
     the property that keeps the join alive at 100 TB event scale.  AQE skew
@@ -68,19 +66,17 @@ def interval_join_binned(
     wanting degree preservation re-join aggregates to the left base
     (`left_join_fill_zero`).
     """
-    if bin_us is None:
-        bin_us = window_us
     lus, rus = F.unix_micros(F.col(left_ts)), F.unix_micros(F.col(right_ts))
     l2 = left.withColumn("_lus", lus).withColumn(
         "_bin",
         F.explode(
             F.sequence(
-                F.floor(F.col("_lus") / bin_us),
-                F.floor((F.col("_lus") + F.lit(window_us - 1)) / bin_us),
+                F.floor(F.col("_lus") / window_us),
+                F.floor((F.col("_lus") + F.lit(window_us - 1)) / window_us),
             )
         ),
     )
-    r2 = right.withColumn("_rus", rus).withColumn("_bin", F.floor(F.col("_rus") / bin_us))
+    r2 = right.withColumn("_rus", rus).withColumn("_bin", F.floor(F.col("_rus") / window_us))
     cond = (
         (l2[left_key] == r2[right_key])
         & (l2["_bin"] == r2["_bin"])

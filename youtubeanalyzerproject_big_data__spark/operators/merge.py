@@ -28,7 +28,6 @@ def merge_upsert(
     updates: DataFrame,
     key_cols: list[str],
     delete_col: str | None = None,
-    hint_small_updates: bool = True,
 ) -> DataFrame:
     """Row-level MERGE: rows of ``updates`` replace base rows with the same
     key (full-row overwrite, standard MERGE semantics), unmatched update
@@ -36,9 +35,8 @@ def merge_upsert(
     tombstones -- their keys vanish from the result.
 
     ``updates`` must carry the base schema (plus the optional tombstone
-    flag).  ``hint_small_updates`` broadcast-hints the key anti-join (the
-    normal CDC shape); pass False for rare base-sized batches and let AQE
-    choose.
+    flag).  The key anti-join is broadcast-hinted: an update batch is
+    small next to its base (the normal CDC shape).
 
     PRECONDITION: ``updates`` must be unique per key.  Standard MERGE
     raises when multiple source rows match one target key; this rewrite
@@ -51,9 +49,7 @@ def merge_upsert(
         live = updates.where(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
     else:
         live = updates
-    touched_keys = updates.select(*key_cols).distinct()
-    if hint_small_updates:
-        touched_keys = F.broadcast(touched_keys)
+    touched_keys = F.broadcast(updates.select(*key_cols).distinct())
     kept = base.join(touched_keys, key_cols, "left_anti")
     return kept.unionByName(live.select(*key_cols, *value_cols))
 
@@ -120,7 +116,6 @@ def pit_lookup(
     fact_key: str,
     ts_us: "F.Column",
     key_col: str,
-    state_sentinel: str = "__none__",
 ) -> DataFrame:
     """Point-in-time (as-of) dimension lookup: enrich each fact row with
     the :func:`scd2_history` state valid at the fact's timestamp
@@ -135,7 +130,7 @@ def pit_lookup(
     once on the key; per-key history is version-count-sized, so the
     sort-merge buffers stay small at any corpus size.  Facts before a
     key's first version (or with no history key at all) surface the
-    ``state_sentinel`` / version -1, never NULL (repo invariant).
+    state ``__none__`` / version -1, never NULL (repo invariant).
 
     ``ts_us`` must be an integer-epoch-micros Column (match the history's
     unix_micros convention; compute it with F.unix_micros under a pinned
@@ -155,7 +150,7 @@ def pit_lookup(
         "left",
     )
     return (
-        joined.withColumn("state", F.coalesce(F.col("_hstate"), F.lit(state_sentinel)))
+        joined.withColumn("state", F.coalesce(F.col("_hstate"), F.lit("__none__")))
         .withColumn("version", F.coalesce(F.col("_hversion"), F.lit(-1)).cast("long"))
         .drop("_hk", "_hstate", "_hversion", "_ts_us", "valid_from_us", "valid_to_us")
     )

@@ -715,13 +715,11 @@ def phash_near_dup_pairs(
     hashes: DataFrame,
     n_bits: int = 32,
     max_distance: int = 3,
-    n_chunks: int = 4,
-    max_bucket: int | None = 2000,
 ) -> DataFrame:
     """Near-duplicate media pairs by perceptual-hash Hamming distance --
     the media twin of d4's SimHash text dedup, same pigeonhole blocking:
-    split each hash into ``n_chunks`` equal bit chunks; any pair within
-    ``max_distance < n_chunks`` bit flips shares at least one identical
+    split each hash into 4 equal bit chunks; any pair within
+    ``max_distance < 4`` bit flips shares at least one identical
     chunk, so candidates meet in (chunk_idx, chunk_value) buckets and the
     exact bit_count(xor) check runs on candidates only -- never O(n^2).
 
@@ -730,17 +728,18 @@ def phash_near_dup_pairs(
     must exceed the corpus -- 8-bit chunks over 500k hashes put ~2000 ids
     in every one of the 1024 buckets (~2e9 pairs; the engine spilled 64 GB
     of shuffle before being killed).  Size ``n_bits`` so chunk_bits =
-    n_bits/n_chunks keeps buckets sparse (60 bits -> 15-bit chunks for a
-    500k corpus; 128-bit/32-bit at 100 TB), with ``max_bucket`` as the
-    degenerate-bucket backstop (drop semantics, the _pairs_from_groups
+    n_bits/4 keeps buckets sparse (60 bits -> 15-bit chunks for a
+    500k corpus; 128-bit/32-bit at 100 TB), with a 2000-member cap
+    (dedup.DEFAULT_MAX_BUCKET) as the degenerate-bucket backstop (drop semantics, the _pairs_from_groups
     convention, mirrored in the oracle).  The one-shuffle collect_set
     blocking replaces the former chunk self-join, so pairs expand in-task
     from each bucket instead of through a join.
 
     Returns (id1, id2, hamming) with id1 < id2, distance <= max_distance.
     """
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import _ordered_pairs
+    from youtubeanalyzerproject_big_data__spark.operators.dedup import DEFAULT_MAX_BUCKET, _ordered_pairs
 
+    n_chunks = 4
     if max_distance >= n_chunks:
         raise ValueError("pigeonhole blocking needs max_distance < n_chunks")
     chunk_bits = n_bits // n_chunks
@@ -762,10 +761,8 @@ def phash_near_dup_pairs(
     groups = (
         blocked.groupBy("ci", "cv")
         .agg(F.sort_array(F.collect_set("mp")).alias("ms"))
-        .where(F.size("ms") >= 2)
+        .where((F.size("ms") >= 2) & (F.size("ms") <= DEFAULT_MAX_BUCKET))
     )
-    if max_bucket is not None:
-        groups = groups.where(F.size("ms") <= max_bucket)
     xor = F.col("h1").bitwiseXOR(F.col("h2"))
     return (
         groups.select(F.explode(_ordered_pairs(F.col("ms"))).alias("p"))

@@ -177,13 +177,7 @@ def confusion_matrix(
     )
 
 
-def fact_reconciliation(
-    orders: DataFrame,
-    lineitem: DataFrame,
-    order_key: str = "o_orderkey",
-    li_key: str = "l_orderkey",
-    tolerance_micros: int = 10_000,
-) -> DataFrame:
+def fact_reconciliation(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Cross-fact reconciliation: does each order header's total equal the
     sum its line items imply (sum of extendedprice*(1-discount)*(1+tax))?
     The accounting audit every warehouse runs between a rollup table and
@@ -194,7 +188,7 @@ def fact_reconciliation(
     to integer micros BEFORE the per-order sum (row-local double product
     is correctly rounded and identical everywhere; the sum is then exact
     int64), headers quantize the same way, and "matched" is an integer
-    tolerance comparison (default 1 cent = 10^4 micros).
+    tolerance comparison (1 cent = 10^4 micros).
 
     Plan: one per-order hash aggregate on the detail (map-side combined),
     one key join against headers, one conditional-sum aggregate.
@@ -202,9 +196,9 @@ def fact_reconciliation(
     li_micro = F.floor(
         F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * (F.lit(1.0) + F.col("l_tax")) * F.lit(1e6)
     ).cast("long")
-    detail = lineitem.groupBy(F.col(li_key).alias("k")).agg(F.sum(li_micro).alias("detail_micros"))
+    detail = lineitem.groupBy(F.col("l_orderkey").alias("k")).agg(F.sum(li_micro).alias("detail_micros"))
     head = orders.select(
-        F.col(order_key).alias("k"), F.floor(F.col("o_totalprice") * F.lit(1e6)).cast("long").alias("head_micros")
+        F.col("o_orderkey").alias("k"), F.floor(F.col("o_totalprice") * F.lit(1e6)).cast("long").alias("head_micros")
     )
     j = head.join(detail, "k", "left").select(
         "k", "head_micros", F.coalesce(F.col("detail_micros"), F.lit(0)).alias("detail_micros")
@@ -212,8 +206,8 @@ def fact_reconciliation(
     diff = F.abs(F.col("head_micros") - F.col("detail_micros"))
     return j.agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(F.when(diff <= tolerance_micros, 1).otherwise(0)).cast("long").alias("n_matched"),
-        F.sum(F.when(diff > tolerance_micros, 1).otherwise(0)).cast("long").alias("n_mismatched"),
+        F.sum(F.when(diff <= 10_000, 1).otherwise(0)).cast("long").alias("n_matched"),
+        F.sum(F.when(diff > 10_000, 1).otherwise(0)).cast("long").alias("n_mismatched"),
         F.sum(diff).cast("long").alias("total_drift_micros"),
     )
 
@@ -269,7 +263,7 @@ def profile_drift(old: DataFrame, new: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def quarantine_split(df: DataFrame, rules: list[tuple[str, "F.Column"]], reason_col: str = "quarantine_reason") -> DataFrame:
+def quarantine_split(df: DataFrame, rules: list[tuple[str, "F.Column"]]) -> DataFrame:
     """Row-level expectation suite with a DEAD-LETTER label: each row gets
     the name of the FIRST rule (suite order) it violates, or 'ok'.  The
     split-with-reason form of check_constraints: valid rows flow on,
@@ -279,10 +273,10 @@ def quarantine_split(df: DataFrame, rules: list[tuple[str, "F.Column"]], reason_
     routed, not just reported.
 
     Pure map-side: one conditional chain, no shuffle, no UDF; the caller
-    filters ``reason_col != 'ok'`` for the quarantine leg and '== ok' for
+    filters ``quarantine_reason != 'ok'`` for the quarantine leg and '== ok' for
     the clean leg (both legs prune from the same scan).
     """
     reason = F.lit("ok")
     for name, cond in reversed(rules):
         reason = F.when(cond, F.lit(name)).otherwise(reason)
-    return df.withColumn(reason_col, reason)
+    return df.withColumn("quarantine_reason", reason)

@@ -26,7 +26,7 @@ def strip_metadata(df: DataFrame) -> DataFrame:
     return df.select([F.col(c).alias(c) for c in df.columns])
 
 
-def build_ratings(df: DataFrame, user_col: str, item_col: str, rating_col: str, sample_fraction: float | None = None, seed: int = 42) -> DataFrame:
+def build_ratings(df: DataFrame, user_col: str, item_col: str, rating_col: str, sample_fraction: float | None = None) -> DataFrame:
     """M1: string-indexed (user, item, rating) matrix.
 
     Uses dense_rank-free StringIndexer like the reference
@@ -36,7 +36,7 @@ def build_ratings(df: DataFrame, user_col: str, item_col: str, rating_col: str, 
 
     clean = df.na.drop(subset=[user_col, rating_col]).select(user_col, item_col, rating_col)
     if sample_fraction:
-        clean = clean.sample(fraction=sample_fraction, seed=seed)  # S11
+        clean = clean.sample(fraction=sample_fraction, seed=42)  # S11
     # Each StringIndexer.fit is a full scan; cache the cleaned input so the
     # two fits + downstream transform don't re-run the upstream join/sample.
     clean = clean.cache()

@@ -35,6 +35,15 @@ from youtubeanalyzerproject_big_data__spark.functions.precision import micro_rou
 
 from youtubeanalyzerproject_big_data__spark.functions.hashing import md5_int32
 
+# Hyperplane-LSH shape of lsh_topk and dedup.embedding_near_dup_pairs_lsh
+# and of their DuckDB replays (contract/vectors._hyperplane_band_sql):
+# 16 signature bits cut into 4 bands of 4.
+LSH_PLANES = 16
+LSH_BANDS = 4
+# Product quantization of pq_topk/ivfpq_topk and their replays: 8
+# subvectors, each coded against 16 codewords.
+PQ_SUB = 8
+PQ_CODES = 16
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """Two-stage exact top-k per query over (query_id, neighbor_id, cos_sim).
@@ -139,21 +148,35 @@ def _plane_component(p: int, c: int) -> float:
     return h / 2147483648.0 - 1.0
 
 
-def _hyperplane_signature(vec_col: str, dim: int, num_planes: int) -> F.Column:
+def _hyperplane_signature(vec_col: str, dim: int) -> F.Column:
     """LSH signature: bit p = (v . plane_p) >= 0, planes md5-derived.
 
     Arrow exact-sequential kernel (functions._arrow_udfs.make_hyperplane_sig):
     per-plane dots keep the identical left-to-right IEEE fold the DuckDB
     oracle replays, numpy-vectorized over the batch.  The pure-Catalyst
     alternatives both lose: a HOF fold runs interpreted, and a statically
-    unrolled num_planes x dim expression chain exceeds Janino's 64 KB
+    unrolled planes x dim expression chain exceeds Janino's 64 KB
     method limit, so whole-stage codegen pays a failed compile and falls
     back interpreted anyway (measured 6-8x slower end-to-end).
     """
     from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_hyperplane_sig
 
-    planes = [[_plane_component(p, c) for c in range(dim)] for p in range(num_planes)]
+    planes = [[_plane_component(p, c) for c in range(dim)] for p in range(LSH_PLANES)]
     return make_hyperplane_sig(planes)(F.col(vec_col))
+
+
+def _lsh_bands(sig: F.Column) -> F.Column:
+    """The signature's LSH_BANDS (band, bval) buckets as an array to explode."""
+    bits = LSH_PLANES // LSH_BANDS
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright(sig, b * bits).bitwiseAND(F.lit((1 << bits) - 1)).alias("bval"),
+            )
+            for b in range(LSH_BANDS)
+        ]
+    )
 
 
 def lsh_topk(
@@ -163,37 +186,21 @@ def lsh_topk(
     vec_col: str,
     dim: int,
     k: int = 5,
-    num_planes: int = 16,
-    bands: int = 4,
 ) -> DataFrame:
     """ANN top-k: hyperplane-LSH candidate generation + exact re-rank.
 
-    Signature is split into ``bands`` sub-signatures; query/corpus rows
+    Signature is split into LSH_BANDS sub-signatures; query/corpus rows
     sharing any band bucket become candidates.  Output schema matches
     brute_force_topk so recall can be measured directly against it.
     """
-    bits_per_band = num_planes // bands
-    mask = (1 << bits_per_band) - 1
 
     def with_bands(df: DataFrame, role: str) -> DataFrame:
         sigd = df.select(F.col(id_col).alias(f"{role}_id"), F.col(vec_col).alias(f"{role}_v")).withColumn(
-            "sig", _hyperplane_signature(f"{role}_v", dim, num_planes)
+            "sig", _hyperplane_signature(f"{role}_v", dim)
         )
-        return sigd.select(
-            f"{role}_id",
-            f"{role}_v",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftright(F.col("sig"), b * bits_per_band).bitwiseAND(F.lit(mask)).alias("bval"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(f"{role}_id", f"{role}_v", "bk.band", "bk.bval")
+        return sigd.select(f"{role}_id", f"{role}_v", F.explode(_lsh_bands(F.col("sig"))).alias("bk")).select(
+            f"{role}_id", f"{role}_v", "bk.band", "bk.bval"
+        )
 
     qb = with_bands(queries, "query")
     cb = with_bands(corpus, "neighbor")
@@ -209,9 +216,7 @@ def lsh_topk(
     return _topk_per_query(scored, k)
 
 
-def _centroids_exact(
-    corpus: DataFrame, id_col: str, vec_col: str, num_cells: int, hash_seed: str = "ivf"
-) -> list[list[float]]:
+def _centroids_exact(corpus: DataFrame, id_col: str, vec_col: str, num_cells: int) -> list[list[float]]:
     """Driver-side centroid model with ENGINE-PORTABLE arithmetic.
 
     Seeds are the ``num_cells`` corpus vectors of smallest
@@ -229,7 +234,7 @@ def _centroids_exact(
 
     rows = (
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("h", md5_int32(F.col("id").cast("string"), seed=hash_seed))
+        .withColumn("h", md5_int32(F.col("id").cast("string"), seed="ivf"))
         .orderBy("h", "id")
         .limit(num_cells)
         .collect()
@@ -360,24 +365,22 @@ def normalization_stats(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _pq_codebook_exact(
-    corpus: DataFrame, id_col: str, vec_col: str, dim: int, num_sub: int, num_codes: int, hash_seed: str = "pq"
-) -> list[list[list[float]]]:
+def _pq_codebook_exact(corpus: DataFrame, id_col: str, vec_col: str, dim: int) -> list[list[list[float]]]:
     """Driver-side product-quantization codebook, ENGINE-PORTABLE like
-    _centroids_exact: codeword sources are the ``num_codes`` corpus vectors
-    of smallest (md5_int32(id, seed), id); codebook[m][j] = subvector m of
+    _centroids_exact: codeword sources are the PQ_CODES corpus vectors
+    of smallest (md5_int32(id, "pq"), id); codebook[m][j] = subvector m of
     source j, verbatim (no Lloyd refinement, so any engine can rebuild the
-    identical book from the table alone).  Bounded collect: num_codes rows.
+    identical book from the table alone).  Bounded collect: PQ_CODES rows.
     """
     rows = (
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("h", md5_int32(F.col("id").cast("string"), seed=hash_seed))
+        .withColumn("h", md5_int32(F.col("id").cast("string"), seed="pq"))
         .orderBy("h", "id")
-        .limit(num_codes)
+        .limit(PQ_CODES)
         .collect()
     )
-    sub = dim // num_sub
-    return [[[float(x) for x in r["v"][m * sub : (m + 1) * sub]] for r in rows] for m in range(num_sub)]
+    sub = dim // PQ_SUB
+    return [[[float(x) for x in r["v"][m * sub : (m + 1) * sub]] for r in rows] for m in range(PQ_SUB)]
 
 
 def pq_topk(
@@ -387,14 +390,11 @@ def pq_topk(
     vec_col: str,
     dim: int,
     k: int = 5,
-    num_sub: int = 8,
-    num_codes: int = 16,
-    hash_seed: str = "pq",
 ) -> DataFrame:
     """Product-quantization ANN: compress, then score against the
     reconstruction.
 
-    Each corpus vector is encoded to ``num_sub`` small codes (nearest
+    Each corpus vector is encoded to PQ_SUB small codes (nearest
     codeword per subspace, squared-L2, ties to the smallest codeword id)
     and scored via the RECONSTRUCTED quantized vector -- asymmetric
     distance computation with the reconstruction materialized instead of
@@ -404,7 +404,7 @@ def pq_topk(
     fold is the exact IEEE chain the oracle replays.
 
     The 100 TB story is the memory/scan footprint: dim x 4 bytes/row
-    becomes num_sub codes (32x smaller at 64-dim/8-sub), the difference
+    becomes PQ_SUB codes (32x smaller at 64-dim/8-sub), the difference
     between a RAM-resident index and a spilling one at billions of rows.
     Encode is a single map-side projection (no shuffle); the raw embedding
     column is pruned from every post-encode stage.  Composes with IVF for
@@ -418,8 +418,8 @@ def pq_topk(
     """
     from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_cosine_seq, make_pq_recon
 
-    sub = dim // num_sub
-    book = _pq_codebook_exact(corpus, id_col, vec_col, dim, num_sub, num_codes, hash_seed)
+    sub = dim // PQ_SUB
+    book = _pq_codebook_exact(corpus, id_col, vec_col, dim)
 
     # Encode once per corpus row (repartition: small parquet arrives
     # single-partition and the encode is CPU-heavy -- see dedup._shingles).
@@ -444,15 +444,13 @@ def ivfpq_topk(
     k: int = 5,
     num_cells: int = 16,
     nprobe: int = 4,
-    num_sub: int = 8,
-    num_codes: int = 16,
 ) -> DataFrame:
     """IVF + PQ composed -- the billion-scale ANN recipe, demonstrated.
 
     IVF bounds WHICH rows a query scores (probe ``nprobe`` of
     ``num_cells`` cells: scan cost drops by ~num_cells/nprobe, exactly as
     in :func:`ivf_topk_catalyst`); PQ bounds WHAT is scored (each corpus
-    vector carried as ``num_sub`` codes -> reconstruction, a 32x memory/
+    vector carried as PQ_SUB codes -> reconstruction, a 32x memory/
     scan reduction at 64-dim/8-sub, exactly as in :func:`pq_topk`).  The
     composition is one map-side projection per corpus row (cell id +
     reconstructed vector, no shuffle), a broadcast probe join on cell, and
@@ -473,9 +471,9 @@ def ivfpq_topk(
         make_pq_recon,
     )
 
-    sub = dim // num_sub
+    sub = dim // PQ_SUB
     cents = _centroids_exact(corpus, id_col, vec_col, num_cells)
-    book = _pq_codebook_exact(corpus, id_col, vec_col, dim, num_sub, num_codes)
+    book = _pq_codebook_exact(corpus, id_col, vec_col, dim)
     # One pass over the corpus: cell assignment + PQ encode (CPU-heavy --
     # repartition first, see dedup._shingles).
     c = (
@@ -498,9 +496,7 @@ def ivfpq_topk(
     return _topk_per_query(scored, k)
 
 
-def topk_recall(
-    exact: DataFrame, approx: DataFrame, k: int, query_col: str = "query_id", neighbor_col: str = "neighbor_id"
-) -> DataFrame:
+def topk_recall(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
     """Per-query recall@k of an approximate top-k result against the exact
     one -- the "measure, don't guess" gate for every ANN index choice
     (bands/planes for LSH, nprobe/cells for IVF, codes for PQ).
@@ -511,15 +507,15 @@ def topk_recall(
     regardless of corpus size -- the expensive part is producing the inputs,
     and each of those has its own scale path.
     """
-    hit = approx.select(query_col, neighbor_col).withColumn("_hit", F.lit(1))
-    j = exact.select(query_col, neighbor_col).join(hit, [query_col, neighbor_col], "left")
+    keys = ["query_id", "neighbor_id"]
+    j = exact.select(keys).join(approx.select(keys).withColumn("_hit", F.lit(1)), keys, "left")
     return (
-        j.groupBy(query_col)
+        j.groupBy("query_id")
         .agg(
             F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_hits"),
             F.count(F.lit(1)).alias("_k"),
         )
-        .select(query_col, "n_hits", ratio_round(F.col("n_hits"), F.col("_k"), f"recall_at_{k}"))
+        .select("query_id", "n_hits", ratio_round(F.col("n_hits"), F.col("_k"), f"recall_at_{k}"))
     )
 
 

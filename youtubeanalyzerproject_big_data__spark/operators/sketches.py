@@ -124,7 +124,6 @@ def bloom_membership_gate(
     key_col: str,
     m_bits: int = 1 << 17,
     k_hashes: int = 4,
-    seed: str = "bloom",
 ) -> DataFrame:
     """Distributed Bloom-filter membership check as a bit-position
     semijoin, gated on the filter's two contracts: NO false negatives
@@ -158,7 +157,7 @@ def bloom_membership_gate(
 
     def lane_positions(df: DataFrame) -> DataFrame:
         key = F.col(key_col).cast("string").alias("k")
-        lanes = md5_int32_lanes(F.col("k"), seed=seed, lanes=k_hashes)
+        lanes = md5_int32_lanes(F.col("k"), seed="bloom", lanes=k_hashes)
         return (
             df.select(key)
             .distinct()
@@ -226,7 +225,6 @@ def count_min_estimates(
     query_keys: list,
     depth: int = 4,
     width: int = 256,
-    seed_prefix: str = "cm",
 ) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan 2005) with md5-derived
     row hashes, point-queried for ``query_keys`` -- the frequency sketch
@@ -252,7 +250,7 @@ def count_min_estimates(
     k = F.col(key_col).cast("string")
     rows = F.array(
         *[
-            F.struct(F.lit(j).alias("row"), F.pmod(md5_int32(k, seed=f"{seed_prefix}{j}"), F.lit(width)).alias("bucket"))
+            F.struct(F.lit(j).alias("row"), F.pmod(md5_int32(k, seed=f"cm{j}"), F.lit(width)).alias("bucket"))
             for j in range(depth)
         ]
     )
@@ -270,7 +268,7 @@ def count_min_estimates(
                 *[
                     F.struct(
                         F.lit(j).alias("row"),
-                        F.pmod(md5_int32(F.col("qkey"), seed=f"{seed_prefix}{j}"), F.lit(width)).alias("bucket"),
+                        F.pmod(md5_int32(F.col("qkey"), seed=f"cm{j}"), F.lit(width)).alias("bucket"),
                     )
                     for j in range(depth)
                 ]
@@ -300,14 +298,13 @@ def count_min_estimates(
     )
 
 
-def quantile_merge_estimates(
-    df: DataFrame,
-    key_col: str,
-    value_micro: "F.Column",
-    n_shards: int = 32,
-    k: int = 64,
-    qs_ppm: tuple[int, ...] = (500_000, 900_000, 990_000),
-) -> DataFrame:
+# quantile_merge_estimates: md5 shards, and the sample budget k of each
+# shard's summary.
+QMERGE_SHARDS = 32
+QMERGE_K = 64
+
+
+def quantile_merge_estimates(df: DataFrame, key_col: str, value_micro: "F.Column") -> DataFrame:
     """Mergeable QUANTILE summaries (the Agarwal et al. mergeable-summaries
     shape Spark's GK aggregate hides): each shard reduces to a <= k+1-row
     weighted sample (every step-th element in shard value order, weight =
@@ -327,8 +324,9 @@ def quantile_merge_estimates(
     cumsum window over them is bounded regardless of corpus size.
 
     Returns (q_ppm, est_micro, r_lo, r_hi, target_rank, rank_bound,
-    within_bound) per requested quantile.
+    within_bound) for p50, p90 and p99.
     """
+    n_shards, k = QMERGE_SHARDS, QMERGE_K
     from pyspark.sql import Window
 
     from youtubeanalyzerproject_big_data__spark.functions.hashing import md5_int32
@@ -359,7 +357,7 @@ def quantile_merge_estimates(
     cum = ranked.withColumn("cw", F.sum("w").over(w_cum).cast("long")).select("v", "cw")
     tot = t.agg(F.count(F.lit(1)).cast("long").alias("n"))
     bnd = per.agg(F.sum("step").cast("long").alias("rank_bound"))
-    qq = df.sparkSession.createDataFrame([(q,) for q in qs_ppm], "q_ppm long")
+    qq = df.sparkSession.createDataFrame([(q,) for q in (500_000, 900_000, 990_000)], "q_ppm long")
     tgt = (
         qq.crossJoin(tot)  # three 1-row totals: the sanctioned crossJoin shape
         .crossJoin(bnd)

@@ -290,7 +290,7 @@ def pii_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def term_document_frequency(df: DataFrame, id_col: str, text_col: str, min_df: int = 1) -> DataFrame:
+def term_document_frequency(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(token, df, idf): document frequency + smoothed IDF per distinct
     lower-cased token -- the vocabulary statistics a TF-IDF or stop-word
     pipeline needs.  One explode of per-doc DISTINCT tokens and one hash
@@ -303,8 +303,6 @@ def term_document_frequency(df: DataFrame, id_col: str, text_col: str, min_df: i
         F.explode(F.array_distinct(tokens(F.lower(F.col(text_col))))).alias("token"),
     )
     out = toks.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    if min_df > 1:
-        out = out.where(F.col("df") >= min_df)
     return out.select(
         "token",
         "df",
@@ -413,8 +411,6 @@ def bm25_topk(
     text_col: str,
     terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Okapi BM25 top-k document retrieval for a bag-of-terms query -- the
     classic lexical-search scorer (idf * saturated tf, length-normalized).
@@ -450,6 +446,7 @@ def bm25_topk(
 
     idf = {t: math.log(1.0 + (n_docs - dfreq.get(t, 0) + 0.5) / (dfreq.get(t, 0) + 0.5)) for t in terms}
     idf_col = F.create_map(*[x for t in terms for x in (F.lit(t), F.lit(idf[t]))])[F.col("token")]
+    k1, b = 1.2, 0.75  # the standard tf saturation and length normalization
     denom = F.col("tf").cast("double") + F.lit(k1) * (
         F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / F.lit(avgdl)
     )
@@ -694,7 +691,6 @@ def dsir_importance_select(
     text_col: str,
     m_buckets: int = 4096,
     k: int = 50,
-    seed: str = "dsir",
 ) -> DataFrame:
     """DSIR-style data selection (Xie et al. 2023, arXiv:2302.03169):
     score every raw-corpus document by its hashed-n-gram importance weight
@@ -728,7 +724,7 @@ def dsir_importance_select(
             .repartition(spark.sparkContext.defaultParallelism)
             .select("doc_id", tokens(F.lower(F.col(text_col))).alias("toks"))
             .select("doc_id", F.explode(F.concat(F.col("toks"), adjacent_pairs(F.col("toks")))).alias("feat"))
-            .select("doc_id", F.pmod(md5_int32(F.col("feat"), seed=seed), F.lit(m_buckets)).alias("bucket"))
+            .select("doc_id", F.pmod(md5_int32(F.col("feat"), seed="dsir"), F.lit(m_buckets)).alias("bucket"))
         )
 
     raw_f = feats(raw)
@@ -1159,9 +1155,9 @@ def bpe_train_apply(df: DataFrame, text_col: str, n_merges: int = 10) -> DataFra
     return spark.createDataFrame(rows, out.schema)
 
 
-def rake_keywords(df: DataFrame, id_col: str, text_col: str, k: int = 20, max_phrase_len: int = 4) -> DataFrame:
+def rake_keywords(df: DataFrame, id_col: str, text_col: str, k: int = 20) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010): candidate phrases are
-    maximal stopword-free token runs; each word scores deg/freq (deg =
+    maximal stopword-free token runs of at most 4 tokens; each word scores deg/freq (deg =
     total length of phrases containing it, freq = its occurrences in
     phrases); a phrase scores the sum of its words' scores.  Top-``k``
     distinct phrases corpus-wide -- the cheap unsupervised keyword miner
@@ -1196,7 +1192,7 @@ def rake_keywords(df: DataFrame, id_col: str, text_col: str, k: int = 20, max_ph
         F.concat_ws(
             " ", F.transform(F.array_sort(F.collect_list(F.struct("pos", "token"))), lambda s: s["token"])
         ).alias("phrase"),
-    ).where(F.col("plen") <= max_phrase_len)
+    ).where(F.col("plen") <= 4)
     # word stats over phrase words (vocab-sized)
     pw = runs.join(inst.select("_doc", "run", "plen"), ["_doc", "run"])
     wstats = (

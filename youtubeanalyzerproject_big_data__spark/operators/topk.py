@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def top_k(df: DataFrame, order_col: str, k: int, ascending: bool = False, tiebreak: str | None = None) -> DataFrame:
-    order = [F.asc(order_col) if ascending else F.desc(order_col)]
+def top_k(df: DataFrame, order_col: str, k: int, tiebreak: str | None = None) -> DataFrame:
+    order = [F.desc(order_col)]
     if tiebreak:
         order.append(F.asc(tiebreak))
     return df.orderBy(*order).limit(k)

@@ -38,28 +38,22 @@ def stage_metrics(spark) -> dict[str, int]:
     Caveat: the store retains spark.ui.retainedStages (default 1000)
     stages; a diff spanning an eviction undercounts.  Snapshot tightly
     around one query (bench does) and the window is dozens of stages.
-    Returns zeros if the internal API ever drifts -- callers treat that
-    as "unavailable", not an error.
+    A drifted internal API raises: zeros would read as "shuffled nothing".
     """
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        jvm = spark._jvm
-        stages = store.stageList(
-            jvm.java.util.ArrayList(), False, False,
-            sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-        )
-        out = {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0, "input_bytes": 0,
-               "executor_run_ms": 0, "n_stages": 0}
-        it = stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            out["shuffle_read_bytes"] += s.shuffleReadBytes()
-            out["shuffle_write_bytes"] += s.shuffleWriteBytes()
-            out["input_bytes"] += s.inputBytes()
-            out["executor_run_ms"] += s.executorRunTime()
-            out["n_stages"] += 1
-        return out
-    except Exception:
-        return {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0, "input_bytes": 0,
-                "executor_run_ms": 0, "n_stages": 0}
+    sc = spark.sparkContext
+    jvm = spark._jvm
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    out = {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0, "input_bytes": 0,
+           "executor_run_ms": 0, "n_stages": 0}
+    it = stages.iterator()
+    while it.hasNext():
+        s = it.next()
+        out["shuffle_read_bytes"] += s.shuffleReadBytes()
+        out["shuffle_write_bytes"] += s.shuffleWriteBytes()
+        out["input_bytes"] += s.inputBytes()
+        out["executor_run_ms"] += s.executorRunTime()
+        out["n_stages"] += 1
+    return out

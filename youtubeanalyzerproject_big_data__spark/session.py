@@ -14,7 +14,9 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Cores of the local session (``local[CPUS]``), which is also its shuffle
+# partition count; read once, at import.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def loop_partitions(df: DataFrame) -> int:
@@ -139,7 +141,6 @@ def get_spark(
     Applied via spark.conf.set so it takes effect even when an existing
     session is reused (builder confs don't reach a live session).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     state_store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE")
     if state_store is not None and state_store not in STATE_STORE_PROVIDERS:
         raise ValueError(f"unknown state_store {state_store!r}; pick from {sorted(STATE_STORE_PROVIDERS)}")
@@ -149,14 +150,14 @@ def get_spark(
     os.makedirs(spark_local, exist_ok=True)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{CPUS}]")
         .config("spark.local.dir", spark_local)
         # AQE: runtime coalescing of shuffle partitions, skew-join splitting,
         # sort-merge -> broadcast conversion when a side turns out small.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(CPUS))
         # Arrow for any toPandas()/mapInPandas boundary (multimodal, ALS export).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Keep parquet scans splittable at cluster scale.

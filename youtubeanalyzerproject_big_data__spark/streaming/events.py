@@ -39,7 +39,6 @@ def run_stream_to_parquet(
     sink_dir: str,
     checkpoint_dir: str,
     output_mode: str = "append",
-    timeout_sec: int = 300,
 ) -> int:
     """Drive a streaming DataFrame to a parquet table via ``foreachBatch``
     and block until the (finite) source is drained (availableNow trigger).
@@ -75,9 +74,9 @@ def run_stream_to_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(300):
         q.stop()
-        raise RuntimeError(f"stream did not drain within {timeout_sec}s (sink={sink_dir})")
+        raise RuntimeError(f"stream did not drain within 300s (sink={sink_dir})")
     return len(batch_ids)
 
 
@@ -192,13 +191,7 @@ def stream_user_totals(
     )
 
 
-def stream_exact_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def stream_exact_dedup(spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming ingestion dedup: emit each document's key the FIRST time
     its normalized-text digest is seen; every later arrival (same batch or
     any later micro-batch) is suppressed.  The streaming twin of
@@ -210,7 +203,7 @@ def stream_exact_dedup(
     production deployment bounds it with a timeout (idle digests expire,
     trading exactness for bounded state -- the standard streaming-dedup
     compromise, equivalent to dropDuplicatesWithinWatermark semantics).
-    Within a first batch the smallest id wins, deterministically.
+    Within a first batch the smallest doc_id wins, deterministically.
     Output: (text_key, keep_id).
     """
     import pandas as pd
@@ -219,9 +212,7 @@ def stream_exact_dedup(
     from youtubeanalyzerproject_big_data__spark.functions.textfns import normalize
 
     stream = _read_stream(spark, source_dir, max_files_per_trigger)
-    keyed = stream.select(
-        F.md5(normalize(F.col(text_col))).alias("text_key"), F.col(id_col).alias("doc_id")
-    )
+    keyed = stream.select(F.md5(normalize(F.col("text"))).alias("text_key"), "doc_id")
 
     def first_seen(key, pdfs, state):
         if state.exists:
@@ -242,17 +233,14 @@ def stream_exact_dedup(
     )
 
 
-def stream_dedup_with_ttl(
-    spark: SparkSession,
-    source_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    event_time_col: str = "ts",
-    ttl_seconds: int = 10**9,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+# stream_dedup_with_ttl's digest lifetime in event-time seconds: 10^9 s
+# (~31 years) never expires within a corpus.
+DEDUP_TTL_SECONDS = 10**9
+
+
+def stream_dedup_with_ttl(spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """BOUNDED-STATE streaming dedup: first-seen per digest, but a digest's
-    state expires ``ttl_seconds`` of EVENT TIME after its last arrival
+    state expires DEDUP_TTL_SECONDS of EVENT TIME after its last arrival
     (GroupStateTimeout.EventTimeTimeout), so a duplicate arriving after the
     TTL re-emits.  This is the production form of stream_exact_dedup for
     unbounded key spaces: state size ~ |distinct digests seen within one
@@ -263,7 +251,7 @@ def stream_dedup_with_ttl(
     unordered batches; this keeps the min-id winner deterministic).
 
     Each arrival EXTENDS the key's timeout (last-arrival + TTL, the
-    sliding-TTL form); the source must carry ``event_time_col`` and the
+    sliding-TTL form); the source must carry a ``ts`` event time and the
     stream watermarks on it (0s delay -- callers order files by event time,
     the gate's mtime trick), because EventTimeTimeout fires exactly when
     the watermark passes the key's timeout timestamp.
@@ -274,12 +262,11 @@ def stream_dedup_with_ttl(
 
     from youtubeanalyzerproject_big_data__spark.functions.textfns import normalize
 
+    ttl_ms = DEDUP_TTL_SECONDS * 1000
     stream = _read_stream(spark, source_dir, max_files_per_trigger)
-    keyed = stream.select(
-        F.md5(normalize(F.col(text_col))).alias("text_key"),
-        F.col(id_col).alias("doc_id"),
-        F.col(event_time_col).alias("ts"),
-    ).withWatermark("ts", "0 seconds")
+    keyed = stream.select(F.md5(normalize(F.col("text"))).alias("text_key"), "doc_id", "ts").withWatermark(
+        "ts", "0 seconds"
+    )
 
     def first_seen_ttl(key, pdfs, state):
         if state.hasTimedOut:
@@ -299,7 +286,7 @@ def stream_dedup_with_ttl(
         if ts_max_ms is None:
             return  # every chunk empty: leave state/timeout untouched
         state.update((True,))
-        state.setTimeoutTimestamp(ts_max_ms + ttl_seconds * 1000)
+        state.setTimeoutTimestamp(ts_max_ms + ttl_ms)
         if not seen:
             yield pd.DataFrame({"text_key": [key[0]], "keep_id": [keep]})
 
@@ -382,13 +369,7 @@ def stream_interval_join(
     return errors.join(clicks, cond, how).select("err_id", "err_user", "clk_id", "clk_ts")
 
 
-def funnel_steps(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel_steps(events: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered-funnel user counts: for each prefix of ``steps``, how many
     users performed those event types in strict timestamp order (each step
     strictly after the previous one -- the product-analytics conversion
@@ -402,9 +383,9 @@ def funnel_steps(
     zone-exact).  Returns (step, step_no, n_users), one row per step.
     """
     us = events.select(
-        F.col(user_col).alias("u"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col(type_col).alias("et"),
+        F.col("user_id").alias("u"),
+        F.unix_micros(F.col("ts")).alias("ts_us"),
+        F.col("event_type").alias("et"),
     )
     reach: DataFrame | None = None
     counts: list[DataFrame] = []
@@ -474,14 +455,7 @@ def session_paths(events: DataFrame, gap_seconds: int = 1800, k: int = 20) -> Da
     )
 
 
-def conversion_latency(
-    events: DataFrame,
-    from_step: str,
-    to_step: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def conversion_latency(events: DataFrame, from_step: str, to_step: str) -> DataFrame:
     """Funnel conversion-latency distribution: for every user whose first
     ``to_step`` strictly follows their first ``from_step``, the elapsed
     micros between the two firsts; reported as converting-user count plus
@@ -497,9 +471,9 @@ def conversion_latency(
     mean_us).
     """
     us = events.select(
-        F.col(user_col).alias("u"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col(type_col).alias("et"),
+        F.col("user_id").alias("u"),
+        F.unix_micros(F.col("ts")).alias("ts_us"),
+        F.col("event_type").alias("et"),
     )
     first_from = us.where(F.col("et") == from_step).groupBy("u").agg(F.min("ts_us").alias("t0"))
     first_to = us.where(F.col("et") == to_step).groupBy("u").agg(F.min("ts_us").alias("t1"))
