@@ -1,18 +1,25 @@
-"""Unit tests for tools/segmented_oracle.py — the high-SF oracle twins.
+"""Unit tests for tools/segmented_oracle.py — the high-SF oracle twins —
+and for how tools/verify_local.py chooses between a twin and the one-shot
+oracle.
 
-These run pure DuckDB (no Spark session): the tool's whole claim is that a
-segmented evaluation is RESULT-identical to the one-shot oracle SQL, so each
-piece gets a small direct equivalence check, plus the memo-params guard that
-ADVICE r7 asked for (a memoized stage table reused under different
-result-defining params must be a hard error, never a silent stale read).
+These run pure DuckDB and pyarrow (no Spark session): the twins' whole
+claim is that a segmented evaluation is RESULT-identical to the one-shot
+oracle SQL, so each piece gets a small direct equivalence check, plus the
+memo-params guard that ADVICE r7 asked for (a memoized stage table reused
+under different result-defining params must be a hard error, never a
+silent stale read).
 """
 
 from __future__ import annotations
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+import __spark_entry__ as entrymod
 from tools import segmented_oracle as seg
+from tools import verify_local
 
 
 @pytest.fixture()
@@ -73,13 +80,6 @@ class TestSegmentedComponentsEquivalence:
         )
         assert got == want
 
-    def test_memoized_second_call_noop(self, con):
-        con.execute("CREATE TABLE pr (doc1 BIGINT, doc2 BIGINT)")
-        con.execute("INSERT INTO pr VALUES (1, 2)")
-        seg._segmented_components(con, "pr", out="lbl_t")
-        seg._segmented_components(con, "pr", out="lbl_t")  # table exists -> early return
-        assert con.execute("SELECT COUNT(*) FROM lbl_t").fetchone()[0] == 2
-
 
 class TestSegmentedPagerankEquivalence:
     def test_matches_oneshot_quantized_iteration(self, con):
@@ -110,6 +110,17 @@ class TestSegmentedPagerankEquivalence:
         assert got == pytest.approx(want)
 
 
+    @pytest.mark.parametrize("name", ["g4_pagerank_top100", "g5_pagerank_cyclic_top100", "g7_personalized_pagerank"])
+    def test_twin_matches_oneshot_on_a_small_graph(self, con, name):
+        # fewer than k ranked vertices, and seeds P4/P5 absent from the
+        # graph: the final union decides every row here
+        con.execute(
+            "CREATE TABLE lineitem AS SELECT * FROM (VALUES (1, 1), (1, 2), (2, 2), (2, 3), (3, 7), (4, 8), (4, 9)) "
+            "t(l_orderkey, l_partkey)"
+        )
+        assert seg.TWINS[name](con) == con.execute(entrymod.oracle_sql()[name]).fetchall()
+
+
 class TestSegmentedWedgeOracles:
     """g6/g9/g10 share the landed tc_e/tc_deg/tc_o graph; each segmented
     twin must be RESULT-identical to the committed one-shot oracle SQL
@@ -137,24 +148,45 @@ class TestSegmentedWedgeOracles:
         c.close()
 
     def test_g6_triangle_census_matches_oneshot(self, licon):
-        import __spark_entry__ as entrymod
-
         got = seg._segmented_triangles(licon, n_batches=4)
         want = licon.execute(entrymod.oracle_sql()["g6_triangle_census"]).fetchall()
         assert got == want
 
     def test_g10_clustering_matches_oneshot(self, licon):
-        import __spark_entry__ as entrymod
-
         got = seg._segmented_clustering_topk(licon, n_batches=4)
         want = licon.execute(entrymod.oracle_sql()["g10_clustering_coefficient"]).fetchall()
         assert got == want
         assert len(got) > 1  # non-vacuous: several vertices carry triangles
 
     def test_g9_adamic_adar_matches_oneshot(self, licon):
-        import __spark_entry__ as entrymod
-
         got = seg._segmented_adamic_adar(licon, n_batches=4)
         want = licon.execute(entrymod.oracle_sql()["g9_adamic_adar"]).fetchall()
         assert got == want
         assert len(got) > 1 and {r[0] for r in got} == {1, 1001}  # both seeds ranked
+
+
+class TestOracleChoice:
+    """verify_local reads lineitem's row count from the parquet footer: at
+    or below ONE_SHOT_MAX_ROWS every query keeps its one-shot oracle_sql()
+    twin, above it each query in TWINS goes to its segmented twin."""
+
+    @pytest.fixture()
+    def sf(self, tmp_path):
+        pq.write_table(pa.table({"l_orderkey": [1, 2, 3]}), tmp_path / "lineitem.parquet")
+        return str(tmp_path)
+
+    def test_one_shot_at_or_below_the_bound(self, sf, monkeypatch):
+        monkeypatch.setattr(verify_local, "ONE_SHOT_MAX_ROWS", 3)
+        assert verify_local.pick_oracles(sf) == entrymod.oracle_sql()
+
+    def test_twins_above_the_bound(self, sf, monkeypatch):
+        monkeypatch.setattr(verify_local, "ONE_SHOT_MAX_ROWS", 2)
+        picked, one_shot = verify_local.pick_oracles(sf), entrymod.oracle_sql()
+        assert picked.keys() == one_shot.keys()
+        for name, oracle in picked.items():
+            assert oracle == seg.TWINS.get(name, one_shot[name])
+
+    def test_every_twin_replaces_a_declared_oracle(self):
+        assert len(seg.TWINS) == 14
+        assert set(seg.TWINS) <= set(entrymod.queries())
+        assert set(seg.TWINS) <= set(entrymod.oracle_sql())

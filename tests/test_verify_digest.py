@@ -1,6 +1,7 @@
-"""Unit tests for tools/verify_local.py's digest-sum compare.
+"""Unit tests for tools/verify_local.py: its digest-sum compare, its disk
+guards, and where it imports the engine from.
 
-The row encoding must be INJECTIVE (ADVICE r8): the old '|'-join made
+The digest's row encoding must be INJECTIVE (ADVICE r8): the old '|'-join made
 ('a|b','c') and ('a','b|c') indistinguishable in BOTH engines (a
 false-PASS shape), and concat_ws silently skipped NULLs.  The
 length-prefixed encoding has to separate those, agree across engines on
@@ -9,6 +10,13 @@ NULL distinct from every literal string.
 """
 
 from __future__ import annotations
+
+import os
+import pathlib
+import shutil
+import subprocess
+import sys
+import time
 
 import duckdb
 import pytest
@@ -137,6 +145,34 @@ def test_disk_watchdog_fires_below_hard_floor(monkeypatch):
     assert "disk-guard" in wd.err_prefix() and "1.0 GB free" in wd.err_prefix()
 
 
+def test_disk_watchdog_interrupts_the_twin_connection(monkeypatch, tmp_path):
+    """A segmented twin runs on its own DuckDB file: while it runs, the
+    guard must interrupt that connection, not the idle shared one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import youtubeanalyzerproject_big_data__spark.session as sess
+    from tools.verify_local import TABLES, _DiskWatchdog, twin_connection
+
+    for t in TABLES:
+        pq.write_table(pa.table({"x": [1]}), tmp_path / f"{t}.parquet")
+    # low only once the twin's query has surely started, so the interrupt
+    # cannot land before it
+    fire_at = time.time() + 0.5
+    monkeypatch.setattr(sess, "scratch_free_gb", lambda: 1.0 if time.time() > fire_at else 500.0)
+    shared: list[str] = []
+    with _DiskWatchdog(_FakeSpark(), _FakeCon(shared), poll_s=0.02, hard_gb=5.0) as wd:
+        with twin_connection(str(tmp_path), str(tmp_path), "t", wd) as twin:
+            assert wd.con is twin
+            t0 = time.time()
+            with pytest.raises(duckdb.InterruptException):
+                twin.execute("SELECT sum(i % 7) FROM range(20000000000) t(i)").fetchall()
+        assert wd.con is not twin
+    assert time.time() - t0 < 5
+    assert shared == [] and wd.evidence["free_gb"] == 1.0
+    assert not list(tmp_path.glob("twin_*"))  # the twin's file is deleted
+
+
 def test_disk_watchdog_quiet_on_healthy_volume(monkeypatch):
     import time as _time
 
@@ -168,3 +204,25 @@ def test_scratch_floor_guard(monkeypatch):
     _assert_scratch_bounded(None, warn_gb=15)  # warn band: no raise
     monkeypatch.setattr(sess, "scratch_free_gb", lambda: 100.0)
     _assert_scratch_bounded(None, warn_gb=15)  # healthy
+
+
+def test_imports_the_engine_of_its_own_checkout(tmp_path):
+    """An A/B correctness run from a second checkout must check that
+    checkout's engine: the tool puts its own tree, not a fixed path, first
+    on sys.path."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    tree = tmp_path / "tree"
+    ignore = shutil.ignore_patterns("__pycache__")
+    for d in ("tools", "youtubeanalyzerproject_big_data__spark"):
+        shutil.copytree(root / d, tree / d, ignore=ignore)
+    shutil.copy(root / "__spark_entry__.py", tree)
+    code = (
+        "import importlib.util, sys\n"
+        f"spec = importlib.util.spec_from_file_location('verify_local', {str(tree / 'tools' / 'verify_local.py')!r})\n"
+        "spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "print(sys.modules['__spark_entry__'].__file__)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert pathlib.Path(out.stdout.strip().splitlines()[-1]).resolve() == (tree / "__spark_entry__.py").resolve()

@@ -1,4 +1,4 @@
-"""Merge per-chunk verify_local / segmented_oracle --json records into one
+"""Merge per-chunk tools/verify_local.py --json records into one
 round artifact (the sf10 sweep runs in chunks so partial progress survives
 an interrupted box; each chunk file is a {query: record} dict in the same
 driver format).

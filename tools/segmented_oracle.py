@@ -1,52 +1,37 @@
-"""Segmented DuckDB oracles for queries whose one-shot SQL exceeds temp disk
-at high scale factors.
+"""Segmented DuckDB twins of the oracles whose one-shot SQL outgrows temp
+disk or memory on the tiled fixtures (sf >= 1; FIXTURES.md "Scale-replay
+exclusions").
 
 g4/g5's oracle is an UNROLLED 10-join CTE (`contract/graph._pagerank_oracle`):
 at sf10 each of the 10 rank-join intermediates materializes against the
-60M-edge table inside one query and DuckDB's temp spill hit ENOSPC (see
-FIXTURES.md "Scale-replay exclusions").  The arithmetic itself is fine -- so
-this tool replays the SAME integer-quantized iteration SEGMENTED: each
-iteration is ONE bounded `CREATE TABLE r_i AS ... FROM w LEFT JOIN r_{i-1}`
-against an on-disk DuckDB database, and r_{i-1} is dropped before the next
-round.  Peak footprint = the weighted edge table + two vertex-sized rank
-tables, regardless of iteration count.  The final top-k is hash-compared to
-the engine result exactly like tools/verify_local.py.
+60M-edge table inside one query and DuckDB's temp spill hit ENOSPC.  The
+arithmetic itself is fine -- so the twin replays the SAME integer-quantized
+iteration SEGMENTED: each iteration is ONE bounded `CREATE TABLE r_i AS ...
+FROM w LEFT JOIN r_{i-1}`, and r_{i-1} is dropped before the next round.
+Peak footprint = the weighted edge table + two vertex-sized rank tables,
+regardless of iteration count.  The other twins bound their quadratic
+stages the same way (batches, rounds, landed stage tables).
 
-Usage:
-    python tools/segmented_oracle.py <sf_dir> [g4_pagerank_top100 g5_pagerank_cyclic_top100 g7_personalized_pagerank]
-    python tools/segmented_oracle.py --json out.json fixtures/sf10 g4_pagerank_top100
-    python tools/segmented_oracle.py --digest d3_minhash_lsh_pairs fixtures/sf30 d3_minhash_lsh_pairs
-
-``--digest a,b,c`` switches those queries (doc family only) to the
-verify_local digest-sum compare: both engines reduce the result to
-(count, two exact md5-lane sums over the injective length-prefixed row
-encoding; doubles as floor(x*1e6+0.5) micros) and only scalars cross the
-engine boundary -- the compare for results too big to collect (d3's sf30
-pair set is ~246M rows; collect-canon would hold tens of GB driver-side).
+``TWINS`` declares each twin once: query name -> a function of a DuckDB
+connection (the sf dir's tables as views) that returns the result rows, in
+the engine's column order, or the final SELECT over the stage tables it
+landed.  ``tools/verify_local.py`` checks a query against its twin instead
+of its one-shot ``oracle_sql()`` when the fixture is larger than every
+fixture the one-shot oracles are known green on; each twin runs on its own
+on-disk database file there.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import sys
-import tempfile
-import time
+from collections.abc import Callable
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-FWD_EDGES = (
-    "SELECT 'O' || CAST(l_orderkey AS VARCHAR) AS src, "
-    "'P' || CAST(l_partkey AS VARCHAR) AS dst FROM lineitem"
-)
-CYC_EDGES = (
-    FWD_EDGES
-    + " UNION ALL SELECT 'P' || CAST(l_partkey AS VARCHAR), "
-    "'O' || CAST(l_orderkey AS VARCHAR) FROM lineitem"
-)
+from youtubeanalyzerproject_big_data__spark import contract
+from youtubeanalyzerproject_big_data__spark.functions.hashing import md5_int32_lane_sql
+from youtubeanalyzerproject_big_data__spark.functions.precision import dratio_sql
+from youtubeanalyzerproject_big_data__spark.operators import dedup
+from youtubeanalyzerproject_big_data__spark.operators.graph import CONTRIB_SCALE
 
 
 def _segmented_pagerank(
@@ -62,8 +47,6 @@ def _segmented_pagerank(
     engine's arithmetic -- see _pagerank_oracle's docstring for why the
     quantization makes summation order irrelevant), with each r_i landed
     as a TABLE and its predecessor dropped."""
-    from youtubeanalyzerproject_big_data__spark.operators.graph import CONTRIB_SCALE
-
     r = f"CAST({reset!r} AS DOUBLE)"
     d = f"CAST({1.0 - reset!r} AS DOUBLE)"
     s = f"CAST({int(CONTRIB_SCALE)} AS DOUBLE)"
@@ -75,7 +58,6 @@ def _segmented_pagerank(
         init_src = f"CASE WHEN w.src IN ({lst}) THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END"
         absent_src = f"CASE WHEN w.src IN ({lst}) THEN {r} ELSE CAST(0.0 AS DOUBLE) END"
 
-    con.execute(f"CREATE OR REPLACE TABLE sources AS SELECT DISTINCT src FROM ({edges_sql})")
     con.execute(
         f"""CREATE OR REPLACE TABLE w AS
             SELECT e.src, e.dst, CAST(1.0 AS DOUBLE) / deg.dg AS wt
@@ -98,31 +80,22 @@ def _segmented_pagerank(
         )
         con.execute(f"DROP TABLE r{i - 1}")
     last = f"r{max_iter}"
+    # the one-shot twins' allr: every unreached source at reset, or, for
+    # PPR, the positive ranks plus each unreached seed at reset
     if seeds is None:
-        absent_final = r
-        extra = f"SELECT src AS id, {r} AS rank FROM sources WHERE src NOT IN (SELECT id FROM {last})"
+        ranked = f"SELECT id, rank FROM {last}"
+        extra = f"SELECT DISTINCT src AS id, {r} AS rank FROM w WHERE src NOT IN (SELECT id FROM {last})"
     else:
-        lst = ", ".join(f"'{x}'" for x in seeds)
-        extra = (
-            f"SELECT src AS id, CASE WHEN src IN ({lst}) THEN {r} ELSE CAST(0.0 AS DOUBLE) END AS rank "
-            f"FROM sources WHERE src NOT IN (SELECT id FROM {last})"
-        )
+        ranked = f"SELECT id, rank FROM {last} WHERE rank > 0"
+        extra = f"SELECT sid AS id, {r} AS rank FROM (SELECT unnest([{lst}]) AS sid) WHERE sid NOT IN (SELECT id FROM {last})"
     rows = con.execute(
-        f"""WITH allr AS (SELECT id, rank FROM {last} UNION ALL {extra})
+        f"""WITH allr AS ({ranked} UNION ALL {extra})
             SELECT id, ROUND(rank, 6) AS pagerank FROM allr
             ORDER BY pagerank DESC, id LIMIT {k}"""
     ).fetchall()
     con.execute(f"DROP TABLE {last}")
     con.execute("DROP TABLE w")
-    con.execute("DROP TABLE sources")
     return rows
-
-
-SEGMENTED = {
-    "g4_pagerank_top100": (FWD_EDGES, None),
-    "g5_pagerank_cyclic_top100": (CYC_EDGES, None),
-    "g7_personalized_pagerank": (CYC_EDGES, "PPR_SEEDS"),
-}
 
 
 def _segmented_kcore(con: duckdb.DuckDBPyConnection, k: int, rounds: int) -> list[tuple]:
@@ -163,12 +136,10 @@ def _segmented_kcore(con: duckdb.DuckDBPyConnection, k: int, rounds: int) -> lis
 
 def _mat_copurchase_graph(con: duckdb.DuckDBPyConnection) -> None:
     """tc_e (DISTINCT canonical co-purchase edges, a < b), tc_deg, and tc_o
-    (degree-ordered orientation, the g6 one-shot's `o` CTE verbatim) --
-    landed once per run and shared by g6/g9/g10's segmented twins.  All
-    three are edge/vertex-sized; the quadratic wedge work happens in the
-    per-query batches, never here."""
-    if _table_exists(con, "tc_o"):
-        return
+    (degree-ordered orientation, the g6 one-shot's `o` CTE verbatim): the
+    co-purchase graph g6/g9/g10's twins land first.  All three are
+    edge/vertex-sized; the quadratic wedge work happens in the per-query
+    batches, never here."""
     con.execute(
         """CREATE OR REPLACE TABLE tc_e AS
            SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
@@ -301,31 +272,6 @@ def _segmented_adamic_adar(con: duckdb.DuckDBPyConnection, k: int = 5, n_batches
     return rows
 
 
-def _scoped_oracle(tmp: str, sf: str, tag: str, fn):
-    """Run one heavyweight oracle on a FRESH on-disk DuckDB, then delete it.
-
-    DuckDB files never shrink: a graph oracle's high-water mark stays
-    allocated in the shared connection's file for the rest of the run --
-    at sf30 the kcore self-join's ~750M-row round tables left the shared
-    file holding most of the volume, and the SPARK leg that runs next hit
-    the disk-guard floor with the query itself perfectly healthy.  A
-    scoped file returns the space the moment the rows are fetched."""
-    path = os.path.join(tmp, f"seg_{tag}.duckdb")
-    from tools.verify_local import bound_oracle
-
-    c = duckdb.connect(path)
-    try:
-        bound_oracle(c, tmp)
-        c.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf}/lineitem.parquet'")
-        c.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
-        return fn(c)
-    finally:
-        c.close()
-        for p in (path, path + ".wal"):
-            if os.path.exists(p):
-                os.remove(p)
-
-
 def _table_exists(con: duckdb.DuckDBPyConnection, name: str) -> bool:
     return (
         con.execute(
@@ -335,12 +281,7 @@ def _table_exists(con: duckdb.DuckDBPyConnection, name: str) -> bool:
     )
 
 
-def _segmented_components(
-    con: duckdb.DuckDBPyConnection,
-    pairs_table: str = "pr",
-    out: str = "lbl",
-    max_rounds: int = 30,
-) -> None:
+def _segmented_components(con: duckdb.DuckDBPyConnection, pairs_table: str, out: str, max_rounds: int = 30) -> None:
     """Materialized min-label propagation with path compression -- the
     segmented twin of d7/d15's recursive `reach` closure, whose
     path-enumerating intermediate spilled DuckDB past temp disk at sf>=1
@@ -348,10 +289,7 @@ def _segmented_components(
     graph (neighbor-min, then label-of-label hop), so convergence takes
     O(log diameter) rounds and peak footprint is two label tables.
     Leaves the result as table ``out`` (id -> component-min label,
-    self included at init, matching LEAST(doc_id, min reachable));
-    memoized per run so queries sharing a pair set share the labels."""
-    if _table_exists(con, out):
-        return
+    self included at init, matching LEAST(doc_id, min reachable))."""
     con.execute(
         f"CREATE OR REPLACE TABLE e AS "
         f"SELECT doc1 AS a, doc2 AS b FROM {pairs_table} UNION SELECT doc2, doc1 FROM {pairs_table}"
@@ -487,8 +425,6 @@ def _mat_thresh_pairs(
 # columns -- integer half-up twins of precision.ratio_round, same as the
 # committed oracle_sql (the ROUND(double-quotient) form split one output
 # ulp between engines on 41/640-class ratios; VERDICT r9 item 3).
-from youtubeanalyzerproject_big_data__spark.functions.precision import dratio_sql
-
 JAC_EXPR = dratio_sql("n_common", "(n1 + n2 - n_common)")
 CONT_ANY = f"{dratio_sql('n_common', 'n1')} >= 0.9 OR {dratio_sql('n_common', 'n2')} >= 0.9"
 
@@ -511,8 +447,6 @@ def _mat_lsh_pairs(
     uncapped all-pairs `jac`, which ENOSPC'd DuckDB at sf10."""
     if _memoized(con, f"{p}_lshpr", (source, num_hashes, bands, threshold, max_bucket)):
         return
-    from youtubeanalyzerproject_big_data__spark.functions.hashing import md5_int32_lane_sql
-
     _mat_shingles(con, p, source=source)
     rpb = num_hashes // bands
     mins = ", ".join(
@@ -566,281 +500,133 @@ def _mat_lsh_pairs(
     )
     con.execute(f"DROP TABLE {p}_cacc")
     con.execute(f"DROP TABLE {p}_candd")
-    if os.environ.get("SPARK_GRAFT_SEG_DROP_INPUTS") == "1":
-        # Shrink the oracle's on-disk residue before the Spark leg runs: at
-        # sf30 the shingle table alone is ~450M rows (~20 GB) and the box ran
-        # out of headroom with it still landed (the r10 d3 watchdog abort).
-        # t_lshpr is self-contained for d3/d15; a later same-run query that
-        # needs shingles (d2 family) transparently rebuilds them -- the memo
-        # checks table existence, so this trades recompute for disk.
-        for t in (f"{p}_sh", f"{p}_sizes"):
-            con.execute(f"DROP TABLE IF EXISTS {t}")
-        con.execute(f"DROP TABLE IF EXISTS {p}_shf")
+    # No final SELECT reads the shingle tables once {p}_lshpr is landed;
+    # drop them before a digest compare's Spark leg runs: at sf30 the
+    # shingle table alone is ~450M rows (~20 GB) and the box ran out of
+    # headroom with it still landed (the r10 d3 watchdog abort).
+    for t in ("sh", "sizes", "shf"):
+        con.execute(f"DROP TABLE IF EXISTS {p}_{t}")
 
 
-def _doc_query_sql(con: duckdb.DuckDBPyConnection, name: str) -> str:
-    """Segmented replays for the document dedup family: builds the memoized
-    stage tables on ``con`` (queries sharing a pair set pay once -- d2/d12/
-    d7/c1 the capped-Jaccard stage, d3/d15 the LSH stage), then returns the
-    FINAL SELECT as a string.  Callers either fetchall() it (collect-canon
-    compare) or aggregate it into the digest-sum scalars without ever
-    materializing the result (d3's sf30 pair set is ~246M rows -- VERDICT
-    r9 item 1)."""
-    from youtubeanalyzerproject_big_data__spark import contract
-    from youtubeanalyzerproject_big_data__spark.operators import dedup
-
-    capped_preds = {"t_jac08": f"{JAC_EXPR} >= 0.8", "t_cont09": CONT_ANY}
-
-    if name == "d2_ngram_jaccard_pairs":
-        _mat_thresh_pairs(con, dedup.DEFAULT_MAX_DF, capped_preds)
-        return f"SELECT doc1, doc2, {JAC_EXPR} AS jaccard FROM t_jac08"
-    if name == "d12_containment_pairs":
-        _mat_thresh_pairs(con, dedup.DEFAULT_MAX_DF, capped_preds)
-        return f"""SELECT contained_id, container_id, containment FROM (
-                 SELECT doc1 AS contained_id, doc2 AS container_id, {dratio_sql('n_common', 'n1')} AS containment FROM t_cont09
-                 UNION ALL
-                 SELECT doc2 AS contained_id, doc1 AS container_id, {dratio_sql('n_common', 'n2')} AS containment FROM t_cont09)
-               WHERE containment >= 0.9
-               ORDER BY contained_id, container_id"""
-    if name == "d3_minhash_lsh_pairs":
-        _mat_lsh_pairs(con, max_bucket=dedup.DEFAULT_MAX_BUCKET)
-        return "SELECT doc1, doc2, jaccard FROM t_lshpr"
-    if name == "dr1_dedup_recall":
-        # Both legs run on the deterministic md5 sample, truth UNCAPPED
-        # (max_df=None) exactly as the one-shot SQL; only the evaluation
-        # order is segmented.
-        sample_src = contract.dedup._DR1_SAMPLE_SQL
-        _mat_thresh_pairs(con, None, {"s_jac08": f"{JAC_EXPR} >= 0.8"}, p="s", n_batches=32, source=sample_src)
-        _mat_lsh_pairs(con, p="s", max_bucket=2000, n_batches=16, source=sample_src)
-        return """WITH tru AS (SELECT doc1, doc2 FROM s_jac08),
-               t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM tru),
-               f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM tru
-                     WHERE EXISTS (SELECT 1 FROM s_lshpr l WHERE l.doc1 = tru.doc1 AND l.doc2 = tru.doc2))
-               SELECT t.n_true, f.n_found,
-                      CAST(CASE WHEN t.n_true = 0 THEN -1
-                                ELSE (1000000 * f.n_found) // t.n_true END AS BIGINT) AS recall_ppm
-               FROM t, f"""
-    if name == "d7_dup_clusters":
-        _mat_thresh_pairs(con, dedup.DEFAULT_MAX_DF, capped_preds)
-        _segmented_components(con, "t_jac08", out="lbl_cap")
-        return ("SELECT d.doc_id, CAST(COALESCE(l.lbl, d.doc_id) AS BIGINT) AS cluster_id "
-                "FROM documents d LEFT JOIN lbl_cap l ON d.doc_id = l.id")
-    if name == "c1_corpus_curation":
-        # c1's one-shot oracle embeds the SAME recursive `reach` closure as
-        # d7 (pair stage: shingle-jaccard >= 0.8); on the 100x-tiled fixture
-        # the closure enumerates ~s^2 paths per s-sized clone group and was
-        # observed at 119 GB RSS with no output after 30 min at sf10.  The
-        # pair stage is batched, the component stage label-propagated; the
-        # token/langid tail is linear and replays verbatim.
-        _mat_thresh_pairs(con, dedup.DEFAULT_MAX_DF, capped_preds)
-        _segmented_components(con, "t_jac08", out="lbl_cap")
-        return rf"""
-            WITH rep AS (
-              SELECT d.doc_id FROM documents d LEFT JOIN lbl_cap l ON d.doc_id = l.id
-              WHERE COALESCE(l.lbl, d.doc_id) = d.doc_id
-            ),
-            q AS (
-              SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-                     {dratio_sql('(len(tk) - len(list_distinct(tk)))', 'greatest(len(tk), 1)')} AS dup_token_ratio
-              FROM (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x != '') AS tk
-                    FROM documents)
-            ),
-            lng AS (SELECT doc_id, lang_pred FROM ({contract.text._lang_id_oracle()}))
-            SELECT q.doc_id, q.n_tokens, lng.lang_pred
-            FROM q JOIN lng ON q.doc_id = lng.doc_id
-            JOIN rep ON q.doc_id = rep.doc_id
-            WHERE lng.lang_pred = 'en' AND q.n_tokens >= 10 AND q.dup_token_ratio <= 0.6
-            """
-    if name == "d15_dedup_keep_best":
-        _mat_lsh_pairs(con, max_bucket=dedup.DEFAULT_MAX_BUCKET)
-        _segmented_components(con, "t_lshpr", out="lbl_lsh")
-        return """WITH m AS (SELECT l.id AS doc_id, l.lbl AS cluster_id, d.n_chars
-                          FROM lbl_lsh l JOIN documents d ON l.id = d.doc_id),
-               rk AS (SELECT cluster_id, doc_id, n_chars,
-                             row_number() OVER (PARTITION BY cluster_id
-                                                ORDER BY n_chars DESC, doc_id) AS rn
-                      FROM m),
-               sz AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
-                      FROM m GROUP BY cluster_id)
-               SELECT sz.cluster_id, sz.n_members, rk.doc_id AS canonical_id,
-                      CAST(rk.n_chars AS BIGINT) AS canonical_chars,
-                      CAST(sz.n_members - 1 AS BIGINT) AS n_removed
-               FROM sz JOIN rk ON sz.cluster_id = rk.cluster_id AND rk.rn = 1
-               WHERE sz.n_members >= 2
-               ORDER BY sz.cluster_id"""
-    raise KeyError(name)
+# Each doc-family twin lands its pair stage (batched; see _mat_thresh_pairs
+# and _mat_lsh_pairs) and returns the final SELECT, which the harness
+# either fetches (collect-canon compare) or aggregates into the digest-sum
+# scalars without materializing the result (d3's sf30 pair set is ~246M
+# rows -- VERDICT r9 item 1).
+_JAC08 = {"t_jac08": f"{JAC_EXPR} >= 0.8"}
 
 
-COMPONENT_QUERIES = (
-    "d7_dup_clusters",
-    "d15_dedup_keep_best",
-    "c1_corpus_curation",
-    "d2_ngram_jaccard_pairs",
-    "d12_containment_pairs",
-    "d3_minhash_lsh_pairs",
-    "dr1_dedup_recall",
-)
+def _d2(con: duckdb.DuckDBPyConnection) -> str:
+    _mat_thresh_pairs(con, dedup.DEFAULT_MAX_DF, _JAC08)
+    return f"SELECT doc1, doc2, {JAC_EXPR} AS jaccard FROM t_jac08"
 
 
-def main() -> None:
-    argv = sys.argv[1:]
-    json_out = None
-    digest_only: set[str] = set()
-    # order-independent flag parsing, same contract as tools/verify_local.py
-    while argv and argv[0].startswith("--"):
-        if argv[0] == "--json" and len(argv) >= 2:
-            json_out = argv[1]
-            argv = argv[2:]
-        elif argv[0] == "--digest" and len(argv) >= 2:
-            digest_only = set(argv[1].split(","))
-            argv = argv[2:]
-        else:
-            sys.exit(f"unknown or incomplete flag: {argv[0]} (known: --json OUT, --digest a,b,c)")
-    sf = argv[0]
-    names = argv[1:] or ["g4_pagerank_top100"]
-    # digest mode aggregates the oracle's final SELECT SQL-side, so it is
-    # only wired for the doc family (the others return Python row lists);
-    # an unsupported name must fail loudly, not silently collect-canon
-    bad_digest = digest_only - set(COMPONENT_QUERIES)
-    if bad_digest:
-        sys.exit(f"--digest supports only the doc family {COMPONENT_QUERIES}, got {sorted(bad_digest)}")
-    for nm in digest_only - set(names):
-        names.append(nm)
-
-    from tools.verify_local import _digest_compare, bound_oracle, canon
-    from youtubeanalyzerproject_big_data__spark import contract
-    from youtubeanalyzerproject_big_data__spark.session import get_spark
-
-    spark = get_spark("segmented-oracle")
-    qs = contract.queries()
-    records: dict[str, dict] = {}
-    from youtubeanalyzerproject_big_data__spark.session import scratch_dir
-
-    tmp = scratch_dir("segora_")  # repo-local: DuckDB spill can reach tens of GB and must not race a /tmp sweep
-    try:
-        con = duckdb.connect(os.path.join(tmp, "seg.duckdb"))  # on-disk: rank/edge tables may spill
-        bound_oracle(con, tmp)
-        con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf}/lineitem.parquet'")
-        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
-        def _post_query() -> None:
-            # Reap finished stages' shuffle files (a single sf10 dedup query
-            # writes ~40 GB of blockmgr data; without a GC nudge it persists
-            # until session exit and the 4-query run can exhaust the disk).
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-            from tools.verify_local import _assert_scratch_bounded
-
-            _assert_scratch_bounded(spark)
-
-        def _run_one(name: str) -> dict:
-            """One segmented compare; prints ok/FAIL, returns the record."""
-            t0 = time.time()
-            if name in COMPONENT_QUERIES:
-                if name in digest_only:
-                    final_sql = _doc_query_sql(con, name)
-                    # Result too big to collect-canon (d3's sf30 pair set is
-                    # ~246M rows): both engines reduce to (count, two exact
-                    # md5-lane sums) over the injective row encoding and only
-                    # scalars cross the boundary -- the verify_local --digest
-                    # contract, run against the stage tables on this con.
-                    t_stage = time.time() - t0
-                    rec = _digest_compare(spark, con, sf, name, qs[name], final_sql)
-                    rec["oracle"] = "segmented-iteration"
-                    rec["t_oracle_s"] = round(rec.get("t_oracle_s", 0.0) + t_stage, 1)
-                    status = "ok  " if (rec["hash_match"] and not rec["err"]) else "FAIL"
-                    print(
-                        f"{status} {name} (segmented digest-sum, {rec['spark_rows']} rows, "
-                        f"spark {rec.get('t_spark_s')}s, oracle {rec.get('t_oracle_s')}s"
-                        + (f", err={rec['err']}" if rec["err"] else "") + ")",
-                        flush=True,
-                    )
-                    return rec
-                # Non-digest doc queries collect small results, so their
-                # oracle runs SCOPED: the shingle/pair stage tables' high-
-                # water mark (DuckDB files never shrink) must be returned
-                # to the volume before the Spark leg runs -- at sf30p the
-                # perturbed fixture has 1.5M DISTINCT contents and the
-                # shared-file residue starved d2's Spark leg to the
-                # disk-guard floor.  Each query rebuilds its stages (the
-                # memo is per-file) -- oracle time traded for disk.
-                orows = _scoped_oracle(
-                    tmp, sf, name, lambda c: c.execute(_doc_query_sql(c, name)).fetchall()
-                )
-            elif name == "g13_kcore":
-                # scoped file: the kcore rounds' high-water mark must not
-                # stay allocated while the Spark leg runs (see _scoped_oracle)
-                orows = _scoped_oracle(
-                    tmp, sf, "g13",
-                    lambda c: _segmented_kcore(c, contract.graph.G13_CORE_K, contract.graph.G13_CORE_ROUNDS),
-                )
-            elif name == "g6_triangle_census":
-                orows = _segmented_triangles(con)
-            elif name == "g9_adamic_adar":
-                orows = _segmented_adamic_adar(con)
-            elif name == "g10_clustering_coefficient":
-                orows = _segmented_clustering_topk(con)
-            else:
-                edges_sql, seeds_key = SEGMENTED[name]
-                seeds = getattr(contract.graph, seeds_key) if seeds_key else None
-                orows = _segmented_pagerank(con, edges_sql, seeds)
-            t_oracle = time.time() - t0
-            t1 = time.time()
-            sdf = qs[name](spark, sf)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            t_spark = time.time() - t1
-            ok_rows = len(srows) == len(orows)
-            ok_vals = canon(srows, scols) == canon(orows, scols)
-            rec = {
-                "rows_match": ok_rows,
-                "schema_match": True,
-                "hash_match": ok_vals,
-                "spark_rows": len(srows),
-                "oracle_rows": len(orows),
-                "err": None,
-                "oracle": "segmented-iteration",
-                "t_spark_s": round(t_spark, 1),
-                "t_oracle_s": round(t_oracle, 1),
-            }
-            status = "ok  " if (ok_rows and ok_vals) else "FAIL"
-            print(f"{status} {name} (segmented oracle, spark {t_spark:.1f}s, oracle {t_oracle:.1f}s)", flush=True)
-            return rec
-
-        from tools.verify_local import _DiskWatchdog
-
-        for name in names:
-            # mid-query disk guard: a single sf30 wedge/pair stage can spike
-            # past the box mid-query where the between-query floor check
-            # can't help (VERDICT r9 item 4); cancels Spark jobs and
-            # interrupts DuckDB cleanly, evidence lands in the record
-            with _DiskWatchdog(spark, con) as wd:
-                try:
-                    records[name] = _run_one(name)
-                except Exception as e:  # noqa: BLE001
-                    records[name] = {
-                        "rows_match": False, "schema_match": False, "hash_match": False,
-                        "spark_rows": None, "oracle_rows": None,
-                        "oracle": "segmented-iteration",
-                        "err": wd.err_prefix() + f"{type(e).__name__}: {str(e)[:200]}",
-                    }
-                    print(f"FAIL {name}: {records[name]['err']}", flush=True)
-            if json_out:  # incremental: a late crash keeps the finished rows
-                with open(json_out, "w") as f:
-                    json.dump(records, f, indent=1)
-            # the scratch-floor abort (RuntimeError) propagates from here ON
-            # PURPOSE -- it must stop the sweep, not be recorded as one
-            # query's failure
-            _post_query()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    if json_out:
-        with open(json_out, "w") as f:
-            json.dump(records, f, indent=1)
-    if not all(r["rows_match"] and r["hash_match"] for r in records.values()):
-        sys.exit(1)
+def _d12(con: duckdb.DuckDBPyConnection) -> str:
+    _mat_thresh_pairs(con, dedup.DEFAULT_MAX_DF, {"t_cont09": CONT_ANY})
+    return f"""SELECT contained_id, container_id, containment FROM (
+             SELECT doc1 AS contained_id, doc2 AS container_id, {dratio_sql('n_common', 'n1')} AS containment FROM t_cont09
+             UNION ALL
+             SELECT doc2 AS contained_id, doc1 AS container_id, {dratio_sql('n_common', 'n2')} AS containment FROM t_cont09)
+           WHERE containment >= 0.9
+           ORDER BY contained_id, container_id"""
 
 
-if __name__ == "__main__":
-    main()
+def _d3(con: duckdb.DuckDBPyConnection) -> str:
+    _mat_lsh_pairs(con, max_bucket=dedup.DEFAULT_MAX_BUCKET)
+    return "SELECT doc1, doc2, jaccard FROM t_lshpr"
+
+
+def _dr1(con: duckdb.DuckDBPyConnection) -> str:
+    # Both legs run on the deterministic md5 sample, truth UNCAPPED
+    # (max_df=None) exactly as the one-shot SQL; only the evaluation
+    # order is segmented.
+    sample_src = contract.dedup._DR1_SAMPLE_SQL
+    _mat_thresh_pairs(con, None, {"s_jac08": f"{JAC_EXPR} >= 0.8"}, p="s", n_batches=32, source=sample_src)
+    _mat_lsh_pairs(con, p="s", max_bucket=2000, n_batches=16, source=sample_src)
+    return """WITH tru AS (SELECT doc1, doc2 FROM s_jac08),
+           t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM tru),
+           f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM tru
+                 WHERE EXISTS (SELECT 1 FROM s_lshpr l WHERE l.doc1 = tru.doc1 AND l.doc2 = tru.doc2))
+           SELECT t.n_true, f.n_found,
+                  CAST(CASE WHEN t.n_true = 0 THEN -1
+                            ELSE (1000000 * f.n_found) // t.n_true END AS BIGINT) AS recall_ppm
+           FROM t, f"""
+
+
+def _capped_clusters(con: duckdb.DuckDBPyConnection) -> None:
+    """lbl_cap: the components of the capped shingle-Jaccard >= 0.8 pairs
+    (d7's clusters, c1's dedup stage)."""
+    _mat_thresh_pairs(con, dedup.DEFAULT_MAX_DF, _JAC08)
+    _segmented_components(con, "t_jac08", out="lbl_cap")
+
+
+def _d7(con: duckdb.DuckDBPyConnection) -> str:
+    _capped_clusters(con)
+    return ("SELECT d.doc_id, CAST(COALESCE(l.lbl, d.doc_id) AS BIGINT) AS cluster_id "
+            "FROM documents d LEFT JOIN lbl_cap l ON d.doc_id = l.id")
+
+
+def _c1(con: duckdb.DuckDBPyConnection) -> str:
+    # c1's one-shot oracle embeds the SAME recursive `reach` closure as
+    # d7 (pair stage: shingle-jaccard >= 0.8); on the 100x-tiled fixture
+    # the closure enumerates ~s^2 paths per s-sized clone group and was
+    # observed at 119 GB RSS with no output after 30 min at sf10.  The
+    # pair stage is batched, the component stage label-propagated; the
+    # token/langid tail is linear and replays verbatim.
+    _capped_clusters(con)
+    return rf"""
+        WITH rep AS (
+          SELECT d.doc_id FROM documents d LEFT JOIN lbl_cap l ON d.doc_id = l.id
+          WHERE COALESCE(l.lbl, d.doc_id) = d.doc_id
+        ),
+        q AS (
+          SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
+                 {dratio_sql('(len(tk) - len(list_distinct(tk)))', 'greatest(len(tk), 1)')} AS dup_token_ratio
+          FROM (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x != '') AS tk
+                FROM documents)
+        ),
+        lng AS (SELECT doc_id, lang_pred FROM ({contract.text._lang_id_oracle()}))
+        SELECT q.doc_id, q.n_tokens, lng.lang_pred
+        FROM q JOIN lng ON q.doc_id = lng.doc_id
+        JOIN rep ON q.doc_id = rep.doc_id
+        WHERE lng.lang_pred = 'en' AND q.n_tokens >= 10 AND q.dup_token_ratio <= 0.6
+        """
+
+
+def _d15(con: duckdb.DuckDBPyConnection) -> str:
+    _mat_lsh_pairs(con, max_bucket=dedup.DEFAULT_MAX_BUCKET)
+    _segmented_components(con, "t_lshpr", out="lbl_lsh")
+    return """WITH m AS (SELECT l.id AS doc_id, l.lbl AS cluster_id, d.n_chars
+                      FROM lbl_lsh l JOIN documents d ON l.id = d.doc_id),
+           rk AS (SELECT cluster_id, doc_id, n_chars,
+                         row_number() OVER (PARTITION BY cluster_id
+                                            ORDER BY n_chars DESC, doc_id) AS rn
+                  FROM m),
+           sz AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
+                  FROM m GROUP BY cluster_id)
+           SELECT sz.cluster_id, sz.n_members, rk.doc_id AS canonical_id,
+                  CAST(rk.n_chars AS BIGINT) AS canonical_chars,
+                  CAST(sz.n_members - 1 AS BIGINT) AS n_removed
+           FROM sz JOIN rk ON sz.cluster_id = rk.cluster_id AND rk.rn = 1
+           WHERE sz.n_members >= 2
+           ORDER BY sz.cluster_id"""
+
+
+TWINS: dict[str, Callable[[duckdb.DuckDBPyConnection], list[tuple] | str]] = {
+    "g4_pagerank_top100": lambda con: _segmented_pagerank(con, contract.graph.PAGERANK_EDGES_SQL, None),
+    "g5_pagerank_cyclic_top100": lambda con: _segmented_pagerank(con, contract.graph.PAGERANK_CYCLIC_EDGES_SQL, None),
+    "g7_personalized_pagerank": lambda con: _segmented_pagerank(
+        con, contract.graph.PAGERANK_CYCLIC_EDGES_SQL, contract.graph.PPR_SEEDS
+    ),
+    "g6_triangle_census": _segmented_triangles,
+    "g9_adamic_adar": _segmented_adamic_adar,
+    "g10_clustering_coefficient": _segmented_clustering_topk,
+    "g13_kcore": lambda con: _segmented_kcore(con, contract.graph.G13_CORE_K, contract.graph.G13_CORE_ROUNDS),
+    "d2_ngram_jaccard_pairs": _d2,
+    "d12_containment_pairs": _d12,
+    "d3_minhash_lsh_pairs": _d3,
+    "dr1_dedup_recall": _dr1,
+    "d7_dup_clusters": _d7,
+    "c1_corpus_curation": _c1,
+    "d15_dedup_keep_best": _d15,
+}

@@ -1,32 +1,45 @@
 """Local stand-in for the driver's correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same sf dir, then compares row count, column names, and an
+Runs every ``queries()`` entry on Spark and checks it against a DuckDB
+oracle over the same sf dir: row count, column names, and an
 order-insensitive value comparison (exact match after canonicalization).
 
-Usage: python tools/verify_local.py [--json out.json] [sf_dir] [query_name ...]
+Usage: python tools/verify_local.py [--json out.json] [--digest a,b,c] [sf_dir] [query_name ...]
+
+The oracle is the query's ``oracle_sql()`` twin, unless the fixture's
+lineitem has more than ONE_SHOT_MAX_ROWS rows: then each query with a
+segmented twin (``tools/segmented_oracle.TWINS``) is checked against that
+twin instead, and its record carries ``"oracle": "segmented-iteration"``.
 
 With ``--json out.json``, also writes a driver-format per-query record
 ({name: {rows_match, schema_match, hash_match, spark_rows, oracle_rows,
 err}}) so a full-contract correctness artifact can be committed each round
 (the driver itself samples only ~50 of the contract queries per round).
 Rows-only queries (no oracle) record null for the oracle-side fields.
+``--digest a,b,c`` compares those queries by digest sum (_digest_compare)
+instead of collecting their results.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import json
 import math
 import os
+import shutil
 import sys
 import time
+from collections.abc import Callable
 
 import duckdb
+import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from youtubeanalyzerproject_big_data__spark.session import get_spark
+from tools import segmented_oracle
+from youtubeanalyzerproject_big_data__spark.session import get_spark, scratch_dir
 
 
 def canon(rows: list[tuple], cols: list[str]) -> list[tuple]:
@@ -217,7 +230,9 @@ class _DiskWatchdog:
 
         if hard_gb is None:
             hard_gb = float(os.environ.get("SPARK_GRAFT_MIN_FREE_GB", "15")) / 3
-        self._spark, self._con, self._poll_s, self._hard_gb = spark, con, poll_s, hard_gb
+        # ``con`` is the connection the running oracle uses; twin_connection
+        # points it at a segmented twin's own file while the twin runs
+        self._spark, self.con, self._poll_s, self._hard_gb = spark, con, poll_s, hard_gb
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
         self.evidence: dict = {}
@@ -242,9 +257,9 @@ class _DiskWatchdog:
                     self._spark.sparkContext.cancelAllJobs()
                 except Exception:
                     pass
-                if self._con is not None:
+                if self.con is not None:
                     try:
-                        self._con.interrupt()
+                        self.con.interrupt()
                     except Exception:
                         pass
                 return
@@ -292,12 +307,135 @@ def oracle_memory_mb() -> int:
     return max(512, left // 2 >> 20)
 
 
-def bound_oracle(con: duckdb.DuckDBPyConnection, spill_dir: str) -> None:
-    """Cap ``con`` at :func:`oracle_memory_mb` and spill to ``spill_dir``
-    (a capped DuckDB without a temp directory fails an over-budget
-    operator instead of spilling it)."""
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+
+def bound_oracle(con: duckdb.DuckDBPyConnection, sf: str, spill_dir: str) -> None:
+    """Cap ``con`` at :func:`oracle_memory_mb`, spill to ``spill_dir`` (a
+    capped DuckDB without a temp directory fails an over-budget operator
+    instead of spilling it), and view ``sf``'s tables."""
     con.execute(f"SET memory_limit='{oracle_memory_mb()}MB'")
     con.execute(f"SET temp_directory='{spill_dir}'")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+
+
+@contextlib.contextmanager
+def twin_connection(sf: str, spill_dir: str, name: str, wd: _DiskWatchdog):
+    """A fresh on-disk DuckDB for one segmented twin, which ``wd``
+    interrupts while the twin runs; deleted on exit.
+
+    DuckDB files never shrink: a twin's high-water mark would stay
+    allocated in a shared file for the rest of the run -- at sf30 the
+    kcore self-join's ~750M-row round tables left the shared file holding
+    most of the volume, and the Spark leg that ran next hit the disk-guard
+    floor with the query itself healthy.  A file per twin returns the
+    space as soon as the twin's result is compared."""
+    path = os.path.join(spill_dir, f"twin_{name}.duckdb")
+    con = duckdb.connect(path)
+    shared, wd.con = wd.con, con
+    try:
+        bound_oracle(con, sf, spill_dir)
+        yield con
+    finally:
+        wd.con = shared
+        con.close()
+        for p in (path, path + ".wal"):
+            if os.path.exists(p):
+                os.remove(p)
+
+
+# sf0.1's lineitem row count: the largest fixture the driver runs, and every
+# one-shot oracle_sql() twin is hash-exact on it.  On larger (tiled)
+# fixtures the heavy one-shot oracles outgrow temp disk or memory (FIXTURES.md
+# "Scale-replay exclusions"), so those queries go to their segmented twins.
+ONE_SHOT_MAX_ROWS = 600_000
+
+
+def pick_oracles(sf: str) -> dict[str, str | Callable]:
+    """Each query's oracle over ``sf``: its ``oracle_sql()`` SQL or, when
+    ``sf``'s lineitem has more than ONE_SHOT_MAX_ROWS rows (read from the
+    parquet footer), its segmented twin where it has one."""
+    oracles = entrymod.oracle_sql()
+    if pq.ParquetFile(os.path.join(sf, "lineitem.parquet")).metadata.num_rows > ONE_SHOT_MAX_ROWS:
+        oracles.update(segmented_oracle.TWINS)
+    return oracles
+
+
+def check(spark, con, sf: str, name: str, fn, oracle, digest: bool, wd: _DiskWatchdog, spill_dir: str) -> tuple[dict, str]:
+    """Check one query against ``oracle`` -- one-shot SQL run on ``con``,
+    a segmented twin run on its own file (twin_connection), or None for a
+    rows-only query -- and return its record and its ok/FAIL line.
+
+    The oracle runs first, so a twin's file is gone before the Spark leg
+    runs; under ``digest`` the Spark leg runs inside the twin's scope, as
+    the digest sum aggregates the twin's final SELECT over its tables."""
+    rec = {"rows_match": False, "schema_match": False, "hash_match": False,
+           "spark_rows": None, "oracle_rows": None, "err": None}
+    twin = callable(oracle)
+    if twin:
+        rec["oracle"] = "segmented-iteration"
+    leg = "duckdb"
+    t0 = time.time()
+    try:
+        with twin_connection(sf, spill_dir, name, wd) if twin else contextlib.nullcontext(con) as ocon:
+            final = oracle(ocon) if twin else oracle  # SQL, a twin's rows, or None
+            if digest:
+                if not isinstance(final, str):
+                    raise TypeError(f"digest compare needs an oracle SELECT, {name}'s oracle gives {type(final).__name__}")
+                t_stage = time.time() - t0
+                rec.update(_digest_compare(spark, ocon, sf, name, fn, final))
+                if rec["err"]:
+                    rec["err"] = wd.err_prefix() + rec["err"]
+                    return rec, f"FAIL {name}: digest compare: {rec['err']} {rec}"
+                rec["t_oracle_s"] = round(rec["t_oracle_s"] + t_stage, 1)
+                if not rec["hash_match"]:
+                    return rec, f"FAIL {name}: digest compare: mismatch {rec}"
+                return rec, (
+                    f"ok   {name}: digest-sum ({rec['spark_rows']} rows, "
+                    f"spark {rec['t_spark_s']}s, oracle {rec['t_oracle_s']}s)"
+                )
+            if isinstance(final, str):
+                res = ocon.execute(final)
+                ocols, orows = [d[0] for d in res.description], res.fetchall()
+            else:
+                ocols, orows = None, final
+            t_oracle = round(time.time() - t0, 1)
+        leg = "spark"
+        t1 = time.time()
+        sdf = fn(spark, sf)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+        rec.update(spark_rows=len(srows), t_spark_s=round(time.time() - t1, 1))
+    except Exception as e:  # noqa: BLE001
+        rec["err"] = wd.err_prefix() + f"{leg}: {type(e).__name__}: {str(e)[:200]}"
+        return rec, f"FAIL {name}: {rec['err']}"
+    if orows is None:
+        rec.update(rows_match=len(srows) > 0, schema_match=None, hash_match=None)
+        return rec, f"ok   {name}: rows-only ({len(srows)} rows, {time.time() - t0:.1f}s)" + (
+            "" if srows else f"\nWARN {name}: zero rows"
+        )
+    if ocols is None:
+        ocols = scols  # a twin's rows come in the engine's column order
+    problems = []
+    schema_ok = sorted(scols) == sorted(ocols)
+    rows_ok = len(srows) == len(orows)
+    values_ok = False
+    if not schema_ok:
+        problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
+    if not rows_ok:
+        problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if not problems:
+        sc, oc = canon(srows, scols), canon(orows, ocols)
+        values_ok = sc == oc
+        if not values_ok:
+            diff = [(a, b) for a, b in zip(sc, oc) if a != b][:3]
+            problems.append(f"values differ, first diffs: {diff}")
+    rec.update(rows_match=rows_ok, schema_match=schema_ok, hash_match=values_ok,
+               oracle_rows=len(orows), t_oracle_s=t_oracle)
+    if problems:
+        return rec, f"FAIL {name}: " + "; ".join(p[:400] for p in problems)
+    return rec, f"ok   {name} ({len(srows)} rows, {'segmented twin, ' if twin else ''}{time.time() - t0:.1f}s)"
 
 
 def main() -> None:
@@ -319,25 +457,18 @@ def main() -> None:
     only = set(argv[1:])
     records: dict[str, dict] = {}
     spark = get_spark("verify-local")
-    con = duckdb.connect()
-    # The oracle shares the box with the Spark heap; spill goes to the
-    # repo-local scratch (sweep-safe, same as Spark's).
-    from youtubeanalyzerproject_big_data__spark.session import scratch_dir
-
+    # The oracle shares the box with the Spark heap; spill and twin files go
+    # to the repo-local scratch (sweep-safe, same as Spark's).  scratch_dir's
+    # contract: caller cleans up. atexit covers crash exits too -- verora_*
+    # dirs accumulated across sweeps (ADVICE r8).
     oracle_scratch = scratch_dir("verora_")
-    bound_oracle(con, oracle_scratch)
-    # scratch_dir's contract: caller cleans up. atexit covers crash
-    # exits too -- verora_* dirs accumulated across sweeps (ADVICE r8).
-    import atexit
-    import shutil
-
     atexit.register(shutil.rmtree, oracle_scratch, ignore_errors=True)
-    for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = duckdb.connect()
+    bound_oracle(con, sf, oracle_scratch)
 
     def _flush() -> None:
         # incremental: a late crash in a multi-hour scale sweep keeps the
-        # finished rows (same contract as tools/segmented_oracle.py)
+        # finished rows
         if json_out:
             # write-then-rename: a crash mid-dump (seen: MemoryError during
             # a starved sweep) must not truncate the already-banked records
@@ -354,10 +485,12 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
         except Exception:
             pass
+        # the scratch-floor abort (RuntimeError) propagates ON PURPOSE -- it
+        # must stop the sweep, not be recorded as one query's failure
         _assert_scratch_bounded(spark)
 
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    oracles = pick_oracles(sf)
     failures = []
     # a typo in --digest or the positional name list must FAIL loudly, not
     # silently run nothing (ADVICE r8)
@@ -372,91 +505,19 @@ def main() -> None:
             continue
         # mid-query disk guard: cancels cleanly instead of ENOSPC (see _DiskWatchdog)
         with _DiskWatchdog(spark, con) as wd:
-            if name in digest_only:
-                rec = _digest_compare(spark, con, sf, name, qs[name], oracles[name])
-                if rec["err"]:
-                    rec["err"] = wd.err_prefix() + rec["err"]
-                records[name] = rec
-                if rec["err"] or not rec["hash_match"]:
-                    failures.append(name)
-                    print(f"FAIL {name}: digest compare: {rec['err'] or 'mismatch'} {rec}")
-                else:
-                    print(
-                        f"ok   {name}: digest-sum ({rec['spark_rows']} rows, "
-                        f"spark {rec['t_spark_s']}s, oracle {rec['t_oracle_s']}s)"
-                    )
-                _flush()
-                continue
-            t0 = time.time()
-            try:
-                sdf = fn(spark, sf)
-                scols = sdf.columns
-                srows = [tuple(r) for r in sdf.collect()]
-                t_spark = round(time.time() - t0, 1)
-            except Exception as e:
-                failures.append(name)
-                records[name] = {"rows_match": False, "schema_match": False, "hash_match": False,
-                                 "spark_rows": None, "oracle_rows": None,
-                                 "err": wd.err_prefix() + f"spark: {type(e).__name__}: {str(e)[:200]}"}
-                print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
-                _flush()
-                continue
-            if name not in oracles:
-                records[name] = {"rows_match": len(srows) > 0, "schema_match": None,
-                                 "hash_match": None, "spark_rows": len(srows),
-                                 "oracle_rows": None, "err": None, "t_spark_s": t_spark}
-                print(f"ok   {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-                if len(srows) == 0:
-                    print(f"WARN {name}: zero rows")
-                _flush()
-                continue
-            t1 = time.time()
-            try:
-                res = con.execute(oracles[name])
-                ocols = [d[0] for d in res.description]
-                orows = res.fetchall()
-                t_oracle = round(time.time() - t1, 1)
-            except Exception as e:
-                failures.append(name)
-                records[name] = {"rows_match": False, "schema_match": False, "hash_match": False,
-                                 "spark_rows": len(srows), "oracle_rows": None,
-                                 "err": wd.err_prefix() + f"duckdb: {type(e).__name__}: {str(e)[:200]}",
-                                 "t_spark_s": t_spark}
-                print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
-                _flush()
-                continue
-            problems = []
-            schema_ok = sorted(scols) == sorted(ocols)
-            rows_ok = len(srows) == len(orows)
-            values_ok = False
-            if not schema_ok:
-                problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
-            if not rows_ok:
-                problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-            if not problems:
-                sc, oc = canon(srows, scols), canon(orows, ocols)
-                values_ok = sc == oc
-                if not values_ok:
-                    diff = [(a, b) for a, b in zip(sc, oc) if a != b][:3]
-                    problems.append(f"values differ, first diffs: {diff}")
-            records[name] = {"rows_match": rows_ok, "schema_match": schema_ok,
-                             "hash_match": values_ok, "spark_rows": len(srows),
-                             "oracle_rows": len(orows), "err": None,
-                             "t_spark_s": t_spark, "t_oracle_s": t_oracle}
-            if problems:
-                failures.append(name)
-                print(f"FAIL {name}: " + "; ".join(p[:400] for p in problems))
-            else:
-                print(f"ok   {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            _flush()
+            rec, line = check(spark, con, sf, name, fn, oracles.get(name), name in digest_only, wd, oracle_scratch)
+        records[name] = rec
+        print(line, flush=True)
+        if rec["err"] or rec["hash_match"] is False:
+            failures.append(name)
+        _flush()
     if json_out:
         _flush()
         print(f"wrote {json_out} ({len(records)} queries)")
     con.close()  # release temp files before the atexit rmtree
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
     if failures:
-        # callers keying on exit status (CI, && chains) must see the failure,
-        # same contract as segmented_oracle.main (ADVICE r9)
+        # callers keying on exit status (CI, && chains) must see the failure
         sys.exit(1)
 
 

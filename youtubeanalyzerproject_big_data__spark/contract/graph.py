@@ -381,12 +381,18 @@ SELECT id, ROUND(rank, 6) AS pagerank FROM allr ORDER BY pagerank DESC, id LIMIT
 """
 
 
-_PAGERANK_EDGES_SQL = (
+# The order->part edges (g4, g15) and their cyclic order<->part union
+# (g5, g7); tools/segmented_oracle.py's twins replay the same SQL.
+PAGERANK_EDGES_SQL = (
     "SELECT 'O' || CAST(l_orderkey AS VARCHAR) AS src, 'P' || CAST(l_partkey AS VARCHAR) AS dst FROM lineitem"
+)
+PAGERANK_CYCLIC_EDGES_SQL = (
+    PAGERANK_EDGES_SQL
+    + " UNION ALL SELECT 'P' || CAST(l_partkey AS VARCHAR), 'O' || CAST(l_orderkey AS VARCHAR) FROM lineitem"
 )
 
 
-@query("g4_pagerank_top100", bench=True, stdout=True, oracle=_pagerank_oracle(_PAGERANK_EDGES_SQL, reset=0.15, max_iter=10, k=100))
+@query("g4_pagerank_top100", bench=True, stdout=True, oracle=_pagerank_oracle(PAGERANK_EDGES_SQL, reset=0.15, max_iter=10, k=100))
 def q_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """G4 PageRank (PageRank_Spark_v5.py:102: resetProb 0.15, maxIter 10)
     over the order->part bipartite graph; top-100 (O1).  Oracle: 10 unrolled
@@ -401,8 +407,7 @@ def q_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @query("g5_pagerank_cyclic_top100", bench=True, stdout=True, oracle=_pagerank_oracle(
-    _PAGERANK_EDGES_SQL
-    + " UNION ALL SELECT 'P' || CAST(l_partkey AS VARCHAR), 'O' || CAST(l_orderkey AS VARCHAR) FROM lineitem",
+    PAGERANK_CYCLIC_EDGES_SQL,
     reset=0.15,
     max_iter=10,
     k=100,
@@ -463,8 +468,7 @@ SELECT id, ROUND(rank, 6) AS pagerank FROM allr ORDER BY pagerank DESC, id LIMIT
 
 
 @query("g7_personalized_pagerank", bench=True, stdout=True, oracle=_ppr_oracle(
-    _PAGERANK_EDGES_SQL
-    + " UNION ALL SELECT 'P' || CAST(l_partkey AS VARCHAR), 'O' || CAST(l_orderkey AS VARCHAR) FROM lineitem",
+    PAGERANK_CYCLIC_EDGES_SQL,
     PPR_SEEDS,
     reset=0.15,
     max_iter=10,
@@ -647,7 +651,7 @@ SELECT role, rank, id, score_ppm FROM (
 
 
 # g15: generated unrolled exact-integer HITS rounds (see _hits_oracle).
-@query("g15_hits_top20", bench=True, stdout=True, oracle=_hits_oracle(_PAGERANK_EDGES_SQL, rounds=3, quantum=1_000_000, k=20))
+@query("g15_hits_top20", bench=True, stdout=True, oracle=_hits_oracle(PAGERANK_EDGES_SQL, rounds=3, quantum=1_000_000, k=20))
 def q_g15(spark: SparkSession, sf: str) -> DataFrame:
     """HITS hubs & authorities over the directed order->part graph
     (graph.hits): 3 exact-integer mutual-reinforcement rounds with

@@ -136,12 +136,11 @@ def get_spark(
     hold: AQE owns post-shuffle partition counts, so
     ``spark.sql.shuffle.partitions`` is an upper bound, not a schedule.
 
-    ``state_store`` ('hdfs' | 'rocksdb', default env SPARK_GRAFT_STATE_STORE
-    or Spark's default): streaming state backend; see STATE_STORE_PROVIDERS.
+    ``state_store`` ('hdfs' | 'rocksdb', default Spark's own): streaming
+    state backend; see STATE_STORE_PROVIDERS.
     Applied via spark.conf.set so it takes effect even when an existing
     session is reused (builder confs don't reach a live session).
     """
-    state_store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE")
     if state_store is not None and state_store not in STATE_STORE_PROVIDERS:
         raise ValueError(f"unknown state_store {state_store!r}; pick from {sorted(STATE_STORE_PROVIDERS)}")
     # spark.local.dir is read once at JVM start; pointing it at the repo-local
@@ -173,12 +172,6 @@ def get_spark(
         # contract) get their buffer eaten by them, so keep stdout clean.
         .config("spark.ui.showConsoleProgress", "false")
     )
-    # Escape hatch for scale replays: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    # (e.g. spark.io.compression.codec=zstd to shrink the sf10 shuffle
-    # footprint on a disk-tight box). Builder-time only.
-    for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     if state_store is not None:
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", STATE_STORE_PROVIDERS[state_store])
