@@ -117,8 +117,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.meter import MB, SparkCounters, set_job_group
 from youtubeanalyzerproject_big_data__spark.contract import declared, queries
-from youtubeanalyzerproject_big_data__spark.plans.inspect import stage_metrics
 from youtubeanalyzerproject_big_data__spark.session import CPUS, get_spark
 
 # Headline set (``bench`` tag): the heavy/representative queries (joins,
@@ -192,13 +192,9 @@ def main() -> None:
     all_samples: dict[str, list[float]] = {}
     shuffle_write: dict[str, int] = {}
     shuffle_read: dict[str, int] = {}
+    counters = SparkCounters(spark)
     for name in BENCH_QUERIES:
         samples = []
-        # Shuffle volume is the contention-immune cost signal (VERDICT r5
-        # item 7): snapshot the AppStatusStore around the FIRST sample only
-        # (bytes are deterministic per query; later samples may legally
-        # read session caches -- g4/g5/g7's shared edge handle).
-        metrics_before = stage_metrics(spark)
         for i in range(n_runs):
             # No clearCache needed: every operator that caches an
             # intermediate (shingles, edges, ratings) releases it before
@@ -207,14 +203,22 @@ def main() -> None:
             # share a session-scoped prepared weighted-edge handle
             # (contract/graph._prepared_pagerank_edges) -- reusing that build IS
             # the measured design, not cross-run leakage.
+            # Shuffle volume is the contention-immune cost signal (VERDICT
+            # r5 item 7), metered on the FIRST sample only under the
+            # query's own job group (bytes are deterministic per query;
+            # later samples may legally read session caches -- g4/g5/g7's
+            # shared edge handle).
+            if i == 0:
+                set_job_group(spark.sparkContext, f"bench/{name}")
             t0 = time.time()
             rows = qs[name](spark, sf_dir).collect()
             samples.append(time.time() - t0)
             assert rows is not None
             if i == 0:
-                metrics_after = stage_metrics(spark)
-                shuffle_write[name] = max(0, metrics_after["shuffle_write_bytes"] - metrics_before["shuffle_write_bytes"])
-                shuffle_read[name] = max(0, metrics_after["shuffle_read_bytes"] - metrics_before["shuffle_read_bytes"])
+                set_job_group(spark.sparkContext, None)
+                spent = counters.read(f"bench/{name}")
+                shuffle_write[name] = round(spent["shuffle_write_mb"] * MB)
+                shuffle_read[name] = round(spent["shuffle_read_mb"] * MB)
         # Expensive queries get extra samples: they dominate the headline
         # total and are where contention noise fakes 2x regressions.
         while statistics.median(samples) >= 3.0 and len(samples) < slow_runs:
@@ -252,7 +256,7 @@ def main() -> None:
                 "shuffle_write_bytes": shuffle_write,
                 "shuffle_read_bytes": shuffle_read,
                 "shuffle_note": (
-                    "per-query shuffle volume from the first sample's AppStatusStore delta -- "
+                    "per-query shuffle volume of the first sample's job group in the AppStatusStore -- "
                     "the contention-immune cost signal: wall-clock noise cannot inflate it, and a "
                     "scale-killer plan regression (edge table re-shuffled per iteration, lost "
                     "broadcast) shows up here as a bytes jump long before sf0.1 timing moves; "

@@ -163,14 +163,43 @@ def test_pinning_operators_release_what_they_built(spark, docs, name):
 
 
 def test_simhash_identical_docs_distance_zero(docs):
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import simhash_pairs, simhash_signatures
+    from youtubeanalyzerproject_big_data__spark.operators.dedup import hamming_pairs, simhash_signatures
 
-    sigs = {r["doc_id"]: r["simhash"] for r in simhash_signatures(docs, "doc_id", "text").collect()}
+    sig_df = simhash_signatures(docs, "doc_id", "text")
+    sigs = {r["doc_id"]: r["simhash"] for r in sig_df.collect()}
     assert sigs[1] == sigs[2] == sigs[3]  # same token set after normalize/distinct
-    pairs = {(r["doc1"], r["doc2"]): r["hamming"] for r in simhash_pairs(docs, "doc_id", "text").collect()}
+    pairs = {(r["doc1"], r["doc2"]): r["hamming"] for r in hamming_pairs(sig_df, "doc_id", "simhash", 32, 3).collect()}
     assert pairs[(1, 2)] == 0
     # near-dup differs by one token -> small distance, recalled by blocking
     assert (1, 4) in pairs and pairs[(1, 4)] <= 3
+
+
+@pytest.mark.parametrize("d", [1, 2, 3])
+def test_hamming_pairs_is_complete_below_the_cap(spark, d):
+    """Pigeonhole completeness: with no bucket over the cap, the chunk
+    blocking finds EVERY pair within distance d -- exactly the brute-force
+    all-pairs set.  Seeded random 60-bit hashes, plus planted partners at
+    each distance 0..d (and one at d + 1, which must stay out)."""
+    import random
+
+    from youtubeanalyzerproject_big_data__spark.operators.dedup import hamming_pairs
+
+    rng = random.Random(20 + d)
+    hashes = [rng.getrandbits(60) for _ in range(60)]
+    for base in hashes[:12]:
+        for dist in range(d + 2):
+            hashes.append(base ^ sum(1 << b for b in rng.sample(range(60), dist)))
+    rows = list(enumerate(hashes))
+    want = {
+        (i, j, bin(hi ^ hj).count("1"))
+        for i, hi in rows
+        for j, hj in rows
+        if i < j and bin(hi ^ hj).count("1") <= d
+    }
+    assert {dist for _, _, dist in want} == set(range(d + 1))  # every planted distance present
+    df = spark.createDataFrame(rows, "id long, h long")
+    got = {tuple(r) for r in hamming_pairs(df, "id", "h", 60, d).collect()}
+    assert got == want
 
 
 def test_embedding_near_dup(spark):

@@ -596,15 +596,22 @@ def test_prepared_edges_memo_bounded_across_sf_switches(spark):
 def test_copurchase_cap_drops_degenerate_group(spark):
     """g12: a group over max_group_size contributes NOTHING (the whole
     point -- its g*(g-1)/2 pairs would run in one task); within-cap groups
-    expand exactly, duplicates and nulls ignored."""
+    expand exactly, duplicates and nulls ignored.  The cap is inclusive: a
+    group of exactly 8 distinct items is kept, one of 9 is dropped."""
     from youtubeanalyzerproject_big_data__spark.operators.graph import copurchase_edges
 
-    rows = [("big", i) for i in range(10)] + [("ok", 100), ("ok", 101), ("ok", 102), ("ok", 101), ("nil", None)]
+    rows = (
+        [("big", i) for i in range(10)]
+        + [("ok", 100), ("ok", 101), ("ok", 102), ("ok", 101), ("nil", None)]
+        + [("at_cap", 200 + i) for i in range(8)] + [("at_cap", 200)]
+        + [("over_cap", 300 + i) for i in range(9)]
+    )
     df = spark.createDataFrame(rows, "g string, i long")
     out = sorted(tuple(r) for r in copurchase_edges(df, "g", "i", max_group_size=8).collect())
-    assert out == [(100, 101), (100, 102), (101, 102)]
-    # uncapped: the big group contributes C(10,2) = 45 pairs
-    assert copurchase_edges(df, "g", "i").count() == 45 + 3
+    at_cap = [(200 + a, 200 + b) for a in range(8) for b in range(a + 1, 8)]
+    assert out == [(100, 101), (100, 102), (101, 102)] + at_cap
+    # uncapped: C(10,2) + 3 + C(8,2) + C(9,2) pairs
+    assert copurchase_edges(df, "g", "i").count() == 45 + 3 + 28 + 36
 
 
 def test_kcore_peels_chain_keeps_clique(spark):

@@ -67,7 +67,7 @@ def test_transform_media_resize_chains_into_features(spark):
     media = multimodal.attach_media_metadata(
         df.select("doc_id", F.encode("text", "utf-8").alias("blob")), "doc_id", "blob", "image"
     )
-    small = multimodal.transform_media(media, op="resize", factor=4, decode_stub="fake")
+    small = multimodal.transform_media(media, factor=4, decode_stub="fake")
     rows = {r["media_id"]: r for r in small.collect()}
     assert bytes(rows["1"]["content"]) == b"aei" and rows["1"]["n_bytes"] == 3
     assert rows["1"]["content_md5"] == hashlib.md5(b"aei").hexdigest()
@@ -277,7 +277,7 @@ def test_auto_codec_samples_video_frames_via_ffmpeg(spark):
     assert 0.0 < vid_feats[0]["feat_mean"] < 1.0
 
     # real spatial downscale: re-encoded clip decodes to quarter dimensions
-    small = multimodal.transform_media(media, op="resize", factor=2, decode_stub="auto").collect()
+    small = multimodal.transform_media(media, factor=2, decode_stub="auto").collect()
     assert 0 < small[0]["n_bytes"] < len(blob) * 2  # re-encoded, sane size
     df2 = spark.createDataFrame([(2, bytearray(bytes(small[0]["content"])))], "doc_id long, blob binary")
     media2 = multimodal.attach_media_metadata(df2, "doc_id", "blob", "video")
@@ -289,6 +289,7 @@ def test_perceptual_hash_pairs_cluster_and_block(spark):
     from pyspark.sql import functions as F
 
     from youtubeanalyzerproject_big_data__spark.operators import multimodal as mm
+    from youtubeanalyzerproject_big_data__spark.operators.dedup import hamming_pairs
 
     rows = [(1, "abcdefgh" * 8), (2, "abcdefgh" * 8), (3, "zzzzyyyy" * 8)]
     docs = spark.createDataFrame(rows, "doc_id long, text string").select(
@@ -296,7 +297,7 @@ def test_perceptual_hash_pairs_cluster_and_block(spark):
     )
     media = mm.attach_media_metadata(docs, "doc_id", "blob", "image")
     h = mm.perceptual_hashes(media, decode_stub="fake", n_bits=32)
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in mm.phash_near_dup_pairs(h, 32, 3).collect()}
+    pairs = {(r["doc1"], r["doc2"]): r["hamming"] for r in hamming_pairs(h, "media_id", "phash", 32, 3).collect()}
     assert pairs[("1", "2")] == 0  # identical blobs hash identically
     assert ("1", "3") not in pairs and ("2", "3") not in pairs
 
@@ -308,16 +309,6 @@ def test_perceptual_hash_exact_integer_mean_rule(spark):
     assert _ahash_bits([1, 2, 3], 32) == 0b100
     assert _ahash_bits([], 32) == 0
     assert _ahash_bits([5, 5, 5], 32) == 0  # nothing strictly above the mean
-
-
-def test_phash_pairs_rejects_unblockable_distance(spark):
-    import pytest as _pytest
-
-    from youtubeanalyzerproject_big_data__spark.operators import multimodal as mm
-
-    df = spark.createDataFrame([("1", 0)], "media_id string, phash long")
-    with _pytest.raises(ValueError):
-        mm.phash_near_dup_pairs(df, n_bits=32, max_distance=4)
 
 
 def test_audio_features_exact_dsp_on_known_samples(spark):

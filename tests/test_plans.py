@@ -30,24 +30,37 @@ def operator_counts(df) -> dict[str, int]:
     return {op: plan.count(op) for op in ("Exchange", "SortMergeJoin")}
 
 
-def test_stage_metrics_counts_a_group_by_shuffle(spark):
-    """stage_metrics is bench.py's shuffle-bytes source: a groupBy writes
-    shuffle bytes, so the before/after delta is positive.  The status store
-    keeps spark.ui.retainedStages stages and drops a tenth of them when
-    full; a pair of snapshots around that drop (n_stages falls) is retaken,
-    and the drop leaves room for the retake."""
+def test_job_group_meter_counts_only_its_group(spark):
+    """bench.py and tools/bench_isolated.py read a query's shuffle bytes
+    from perfbench.meter.SparkCounters under the query's own job group: its
+    groupBy's shuffle counts, and a larger shuffle run outside the group
+    (between the query and the read) adds nothing -- the read equals that
+    of the same query in a second group."""
     from pyspark.sql import functions as F
 
-    from youtubeanalyzerproject_big_data__spark.plans.inspect import stage_metrics
+    from perfbench.meter import SparkCounters, set_job_group
 
-    for _ in range(2):
-        before = stage_metrics(spark)
-        spark.range(10_000).groupBy((F.col("id") % 97).alias("k")).count().collect()
-        after = stage_metrics(spark)
-        if after["n_stages"] > before["n_stages"]:
-            break
-    assert after["shuffle_write_bytes"] > before["shuffle_write_bytes"], (before, after)
-    assert after["shuffle_read_bytes"] > before["shuffle_read_bytes"], (before, after)
+    sc = spark.sparkContext
+    counters = SparkCounters(spark)
+
+    def group_by(n: int, keys: int) -> None:
+        spark.range(n).groupBy((F.col("id") % keys).alias("k")).count().collect()
+
+    def in_group(group: str) -> None:
+        set_job_group(sc, group)
+        try:
+            group_by(10_000, 97)
+        finally:
+            set_job_group(sc, None)
+
+    in_group("meter-test/a")
+    group_by(100_000, 5_000)  # outside every group
+    in_group("meter-test/b")
+    a, b = counters.read("meter-test/a"), counters.read("meter-test/b")
+    assert a["jobs"] >= 1 and a["shuffle_write_mb"] > 0 and a["shuffle_read_mb"] > 0, a
+    assert (a["jobs"], a["shuffle_write_mb"], a["shuffle_read_mb"]) == (
+        b["jobs"], b["shuffle_write_mb"], b["shuffle_read_mb"]
+    ), (a, b)
 
 
 def test_filter_pushed_to_parquet_scan(spark):
@@ -672,14 +685,15 @@ def test_semantic_dedup_pairs_are_cell_bounded(spark):
 def test_copurchase_build_is_groupby_not_selfjoin(spark):
     """g12: the capped projection must plan as groupBy + in-array pair
     expansion -- NO join operator at all (the naive build self-joins the
-    fact table), and only the two hash shuffles (group collect, distinct)."""
+    fact table), and only the group collect's hash shuffle: the builder
+    returns the raw per-group stream, each consumer dedups it."""
     from youtubeanalyzerproject_big_data__spark.io import load_table
     from youtubeanalyzerproject_big_data__spark.operators.graph import copurchase_edges
 
     li = load_table(spark, SF, "lineitem")
     plan = _plan(copurchase_edges(li, "l_orderkey", "l_partkey", max_group_size=8))
     assert "Join" not in plan
-    assert plan.count("Exchange hashpartitioning") == 2
+    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_zonemap_report_has_no_global_data_window(spark):

@@ -226,3 +226,24 @@ def test_imports_the_engine_of_its_own_checkout(tmp_path):
     out = subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
     assert pathlib.Path(out.stdout.strip().splitlines()[-1]).resolve() == (tree / "__spark_entry__.py").resolve()
+
+
+def test_digest_on_a_rows_twin_fails_before_the_twin_runs(monkeypatch, tmp_path):
+    """A twin that returns rows cannot feed the digest-sum compare, and its
+    kind is declared in ``segmented_oracle.TWINS``: ``--digest`` on it must
+    FAIL without running the twin (minutes of oracle time at sf10) or the
+    Spark leg."""
+    from tools import segmented_oracle as seg
+    from tools.verify_local import _DiskWatchdog, check
+
+    name = "g4_pagerank_top100"
+
+    def boom(*_):
+        raise AssertionError("the twin or the Spark leg ran")
+
+    monkeypatch.setattr(seg.TWINS[name], "fn", boom)
+    wd = _DiskWatchdog(_FakeSpark())
+    rec, line = check(None, None, str(tmp_path), name, boom, seg.TWINS[name], True, wd, str(tmp_path))
+    assert line.startswith(f"FAIL {name}:"), line
+    assert rec["err"].startswith("duckdb: TypeError: digest compare needs an oracle SELECT"), rec
+    assert not rec["hash_match"] and not list(tmp_path.iterdir())

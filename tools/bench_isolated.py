@@ -29,7 +29,7 @@ def main() -> None:
     names = [a for a in argv if "/" not in a]
 
     import __spark_entry__ as entrymod
-    from youtubeanalyzerproject_big_data__spark.plans.inspect import stage_metrics
+    from perfbench.meter import MB, SparkCounters, set_job_group
     from youtubeanalyzerproject_big_data__spark.session import get_spark
 
     detail = {}
@@ -42,21 +42,21 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
     spark = get_spark("bench-isolated")
+    counters = SparkCounters(spark)
     for name in names:
         walls = []
         shuf = None
         for i in range(3):
             spark.catalog.clearCache()
-            before = stage_metrics(spark)
+            if i == 0:
+                set_job_group(spark.sparkContext, f"isolated/{name}")
             t0 = time.time()
             qs[name](spark, sf).collect()
             walls.append(time.time() - t0)
             if i == 0:
-                after = stage_metrics(spark)
-                shuf = {
-                    "w": after["shuffle_write_bytes"] - before["shuffle_write_bytes"],
-                    "r": after["shuffle_read_bytes"] - before["shuffle_read_bytes"],
-                }
+                set_job_group(spark.sparkContext, None)
+                spent = counters.read(f"isolated/{name}")
+                shuf = {"w": round(spent["shuffle_write_mb"] * MB), "r": round(spent["shuffle_read_mb"] * MB)}
         walls.sort()
         ref_med = detail.get("queries", {}).get(name)
         ref_w = detail.get("shuffle_write_bytes", {}).get(name)

@@ -13,11 +13,13 @@ regardless of iteration count.  The other twins bound their quadratic
 stages the same way (batches, rounds, landed stage tables).
 
 ``TWINS`` declares each twin once: query name -> a function of a DuckDB
-connection (the sf dir's tables as views) that returns the result rows, in
-the engine's column order, or the final SELECT over the stage tables it
-landed.  ``tools/verify_local.py`` checks a query against its twin instead
-of its one-shot ``oracle_sql()`` when the fixture is larger than every
-fixture the one-shot oracles are known green on; each twin runs on its own
+connection (the sf dir's tables as views) that returns the final SELECT
+over the stage tables it landed, or -- wrapped in ``Rows`` -- the result
+rows themselves, in the engine's column order.  The wrapper makes a
+twin's kind known before it runs (a digest compare needs a SELECT).
+``tools/verify_local.py`` checks a query against its twin instead of its
+one-shot ``oracle_sql()`` when the fixture is larger than every fixture
+the one-shot oracles are known green on; each twin runs on its own
 on-disk database file there.
 """
 
@@ -612,16 +614,28 @@ def _d15(con: duckdb.DuckDBPyConnection) -> str:
            ORDER BY sz.cluster_id"""
 
 
+class Rows:
+    """A twin that returns the result rows, not a final SELECT."""
+
+    def __init__(self, fn: Callable[[duckdb.DuckDBPyConnection], list[tuple]]):
+        self.fn = fn
+
+    def __call__(self, con: duckdb.DuckDBPyConnection) -> list[tuple]:
+        return self.fn(con)
+
+
 TWINS: dict[str, Callable[[duckdb.DuckDBPyConnection], list[tuple] | str]] = {
-    "g4_pagerank_top100": lambda con: _segmented_pagerank(con, contract.graph.PAGERANK_EDGES_SQL, None),
-    "g5_pagerank_cyclic_top100": lambda con: _segmented_pagerank(con, contract.graph.PAGERANK_CYCLIC_EDGES_SQL, None),
-    "g7_personalized_pagerank": lambda con: _segmented_pagerank(
-        con, contract.graph.PAGERANK_CYCLIC_EDGES_SQL, contract.graph.PPR_SEEDS
+    "g4_pagerank_top100": Rows(lambda con: _segmented_pagerank(con, contract.graph.PAGERANK_EDGES_SQL, None)),
+    "g5_pagerank_cyclic_top100": Rows(
+        lambda con: _segmented_pagerank(con, contract.graph.PAGERANK_CYCLIC_EDGES_SQL, None)
     ),
-    "g6_triangle_census": _segmented_triangles,
-    "g9_adamic_adar": _segmented_adamic_adar,
-    "g10_clustering_coefficient": _segmented_clustering_topk,
-    "g13_kcore": lambda con: _segmented_kcore(con, contract.graph.G13_CORE_K, contract.graph.G13_CORE_ROUNDS),
+    "g7_personalized_pagerank": Rows(
+        lambda con: _segmented_pagerank(con, contract.graph.PAGERANK_CYCLIC_EDGES_SQL, contract.graph.PPR_SEEDS)
+    ),
+    "g6_triangle_census": Rows(_segmented_triangles),
+    "g9_adamic_adar": Rows(_segmented_adamic_adar),
+    "g10_clustering_coefficient": Rows(_segmented_clustering_topk),
+    "g13_kcore": Rows(lambda con: _segmented_kcore(con, contract.graph.G13_CORE_K, contract.graph.G13_CORE_ROUNDS)),
     "d2_ngram_jaccard_pairs": _d2,
     "d12_containment_pairs": _d12,
     "d3_minhash_lsh_pairs": _d3,

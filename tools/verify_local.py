@@ -378,11 +378,12 @@ def check(spark, con, sf: str, name: str, fn, oracle, digest: bool, wd: _DiskWat
     leg = "duckdb"
     t0 = time.time()
     try:
+        if digest and (oracle is None or isinstance(oracle, segmented_oracle.Rows)):
+            # known from the declaration: fail before a twin spends its run
+            raise TypeError(f"digest compare needs an oracle SELECT, {name} has {'a rows twin' if oracle else 'no oracle'}")
         with twin_connection(sf, spill_dir, name, wd) if twin else contextlib.nullcontext(con) as ocon:
             final = oracle(ocon) if twin else oracle  # SQL, a twin's rows, or None
             if digest:
-                if not isinstance(final, str):
-                    raise TypeError(f"digest compare needs an oracle SELECT, {name}'s oracle gives {type(final).__name__}")
                 t_stage = time.time() - t0
                 rec.update(_digest_compare(spark, ocon, sf, name, fn, final))
                 if rec["err"]:

@@ -519,10 +519,8 @@ def q_d4(spark: SparkSession, sf: str) -> DataFrame:
     32-bit/8-bit-chunk form went QUADRATIC at the sf1 replay (every
     bucket ~2000 docs -> 2*10^9 candidate pairs -> driver OOM); chunk
     space must scale with the corpus, max_bucket caps the rest."""
-    return dedup.simhash_pairs(
-        load_table(spark, sf, "documents"), "doc_id", "text", bits=60, max_hamming=3,
-        max_bucket=dedup.DEFAULT_MAX_BUCKET,
-    )
+    sigs = dedup.simhash_signatures(load_table(spark, sf, "documents"), "doc_id", "text", 60)
+    return dedup.hamming_pairs(sigs, "doc_id", "simhash", 60, 3)
 
 
 @query("d5_embedding_near_dups", bench=True, oracle=f"""

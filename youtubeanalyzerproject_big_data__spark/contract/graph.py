@@ -11,18 +11,6 @@ from youtubeanalyzerproject_big_data__spark.operators import aggregates as agg, 
 from youtubeanalyzerproject_big_data__spark.contract import query
 
 
-def _copurchase_pairs(li: DataFrame) -> DataFrame:
-    """Raw part co-purchase pair stream (src < dst, one row per shared
-    order, NOT deduped) for the g6/g9/g10 graph operators, which
-    canonicalize + distinct internally.  One groupBy(l_orderkey) +
-    in-array pair expansion (graph.copurchase_edges) -- the r10 rewrite
-    of the former lineitem self-join, which shuffled/broadcast the fact
-    table twice and re-materialized every order as a join product before
-    the SAME rows reached the operator's distinct.  Pair SET is
-    identical: both forms emit exactly the (p < q, co-ordered) pairs."""
-    return graph.copurchase_edges(li, "l_orderkey", "l_partkey", distinct=False)
-
-
 @query("g6_triangle_census", bench=True, stdout=True, oracle="""
             WITH e AS (
               SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
@@ -45,9 +33,9 @@ def q_g6(spark: SparkSession, sf: str) -> DataFrame:
     """Triangle census of the part co-purchase graph (parts sharing an
     order).  Degree-ordered orientation caps wedge generation at m^1.5
     despite hot parts -- see operators/graph.triangle_count.  Pair build
-    via _copurchase_pairs (one groupBy + expansion, not a self-join)."""
+    via graph.copurchase_edges (one groupBy + expansion, not a self-join)."""
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    return graph.triangle_count(_copurchase_pairs(li))
+    return graph.triangle_count(graph.copurchase_edges(li, "l_orderkey", "l_partkey"))
 
 
 @query("g9_adamic_adar", bench=True, stdout=True, oracle="""
@@ -77,10 +65,10 @@ def q_g9(spark: SparkSession, sf: str) -> DataFrame:
     (graph.adamic_adar): top-5 new-link candidates for each seed part
     (partkey % 1000 == 1), seeded 2-hop expansion -- never a global wedge
     enumeration (1.5e8 wedges already at sf0.1).  Pair build via
-    _copurchase_pairs (one groupBy + expansion, not a self-join)."""
+    graph.copurchase_edges (one groupBy + expansion, not a self-join)."""
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     seeds = li.select(F.col("l_partkey").alias("seed")).where(F.col("l_partkey") % 1000 == 1).distinct()
-    return graph.adamic_adar(_copurchase_pairs(li), seeds, k=5)
+    return graph.adamic_adar(graph.copurchase_edges(li, "l_orderkey", "l_partkey"), seeds, k=5)
 
 
 @query("g10_clustering_coefficient", bench=True, stdout=True, oracle="""
@@ -108,10 +96,10 @@ def q_g10(spark: SparkSession, sf: str) -> DataFrame:
     """Local clustering coefficients on the part co-purchase graph
     (graph.clustering_coefficient_topk): g6's oriented-intersection engine
     with per-corner triangle attribution; integer-micro coefficients,
-    top-20 by (triangles desc, v).  Pair build via _copurchase_pairs
+    top-20 by (triangles desc, v).  Pair build via graph.copurchase_edges
     (one groupBy + expansion, not a self-join)."""
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    return graph.clustering_coefficient_topk(_copurchase_pairs(li), k=20)
+    return graph.clustering_coefficient_topk(graph.copurchase_edges(li, "l_orderkey", "l_partkey"), k=20)
 
 
 # Triangle replay: identical degree-ordered orientation; the LEFT
@@ -538,9 +526,7 @@ def q_g13(spark: SparkSession, sf: str) -> DataFrame:
     forced broadcast (vertex-sized -- the r5 g10 lesson).  Converges in 5
     rounds at both gate scales; the oracle unrolls 10 identical rounds."""
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # distinct=False: kcore canonicalizes + distincts internally, so the
-    # builder's own dedup shuffle would just stack under it (r10).
-    edges = graph.copurchase_edges(li, "l_orderkey", "l_partkey", distinct=False)
+    edges = graph.copurchase_edges(li, "l_orderkey", "l_partkey")
     core = graph.kcore(edges, k=G13_CORE_K, max_rounds=G13_CORE_ROUNDS)
     return core.select(F.col("src").alias("part"), "core_degree").orderBy(
         F.desc("core_degree"), "part"
@@ -710,7 +696,7 @@ def q_g12(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        graph.copurchase_edges(li, "l_orderkey", "l_partkey", max_group_size=8, distinct=False)
+        graph.copurchase_edges(li, "l_orderkey", "l_partkey", max_group_size=8)
         .repartitionByRange(n_part, "src", "dst")
         .dropDuplicates(["src", "dst"])
         .sortWithinPartitions("src", "dst")

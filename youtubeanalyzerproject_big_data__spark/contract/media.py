@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from youtubeanalyzerproject_big_data__spark.functions import precision
 from youtubeanalyzerproject_big_data__spark.io import load_events, load_table
-from youtubeanalyzerproject_big_data__spark.operators import multimodal, textanalysis as text
+from youtubeanalyzerproject_big_data__spark.operators import dedup, multimodal, textanalysis as text
 from youtubeanalyzerproject_big_data__spark.contract import _utc, query
 from youtubeanalyzerproject_big_data__spark.contract._sql import _dmicro
 
@@ -73,7 +73,7 @@ def q_mm3(spark: SparkSession, sf: str) -> DataFrame:
     TRANSFORMED metadata and features, not just plumbing."""
     docs = load_table(spark, sf, "documents").select("doc_id", F.encode("text", "utf-8").alias("blob"))
     media = multimodal.attach_media_metadata(docs, "doc_id", "blob", "image")
-    small = multimodal.transform_media(media, op="resize", factor=4, decode_stub="fake")
+    small = multimodal.transform_media(media, factor=4, decode_stub="fake")
     feats = multimodal.extract_features(small, decode_stub="fake", feat_dim=8)
     return feats.select(
         "media_id", "modality", "n_bytes", "content_md5", precision.micro_round("feat_mean", "feat_mean"), "feat_dim"
@@ -325,7 +325,7 @@ def q_mm8(spark: SparkSession, sf: str) -> DataFrame:
 
     packed = e.mapInPandas(pack, schema="event_id long, blob binary")
     media = multimodal.attach_media_metadata(packed, "event_id", "blob", "image")
-    small = multimodal.transform_media(media, op="resize", factor=2, decode_stub="stdlib")
+    small = multimodal.transform_media(media, factor=2, decode_stub="stdlib")
     feats = multimodal.extract_features(small, decode_stub="stdlib")
     return feats.select(
         "media_id",
@@ -342,7 +342,7 @@ def q_mm8(spark: SparkSession, sf: str) -> DataFrame:
 # bytes (documents are pure ASCII, verified for mm2), chunk-blocked
 # candidates, bit_count(xor) verify.
 # mm5: 60-bit aHash, 15-bit pigeonhole chunks, bucket cap 2000 --
-# the d4 scale recipe, mirrored exactly from phash_near_dup_pairs.
+# the d4 scale recipe, mirrored exactly from dedup.hamming_pairs.
 @query("mm5_phash_near_dups", bench=True, stdout=True, oracle="""
             WITH b AS (SELECT doc_id, text,
                               unnest(generate_series(1, least(strlen(text), 60))) AS i
@@ -371,7 +371,7 @@ def q_mm8(spark: SparkSession, sf: str) -> DataFrame:
         """)
 def q_mm5(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual-hash media near-dup pairs (multimodal.perceptual_hashes
-    + phash_near_dup_pairs): aHash bits by exact-integer greater-than-mean
+    + dedup.hamming_pairs): aHash bits by exact-integer greater-than-mean
     rule over the fake-decode samples, d4-style pigeonhole chunk blocking
     (60-bit hash -> 15-bit chunks so buckets stay sparse at 500k+ media;
     the r7 sf10 sweep caught the former 32-bit/8-bit config going
@@ -381,4 +381,5 @@ def q_mm5(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select("doc_id", F.encode("text", "utf-8").alias("blob"))
     media = multimodal.attach_media_metadata(docs, "doc_id", "blob", "image")
     h = multimodal.perceptual_hashes(media, decode_stub="fake", n_bits=60)
-    return multimodal.phash_near_dup_pairs(h, n_bits=60, max_distance=3).orderBy("id1", "id2")
+    pairs = dedup.hamming_pairs(h, "media_id", "phash", 60, 3)
+    return pairs.select(F.col("doc1").alias("id1"), F.col("doc2").alias("id2"), "hamming").orderBy("id1", "id2")

@@ -9,9 +9,10 @@ Five detectors over a document corpus, all shuffle-disciplined for 100 TB:
                       Candidate generation is a groupBy on (band, signature)
                       so only same-bucket docs ever meet; verification
                       re-computes exact Jaccard on candidates only.
-  * simhash        -- 32-bit simhash, near-dup = small hamming distance,
-                      blocked by 4x8-bit chunks (pigeonhole: distance<=3 =>
-                      at least one identical chunk), so again no O(n^2).
+  * simhash        -- up-to-60-bit simhash, near-dup = small hamming
+                      distance, blocked by d+1 chunks (hamming_pairs;
+                      pigeonhole: distance<=d => at least one identical
+                      chunk), so again no O(n^2).
   * ngram_jaccard  -- exact word-n-gram Jaccard via shingle-inverted-index
                       self-join (the brute-force oracle for the two above).
   * embedding near-dup -- exact cosine over all pairs (baseline; the LSH
@@ -117,23 +118,27 @@ def _ordered_pairs(arr):
     )
 
 
-def _pairs_from_groups(keyed: DataFrame, group_cols: list[str], max_group: int | None = DEFAULT_MAX_BUCKET) -> DataFrame:
-    """Candidate (doc1, doc2) pairs of doc_ids sharing a group key.
+def _pairs_from_groups(keyed: DataFrame, group_cols: list[str], elem, max_group: int | None) -> DataFrame:
+    """(doc1, doc2) pairs of the distinct ``elem`` values sharing a group
+    key, doc1 < doc2 -- the one bucket -> ordered-pairs operator.
 
-    One shuffle (groupBy the key) + in-array pair expansion; groups of one
-    emit nothing, so non-shared keys -- the overwhelming majority in a real
-    corpus -- cost nothing.  ``max_group`` caps pathological hot keys: a
-    group of g docs expands to g*(g-1)/2 in-task pairs, so one hot bucket
-    (say a boilerplate band signature shared by 10^6 docs) is a 5*10^11-pair
-    task that never finishes.  The default finite cap is the standard
-    stop-key cut of web-scale dedup (pairs co-occurring ONLY in dropped
-    buckets are missed -- the documented trade-off); pass None for exact
-    oracle twins.
+    One shuffle (groupBy the key) + in-array pair expansion (_ordered_pairs);
+    ``elem`` is a column or a struct (structs sort on their first field
+    first).  Groups of one emit nothing, so non-shared keys -- the
+    overwhelming majority in a real corpus -- cost nothing.  ``max_group``
+    caps pathological hot keys: a group of g values expands to g*(g-1)/2
+    in-task pairs, so one hot bucket (say a boilerplate band signature
+    shared by 10^6 docs) is a 5*10^11-pair task that never finishes.  Over-
+    cap groups drop whole -- the standard stop-key cut of web-scale dedup
+    (pairs co-occurring ONLY in dropped buckets are missed, the documented
+    trade-off); None keeps every group.  Returns the raw per-group stream:
+    a pair recurs once per shared group, so callers that need a set apply
+    their own ``distinct``.
     """
-    groups = keyed.groupBy(*group_cols).agg(F.sort_array(F.collect_set("doc_id")).alias("ds")).where(F.size("ds") >= 2)
+    groups = keyed.groupBy(*group_cols).agg(F.sort_array(F.collect_set(elem)).alias("ds")).where(F.size("ds") >= 2)
     if max_group is not None:
         groups = groups.where(F.size("ds") <= max_group)
-    return groups.select(F.explode(_ordered_pairs(F.col("ds"))).alias("p")).select("p.doc1", "p.doc2").distinct()
+    return groups.select(F.explode(_ordered_pairs(F.col("ds"))).alias("p")).select("p.doc1", "p.doc2")
 
 
 def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int, repartition: bool = True) -> DataFrame:
@@ -561,7 +566,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str, bits: int = 32
     ``bits`` > 32 (up to 60) draws token bits from TWO md5 lanes of one
     digest ((lane0 & 2^(bits-32)-1) * 2^32 + lane1 -- always positive, so
     shifts are sign-safe in both engines).  Width is the pigeonhole
-    blocker's scale knob: simhash_pairs blocks on bits/(h+1)-bit chunks,
+    blocker's scale knob: hamming_pairs blocks on bits/(h+1)-bit chunks,
     and candidate volume is ~n^2 * (h+1) / 2^chunk_bits, so the chunk
     space must scale with the corpus (32-bit sigs = 8-bit chunks = 256
     buckets went quadratic at 500k docs -- the sf1 OOM that motivated
@@ -595,69 +600,53 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str, bits: int = 32
     return hashed.groupBy("doc_id").agg(*votes).select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 32,
-    max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """SimHash near-dup pairs with hamming distance <= max_hamming.
+def hamming_pairs(hashes: DataFrame, id_col: str, hash_col: str, bits: int, max_distance: int) -> DataFrame:
+    """Pairs of ids whose ``bits``-bit hashes differ in at most
+    ``max_distance`` bits -- the near-dup join of SimHash text dedup (d4,
+    over simhash_signatures) and perceptual-hash media dedup (mm5, over
+    multimodal.perceptual_hashes).
 
-    Pigeonhole blocking: split the signature into (max_hamming+1) chunks;
-    any pair within distance max_hamming shares at least one exact chunk, so
-    candidates come from groupBy on (chunk_idx, chunk_value) -- no O(n^2).
-    Returns (doc1, doc2, hamming).
+    Pigeonhole blocking: split each hash into max_distance + 1 chunks of
+    bits // (max_distance + 1) bits; a pair within the distance differs in
+    at most max_distance chunks, so it shares at least one chunk exactly.
+    Candidates are the pairs of each (chunk index, chunk value) bucket
+    (_pairs_from_groups -- one shuffle, no O(n^2) join), and the exact
+    bit_count(xor) check runs on candidates only.
 
-    Scale: size ``bits`` so the per-chunk value space exceeds the corpus
-    (see simhash_signatures -- candidate volume is quadratic in bucket
-    occupancy), with ``max_bucket`` as the degenerate-bucket backstop
-    (drop semantics, the d3/_pairs_from_groups convention, mirrored in
-    the oracle).
+    Scale: candidate volume is quadratic in bucket occupancy, so size
+    ``bits`` so the per-chunk value space exceeds the corpus (see
+    simhash_signatures; 32-bit hashes = 8-bit chunks went quadratic at
+    500k docs in both d4 and mm5), with DEFAULT_MAX_BUCKET as the
+    degenerate-bucket backstop (drop semantics, mirrored in both oracles).
+    Returns (doc1, doc2, hamming), doc1 < doc2.
     """
-    chunks = max_hamming + 1
+    chunks = max_distance + 1
     chunk_bits = bits // chunks
-    sigs = simhash_signatures(df, id_col, text_col, bits)
-
     mask = (1 << chunk_bits) - 1
-    blocked = sigs.select(
-        F.struct("doc_id", "simhash").alias("ds_elem"),
+    blocked = hashes.select(
+        F.struct(F.col(id_col).alias("id"), F.col(hash_col).alias("h")).alias("elem"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * chunk_bits).bitwiseAND(F.lit(mask)).alias("cval"),
+                        F.shiftright(F.col(hash_col), c * chunk_bits).bitwiseAND(F.lit(mask)).alias("cval"),
                     )
                     for c in range(chunks)
                 ]
             )
         ).alias("ck"),
-    ).select("ck.chunk", "ck.cval", "ds_elem")
-
-    # Same one-shuffle bucket pair generation as the shingle path: structs
-    # sort by doc_id first, so doc1 < doc2 holds inside every pair.
-    groups = (
-        blocked.groupBy("chunk", "cval").agg(F.sort_array(F.collect_set("ds_elem")).alias("ds")).where(F.size("ds") >= 2)
-    )
-    if max_bucket is not None:
-        groups = groups.where(F.size("ds") <= max_bucket)
-    xor = F.col("s1").bitwiseXOR(F.col("s2"))
+    ).select("ck.chunk", "ck.cval", "elem")
+    pairs = _pairs_from_groups(blocked, ["chunk", "cval"], F.col("elem"), DEFAULT_MAX_BUCKET)
+    xor = F.col("doc1.h").bitwiseXOR(F.col("doc2.h"))
     return (
-        groups.select(F.explode(_ordered_pairs(F.col("ds"))).alias("p"))
-        .select(
-            F.col("p.doc1.doc_id").alias("doc1"),
-            F.col("p.doc1.simhash").alias("s1"),
-            F.col("p.doc2.doc_id").alias("doc2"),
-            F.col("p.doc2.simhash").alias("s2"),
+        pairs.select(
+            F.col("doc1.id").alias("doc1"), F.col("doc2.id").alias("doc2"), F.bit_count(xor).cast("long").alias("hamming")
         )
         # Filter BEFORE dedup: the hamming check is a map-side expression,
         # so rejecting far pairs here shrinks the distinct's shuffle to
         # only the (much rarer) true near-dups.
-        .withColumn("hamming", F.bit_count(xor).cast("long"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc1", "doc2", "hamming")
+        .where(F.col("hamming") <= max_distance)
         .distinct()
     )
 
@@ -747,7 +736,7 @@ def embedding_near_dup_pairs_lsh(
         "sig", _hyperplane_signature("v", dim)
     )
     banded = sigd.select("doc_id", F.explode(_lsh_bands(F.col("sig"))).alias("bk")).select("doc_id", "bk.band", "bk.bval")
-    candidates = _pairs_from_groups(banded, ["band", "bval"], max_group=DEFAULT_MAX_BUCKET)
+    candidates = _pairs_from_groups(banded, ["band", "bval"], F.col("doc_id"), DEFAULT_MAX_BUCKET).distinct()
     vecs = sigd.select("doc_id", "v")
     return (
         candidates.join(vecs.select(F.col("doc_id").alias("doc1"), F.col("v").alias("v1")), "doc1")
@@ -1198,27 +1187,12 @@ def edit_distance_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "head"))).alias("ds"))
         .where((F.size("ds") >= 2) & (F.size("ds") <= 64))
     )
-    pairs = groups.select(F.explode(_ordered_pairs_structs(F.col("ds"))).alias("p")).select(
-        F.col("p.d1.doc_id").alias("doc1"),
-        F.col("p.d2.doc_id").alias("doc2"),
-        F.levenshtein(F.col("p.d1.head"), F.col("p.d2.head")).alias("edit_distance"),
+    pairs = groups.select(F.explode(_ordered_pairs(F.col("ds"))).alias("p")).select(
+        F.col("p.doc1.doc_id").alias("doc1"),
+        F.col("p.doc2.doc_id").alias("doc2"),
+        F.levenshtein(F.col("p.doc1.head"), F.col("p.doc2.head")).alias("edit_distance"),
     )
     return pairs.where(F.col("edit_distance") <= 10)
-
-
-def _ordered_pairs_structs(arr):
-    """All (d1, d2) element pairs with d1 before d2 from a sorted struct
-    array -- the slice-based _ordered_pairs idiom (no per-lambda-index
-    element_at; see CLAUDE.md)."""
-    return F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + F.lit(2), F.size(arr)),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
 
 
 def contamination_report(

@@ -34,6 +34,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from youtubeanalyzerproject_big_data__spark.operators.dedup import _pairs_from_groups
 from youtubeanalyzerproject_big_data__spark.session import data_sized, free, pin
 
 CONTRIB_SCALE = 1e9
@@ -1081,54 +1082,32 @@ def hits(
     return pin(result, *raws, e_dst, e)
 
 
-def copurchase_edges(
-    facts: DataFrame,
-    group_col: str,
-    item_col: str,
-    max_group_size: int | None = None,
-    distinct: bool = True,
-) -> DataFrame:
+def copurchase_edges(facts: DataFrame, group_col: str, item_col: str, max_group_size: int | None = None) -> DataFrame:
     """Bipartite-projection edge builder: one undirected (src < dst) edge
     per pair of distinct items sharing a group (parts per order, videos
     per session) -- the standard co-occurrence graph construction feeding
-    g6/g9/g10-class analytics.
+    g6/g9/g10/g12/g13.
 
-    Built as ONE groupBy(group) + in-array pair expansion (the dedup
-    _pairs_from_groups shape), never a self-join: a fact-fact self-join on
+    Built as ONE groupBy(group) + in-array pair expansion
+    (dedup._pairs_from_groups), never a self-join: a fact-fact self-join on
     the group key shuffles the fact table twice and re-materializes every
     group as a join product.  ``max_group_size`` is the scale guard the
     naive build lacks: a single degenerate group of g items expands to
     g*(g-1)/2 pairs INSIDE ONE TASK (a 10k-item order is a 5*10^7-pair
     task; groups grow with corpus size at 100 TB), so a finite cap drops
     over-cap groups entirely -- the documented trade-off, mirrored in the
-    gate oracle.  None = exact (the g6/g9/g10 inputs at current gate
+    gate oracle.  None = exact (the g6/g9/g10/g13 inputs at current gate
     scale).
 
-    Returns distinct (src, dst) with src < dst.  ``distinct=False`` skips
-    the final dedup shuffle and returns the raw per-group pair stream
-    (src < dst still holds; a pair recurs once per shared group) -- for
-    consumers that canonicalize + distinct internally anyway
-    (triangle_count, adamic_adar, clustering_coefficient_topk, kcore):
-    stacking a distinct here UNDER theirs costs one extra edge-sized
-    exchange for nothing.
+    Returns the raw per-group pair stream: (src, dst) with src < dst, a
+    pair recurring once per shared group.  Its consumers dedup it
+    themselves (triangle_count, adamic_adar, clustering_coefficient_topk
+    and kcore canonicalize + distinct; g12 range-partitions first), so a
+    distinct here would stack one more edge-sized exchange under theirs.
     """
-    arr = (
-        facts.select(F.col(group_col).alias("g"), F.col(item_col).alias("i"))
-        .where(F.col("i").isNotNull() & F.col("g").isNotNull())
-        .groupBy("g")
-        .agg(F.sort_array(F.collect_set("i")).alias("items"))
-        .where(F.size("items") >= 2)
+    keyed = facts.select(F.col(group_col).alias("g"), F.col(item_col).alias("i")).where(
+        F.col("i").isNotNull() & F.col("g").isNotNull()
     )
-    if max_group_size is not None:
-        arr = arr.where(F.size("items") <= max_group_size)
-    pairs = F.flatten(
-        F.transform(
-            F.col("items"),
-            lambda x, i: F.transform(
-                F.slice(F.col("items"), i + F.lit(2), F.size(F.col("items"))),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
+    return _pairs_from_groups(keyed, ["g"], F.col("i"), max_group_size).select(
+        F.col("doc1").alias("src"), F.col("doc2").alias("dst")
     )
-    out = arr.select(F.explode(pairs).alias("p")).select("p.src", "p.dst")
-    return out.distinct() if distinct else out

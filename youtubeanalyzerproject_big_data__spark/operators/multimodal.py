@@ -428,11 +428,10 @@ def extract_features(
 
 def transform_media(
     media: DataFrame,
-    op: Literal["resize"] = "resize",
     factor: int = 4,
     decode_stub: Literal["fail", "fake", "auto", "stdlib"] = "fail",
 ) -> DataFrame:
-    """Decode -> transform -> re-encode stage (resize / transcode shape).
+    """Decode -> resize -> re-encode stage.
 
     Output is AGAIN a MEDIA_SCHEMA table (content + recomputed n_bytes /
     content_md5), so transform stages CHAIN: attach -> transform ->
@@ -448,8 +447,6 @@ def transform_media(
     BMP out (_bmp_downsample -- bit-replayable on any engine; driver
     query mm8 gates the round trip).
     """
-    if op != "resize":
-        raise ValueError(f"unsupported transform op: {op!r}")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -709,76 +706,6 @@ def perceptual_hashes(
             yield pd.DataFrame({"media_id": pdf["media_id"], "phash": pd.array(hashes, dtype="int64")})
 
     return media.mapInPandas(kernel, schema=PHASH_SCHEMA)
-
-
-def phash_near_dup_pairs(
-    hashes: DataFrame,
-    n_bits: int = 32,
-    max_distance: int = 3,
-) -> DataFrame:
-    """Near-duplicate media pairs by perceptual-hash Hamming distance --
-    the media twin of d4's SimHash text dedup, same pigeonhole blocking:
-    split each hash into 4 equal bit chunks; any pair within
-    ``max_distance < 4`` bit flips shares at least one identical
-    chunk, so candidates meet in (chunk_idx, chunk_value) buckets and the
-    exact bit_count(xor) check runs on candidates only -- never O(n^2).
-
-    Scale (the d4 lesson, re-learned here by the sf10 sweep): candidate
-    volume is quadratic in bucket occupancy, so the per-chunk value space
-    must exceed the corpus -- 8-bit chunks over 500k hashes put ~2000 ids
-    in every one of the 1024 buckets (~2e9 pairs; the engine spilled 64 GB
-    of shuffle before being killed).  Size ``n_bits`` so chunk_bits =
-    n_bits/4 keeps buckets sparse (60 bits -> 15-bit chunks for a
-    500k corpus; 128-bit/32-bit at 100 TB), with a 2000-member cap
-    (dedup.DEFAULT_MAX_BUCKET) as the degenerate-bucket backstop (drop semantics, the _pairs_from_groups
-    convention, mirrored in the oracle).  The one-shuffle collect_set
-    blocking replaces the former chunk self-join, so pairs expand in-task
-    from each bucket instead of through a join.
-
-    Returns (id1, id2, hamming) with id1 < id2, distance <= max_distance.
-    """
-    from youtubeanalyzerproject_big_data__spark.operators.dedup import DEFAULT_MAX_BUCKET, _ordered_pairs
-
-    n_chunks = 4
-    if max_distance >= n_chunks:
-        raise ValueError("pigeonhole blocking needs max_distance < n_chunks")
-    chunk_bits = n_bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    blocked = hashes.select(
-        F.struct("media_id", "phash").alias("mp"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("ci"),
-                        F.shiftright("phash", j * chunk_bits).bitwiseAND(F.lit(mask)).alias("cv"),
-                    )
-                    for j in range(n_chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select(F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"), "mp")
-    groups = (
-        blocked.groupBy("ci", "cv")
-        .agg(F.sort_array(F.collect_set("mp")).alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= DEFAULT_MAX_BUCKET))
-    )
-    xor = F.col("h1").bitwiseXOR(F.col("h2"))
-    return (
-        groups.select(F.explode(_ordered_pairs(F.col("ms"))).alias("p"))
-        .select(
-            F.col("p.doc1.media_id").alias("id1"),
-            F.col("p.doc1.phash").alias("h1"),
-            F.col("p.doc2.media_id").alias("id2"),
-            F.col("p.doc2.phash").alias("h2"),
-        )
-        # filter BEFORE the distinct so the dedup shuffle carries only
-        # true near-dups (the d4 shape)
-        .withColumn("hamming", F.bit_count(xor).cast("long"))
-        .where(F.col("hamming") <= max_distance)
-        .select("id1", "id2", "hamming")
-        .distinct()
-    )
 
 
 def audio_features(media: DataFrame) -> DataFrame:

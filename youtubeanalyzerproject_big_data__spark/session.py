@@ -163,9 +163,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # The AppStatusStore backs stage_metrics() (bench shuffle-bytes
-        # accounting) even with the UI off; retain enough stages that a
-        # before/after snapshot never spans an eviction mid-measurement.
+        # The AppStatusStore backs perfbench.meter.SparkCounters (per-job-
+        # group stage totals: perfbench, bench.py and tools/bench_isolated
+        # shuffle bytes) even with the UI off; retain enough stages that a
+        # group's stages are still stored when it is read back.
         .config("spark.ui.retainedStages", "20000")
         # Console progress bars write \r-framed [Stage ...] lines to stdout;
         # harness channels that tail-capture stdout (bench.py's one-line JSON
