@@ -243,6 +243,95 @@ def test_repeated_seeds_count_once(spark):
         assert len({r[0] for r in once}) == len(once) == 6
 
 
+def _random_rank_graph(seed: int) -> list:
+    """A seeded graph with duplicate edges, dangling dst ids (``d*``, never
+    a src), src-only vertices (``s*``, never a dst) and rank ties (two
+    identical 2-cycles, and every src-only vertex at reset).  Its src
+    ``s0`` has out-degree 1024, so its round-1 contributions are
+    1e9 / 1024 = 976562.5 units, where HALF_UP and half-to-even differ;
+    with the round-1 contributions of srcs of out-degree 2, 35 and 41,
+    that one unit moves ``z``'s 1-round PageRank across a 6-place rounding
+    boundary (0.620848 against 0.620847)."""
+    import random
+
+    rng = random.Random(seed)
+    core = [f"v{i}" for i in range(12)]
+    rows = [(rng.choice(core), rng.choice(core + ["d0", "d1"])) for _ in range(40)]
+    rows += [(f"s{i}", rng.choice(core)) for i in range(3)]
+    rows += [("t0", "t1"), ("t1", "t0"), ("u0", "u1"), ("u1", "u0")]
+    rows += [("s0", f"w{i}") for i in range(1022)] + [("s0", "z")]
+    for deg in (2, 35, 41):
+        rows += [(f"p{deg}", "z")] + [(f"p{deg}", f"f{deg}_{i}") for i in range(deg - 1)]
+    rows += rows[:5]  # duplicates count as multiplicity
+    return [(s, d) for s, d in rows if s != d]
+
+
+# seeds: repeated ("v0" twice), absent ("nope"), a sink ("d0") and a
+# src-only vertex ("s0")
+_MIXED_SEEDS = ["v0", "nope", "v0", "d0", "s0"]
+
+# case -> (edge rows, or None for a source with no partitions; PPR seeds).
+# The rank functions keep null ids (edges_from_pairs would drop them): a
+# null src, and in the integer case a null dst too, which pandas sees as a
+# float column.
+_RANK_CASES = {
+    "random_7": (_random_rank_graph(7), _MIXED_SEEDS),
+    "random_2027": (_random_rank_graph(2027), _MIXED_SEEDS + ["t0"]),
+    "empty": ([], ["a", "a"]),
+    "no_partitions": (None, ["a"]),
+    "single_edge": ([("a", "b")], ["b", "zz", "b"]),
+    "null_src": ([(None, "a"), ("a", "b"), ("b", "a"), (None, "b")], ["a", None]),
+    "null_ids_long": ([(None, 1), (1, 2), (2, 1), (3, None), (2**40, 1)], [1, 7]),
+}
+
+
+@pytest.mark.parametrize("max_iter", [1, 3, 10])
+@pytest.mark.parametrize("case", sorted(_RANK_CASES))
+def test_one_task_kernel_matches_rounds(spark, monkeypatch, case, max_iter):
+    """The one-task numpy kernel and the Spark rounds return identical rows
+    (not just equal ranks: the same ids, each as often) for pagerank and
+    personalized_pagerank, with the one-piece decision forced each way."""
+    rows, seeds = _RANK_CASES[case]
+    schema = "src long, dst long" if case.endswith("_long") else "src string, dst string"
+    edges = spark.createDataFrame(spark.sparkContext.emptyRDD() if rows is None else rows, schema)
+    if rows is None:
+        assert edges.rdd.getNumPartitions() == 0
+    for run in (
+        lambda: graph.pagerank(edges, max_iter=max_iter),
+        lambda: graph.personalized_pagerank(edges, seeds, max_iter=max_iter),
+    ):
+        out = {}
+        for one_piece in (False, True):
+            monkeypatch.setattr(graph, "_fits_one_piece", lambda e, w, one=one_piece: one)
+            out[one_piece] = sorted((tuple(r) for r in run().collect()), key=repr)
+        assert out[True] == out[False]
+    if rows is None:
+        assert out[True] == [("a", 0.15)]  # the kernel ran: an absent seed holds reset
+
+
+def test_rank_sum_overflow_raises_on_both_paths(spark, monkeypatch):
+    """A per-dst contribution sum past the long range raises on the kernel
+    as Spark's ANSI sum does on the rounds, never wraps: three 4e18-unit
+    contributions into one dst overflow a long."""
+    edges = spark.createDataFrame([("a", "z"), ("b", "z"), ("c", "z")], "src string, dst string")
+    monkeypatch.setattr(graph, "CONTRIB_SCALE", 4e18)
+    for one_piece in (False, True):
+        monkeypatch.setattr(graph, "_fits_one_piece", lambda e, w, one=one_piece: one)
+        with pytest.raises(Exception, match="(?i)overflow"):
+            graph.pagerank(edges, max_iter=1).collect()
+
+
+def test_one_task_kernel_refuses_inexact_integer_ids(spark, monkeypatch):
+    """An integer id column reaches pandas as float64 in an Arrow batch
+    that holds a null, exact only below 2**53: the kernel raises on a
+    larger id there rather than rank a rounded one (one source partition,
+    so both rows share a batch)."""
+    edges = spark.createDataFrame([(None, 1), (2**60 + 1, 1)], "src long, dst long").coalesce(1)
+    monkeypatch.setattr(graph, "_fits_one_piece", lambda e, w: True)
+    with pytest.raises(Exception, match=r"2\*\*53"):
+        graph.pagerank(edges, max_iter=1)
+
+
 def _bfs_replica(edges, seeds, max_hops=3):
     hops = dict.fromkeys(seeds, 0)
     frontier = set(seeds)

@@ -463,36 +463,36 @@ def _assert_rank_joins_co_partitioned(plan: str) -> None:
     assert not re.search(r"Exchange hashpartitioning\(src", outside)
 
 
+def _assert_one_task(plan: str) -> None:
+    """A one-piece rank plan is one mapInPandas task over the edge stream:
+    exactly one MapInPandas, and no join or exchange anywhere."""
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
+
+
 def test_pagerank_loop_shape(spark):
-    """g4/g5 on the sf0.001 fixture (one-partition layout): with a
-    materialized prepare_weighted_edges handle, every iteration reads the
-    CACHE (InMemoryTableScan), every rank join is a ShuffledHashJoin (no
-    per-round broadcast), and nothing between the cache reads and the
-    result is an Exchange."""
+    """g4/g5 on the sf0.001 fixture: the built handle holds one partition,
+    so every round runs inside one mapInPandas task over the cached edges;
+    the plan has no join (no rank join, no broadcast) and no exchange."""
     with _live_plans():
         handle = contract.graph._prepared_pagerank_edges(spark, SF, "fwd")
-        handle.count()  # materialize so references plan as cache reads
         ranks = graphmod.pagerank(None, max_iter=3, weighted=handle)
         plan = _plan(ranks)
-    assert plan.count("InMemoryTableScan") >= 4  # 3 iterations + src_only all read the cache
-    _assert_rank_joins_co_partitioned(plan)
-    assert not any("Exchange" in ln for ln in _outside_caches(plan))
+    assert "InMemoryTableScan" in plan
+    _assert_one_task(plan)
 
 
 def test_ppr_seeds_compile_to_inlist(spark):
-    """g7: the seed set must reach the plan as IN-list literals, never a
-    join; loop shape mirrors g4 (shuffle-hash rank joins, cache reads, and
-    no Exchange outside the cache on the one-partition layout)."""
+    """g7 on the sf0.001 fixture: the same one-task shape as g4 -- the seed
+    list rides the task as literals, so no seed table is joined.  (The
+    IN-list check of the seed literals is on the rounds, in
+    test_rank_rounds_multi_partition_layout.)"""
     with _live_plans():
         handle = contract.graph._prepared_pagerank_edges(spark, SF, "cyclic")
-        handle.count()
         # seeds in the r11 integer encoding (parts P1, P2 -> 2k+1)
         ranks = graphmod.personalized_pagerank(None, [3, 5], max_iter=3, weighted=handle)
         plan = _plan(ranks)
-    assert "INSET" in plan.upper() or " IN (" in plan  # literal membership test
-    assert plan.count("InMemoryTableScan") >= 3
-    _assert_rank_joins_co_partitioned(plan)
-    assert not any("Exchange" in ln for ln in _outside_caches(plan))
+    _assert_one_task(plan)
 
 
 def test_rank_rounds_multi_partition_layout(spark):
@@ -524,9 +524,33 @@ def test_rank_rounds_multi_partition_layout(spark):
                 graphmod.pagerank(None, max_iter=3, weighted=handle),
                 graphmod.personalized_pagerank(None, [3, 5], max_iter=3, weighted=handle),
             ):
-                _assert_rank_joins_co_partitioned(_plan(ranks))
+                plan = _plan(ranks)
+                _assert_rank_joins_co_partitioned(plan)
+            # the last plan is PPR's: its seeds are IN-list literals, never a join
+            assert "INSET" in plan.upper() or " IN (" in plan
         finally:
             handle.unpersist()
+
+
+def test_pagerank_job_broadcasts_the_top_n_not_the_videos(spark, crawl_videos):
+    """jobs.pagerank_job broadcasts only top-N-sized tables: the videos
+    table streams through a left-semi join against the broadcast top-N ids,
+    and what reaches the uploader enrichment is that join's output -- no
+    BroadcastExchange sits over the videos scan itself."""
+    import re
+
+    from youtubeanalyzerproject_big_data__spark import jobs
+
+    lines = _plan(jobs.pagerank_job(crawl_videos)).splitlines()
+    built = [
+        next(ln for ln in lines[i + 1 :] if not re.search(r"\b(Project|Filter)\b", ln))
+        for i, ln in enumerate(lines)
+        if "BroadcastExchange" in ln
+    ]
+    assert len(built) == 2, lines
+    assert "TakeOrderedAndProject" in built[1] and "LeftSemi" in built[0], built
+    assert any(re.search(r"BroadcastHashJoin .*LeftSemi, BuildRight", ln) for ln in lines)
+    assert any(re.search(r"BroadcastHashJoin .*LeftOuter, BuildRight", ln) for ln in lines)
 
 
 def test_refresh_one_piece_layout_has_no_exchange(spark, videos, tmp_path, monkeypatch):

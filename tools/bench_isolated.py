@@ -9,8 +9,11 @@ so a wall-clock swing is box noise (the r8 s8_hybrid_rrf precedent,
 commit 513b361).
 
 Usage: python tools/bench_isolated.py [sf_dir] q1 q2 ...
-Prints one line per query: isolated median-of-3 wall, shuffle r/w bytes,
-and the BENCH_DETAIL.json reference values.
+Prints one line per query: isolated median-of-3 wall, the first sample's
+wall (each sample starts from clearCache, so it is memo-cold, and the
+first also pays the session's first use of each code path), the first
+sample's Spark jobs and shuffle r/w bytes, and the BENCH_DETAIL.json
+reference values.
 """
 
 from __future__ import annotations
@@ -57,12 +60,14 @@ def main() -> None:
                 set_job_group(spark.sparkContext, None)
                 spent = counters.read(f"isolated/{name}")
                 shuf = {"w": round(spent["shuffle_write_mb"] * MB), "r": round(spent["shuffle_read_mb"] * MB)}
+                jobs = spent["jobs"]
+        first = walls[0]
         walls.sort()
         ref_med = detail.get("queries", {}).get(name)
         ref_w = detail.get("shuffle_write_bytes", {}).get(name)
         print(
-            f"{name}: isolated med {walls[1]:.2f}s (min {walls[0]:.2f}) "
-            f"shufW {shuf['w']} shufR {shuf['r']} | BENCH_DETAIL med {ref_med} shufW {ref_w}",
+            f"{name}: isolated med {walls[1]:.2f}s (min {walls[0]:.2f}, first {first:.2f}) "
+            f"jobs {jobs} shufW {shuf['w']} shufR {shuf['r']} | BENCH_DETAIL med {ref_med} shufW {ref_w}",
             flush=True,
         )
 

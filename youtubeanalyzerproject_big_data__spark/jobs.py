@@ -116,15 +116,20 @@ PAGERANK_TOP_N = 500
 
 def pagerank_job(videos: DataFrame) -> DataFrame:
     """run_pagerank_job.py end-to-end: densify -> edges -> PageRank(0.15, 10)
-    -> top-N -> uploader enrichment via broadcast join (replaces the
-    reference's per-row find_one loop, run_pagerank_job.py:124-140)."""
+    -> top-N -> uploader enrichment via broadcast joins (replaces the
+    reference's per-row find_one loop, run_pagerank_job.py:124-140).
+
+    Only top-N-sized tables are broadcast: the videos table streams once
+    against the broadcast top-N ids, and the top-N left-joins the broadcast
+    uploaders of its own ids, so an id missing from ``videos`` keeps a null
+    uploader and a duplicated one keeps each of its rows."""
     videos = data_sized(videos)
     dense = graph.densify(videos, "related", PAGERANK_MIN_RELATED)
     edges = graph.edges_from_arrays(dense, "video_id", "related")
     top = graph.top_influencers(graph.pagerank(edges, reset_prob=0.15, max_iter=10), PAGERANK_TOP_N)
     dim = videos.select(F.col("video_id").alias("id"), "uploader")
     return (
-        joins.enrich_broadcast(top, dim, "id")
+        joins.enrich_broadcast(top, joins.semi_join(dim, F.broadcast(top.select("id")), "id"), "id")
         .withColumn("rank", F.row_number().over(Window.orderBy(F.desc("pagerank"), F.asc("id"))))
         .select("rank", F.col("id").alias("video_id"), F.col("pagerank").alias("influence_score"), "uploader")
     )

@@ -10,14 +10,18 @@ YoutubeNetworkAgg_Final.py:85-139):
 
 Scale design:
   * Degrees are single partial+final hash aggregates on the edge table.
-  * The PageRank loops lay edges out by ``src`` ONCE, through
-    ``session.data_sized`` (one coalesced piece, no shuffle, when the graph
-    fits one AQE minimum partition; else a hash repartition), and join the
-    ranks to that layout as a pinned shuffle-hash build side: no
-    per-round broadcast, the edge table never moves, and a round's only
-    exchange is its dst aggregate (none on one piece) -- the
-    co-partitioning the reference approximated with repartition(400),
-    PageRank_Spark_v5.py:94-95.
+  * The PageRank family (pagerank, personalized_pagerank) takes one of
+    two paths by the layout rule of ``session.data_sized``.  A graph that
+    fits one AQE minimum partition ranks in ONE ``mapInPandas`` task: a
+    numpy kernel runs every round over the one-partition (src, dst)
+    stream, since on one piece the per-round plan and stage cost, not the
+    data, is what ten unrolled rounds pay for.  A larger graph lays its
+    edges out by ``src`` ONCE (a hash repartition) and joins the ranks to
+    that layout as a pinned shuffle-hash build side: no per-round
+    broadcast, the edge table never moves, and a round's only exchange is
+    its dst aggregate -- the co-partitioning the reference approximated
+    with repartition(400), PageRank_Spark_v5.py:94-95.  Both paths compute
+    the same integer-quantized arithmetic, bit for bit.
   * The other edge-table loops (k-hop, Bellman-Ford, label propagation,
     hits) take their layout from the same rule, keyed by ``src`` (hits'
     hub copy by ``dst``): one coalesced piece below one AQE minimum
@@ -33,9 +37,10 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegralType, StructField, StructType
 
 from youtubeanalyzerproject_big_data__spark.operators.dedup import _pairs_from_groups
-from youtubeanalyzerproject_big_data__spark.session import data_sized, free, pin
+from youtubeanalyzerproject_big_data__spark.session import data_sized, free, loop_partitions, pin
 
 CONTRIB_SCALE = 1e9
 """Rank contributions are summed as integer multiples of 1/CONTRIB_SCALE
@@ -100,7 +105,9 @@ def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
     ONE scan and at most ONE shuffle (a groupBy+join formulation scans the
     edge source twice -- measured ~30% slower end-to-end).  Either layout
     satisfies the window and every shuffle-hash rank join, so the edge
-    table never moves again.
+    table never moves again.  A handle of one partition is read only as
+    the (src, dst) stream of the one-task kernel, which computes its own
+    weights; :func:`pagerank` builds no handle for a one-piece graph.
 
     Returned CACHED and already built, by one noop write (a pass over the
     plan with no count aggregate to shuffle): while a cache is unbuilt,
@@ -125,7 +132,8 @@ def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
 
 
 def _rank_rounds(weighted: DataFrame, reset_of, init_of, reset_prob: float, max_iter: int) -> DataFrame:
-    """Round kernel of :func:`pagerank` and :func:`personalized_pagerank`:
+    """Spark rounds of :func:`pagerank` and :func:`personalized_pagerank`
+    above one piece (:func:`_ranks_in_one_task` replays them on one):
     (id, rank) after ``max_iter >= 1`` rounds of
 
         rank(v) = reset_of(v) + (1 - reset_prob) * sum_{u->v} rank(u) / out_deg(u)
@@ -186,6 +194,111 @@ def _with_held(ranks: DataFrame, held_ids: DataFrame, reset_prob: float, keep=No
     )
 
 
+def _fits_one_piece(edges: DataFrame | None, weighted: DataFrame | None) -> bool:
+    """Whether a rank call runs as :func:`_ranks_in_one_task`: the layout
+    rule on ``edges`` when the call lays the graph out itself, else the
+    partition count of the caller's built ``weighted`` handle.  Never
+    ``loop_partitions`` of a built handle: a cache's statistics are its
+    in-memory size, which reads 4 pieces at sf0.01 for a handle that holds
+    one."""
+    if weighted is None:
+        return loop_partitions(edges) == 1
+    return weighted.rdd.getNumPartitions() == 1
+
+
+def _ranks_in_one_task(edges: DataFrame, reset_prob: float, max_iter: int, seeds: list | None) -> DataFrame:
+    """:func:`pagerank` (``seeds`` None) or :func:`personalized_pagerank`
+    (``max_iter >= 1``) of a one-piece graph as ONE ``mapInPandas`` task:
+    its numpy kernel replays :func:`_rank_rounds` and :func:`_with_held`
+    over the whole (src, dst) stream, and Spark adds only the 6-place
+    rounding and the pin.  On one piece the rounds are fixed cost, not
+    data: ten unrolled rounds pay for their plans, their generated code
+    and ten one-task stages, for a graph numpy ranks in a fraction of that.
+
+    The stream is ``edges`` coalesced to one partition, beside an empty
+    one-partition Range, so the kernel runs exactly once even over a
+    source with no partitions (an absent PPR seed still holds reset).
+
+    Same arithmetic as the rounds, bit for bit: weight ``1.0 / out_deg``;
+    per edge ``x = rank * weight * CONTRIB_SCALE`` in that order; HALF_UP
+    to a long as ``t + (x - t >= 0.5)`` with ``t = trunc(x)`` (not
+    ``np.round``, which rounds half to even, nor ``floor(x + 0.5)``, which
+    rounds 0.49999999999999994 up); long sums per dst; ``reset + (1 -
+    reset_prob) * (ci / CONTRIB_SCALE)`` for a ranked vertex and ``reset``
+    for the others.  A contribution or sum past the long range raises, as
+    Spark's ANSI cast and ``sum`` do.  Nulls keep the rounds' join
+    semantics: a null src is read at reset every round after the first,
+    and a null dst is ranked but never read back.
+    """
+    id_types = {c: edges.schema[c].dataType for c in ("src", "dst")}
+    exact = [c for c, t in id_types.items() if isinstance(t, IntegralType)]
+    scale = CONTRIB_SCALE  # bound now: the task runs in a Python worker
+    held_seeds = None if seeds is None else list(dict.fromkeys(seeds))
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        frames = []
+        for b in batches:
+            for c in exact:  # an integral column holding a null arrives as float64
+                if b[c].dtype.kind == "f" and (b[c].abs() >= 2.0**53).any():
+                    raise ValueError(f"{c} ids of 2**53 or more beside a null id lose precision in pandas")
+            frames.append(b.astype({c: "Int64" for c in exact}))
+        m = sum(map(len, frames))
+        ids = [f["src"] for f in frames] + [f["dst"] for f in frames]
+        codes, keys = pd.factorize(pd.concat(ids or [pd.Series([], dtype=object)], ignore_index=True))
+        n = len(keys)
+        # a null src is a vertex no rank reaches, a null dst one ranked but
+        # never read back: each gets a code of its own
+        s, d = np.where(codes[:m] < 0, n, codes[:m]), np.where(codes[m:] < 0, n + 1, codes[m:])
+        order = np.argsort(d, kind="stable")
+        s, d = s[order], d[order]
+        heads = np.flatnonzero(np.diff(d, prepend=-1))  # first edge of each dst
+        ranked = d[heads]
+        weight = 1.0 / np.bincount(s, minlength=n + 2)[s]
+        if held_seeds is None:
+            reset, rank = np.full(n + 2, reset_prob), np.ones(n + 2)
+        else:
+            on_seed = np.zeros(n + 2, bool)
+            on_seed[:n] = np.asarray(pd.Index(keys).isin(held_seeds), bool)
+            reset, rank = np.where(on_seed, reset_prob, 0.0), np.where(on_seed, 1.0, 0.0)
+        for _ in range(max_iter):
+            x = rank[s] * weight * scale
+            if (x >= 2.0**63).any():
+                raise ArithmeticError("long overflow: a rank contribution exceeds the long range")
+            t = np.trunc(x)
+            ci = np.add.reduceat((t + (x - t >= 0.5)).astype(np.int64), heads)
+            # every term is >= 0: a sum that wrapped once is negative, and
+            # one past 2**64 shows in the double sum
+            if (ci < 0).any() or (np.add.reduceat(x, heads) >= 1.5 * 2.0**63).any():
+                raise ArithmeticError("long overflow: a rank contribution sum exceeds the long range")
+            rank = reset.copy()
+            rank[ranked] = reset[ranked] + (1.0 - reset_prob) * (ci / scale)
+        out = np.union1d(ranked, s) if held_seeds is None else ranked[rank[ranked] > 0.0]
+        yield pd.DataFrame({"id": pd.Series(keys).reindex(out).array, "rank": rank[out]})  # codes n, n+1: null
+        if held_seeds is not None:
+            is_ranked = np.zeros(n + 2, bool)
+            is_ranked[ranked] = True
+            at = pd.Index(keys).get_indexer(held_seeds)
+            held = [v for v, i in zip(held_seeds, at) if i < 0 or not is_ranked[i]]
+            if held:
+                yield pd.DataFrame({"id": held, "rank": reset_prob})
+
+    empty = edges.sparkSession.range(0, numPartitions=1).select(
+        *(F.lit(None).cast(t).alias(c) for c, t in id_types.items())
+    )
+    schema = StructType([StructField("id", id_types["src"]), StructField("rank", DoubleType())])
+    return (
+        edges.select("src", "dst")
+        .unionByName(empty)
+        .coalesce(1)
+        .mapInPandas(kernel, schema)
+        .select("id", F.round("rank", 6).alias("pagerank"))
+        .transform(pin)
+    )
+
+
 def pagerank(
     edges: DataFrame | None,
     reset_prob: float = 0.15,
@@ -203,7 +316,11 @@ def pagerank(
 
     ``weighted``: a :func:`prepare_weighted_edges` handle to reuse across
     rank variants (caller owns its cache; ``edges`` may then be None).
+    A one-piece graph ranks in one task (:func:`_ranks_in_one_task`),
+    with no weighted-edge cache of its own.
     """
+    if max_iter >= 1 and _fits_one_piece(edges, weighted):
+        return _ranks_in_one_task(edges if weighted is None else weighted, reset_prob, max_iter, None)
     owns_weighted = weighted is None
     if owns_weighted:
         weighted = prepare_weighted_edges(edges)
@@ -255,14 +372,16 @@ def personalized_pagerank(
     small by nature, so membership tests compile to IN-list predicates,
     never a join.  ``weighted``: a :func:`prepare_weighted_edges` handle to
     reuse across rank variants (caller owns its cache; ``edges`` may then
-    be None).
+    be None).  A one-piece graph ranks in one task, as in :func:`pagerank`.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    seeds = list(sources)
+    if _fits_one_piece(edges, weighted):
+        return _ranks_in_one_task(edges if weighted is None else weighted, reset_prob, max_iter, seeds)
     owns_weighted = weighted is None
     if owns_weighted:
         weighted = prepare_weighted_edges(edges)
-    seeds = list(sources)
 
     def on_seeds(value):
         return lambda c: F.when(F.col(c).isin(seeds), F.lit(value)).otherwise(F.lit(0.0))
